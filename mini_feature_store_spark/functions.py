@@ -6,9 +6,14 @@ import datetime as dt
 
 import contextlib
 import io
+from typing import TYPE_CHECKING
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 def plan_text(df: DataFrame, mode: str = "formatted") -> str:
@@ -88,9 +93,26 @@ def track_cache(df: DataFrame) -> DataFrame:
     composing many such operators should call
     ``release_operator_caches()`` once the results have been consumed
     (or ``spark.catalog.clearCache()`` for a global reset — what the
-    bench harness does between queries)."""
-    _OPERATOR_CACHES.append(df)
+    bench harness does between queries).
+
+    The registry holds only frames that are still cached: each call
+    drops entries a ``clearCache()``/``unpersist()`` already released,
+    and a frame registered twice is kept once."""
+    _OPERATOR_CACHES[:] = [d for d in _OPERATOR_CACHES if _is_cached(d)]
+    if not any(d is df for d in _OPERATOR_CACHES):
+        _OPERATOR_CACHES.append(df)
     return df
+
+
+def _is_cached(df: DataFrame) -> bool:
+    """Whether the session's CacheManager still holds ``df`` (the JVM
+    view — ``DataFrame.is_cached`` is a Python flag that a global
+    ``clearCache()`` never resets)."""
+    try:
+        level = df.storageLevel
+    except Py4JError:
+        return False  # session already stopped
+    return level.useMemory or level.useDisk or level.useOffHeap
 
 
 def release_operator_caches() -> int:
@@ -106,6 +128,33 @@ def release_operator_caches() -> int:
             pass  # session already stopped — nothing to release
     _OPERATOR_CACHES.clear()
     return n
+
+
+#: Byte budget of a driver-local fast path's collected input: the
+#: Arrow buffers ``collect_if_bounded`` may hand back. Each call site's
+#: row cap sizes its common case; this bounds the wide-row case a row
+#: cap cannot see (65,536 k-means vectors at dim 1536 are ~800 MB of
+#: doubles, at dim 16 ~10 MB).
+DRIVER_LOCAL_MAX_BYTES = 64 << 20
+
+
+def collect_if_bounded(df: DataFrame, max_rows: int) -> pa.Table | None:
+    """``df`` as a driver-side Arrow table when it is provably small,
+    else ``None`` — the one dispatch probe of every driver-local fast
+    path (k-means, the BPE and unigram trainers, connected components,
+    the LM scorers' strategy choice).
+
+    One ``limit(max_rows + 1).toArrow()`` job. More than ``max_rows``
+    rows, or Arrow buffers over ``DRIVER_LOCAL_MAX_BYTES``, returns
+    ``None`` and the caller takes its distributed path. The transfer is
+    capped by rows (Spark has no byte-limited collect), so an oversized
+    input costs at most ``max_rows + 1`` discarded rows, never an
+    unbounded collect. Each partition's rows arrive contiguous and in
+    order."""
+    tbl = df.limit(max_rows + 1).toArrow()
+    if tbl.num_rows > max_rows or tbl.nbytes > DRIVER_LOCAL_MAX_BYTES:
+        return None
+    return tbl
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

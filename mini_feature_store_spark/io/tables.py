@@ -90,6 +90,14 @@ class VersionedTable:
         except FileNotFoundError:
             return {"versions": []}
 
+    def _commit(self, manifest: dict) -> None:
+        """Write the manifest to a tmp file and rename it over the live
+        one — the atomic commit point of every table mutation."""
+        tmp = self._manifest_path() + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(manifest, f)
+        os.replace(tmp, self._manifest_path())
+
     def versions(self) -> list[dict]:
         """Commit log: [{version, timestamp, partition_by}]."""
         return self._load_manifest()["versions"]
@@ -129,10 +137,7 @@ class VersionedTable:
                 "partition_by": list(partition_by),
             }
         )
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path())  # atomic commit point
+        self._commit(manifest)
         return version
 
     def read(
@@ -267,10 +272,7 @@ class VersionedTable:
             }
         manifest = self._load_manifest()
         manifest["versions"][-1]["stats"] = stats
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path())
+        self._commit(manifest)
         return stats
 
     def stats(self) -> dict | None:
@@ -389,10 +391,7 @@ class VersionedTable:
                 "partition_by": part_cols,
             }
         )
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path())  # atomic commit point
+        self._commit(manifest)
         return version, len(affected)
 
     def compact(self, target_partitions: int) -> int:
@@ -430,8 +429,5 @@ class VersionedTable:
                 os.path.join(self.path, f"v={c['version']}"), ignore_errors=True
             )
         manifest["versions"] = keep
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path())
+        self._commit(manifest)
         return [c["version"] for c in drop]

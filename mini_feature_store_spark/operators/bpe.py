@@ -43,6 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mini_feature_store_spark.functions import collect_if_bounded
 from mini_feature_store_spark.operators.text import CHUNK_RE
 
 #: merge-table schema (also the createDataFrame schema for the result)
@@ -50,29 +51,8 @@ MERGES_SCHEMA = (
     "merge_rank long, left_sym string, right_sym string, pair_count long"
 )
 
-#: ``bpe_encode(strategy="auto")`` compiles the column-fold form only up
-#: to this many merges — the fold chain's Catalyst expression tree is
-#: depth ∝ n_merges (one interpreted ``F.aggregate`` per merge), so
-#: analysis/codegen cost grows superlinearly and a real 32k-merge
-#: vocabulary is unplannable; past the knee the Arrow merge-replay path
-#: (flat cost per distinct word) takes over.
-#:
-#: r17: default 48 → 0, i.e. ``auto`` now always takes the replay path.
-#: The r16 default assumed the fold was cheap "at a few dozen merges";
-#: measured at the registry's own parameters (10 merges, sf0.1) it is
-#: not: EXECUTION of the interpreted per-merge ``F.aggregate`` chain is
-#: O(n_merges × word_len) per word with a large constant — 4.8 s warm
-#: vs the replay's 1.2 s on doc_bpe_encode's OOV sample (224 distinct
-#: words, avg 211 chars), and 1.43 s vs 1.14 s even on the short-word
-#: full corpus (guide §4.2: batched Arrow beating an interpreted JVM
-#: expression chain is the normal case, not the exception). The fold
-#: form remains available as ``strategy="fold"`` (it is the shape the
-#: DuckDB oracle mirrors) and via this knob; results are pinned
-#: identical by ``test_bpe_encode_fold_equals_replay``.
-FOLD_MAX_MERGES = 0
-
-#: ``bpe_train(strategy="auto")`` collects the distinct-word table and
-#: runs the merge loop driver-side when it fits in this many rows
+#: ``bpe_train`` collects the distinct-word table and runs the merge
+#: loop driver-side when ``collect_if_bounded`` admits it at this many rows
 #: (Heaps' law keeps real corpora's distinct-chunk tables in the
 #: 10^5–10^7 range; 200k rows of short strings is a few MB on the
 #: driver). Above it, ``prune_min_freq`` (what SentencePiece's
@@ -308,8 +288,6 @@ def bpe_train(
     df: DataFrame,
     n_merges: int,
     text_col: str = "text",
-    strategy: str = "auto",
-    local_max_words: int = LOCAL_MAX_WORDS,
     prune_min_freq: int | None = None,
     words: DataFrame | None = None,
     build_vocab: bool = True,
@@ -333,8 +311,8 @@ def bpe_train(
     pass (``word_table``) and both producing the identical merge table
     (pinned by ``tests/test_bpe.py``):
 
-    - ``"local"`` — collect the distinct-word table (bounded by
-      ``local_max_words``; raises if it doesn't fit) and run the
+    - local — when the (optionally pruned) distinct-word table passes
+      ``collect_if_bounded`` at ``LOCAL_MAX_WORDS`` rows, run the
       incremental heap trainer driver-side; the vocab's final splits
       come from ONE distributed merge-replay pass over the word table
       (``_with_replayed_syms`` — exactly the fold chain, see
@@ -344,8 +322,8 @@ def bpe_train(
       frequency threshold; hapax chunks rarely decide a merge) —
       pruning is an explicit opt-in approximation: counts then differ
       from the exact loop's, but the vocab still covers ALL words.
-    - ``"distributed"`` — the exact per-round Spark loop; each round is
-      ONE job over the persisted word table (pair-count aggregate +
+    - distributed — otherwise, the exact per-round Spark loop; each
+      round is ONE job over the persisted word table (pair-count aggregate +
       1-row max collect, which as a side effect materializes the
       round's cache, releasing the previous round's one round late).
       The per-round collect is the sanctioned bounded driver action of
@@ -355,10 +333,8 @@ def bpe_train(
       ``prune_min_freq`` is honored here too (the merge loop runs on
       the pruned table; the returned vocab is rebuilt by one replay
       pass over the FULL word table, so coverage matches the local
-      path) — an auto-mode fallthrough can no longer silently ignore a
-      requested prune.
-    - ``"auto"`` (default) — local when the (optionally pruned) word
-      table fits ``local_max_words``, else distributed (still pruned).
+      path) — the fallthrough never silently ignores a requested
+      prune.
 
     r17 composition knobs (guide §2.4 — one corpus pass per
     composition, not one per trainer):
@@ -378,71 +354,54 @@ def bpe_train(
     """
     if n_merges <= 0:
         raise ValueError(f"n_merges must be positive, got {n_merges}")
-    if strategy not in ("auto", "local", "distributed"):
-        raise ValueError(f"unknown bpe_train strategy: {strategy!r}")
     spark = df.sparkSession
 
     owns_words = words is None
     if owns_words:
         words = word_table(df, text_col).persist()
-
-    if strategy != "distributed":
-        candidates = words
-        if prune_min_freq is not None and prune_min_freq > 1:
-            candidates = words.where(F.col("freq") >= prune_min_freq)
-        # limit(+1) bounds the driver transfer whether or not the table
-        # fits — an oversized table costs one discarded batch, never an
-        # unbounded collect
-        try:
-            head = (
-                candidates.select("word", "freq")
-                .limit(local_max_words + 1)
-                .collect()
-            )
-        except Exception:
-            # a failed corpus read must not pin the word-table cache for
-            # the driver session (same contract as the distributed loop)
-            if owns_words:
-                words.unpersist()
-            raise
-        if len(head) <= local_max_words:
-            merge_rows = _local_merge_loop(
-                [(r["word"], int(r["freq"])) for r in head], n_merges
-            )
-            rules = [(p1, p2) for _, p1, p2, _ in merge_rows]
-            merges_df = spark.createDataFrame(
-                merge_rows, MERGES_SCHEMA
-            ).limit(n_merges)
-            if not build_vocab:
-                if owns_words:
-                    words.unpersist()
-                return merges_df, None
-            vocab = _with_replayed_syms(words, rules).persist()
-            try:
-                vocab.count()  # materialize before releasing the parent
-            except Exception:
-                vocab.unpersist()
-                raise
-            finally:
-                if owns_words:
-                    words.unpersist()
-            return merges_df, vocab
-        if strategy == "local":
-            if owns_words:
-                words.unpersist()
-            raise ValueError(
-                f"bpe_train(strategy='local'): word table exceeds "
-                f"local_max_words={local_max_words}; prune with "
-                f"prune_min_freq or use strategy='distributed'"
-            )
-    # a requested prune is honored on the distributed path too (the
-    # auto-mode fallthrough used to silently train exact/unpruned —
-    # n_merges rounds over the FULL table the caller asked to shrink):
-    # the merge loop runs on the pruned table, and the vocab is then
-    # rebuilt by ONE replay pass over the full word table so coverage
-    # stays identical to the local path (vocab covers ALL words)
+    # a requested prune applies to both paths: the merge loop runs on
+    # the pruned table, and the vocab is rebuilt by ONE replay pass over
+    # the full word table, so it covers ALL words either way
     pruned = prune_min_freq is not None and prune_min_freq > 1
     cur = words.where(F.col("freq") >= prune_min_freq) if pruned else words
+
+    try:
+        head = collect_if_bounded(cur.select("word", "freq"), LOCAL_MAX_WORDS)
+    except Exception:
+        # a failed corpus read must not pin the word-table cache for
+        # the driver session (same contract as the distributed loop)
+        if owns_words:
+            words.unpersist()
+        raise
+    if head is not None:
+        merge_rows = _local_merge_loop(
+            list(
+                zip(
+                    head.column("word").to_pylist(),
+                    head.column("freq").to_pylist(),
+                )
+            ),
+            n_merges,
+        )
+        rules = [(p1, p2) for _, p1, p2, _ in merge_rows]
+        merges_df = spark.createDataFrame(merge_rows, MERGES_SCHEMA).limit(
+            n_merges
+        )
+        if not build_vocab:
+            if owns_words:
+                words.unpersist()
+            return merges_df, None
+        vocab = _with_replayed_syms(words, rules).persist()
+        try:
+            vocab.count()  # materialize before releasing the parent
+        except Exception:
+            vocab.unpersist()
+            raise
+        finally:
+            if owns_words:
+                words.unpersist()
+        return merges_df, vocab
+
     merges: list[tuple[int, str, str, int]] = []
     prev = None  # released once `cur` is materialized by the collect
     try:
@@ -509,7 +468,10 @@ def bpe_train(
         if owns_words:
             words.unpersist()
         return merges_df, None
-    if pruned:
+    if pruned or cur is words:
+        # a pruned loop's table lacks the pruned words; an unmerged
+        # caller-provided ``words`` frame must not come back as ``vocab``
+        # (the caller would own and release its own input twice over)
         rules = [(p1, p2) for _, p1, p2, _ in merges]
         vocab = _with_replayed_syms(words, rules).persist()
         try:
@@ -518,7 +480,8 @@ def bpe_train(
             vocab.unpersist()
             raise
         finally:
-            cur.unpersist()
+            if cur is not words:
+                cur.unpersist()
             if owns_words:
                 words.unpersist()
         return merges_df, vocab
@@ -660,8 +623,7 @@ def bpe_encode(
     merges: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    strategy: str = "auto",
-    fold_max_merges: int = FOLD_MAX_MERGES,
+    strategy: str = "replay",
     counts_only: bool = False,
 ) -> DataFrame:
     """The OPEN-vocabulary tokenizer: encode arbitrary text by replaying
@@ -683,11 +645,11 @@ def bpe_encode(
       (the oracle form), but the Catalyst tree is depth ∝ n_merges —
       fine at a few dozen merges, unplannable at a real 32k-merge
       vocabulary (SCALING.md: plan cost curve).
-    - ``"replay"`` — one Arrow ``mapInPandas`` cursor replay per
-      distinct word (``_replay_word``; merge table broadcast once per
-      executor). Flat in n_merges — the real-vocabulary path.
-    - ``"auto"`` (default) — fold up to ``fold_max_merges``, replay
-      beyond.
+    - ``"replay"`` (default) — one Arrow ``mapInPandas`` cursor replay
+      per distinct word (``_replay_word``; merge table broadcast once
+      per executor). Flat in n_merges — the real-vocabulary path, and
+      faster than the interpreted fold chain even at 10 merges (1.2 s
+      against 4.8 s warm on doc_bpe_encode at sf0.1).
 
     Plan-shape trade, chosen deliberately: the input is scanned TWICE
     (the distinct-word branch and the position branch — both
@@ -706,7 +668,7 @@ def bpe_encode(
     word, but only its symbol COUNT joins back to the occurrence
     stream, so the doc-keyed exchange moves one long per doc instead
     of every position's symbol array (guide §2.3)."""
-    if strategy not in ("auto", "fold", "replay"):
+    if strategy not in ("fold", "replay"):
         raise ValueError(f"unknown bpe_encode strategy: {strategy!r}")
     rules = [
         (r["left_sym"], r["right_sym"])
@@ -718,9 +680,7 @@ def bpe_encode(
         else _chunk_positions(df, text_col, id_col)
     )
     distinct_words = chunks.select(F.col("word")).distinct()
-    if strategy == "fold" or (
-        strategy == "auto" and len(rules) <= fold_max_merges
-    ):
+    if strategy == "fold":
         syms = _char_split("word")
         for p1, p2 in rules:
             syms = _apply_merge(syms, p1, p2)

@@ -37,7 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mini_feature_store_spark.functions import spread
+from mini_feature_store_spark.functions import collect_if_bounded, spread
 from mini_feature_store_spark.operators.similarity import (
     _np_round_half_up,
     with_vec_norm,
@@ -56,8 +56,9 @@ def _unit(mat: np.ndarray) -> np.ndarray:
 #: job over the cached input — a fixed driver toll regardless of data
 #: size — and bench/test-scale embedding tables are a few thousand rows.
 #: Under the bound the ``(pid, hash, v, nrm)`` rows are collected once
-#: (≤ 65 536 × (dim+2) doubles — ~10 MB at dim 16) and every iteration
-#: replays IN PROCESS the exact distributed arithmetic: the same
+#: by ``collect_if_bounded`` (~10 MB at dim 16; wide embeddings fall
+#: through on its byte budget long before this row cap) and every
+#: iteration replays IN PROCESS the exact distributed arithmetic: the same
 #: per-partition batch splits (``spark.sql.execution.arrow.
 #: maxRecordsPerBatch``), the same per-batch GEMM/bincount partials
 #: (``_batch_partials`` — one shared function, so the two paths cannot
@@ -126,7 +127,6 @@ def kmeans_fit(
     sample_size: int = 2048,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    local_max_vectors: int | None = None,
 ) -> np.ndarray:
     """Spherical k-means (cosine assignment) → ``(k, dim)`` centroid matrix.
 
@@ -145,8 +145,7 @@ def kmeans_fit(
     driver, replaying the distributed path's arithmetic bit-for-bit
     (same partition/batch structure, same shared per-batch kernel, same
     sorted fold), so the 1 + ``iters`` Spark jobs collapse to one
-    bounded collect. ``local_max_vectors`` overrides the bound (0
-    forces the distributed path — the equivalence test uses this).
+    bounded collect.
     The cross-partition reduction itself was ALSO made deterministic
     this round on both paths: partials carry their partition id and the
     driver folds them in sorted (cluster, pid) order, where the old
@@ -159,28 +158,22 @@ def kmeans_fit(
     # production inputs skip the exchange entirely.
     base = with_vec_norm(spread(df, 8), vec_col, id_col)
     hash_col = F.xxhash64(F.col("id").cast("string"), F.lit(seed))
-    bound = LOCAL_MAX_VECTORS if local_max_vectors is None else local_max_vectors
-    if bound > 0:
-        head = (
-            base.select(
-                F.spark_partition_id().alias("_pid"),
-                hash_col.alias("_h"),
-                "v",
-                "nrm",
+    head = collect_if_bounded(
+        base.select(
+            F.spark_partition_id().alias("_pid"),
+            hash_col.alias("_h"),
+            "v",
+            "nrm",
+        ),
+        LOCAL_MAX_VECTORS,
+    )
+    if head is not None:
+        arrow_max = int(
+            df.sparkSession.conf.get(
+                "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"
             )
-            .limit(bound + 1)
-            .collect()
         )
-        if len(head) <= bound:
-            spark = df.sparkSession
-            arrow_max = int(
-                spark.conf.get(
-                    "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"
-                )
-            )
-            return _kmeans_fit_local(
-                head, k, iters, sample_size, arrow_max
-            )
+        return _kmeans_fit_local(head, k, iters, sample_size, arrow_max)
 
     c = base.persist()
     try:
@@ -252,25 +245,30 @@ def kmeans_fit(
 
 
 def _kmeans_fit_local(
-    rows, k: int, iters: int, sample_size: int, arrow_max: int
+    tbl, k: int, iters: int, sample_size: int, arrow_max: int
 ) -> np.ndarray:
-    """Driver-local Lloyd replay over collected ``(_pid, _h, v, nrm)``
-    rows — the distributed path's arithmetic reproduced exactly:
+    """Driver-local Lloyd replay over a collected ``(_pid, _h, v, nrm)``
+    Arrow table — the distributed path's arithmetic reproduced exactly:
     hash-ordered init sample, per-partition accumulation over
     ``arrow_max``-row batch splits via the shared ``_batch_partials``,
     sorted-(cluster, pid) fold via the shared ``_fold_partials``."""
-    if len(rows) < k:
+    if tbl.num_rows < k:
         raise ValueError(f"corpus has fewer than k={k} rows")
-    init_rows = sorted(rows, key=lambda r: r["_h"])[: max(sample_size, k)]
-    sample = _unit(np.array([r["v"] for r in init_rows], dtype=np.float64))
+    pids = tbl.column("_pid").to_pylist()
+    hashes = tbl.column("_h").to_pylist()
+    vs = tbl.column("v").to_pylist()
+    nrms = tbl.column("nrm").to_pylist()
+    init = sorted(range(len(vs)), key=hashes.__getitem__)
+    init = init[: max(sample_size, k)]
+    sample = _unit(np.array([vs[i] for i in init], dtype=np.float64))
     cent = _maxmin_init(sample, k)
     dim = cent.shape[1]
 
-    # group by partition id, preserving within-partition row order
-    # (collect returns partitions in index order, rows in order)
-    parts: dict[int, list] = {}
-    for r in rows:
-        parts.setdefault(r["_pid"], []).append(r)
+    # group row indices by partition id, preserving within-partition
+    # row order (collect_if_bounded keeps each partition's rows in order)
+    parts: dict[int, list[int]] = {}
+    for i, pid in enumerate(pids):
+        parts.setdefault(pid, []).append(i)
     step = arrow_max if arrow_max > 0 else None
 
     for _ in range(iters):
@@ -283,8 +281,8 @@ def _kmeans_fit_local(
             for i in range(0, len(prows), chunk):
                 batch = prows[i : i + chunk]
                 s, n = _batch_partials(
-                    [r["v"] for r in batch],
-                    np.array([r["nrm"] for r in batch], dtype=np.float64),
+                    [vs[j] for j in batch],
+                    np.array([nrms[j] for j in batch], dtype=np.float64),
                     cent_t,
                     k,
                     dim,

@@ -38,7 +38,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from mini_feature_store_spark.functions import round_half_up
+from mini_feature_store_spark.functions import (
+    collect_if_bounded,
+    round_half_up,
+)
 
 __all__ = ["connected_components", "dedup_clusters", "pagerank"]
 
@@ -140,7 +143,7 @@ def _local_contract(e: DataFrame) -> DataFrame:
 #: few MB) and a union-find labels components in-process — bit-identical
 #: output (min-id component, integer/string ids) with zero star rounds.
 #: Above the bound the distributed path is unchanged; the probe is one
-#: early-terminating take over the already-materialized checkpoint.
+#: ``collect_if_bounded`` read of the already-materialized checkpoint.
 LOCAL_MAX_EDGES = 200_000
 
 
@@ -190,15 +193,14 @@ def connected_components(
     src: str = "u",
     dst: str = "v",
     max_iter: int = 25,
-    local_max_edges: int | None = None,
 ) -> DataFrame:
     """Component id (= minimum node id in the component) for every node that
     appears in ``edges``. Returns columns ``node``, ``component``.
 
     Node ids must be an orderable type (long / string). Undirected; edge
-    direction and duplicates are ignored. ``local_max_edges`` overrides
-    ``LOCAL_MAX_EDGES`` (0 forces the distributed star path — tests of the
-    distributed mechanics use this)."""
+    direction and duplicates are ignored. Edge lists within
+    ``LOCAL_MAX_EDGES`` (and the driver byte budget) are labelled by a
+    driver-side union-find; larger ones take the distributed star path."""
     # Materialize the raw edge list ONCE: both the canonical edge set and
     # the node set derive from this checkpoint, so the upstream
     # pair-generation plan (e.g. the n-gram Jaccard join — the expensive
@@ -209,20 +211,16 @@ def connected_components(
     el = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).localCheckpoint()
-    bound = LOCAL_MAX_EDGES if local_max_edges is None else local_max_edges
-    if (
-        bound > 0
-        and el.schema["u"].dataType == el.schema["v"].dataType
-        and isinstance(
-            el.schema["u"].dataType,
-            (T.LongType, T.IntegerType, T.StringType),
-        )
+    id_type = el.schema["u"].dataType
+    if id_type == el.schema["v"].dataType and isinstance(
+        id_type, (T.LongType, T.IntegerType, T.StringType)
     ):
-        head = el.limit(bound + 1).collect()
-        if len(head) <= bound:
-            return _local_components(
-                el.sparkSession, head, el.schema["u"].dataType
+        head = collect_if_bounded(el, LOCAL_MAX_EDGES)
+        if head is not None:
+            rows = zip(
+                head.column("u").to_pylist(), head.column("v").to_pylist()
             )
+            return _local_components(el.sparkSession, rows, id_type)
     e = _canon(el)
     # Integer node ids take the two-phase path (per-partition union-find
     # contraction, then star rounds across partitions); other orderable id

@@ -19,7 +19,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mini_feature_store_spark.functions import round_half_up, spread
+from mini_feature_store_spark.functions import (
+    collect_if_bounded,
+    round_half_up,
+    spread,
+)
 
 #: Tiny per-language marker-word lists for the heuristic language ID.
 #: Deterministic and tiny by design — a real lang-ID model is out of scope;
@@ -1360,6 +1364,21 @@ def line_filter(
     )
 
 
+#: ``bigram_lm_score``/``ngram_lm_score`` with ``strategy="auto"`` take
+#: the position-join strategy when the reference corpus has at most this
+#: many documents (the CCNet regime: a curated slice ≪ the crawl, whose
+#: count tables AQE broadcasts), the type strategy above it.
+BROADCAST_REF_MAX_DOCS = 10_000
+
+
+def _small_reference(train: DataFrame) -> bool:
+    """The LM scorers' ``auto`` probe: ``collect_if_bounded`` over a
+    one-column projection, so it counts documents and ships one boolean
+    per document — never the text."""
+    probe = train.select(F.lit(True).alias("_doc"))
+    return collect_if_bounded(probe, BROADCAST_REF_MAX_DOCS) is not None
+
+
 def bigram_lm_score(
     train: DataFrame,
     df: DataFrame,
@@ -1367,7 +1386,6 @@ def bigram_lm_score(
     text_col: str = "text",
     id_col: str = "doc_id",
     strategy: str = "auto",
-    broadcast_ref_max_docs: int = 10_000,
 ) -> DataFrame:
     """CCNet-style LM quality scoring (Wenzek et al. 2020 score crawl text
     with a KenLM trained on Wikipedia; the lower the perplexity, the more
@@ -1400,18 +1418,14 @@ def bigram_lm_score(
       back to positions on the bigram key — corpus-side shuffles capped
       at distinct + join-back once the count tables outgrow broadcast.
     - ``"auto"`` (default) — position under a provably small reference
-      (bounded ``limit(broadcast_ref_max_docs + 1).count()`` probe),
-      type otherwise.
+      (at most ``BROADCAST_REF_MAX_DOCS`` documents), type otherwise.
     """
     if alpha <= 0:
         raise ValueError(f"alpha must be positive, got {alpha}")
     if strategy not in ("auto", "position", "type"):
         raise ValueError(f"unknown bigram_lm_score strategy: {strategy!r}")
     if strategy == "auto":
-        n_probe = train.limit(broadcast_ref_max_docs + 1).count()
-        strategy = (
-            "position" if n_probe <= broadcast_ref_max_docs else "type"
-        )
+        strategy = "position" if _small_reference(train) else "type"
 
     def _bigrams(frame: DataFrame) -> DataFrame:
         t = _tokens(normalize(F.col(text_col)))
@@ -1624,7 +1638,6 @@ def ngram_lm_score(
     text_col: str = "text",
     id_col: str = "doc_id",
     strategy: str = "auto",
-    broadcast_ref_max_docs: int = 10_000,
 ) -> DataFrame:
     """Stupid-backoff LM scoring at ARBITRARY n-gram order (Brants et
     al. 2007 — their production system ran order 5, which is also what
@@ -1664,10 +1677,9 @@ def ngram_lm_score(
       ``position`` avoids (and on low-repetition corpora high-order
       types approach positions, so the collapse is modest).
     - ``"auto"`` (default) — ``position`` when the reference is
-      provably small: a ``limit(broadcast_ref_max_docs + 1).count()``
-      probe (the ``bpe_train`` bounded-probe pattern — one tiny job at
-      plan build, never an unbounded action) decides; ``type``
-      otherwise.
+      provably small (at most ``BROADCAST_REF_MAX_DOCS`` documents —
+      one bounded ``collect_if_bounded`` job at plan build, never an
+      unbounded action); ``type`` otherwise.
     """
     if order < 2:
         raise ValueError(f"order must be at least 2, got {order}")
@@ -1676,10 +1688,7 @@ def ngram_lm_score(
     if strategy not in ("auto", "position", "type"):
         raise ValueError(f"unknown ngram_lm_score strategy: {strategy!r}")
     if strategy == "auto":
-        n_probe = train.limit(broadcast_ref_max_docs + 1).count()
-        strategy = (
-            "position" if n_probe <= broadcast_ref_max_docs else "type"
-        )
+        strategy = "position" if _small_reference(train) else "type"
     if strategy == "position":
         return _ngram_lm_positions(
             train, df, order, backoff, text_col, id_col

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mini_feature_store_spark.functions import collect_if_bounded
+from mini_feature_store_spark.operators import bpe
 from mini_feature_store_spark.operators.bpe import (
     _chunk_positions,
     _chunk_stream,
@@ -54,6 +56,13 @@ from mini_feature_store_spark.operators.bpe import (
 
 #: piece-table schema of a trained vocabulary
 PIECES_SCHEMA = "piece string, freq long"
+
+
+def _word_freqs(tbl) -> dict[str, int]:
+    """``{word: freq}`` of a collected ``(word, freq)`` Arrow table."""
+    return dict(
+        zip(tbl.column("word").to_pylist(), tbl.column("freq").to_pylist())
+    )
 
 
 def _pieces_from_words(words: DataFrame, max_piece_len: int) -> DataFrame:
@@ -152,7 +161,6 @@ def unigram_train(
     max_piece_len: int = 4,
     refine_rounds: int = 0,
     text_col: str = "text",
-    local_max_words: int | None = None,
     words: DataFrame | None = None,
 ) -> DataFrame:
     """Train a unigram-LM piece vocabulary: seed + select, then
@@ -194,13 +202,9 @@ def unigram_train(
     # INTEGER (associative), so the result is bit-identical to the
     # distributed form while paying one Spark job instead of
     # ~4 per refinement round.
-    from mini_feature_store_spark.operators.bpe import LOCAL_MAX_WORDS
-
-    if local_max_words is None:
-        local_max_words = LOCAL_MAX_WORDS
-    probe = words.limit(local_max_words + 1).collect()
-    if len(probe) <= local_max_words:
-        wf = {r["word"]: int(r["freq"]) for r in probe}
+    probe = collect_if_bounded(words, bpe.LOCAL_MAX_WORDS)
+    if probe is not None:
+        wf = _word_freqs(probe)
         pieces_l: dict[str, int] = {}
         for w, f in wf.items():
             n = len(w)
@@ -384,7 +388,6 @@ def unigram_train_em(
     em_iters: int = 2,
     shrink: float = 0.75,
     text_col: str = "text",
-    local_max_words: int | None = None,
 ) -> DataFrame:
     """TRUE Kudo (2018) unigram-LM training with FLOAT probabilities —
     the algorithmically complete sibling of ``unigram_train`` (whose
@@ -443,14 +446,10 @@ def unigram_train_em(
     # sorted-word order (deterministic; the distributed form's
     # cross-partition float sum order is scheduler-dependent, which is
     # why this trainer is rows-only in the first place).
-    from mini_feature_store_spark.operators.bpe import LOCAL_MAX_WORDS
-
-    if local_max_words is None:
-        local_max_words = LOCAL_MAX_WORDS
-    probe = words.limit(local_max_words + 1).collect()
-    local = len(probe) <= local_max_words
+    probe = collect_if_bounded(words, bpe.LOCAL_MAX_WORDS)
+    local = probe is not None
     if local:
-        wf = {r["word"]: int(r["freq"]) for r in probe}
+        wf = _word_freqs(probe)
         words_sorted = sorted(wf)
 
         def _em_counts_local(cur: dict[str, float]) -> dict[str, float]:

@@ -9,7 +9,7 @@ table partitioned by ``day`` (the reference's Iceberg INSERT OVERWRITE,
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,7 +52,6 @@ class BackfillConfig:
     #: shuffle partitions than buckets Spark prefers re-shuffling both
     #: sides over reading the buckets (test_io_plans.py)
     buckets: int = 8
-    extra: dict = field(default_factory=dict)
 
 
 def run_backfill_incremental(

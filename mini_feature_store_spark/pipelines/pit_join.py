@@ -4,9 +4,10 @@ Re-expresses ``pipelines/PointInTimeJoinPipeline.scala:64-136`` (config
 ``types/PointInTimeJoinPipelineConfig.scala:23-28``) with two deliberate
 scale fixes over the reference (SURVEY.md §4.3):
 
-- no driver ``collect()`` for the emptiness check (the reference
+- no driver ``collect()`` for an emptiness check (the reference
   materializes the full result twice, :68 and :73) — we write once and
-  check emptiness with ``isEmpty`` on the written data;
+  run no emptiness check at all: an empty training set is written as an
+  empty dataset, and the returned lazy frame lets a caller check it;
 - output is partitioned by ``as_of_date`` (one directory per *day*), not by
   the raw ``as_of_ts`` (one directory per distinct timestamp — millions of
   dirs at 100 TB; the reference default, PointInTimeJoinPipelineConfig.scala:27).

@@ -68,8 +68,13 @@ list, not a default:
   d+1-double gradient collects (rows-only query; artifact = 6 floats);
 - ``embedding_kmeans`` / ``embedding_semantic_dedup`` / IVF/PQ queries —
   centroid/codebook collects (k·d floats);
-- every collect is ``limit``-bounded or vocab-bounded by construction —
-  never O(data). New trainers must be added HERE or stay lazy.
+- every collect is vocab-bounded by construction or goes through
+  ``functions.collect_if_bounded`` (a per-site row cap plus one driver
+  byte budget, ``DRIVER_LOCAL_MAX_BYTES``) — never O(data). That one
+  helper is also the only dispatch probe of the driver-local fast paths
+  (k-means, the BPE/unigram trainers, connected components) and of the
+  LM scorers' ``auto`` strategy. New trainers must be added HERE or
+  stay lazy.
 """
 
 from __future__ import annotations

@@ -240,20 +240,12 @@ def test_bpe_encode_fold_equals_replay(spark):
     }
     assert fold == replay
 
-    # auto dispatch: past fold_max_merges the plan must carry the Arrow
-    # replay (MapInPandas), not an n_merges-deep fold chain
-    auto = bpe_encode(df, merges, fold_max_merges=4)
-    plan = auto._jdf.queryExecution().optimizedPlan().toString()
-    assert "MapInPandas" in plan
-    small = bpe_encode(df, merges, fold_max_merges=64)
-    plan_small = small._jdf.queryExecution().optimizedPlan().toString()
-    assert "MapInPandas" not in plan_small
 
-
-def test_bpe_train_local_equals_distributed(spark):
+def test_bpe_train_local_equals_distributed(spark, monkeypatch):
     """The driver-local heap trainer and the per-round Spark loop learn
     the IDENTICAL merge table and final vocab splits (the prune-then-
     local directive's exactness pin — no pruning configured)."""
+    from mini_feature_store_spark.operators import bpe
     from mini_feature_store_spark.operators.bpe import bpe_train
 
     texts = [
@@ -265,8 +257,9 @@ def test_bpe_train_local_equals_distributed(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    m_loc, v_loc = bpe_train(df, n_merges=8, strategy="local")
-    m_dist, v_dist = bpe_train(df, n_merges=8, strategy="distributed")
+    m_loc, v_loc = bpe_train(df, n_merges=8)
+    monkeypatch.setattr(bpe, "LOCAL_MAX_WORDS", 0)  # force distributed
+    m_dist, v_dist = bpe_train(df, n_merges=8)
     rows = lambda m: [  # noqa: E731
         tuple(r)
         for r in m.orderBy("merge_rank")
@@ -282,29 +275,27 @@ def test_bpe_train_local_equals_distributed(spark):
     v_dist.unpersist()
 
 
-def test_bpe_train_local_bounds_and_prune(spark):
-    """strategy='local' refuses an oversized word table instead of an
-    unbounded collect; 'auto' falls back to the distributed loop on the
-    same input; prune_min_freq trains on frequent chunks only while the
-    vocab still covers EVERY word (pruned words get replayed splits)."""
+def test_bpe_train_local_bounds_and_prune(spark, monkeypatch):
+    """A word table over LOCAL_MAX_WORDS falls back to the distributed
+    loop instead of an unbounded collect; prune_min_freq trains on
+    frequent chunks only while the vocab still covers EVERY word
+    (pruned words get replayed splits)."""
+    from mini_feature_store_spark.operators import bpe
     from mini_feature_store_spark.operators.bpe import bpe_train
 
     df = spark.createDataFrame(
         [(0, "aa bb cc dd ee ff aa bb aa")], "doc_id long, text string"
     )
-    with pytest.raises(ValueError, match="local_max_words"):
-        bpe_train(df, n_merges=2, strategy="local", local_max_words=3)
-
-    m_auto, v_auto = bpe_train(
-        df, n_merges=2, strategy="auto", local_max_words=3
-    )
+    with monkeypatch.context() as m:
+        m.setattr(bpe, "LOCAL_MAX_WORDS", 3)
+        m_auto, v_auto = bpe_train(df, n_merges=2)
     assert m_auto.count() == 2  # distributed fallback still trains
     v_auto.unpersist()
 
     # prune: only 'aa' (freq 3) and 'bb' (freq 2) survive min_freq=2 —
     # the learned merges come from those, but every word keeps a vocab
     # row with the merges replayed over it
-    m, v = bpe_train(df, n_merges=1, strategy="local", prune_min_freq=2)
+    m, v = bpe_train(df, n_merges=1, prune_min_freq=2)
     got = m.collect()[0]
     assert (got.left_sym, got.right_sym, got.pair_count) == ("a", "a", 3)
     vd = {r.word: tuple(r.syms) for r in v.collect()}
@@ -313,28 +304,24 @@ def test_bpe_train_local_bounds_and_prune(spark):
     v.unpersist()
 
 
-def test_bpe_train_prune_honored_on_distributed_fallthrough(spark):
-    """auto mode with prune_min_freq whose pruned table STILL exceeds
-    local_max_words must run the pruned training distributed — same
-    merges and same full-coverage vocab as the pruned local path (it
-    used to silently train exact/unpruned)."""
+def test_bpe_train_prune_honored_on_distributed_fallthrough(
+    spark, monkeypatch
+):
+    """prune_min_freq whose pruned table STILL exceeds LOCAL_MAX_WORDS
+    must run the pruned training distributed — same merges and same
+    full-coverage vocab as the pruned local path (it used to silently
+    train exact/unpruned)."""
+    from mini_feature_store_spark.operators import bpe
     from mini_feature_store_spark.operators.bpe import bpe_train
 
     df = spark.createDataFrame(
         [(0, "aa bb cc dd ee ff aa bb aa cc")], "doc_id long, text string"
     )
-    m_loc, v_loc = bpe_train(
-        df, n_merges=2, strategy="local", prune_min_freq=2
-    )
-    # pruned table has 3 words (aa/bb/cc) > local_max_words=2 → the
-    # auto path falls through to the distributed loop, pruned
-    m_dist, v_dist = bpe_train(
-        df,
-        n_merges=2,
-        strategy="auto",
-        local_max_words=2,
-        prune_min_freq=2,
-    )
+    m_loc, v_loc = bpe_train(df, n_merges=2, prune_min_freq=2)
+    # pruned table has 3 words (aa/bb/cc) > LOCAL_MAX_WORDS=2 → the
+    # fallthrough runs the distributed loop, pruned
+    monkeypatch.setattr(bpe, "LOCAL_MAX_WORDS", 2)
+    m_dist, v_dist = bpe_train(df, n_merges=2, prune_min_freq=2)
     assert [tuple(r) for r in m_loc.collect()] == [
         tuple(r) for r in m_dist.collect()
     ]
@@ -344,6 +331,36 @@ def test_bpe_train_prune_honored_on_distributed_fallthrough(spark):
     assert set(vl) == {"aa", "bb", "cc", "dd", "ee", "ff"}  # full coverage
     v_loc.unpersist()
     v_dist.unpersist()
+
+
+def test_bpe_train_vocab_is_trainer_owned(spark):
+    """A caller-provided ``words`` frame with no adjacent pair (every
+    word one character) ends the distributed loop in round 1. The
+    returned ``vocab`` must still be a frame the trainer owns:
+    releasing it must leave the caller's cached ``words`` intact."""
+    from mini_feature_store_spark.operators.bpe import (
+        LOCAL_MAX_WORDS,
+        bpe_train,
+    )
+
+    # one row over the local bound, so the distributed loop runs
+    words = spark.range(LOCAL_MAX_WORDS + 1).select(
+        F.lit("a").alias("word"),
+        F.lit(1).cast("long").alias("freq"),
+        F.array(F.lit("a")).alias("syms"),
+    ).persist()
+    words.count()
+    try:
+        merges, vocab = bpe_train(words, n_merges=2, words=words)
+        assert merges.count() == 0
+        assert vocab is not words
+        assert vocab.count() == LOCAL_MAX_WORDS + 1
+        syms = vocab.select("syms").distinct().collect()
+        assert [tuple(r.syms) for r in syms] == [("a",)]
+        vocab.unpersist()
+        assert words.is_cached
+    finally:
+        words.unpersist()
 
 
 def test_bpe_train_cli(spark, tmp_path):

@@ -183,17 +183,25 @@ def test_semantic_dedup_threshold_excludes_non_dups(spark):
     assert out.is_survivor.all()  # no exact dups planted -> nothing dropped
 
 
-def test_kmeans_local_equals_distributed(spark, blobs):
+def test_kmeans_local_equals_distributed(spark, blobs, monkeypatch):
     """r17 §1.2 driver-local fast path: under LOCAL_MAX_VECTORS the fit
     replays the distributed arithmetic exactly — same hash-ordered init
     sample, same per-partition/per-batch partial kernel
     (_batch_partials, one shared function), same sorted-(cluster, pid)
     fold (_fold_partials). The centroid TRAJECTORY must be bit-equal,
-    not approximately equal (local_max_vectors=0 forces the distributed
+    not approximately equal (LOCAL_MAX_VECTORS=0 forces the distributed
     path on the same data)."""
+    from mini_feature_store_spark.operators import clustering
+
     df, _ = blobs
+
+    def fit_dist(**kw):
+        with monkeypatch.context() as m:
+            m.setattr(clustering, "LOCAL_MAX_VECTORS", 0)
+            return kmeans_fit(df, **kw)
+
     local = kmeans_fit(df, k=4, iters=5, seed=3)
-    dist = kmeans_fit(df, k=4, iters=5, seed=3, local_max_vectors=0)
+    dist = fit_dist(k=4, iters=5, seed=3)
     assert local.shape == dist.shape == (4, len(df.first()["embedding"]))
     assert np.array_equal(local, dist)
 
@@ -204,7 +212,35 @@ def test_kmeans_local_equals_distributed(spark, blobs):
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
         local_b = kmeans_fit(df, k=4, iters=3, seed=11)
-        dist_b = kmeans_fit(df, k=4, iters=3, seed=11, local_max_vectors=0)
+        dist_b = fit_dist(k=4, iters=3, seed=11)
         assert np.array_equal(local_b, dist_b)
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
+def test_kmeans_byte_budget_takes_distributed_path(spark, blobs, monkeypatch):
+    """The driver-local fast path is bounded by BYTES as well as rows: a
+    corpus far under LOCAL_MAX_VECTORS whose collected vectors exceed
+    DRIVER_LOCAL_MAX_BYTES (wide embeddings) must take the distributed
+    combiner path — and give the same centroids."""
+    from mini_feature_store_spark import functions
+    from mini_feature_store_spark.operators import clustering
+
+    df, rows = blobs
+    assert len(rows) < clustering.LOCAL_MAX_VECTORS
+    local = kmeans_fit(df, k=4, iters=4, seed=5)
+
+    calls = []
+    real_local = clustering._kmeans_fit_local
+    monkeypatch.setattr(
+        clustering,
+        "_kmeans_fit_local",
+        lambda *a, **kw: calls.append(1) or real_local(*a, **kw),
+    )
+    assert np.array_equal(kmeans_fit(df, k=4, iters=4, seed=5), local)
+    assert calls == [1]  # under both bounds: the local replay ran
+
+    monkeypatch.setattr(functions, "DRIVER_LOCAL_MAX_BYTES", 1024)
+    dist = kmeans_fit(df, k=4, iters=4, seed=5)
+    assert calls == [1]  # over the byte budget: distributed path
+    assert np.array_equal(dist, local)

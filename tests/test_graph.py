@@ -5,12 +5,21 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
+from mini_feature_store_spark.operators import graph
 from mini_feature_store_spark.operators.graph import (
     connected_components,
     dedup_clusters,
 )
+
+
+@pytest.fixture
+def distributed_cc(monkeypatch):
+    """Force connected_components onto the distributed star path (the
+    driver-local union-find would otherwise absorb these small graphs)."""
+    monkeypatch.setattr(graph, "LOCAL_MAX_EDGES", 0)
 
 
 def _uf_components(edges):
@@ -31,11 +40,9 @@ def _uf_components(edges):
     return {x: find(x) for x in list(parent)}
 
 
-def _check(spark, edges, **kw):
+def _check(spark, edges):
     df = spark.createDataFrame(edges, "u long, v long")
-    got = {
-        r.node: r.component for r in connected_components(df, **kw).collect()
-    }
+    got = {r.node: r.component for r in connected_components(df).collect()}
     want = _uf_components(edges)
     # union-find parent-compression may not leave min at root; normalize
     groups = {}
@@ -46,13 +53,11 @@ def _check(spark, edges, **kw):
     return got
 
 
-def test_chain_collapses_to_one_component(spark):
+def test_chain_collapses_to_one_component(spark, distributed_cc):
     """A 60-node chain: naive label propagation would need 60 rounds; the
     star algorithm must converge well inside max_iter=25 (distributed
     path forced — the r16 driver-local fast path would absorb it)."""
-    got = _check(
-        spark, [(i, i + 1) for i in range(1, 60)], local_max_edges=0
-    )
+    got = _check(spark, [(i, i + 1) for i in range(1, 60)])
     assert set(got.values()) == {1}
 
 
@@ -86,7 +91,7 @@ def test_string_node_ids(spark):
     }
 
 
-def test_two_sink_parents_keep_iterating(spark):
+def test_two_sink_parents_keep_iterating(spark, distributed_cc):
     """Regression: edges {(j,a),(j,e),(t,b),(t,e)} pass the flatness probe
     (no target is a source) while j and t still have TWO parents each — the
     whole graph is one component through the shared parent e. Convergence
@@ -95,7 +100,7 @@ def test_two_sink_parents_keep_iterating(spark):
     df = spark.createDataFrame(
         [("j", "a"), ("j", "e"), ("t", "b"), ("t", "e")], "u string, v string"
     )
-    rows = connected_components(df, local_max_edges=0).collect()
+    rows = connected_components(df).collect()
     # exactly one row per node, all in the single component rooted at "a"
     assert len(rows) == len({r.node for r in rows}) == 5
     assert {r.component for r in rows} == {"a"}
@@ -181,7 +186,9 @@ def test_survivor_anti_join_drops_near_dups(spark):
     assert sorted(r.doc_id for r in survivors.collect()) == [1, 2, 3, 5, 7, 8, 9]
 
 
-def test_local_contract_preserves_cross_partition_connectivity(spark):
+def test_local_contract_preserves_cross_partition_connectivity(
+    spark, distributed_cc
+):
     """A long chain deliberately split across partitions: per-partition
     union-find must collapse within-partition runs while the star rounds
     still merge across partition boundaries into ONE component."""
@@ -189,12 +196,12 @@ def test_local_contract_preserves_cross_partition_connectivity(spark):
 
     chain = [(i, i + 1) for i in range(40)]  # 0-1-2-...-40, one component
     edges = spark.createDataFrame(chain, "u long, v long").repartition(8)
-    comp = connected_components(edges, local_max_edges=0).collect()
+    comp = connected_components(edges).collect()
     assert {r.component for r in comp} == {0}
     assert {r.node for r in comp} == set(range(41))
 
 
-def test_local_contract_string_ids_fall_back(spark):
+def test_local_contract_string_ids_fall_back(spark, distributed_cc):
     from mini_feature_store_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
@@ -202,12 +209,12 @@ def test_local_contract_string_ids_fall_back(spark):
     )
     comp = {
         r.node: r.component
-        for r in connected_components(edges, local_max_edges=0).collect()
+        for r in connected_components(edges).collect()
     }
     assert comp == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
-def test_local_cc_fast_path_equals_distributed(spark):
+def test_local_cc_fast_path_equals_distributed(spark, monkeypatch):
     """r16 driver-local union-find fast path (LOCAL_MAX_EDGES class):
     bit-identical (node, component) mapping to the distributed star
     rounds on a messy random multigraph — self-loops, duplicate and
@@ -220,18 +227,20 @@ def test_local_cc_fast_path_equals_distributed(spark):
     local = {
         r.node: r.component for r in connected_components(df).collect()
     }
-    dist = {
-        r.node: r.component
-        for r in connected_components(df, local_max_edges=0).collect()
-    }
+
+    def components_at(bound):
+        with monkeypatch.context() as m:
+            m.setattr(graph, "LOCAL_MAX_EDGES", bound)
+            return {
+                r.node: r.component
+                for r in connected_components(df).collect()
+            }
+
+    dist = components_at(0)
     assert local == dist
     # boundary: bound smaller than the edge count → distributed path,
     # same answer
-    near = {
-        r.node: r.component
-        for r in connected_components(df, local_max_edges=10).collect()
-    }
-    assert near == dist
+    assert components_at(10) == dist
     sdf = spark.createDataFrame(
         [("b", "a"), ("c", "b"), ("z", "z"), ("q", "r")],
         "u string, v string",

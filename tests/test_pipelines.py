@@ -212,6 +212,35 @@ def test_online_sync_to_file_kv(spark, tmp_path, events_path):
     assert isinstance(payload["event_count_7d"], int)
 
 
+def test_online_sync_is_one_action(spark, tmp_path, events_path):
+    """The sync runs its latest-per-key plan ONCE: the job that writes
+    each partition also returns the sum of what the clients' ``mset``
+    returned — no second ``count()`` re-runs the plan. One action runs
+    3 jobs here; a separate count would double that."""
+    table = str(tmp_path / "features")
+    run_backfill(spark, BackfillConfig(events_path, table, "2024-01-01", "2024-01-05"))
+    kv_dir = str(tmp_path / "kv")
+
+    class TaggedKV(FileKVStore):
+        def mset(self, pairs):
+            return 10 * super().mset(pairs)  # marks where n comes from
+
+    sc = spark.sparkContext
+    sc.setJobGroup("online-sync-once", "online sync job count")
+    try:
+        n = run_online_sync(
+            spark,
+            OnlineSyncConfig(features_table=table, as_of="2024-01-05"),
+            lambda: TaggedKV(kv_dir),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n == 20  # two keys, each reported ×10 by the client
+    assert FileKVStore(kv_dir).keys() == ["features:u1", "features:u2"]
+    jobs = sc.statusTracker().getJobIdsForGroup("online-sync-once")
+    assert len(jobs) <= 3, jobs
+
+
 def test_online_sync_cutoff_excludes_stale_users(spark, tmp_path):
     events_path = str(tmp_path / "ev2")
     spark.createDataFrame(

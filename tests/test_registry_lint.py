@@ -249,28 +249,16 @@ def test_expensive_queries_have_plan_audit_entries():
 #: non-literal limit fails this test until classified here — and
 #: "classified" means arguing the bound, not just naming the site.
 _LIMIT_ALLOWLIST: dict[tuple[str, str], tuple[str, int]] = {
-    ("operators/text.py", "broadcast_ref_max_docs + 1"): (
-        "config-bounded broadcast-regime probe (limit+1 rows counted, "
-        "never collected)",
-        2,
+    ("functions.py", "max_rows + 1"): (
+        "the one driver-local dispatch probe, collect_if_bounded: "
+        "max_rows is a call site's module row cap (LOCAL_MAX_VECTORS, "
+        "LOCAL_MAX_WORDS, LOCAL_MAX_EDGES, BROADCAST_REF_MAX_DOCS) and "
+        "the result is refused above DRIVER_LOCAL_MAX_BYTES; every "
+        "fast path must dispatch through it, never its own limit+1",
+        1,
     ),
     ("operators/clustering.py", "max(sample_size, k)"): (
         "config-bounded k-means seed sample",
-        1,
-    ),
-    ("operators/clustering.py", "bound + 1"): (
-        "config-bounded driver-local k-means dispatch probe "
-        "(LOCAL_MAX_VECTORS rows collected at most; above the bound "
-        "the distributed combiner path runs)",
-        1,
-    ),
-    ("operators/bpe.py", "local_max_words + 1"): (
-        "config-bounded local-trainer dispatch probe",
-        1,
-    ),
-    ("operators/graph.py", "bound + 1"): (
-        "config-bounded local-CC dispatch probe (LOCAL_MAX_EDGES rows "
-        "collected at most; above the bound the star rounds run)",
         1,
     ),
     ("operators/bpe.py", "n_merges"): (
@@ -279,11 +267,6 @@ _LIMIT_ALLOWLIST: dict[tuple[str, str], tuple[str, int]] = {
     ),
     ("operators/unigram.py", "vocab_size"): (
         "vocab-bounded piece table",
-        2,
-    ),
-    ("operators/unigram.py", "local_max_words + 1"): (
-        "config-bounded local-trainer dispatch probe (the bpe_train "
-        "pattern — r16 driver-local unigram trainers)",
         2,
     ),
     ("operators/unigram.py", "seed_n"): (
@@ -384,3 +367,19 @@ def test_release_operator_caches(spark):
     # idempotent, and the plan still recomputes correctly afterwards
     assert release_operator_caches() == 0
     assert pairs.count() >= 1
+
+    # the registry stays bounded: a frame tracked twice is kept once,
+    # and frames a global clearCache() released drop out at the next
+    # registration
+    from mini_feature_store_spark import functions as fx
+
+    a, b = spark.range(5).persist(), spark.range(7).persist()
+    for df_ in (a, a, b, a):
+        fx.track_cache(df_)
+    assert len(fx._OPERATOR_CACHES) == 2
+    spark.catalog.clearCache()
+    c = spark.range(9).persist()
+    for _ in range(3):
+        fx.track_cache(c)
+    assert len(fx._OPERATOR_CACHES) == 1 and fx._OPERATOR_CACHES[0] is c
+    assert release_operator_caches() == 1

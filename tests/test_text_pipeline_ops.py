@@ -595,12 +595,13 @@ def test_trigram_lm_score_validations(spark):
         df.collect()
 
 
-def test_ngram_lm_score_position_equals_type_strategy(spark):
+def test_ngram_lm_score_position_equals_type_strategy(spark, monkeypatch):
     """The two scoring strategies (position-join under a broadcastable
     reference vs type-level at scale) must produce IDENTICAL results —
     the bpe_encode fold≡replay pin applied to the LM dispatch — and
     auto picks position under a tiny reference / type past the probe
     bound."""
+    from mini_feature_store_spark.operators import text
     from mini_feature_store_spark.operators.text import ngram_lm_score
 
     train = spark.createDataFrame(
@@ -637,20 +638,19 @@ def test_ngram_lm_score_position_equals_type_strategy(spark):
     # auto dispatch: tiny reference -> position path; past the probe
     # bound -> type path (results identical either way, so pin the
     # dispatch by comparing against both explicit forms)
-    auto_small = {
-        r.doc_id: tuple(r)[1:]
-        for r in ngram_lm_score(
-            train, score, order=3, strategy="auto",
-            broadcast_ref_max_docs=10,
-        ).collect()
-    }
-    auto_large = {
-        r.doc_id: tuple(r)[1:]
-        for r in ngram_lm_score(
-            train, score, order=3, strategy="auto",
-            broadcast_ref_max_docs=1,
-        ).collect()
-    }
+    def auto_at(bound):
+        with monkeypatch.context() as m:
+            m.setattr(text, "BROADCAST_REF_MAX_DOCS", bound)
+            assert text._small_reference(train) == (bound >= 2)
+            return {
+                r.doc_id: tuple(r)[1:]
+                for r in ngram_lm_score(
+                    train, score, order=3, strategy="auto"
+                ).collect()
+            }
+
+    auto_small = auto_at(10)
+    auto_large = auto_at(1)
     assert auto_small == auto_large == {
         r.doc_id: tuple(r)[1:]
         for r in ngram_lm_score(
@@ -664,10 +664,11 @@ def test_ngram_lm_score_position_equals_type_strategy(spark):
         ngram_lm_score(train, score, strategy="nope")
 
 
-def test_bigram_lm_score_position_equals_type_strategy(spark):
+def test_bigram_lm_score_position_equals_type_strategy(spark, monkeypatch):
     """bigram_lm_score's two strategies (and the auto dispatch on both
     sides of the probe bound) are result-identical — the same pin as
     ngram_lm_score's."""
+    from mini_feature_store_spark.operators import text
     from mini_feature_store_spark.operators.text import bigram_lm_score
 
     train = spark.createDataFrame(
@@ -686,11 +687,10 @@ def test_bigram_lm_score_position_equals_type_strategy(spark):
         r.doc_id: tuple(r)[1:]
         for r in bigram_lm_score(train, score, strategy="type").collect()
     }
+    monkeypatch.setattr(text, "BROADCAST_REF_MAX_DOCS", 1)  # → type
     assert want == {
         r.doc_id: tuple(r)[1:]
-        for r in bigram_lm_score(
-            train, score, strategy="auto", broadcast_ref_max_docs=1
-        ).collect()
+        for r in bigram_lm_score(train, score, strategy="auto").collect()
     }
 
     import pytest as _pytest

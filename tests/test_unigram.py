@@ -382,18 +382,24 @@ def test_unigram_train_em_cli_and_packing_autodetect(spark, tmp_path):
     assert all(r.n_tokens > 0 for r in manifest.collect())
 
 
-def test_unigram_train_local_equals_distributed(spark):
+def test_unigram_train_local_equals_distributed(spark, monkeypatch):
     """The r16 driver-local trainer path (word table within
-    local_max_words) must reproduce the distributed form EXACTLY for
+    LOCAL_MAX_WORDS) must reproduce the distributed form EXACTLY for
     the integer trainer — integer sums are associative, so this is a
     bit-equality contract, not a tolerance. The EM trainer's float
     path is rows-only by design; for it we pin the surviving piece SET
     and per-piece logprob agreement to 1e-9 (the only divergence
     permitted is float summation order)."""
+    from mini_feature_store_spark.operators import bpe
     from mini_feature_store_spark.operators.unigram import (
         unigram_train,
         unigram_train_em,
     )
+
+    def distributed(train, **kw):
+        with monkeypatch.context() as m:
+            m.setattr(bpe, "LOCAL_MAX_WORDS", 0)
+            return {tuple(r) for r in train(df, **kw).collect()}
 
     df = spark.createDataFrame(
         [
@@ -410,16 +416,10 @@ def test_unigram_train_local_equals_distributed(spark):
                 df, vocab_size=12, max_piece_len=4, refine_rounds=rounds
             ).collect()
         }
-        dist = {
-            (r.piece, r.freq)
-            for r in unigram_train(
-                df,
-                vocab_size=12,
-                max_piece_len=4,
-                refine_rounds=rounds,
-                local_max_words=0,  # force the distributed path
-            ).collect()
-        }
+        dist = distributed(
+            unigram_train, vocab_size=12, max_piece_len=4,
+            refine_rounds=rounds,
+        )
         assert loc == dist, rounds
 
     em_loc = {
@@ -428,12 +428,9 @@ def test_unigram_train_local_equals_distributed(spark):
             df, vocab_size=10, max_piece_len=4
         ).collect()
     }
-    em_dist = {
-        r.piece: r.logprob
-        for r in unigram_train_em(
-            df, vocab_size=10, max_piece_len=4, local_max_words=0
-        ).collect()
-    }
+    em_dist = dict(
+        distributed(unigram_train_em, vocab_size=10, max_piece_len=4)
+    )
     assert set(em_loc) == set(em_dist)
     for p, v in em_loc.items():
         assert abs(v - em_dist[p]) < 1e-9, p

@@ -464,8 +464,8 @@ AUDITED: dict[str, str] = {
         "corpus shuffles at ANY reference size — is exhibited and "
         "plan-audited by doc_5gram_lm_score, pinned result-equal at "
         "orders 2/3/5 by test, and curve-measured in SCALING.md; "
-        "production callers get strategy='auto' (bounded limit-probe "
-        "picks)."
+        "production callers get strategy='auto' (collect_if_bounded "
+        "probe picks)."
     ),
     "doc_5gram_lm_score": (
         "Arbitrary-order stupid backoff at CCNet's order, TYPE-level "
@@ -540,7 +540,7 @@ AUDITED: dict[str, str] = {
         "the shape that caps corpus shuffles when the reference "
         "outgrows broadcast) is pinned result-equal by test and "
         "curve-measured in SCALING.md; production callers get "
-        "strategy='auto' (bounded limit-probe picks)."
+        "strategy='auto' (collect_if_bounded probe picks)."
     ),
     "doc_url_dedup": (
         "Canonicalization is a map-only codegen chain (regexp_extract/"
@@ -962,8 +962,9 @@ AUDITED: dict[str, str] = {
         "ONE groupBy(shingle hash) → double Generate over each sorted "
         "posting list — no index self-join, no df/sizes passes) feeding "
         "connected components, then one cluster_size window on "
-        "Exchange(cluster_id). r16: under LOCAL_MAX_EDGES (200k) the "
-        "checkpointed pair list is collected and a driver union-find "
+        "Exchange(cluster_id). r16: under LOCAL_MAX_EDGES (200k) and the "
+        "driver byte budget (collect_if_bounded) the checkpointed pair "
+        "list is collected and a driver union-find "
         "labels components in-process — bit-identical min-id mapping, "
         "zero star rounds (each round was ~1 s of fixed toll at any "
         "edge count); above the bound the large/small-star path is "
@@ -1048,8 +1049,9 @@ AUDITED: dict[str, str] = {
         "Oracled exact-path twin of embedding_corpus_curate: "
         "cosine_pairs block-GEMM (quadratic by information-theoretic "
         "necessity at threshold 0.4 — the LSH variant is the 100 TB "
-        "path), connected components (r16: driver union-find under "
-        "LOCAL_MAX_EDGES, large/small-star above), UNHINTED anti-join "
+        "path), connected components (r16: driver union-find when "
+        "collect_if_bounded admits the edges at LOCAL_MAX_EDGES, "
+        "large/small-star above), UNHINTED anti-join "
         "(drops grow with the corpus), one label aggregate. Check: "
         "anti-join strategy left to AQE; no driver materialization "
         "beyond the CC edge checkpoint/bounded collect."

@@ -709,7 +709,7 @@ def run_scale(spark, d: Path, only: set[str] | None = None) -> dict[str, float]:
         return bpe_tokenize(docs, vocab)
 
     def _bpe_encode_replay200():
-        # 200 merges > FOLD_MAX_MERGES → the Arrow replay path (the
+        # 200 merges through the default Arrow replay path (the
         # real-vocabulary form this row exists to certify)
         from mini_feature_store_spark.operators.bpe import bpe_encode
 
