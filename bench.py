@@ -116,6 +116,9 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "sf": sf,
+        # local[cpus] core count: runs at different core counts overwrite
+        # the same bench_results.json, so the artifact names its own
+        "cpus": cpus,
         # machine-speed constant measured immediately before the run (and
         # again after — host contention can shift mid-run); see _calibrate.
         "calib_sec": calib,

@@ -6,23 +6,16 @@ with ``feature_ts <= date(as_of_ts)``. Strictly-future features must never
 leak (golden contract: TestPointInTimeJoin.scala:48-99 — a label at
 ``2024-01-02 12:00`` picks day 2's features, never day 3's).
 
-Two physical forms:
-
-- ``strategy='window'`` — the reference's plan: range left join + row_number
-  over (keys, as_of_ts) ordered by feature_ts desc + rank=1 filter. Simple,
-  but the join materializes *every* qualifying feature row per label before
-  the window discards all but one.
-
-- ``strategy='max_by'`` — the scale plan: same range join, then
-  ``max_by(struct(features), feature_ts)`` in a single hash aggregate. The
-  partial (map-side) aggregation collapses candidates before the shuffle, so
-  per-label data crossing the wire is one struct, not a sorted pile; no sort
-  at all. Preferred at 100 TB; both forms are oracle-checked equal.
+One physical form, in ``asof_join``: an equi-join on the keys with the
+temporal predicate as residual, then one ``max_by(struct(features), ts)``
+aggregate per label row, and no window. The aggregate groups by the label
+row, whose columns include the join keys, so after a sort-merge join it
+needs no shuffle of its own. ``point_in_time_join`` is its date-grain
+front.
 
 Scale controls:
 - ``lookback_days`` is a per-label staleness TTL: a label only matches
-  features with ``feature_ts >= as_of_date - lookback_days`` (enforced in
-  the join condition, so the semantics are well-defined per label — a label
+  features with ``feature_ts >= as_of_date - lookback_days`` (a label
   whose latest feature is older than the TTL gets null). The same bound,
   anchored at the global [min, max] as-of range, is also applied as a
   pre-filter on the feature scan — at 100 TB this is the difference between
@@ -33,7 +26,7 @@ Scale controls:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _TOL_UNITS_US = {
@@ -65,12 +58,14 @@ def asof_join(
     """Generalized as-of join at full timestamp precision (pandas
     ``merge_asof`` surface, distributed).
 
-    ``salt > 0`` splits celebrity keys across ``salt`` shuffle partitions
-    exactly as in ``point_in_time_join``: right rows get a uniform salt,
-    left rows are replicated per salt value, the join key gains the salt,
-    and the per-left-row min_by/max_by collapse (which spans all of a
-    row's salt copies) recovers the same single pick — needed under
-    ``how='left'``, where AQE may not split the non-preserved side.
+    ``salt > 0`` splits celebrity keys across ``salt`` shuffle partitions:
+    right rows get a uniform salt, left rows are replicated per salt
+    value, the join key gains the salt, and the per-left-row min_by/max_by
+    collapse (which spans all of a row's salt copies) recovers the same
+    single pick — needed under ``how='left'``, where AQE may not split the
+    non-preserved side. A salted ``how='inner'`` joins left and filters
+    after the collapse (a copy with no match may not be the copy that
+    matches); unsalted, it joins inner, which keeps AQE's skew split.
 
     For each left row pick ONE right row per the direction:
 
@@ -90,9 +85,9 @@ def asof_join(
 
     Physical form: equi-join on ``keys`` (hash/SMJ — never a nested loop)
     with the direction+tolerance predicate as residual, collapsed by a single
-    ``min_by/max_by`` hash aggregate keyed by the left row — one struct per
-    left row crosses the final shuffle, no sort, no window (same scale
-    rationale as ``point_in_time_join`` strategy='max_by').
+    ``min_by/max_by`` aggregate keyed by the left row — the left row carries
+    the keys, so after a sort-merge join the collapse reuses its
+    partitioning; no window.
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"bad direction: {direction!r}")
@@ -135,7 +130,8 @@ def asof_join(
         cond &= F.col(f"l.{k}") == F.col(f"r.{k}")
     if salt > 0:
         cond &= F.col("l._asof_salt") == F.col("r._asof_salt")
-    joined = left.alias("l").join(right.alias("r"), cond, "left")
+    join_how = "left" if salt > 0 else how
+    joined = left.alias("l").join(right.alias("r"), cond, join_how)
 
     # Ordering key for the pick: direction-appropriate distance, then
     # tie-breakers. min_by/max_by over a struct orders lexicographically.
@@ -147,18 +143,20 @@ def asof_join(
             *[F.col(f"r.{c}").alias(c) for c in tie_breakers],
         )
         picker = F.min_by
-    elif direction == "forward":
-        order = F.struct(
-            r_ts.alias("t"), *[F.col(f"r.{c}").alias(c) for c in tie_breakers]
-        )
-        picker = F.min_by
     else:
-        # backward wants max timestamp; negate tie-breaker direction is not
-        # needed for determinism, max over the struct is already total.
-        order = F.struct(
-            r_ts.alias("t"), *[F.col(f"r.{c}").alias(c) for c in tie_breakers]
+        # forward wants the min timestamp, backward the max (tie-breakers
+        # need no negation: the order over the struct is already total).
+        # Without tie-breakers the bare timestamp orders like its one-field
+        # struct and keeps the aggregate's comparison on a primitive.
+        order = (
+            F.struct(
+                r_ts.alias("t"),
+                *[F.col(f"r.{c}").alias(c) for c in tie_breakers],
+            )
+            if tie_breakers
+            else r_ts
         )
-        picker = F.max_by
+        picker = F.min_by if direction == "forward" else F.max_by
     # Null-candidate rows (left-join padding — including salt copies whose
     # slice held no match) must LOSE the pick: a struct with null FIELDS is
     # itself non-null and sorts nulls-first, so under min_by (forward /
@@ -181,7 +179,7 @@ def asof_join(
             *[F.col(f"_r.{c}").alias(c) for c in [right_ts] + value_cols],
         )
     )
-    if how == "inner":
+    if how != join_how:
         out = out.where(F.col(right_ts).isNotNull())
     return out.select(*out_cols)
 
@@ -193,7 +191,6 @@ def point_in_time_join(
     label_ts: str = "as_of_ts",
     feature_ts: str = "day",
     how: str = "left",
-    strategy: str = "max_by",
     lookback_days: int | None = None,
     broadcast_features: bool = False,
     salt: int = 0,
@@ -206,6 +203,16 @@ def point_in_time_join(
     ``how='inner'`` drops labels with no qualifying features instead of
     emitting nulls.
 
+    The date-grain front of ``asof_join(direction='backward')``: the pick
+    runs against ``to_date(label_ts)``, so a label at 12:00 sees that
+    day's snapshot. ``lookback_days`` is applied to the PICKED row —
+    nulled (``left``) or dropped (``inner``) when older than
+    ``as_of_date - lookback_days`` — which equals a TTL in the join
+    condition, since the latest candidate is stale exactly when no
+    candidate lies inside the window. It stays a calendar-day comparison
+    on dates, never ``asof_join``'s micro-second ``tolerance``: in a
+    non-UTC session a day across a DST change is not 86,400 s.
+
     Celebrity-key skew (``salt``): the join shuffles both sides by ``keys``,
     so one hot key (a celebrity user holding 10% of feature rows) makes one
     partition the job's straggler. Under ``how='inner'`` AQE's skew-join
@@ -214,47 +221,13 @@ def point_in_time_join(
     AQE must NOT split the features (build) side — splitting the
     non-preserved side of an outer join would emit one null-padded row per
     split for unmatched labels — so the planner leaves the hot partition
-    intact. ``salt > 0`` is the explicit fallback for that case: feature
-    rows get a uniform pseudo-random salt in [0, salt), label rows are
-    replicated once per salt value, and the join key becomes
-    (keys..., salt), splitting the hot key across ``salt`` partitions.
-    Each feature candidate appears in exactly ONE salt slice, so the
-    existing per-label-row collapse (max_by / row_number over
-    ``_pit_row_id``, which spans all of a label's salt copies) recovers the
-    global latest match, and a label with no match in ANY slice still
-    yields exactly one null row — semantics identical to ``salt=0`` for
-    both strategies and both ``how``s (result-pinned in tests/test_skew.py).
-    Cost: a ``salt``× narrow replication of the (small) label side.
+    intact. ``salt > 0`` is the explicit fallback for that case (see
+    ``asof_join``), result-identical to ``salt=0`` for both ``how``s
+    (pinned in tests/test_skew.py). Cost: a ``salt``× narrow replication
+    of the (small) label side.
     """
-    if how not in ("left", "inner"):
-        raise ValueError(f"how must be 'left' or 'inner', got {how!r}")
-    if strategy not in ("window", "max_by"):
-        raise ValueError(f"strategy must be 'window' or 'max_by', got {strategy!r}")
-    if salt < 0:
-        raise ValueError(f"salt must be >= 0, got {salt}")
-    keys = list(keys)
-    feature_cols = [c for c in features.columns if c not in keys]
-    value_cols = [c for c in feature_cols if c != feature_ts]
-    out_cols = labels.columns + [feature_ts] + value_cols
-
-    # Unique row id: two label rows that agree on every visible column (or
-    # just on keys+label_ts with different values) must each produce their
-    # own output row — grouping/partitioning by visible columns alone would
-    # collapse them and break left-join row preservation.
-    lab = labels.withColumn(
-        "_as_of_date", F.to_date(F.col(label_ts))
-    ).withColumn("_pit_row_id", F.monotonically_increasing_id())
+    lab = labels.withColumn("_as_of_date", F.to_date(F.col(label_ts)))
     feat = features
-    if salt > 0:
-        # Replication is the label side (explode = narrow, no shuffle);
-        # the salt must be assigned AFTER _pit_row_id so every copy of a
-        # label row shares the id the final collapse groups on.
-        lab = lab.withColumn(
-            "_pit_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-        )
-        feat = feat.withColumn(
-            "_pit_salt", F.floor(F.rand(salt_seed) * salt).cast("int")
-        )
     if lookback_days is not None:
         # Scan pre-filter: anchored at the labels' global as-of range, a
         # superset of every per-label TTL window; two scalar aggregates
@@ -270,60 +243,25 @@ def point_in_time_join(
     if broadcast_features:
         feat = F.broadcast(feat)
 
-    cond = F.col(f"f.{feature_ts}") <= F.col("l._as_of_date")
+    out = asof_join(
+        lab, feat, keys, "_as_of_date", feature_ts,
+        how=how, salt=salt, salt_seed=salt_seed,
+    )
     if lookback_days is not None:
-        # Per-label TTL: features staler than lookback_days at this label's
-        # as-of date never match (well-defined per label, not just globally).
-        cond = cond & (
-            F.col(f"f.{feature_ts}")
-            >= F.date_sub(F.col("l._as_of_date"), lookback_days)
+        fresh = F.col(feature_ts) >= F.date_sub(
+            F.col("_as_of_date"), lookback_days
         )
-    for k in keys:
-        cond = cond & (F.col(f"l.{k}") == F.col(f"f.{k}"))
-    if salt > 0:
-        cond = cond & (F.col("l._pit_salt") == F.col("f._pit_salt"))
-    # Under salt, the label side is replicated, so 'inner' must be applied
-    # AFTER the per-row collapse (a copy with no match may not be the copy
-    # that matches) — join left, filter at the end like how='left' does.
-    join_how = "left" if salt > 0 else how
-    joined = lab.alias("l").join(feat.alias("f"), cond, join_how)
-
-    if strategy == "window":
-        w = Window.partitionBy(F.col("l._pit_row_id")).orderBy(
-            F.col(f"f.{feature_ts}").desc_nulls_last()
-        )
-        picked = (
-            joined.withColumn("_rank", F.row_number().over(w))
-            .where(F.col("_rank") == 1)
-            .select(
-                *[F.col(f"l.{c}") for c in labels.columns],
-                *[F.col(f"f.{c}") for c in [feature_ts] + value_cols],
+        if how == "inner":
+            out = out.where(fresh)
+        else:
+            picked = [c for c in features.columns if c not in keys]
+            out = out.select(
+                *[
+                    F.when(fresh, F.col(c)).alias(c) if c in picked else c
+                    for c in out.columns
+                ]
             )
-        )
-        if how == "inner" and join_how == "left":
-            # salted path joined left (see above); apply inner now
-            picked = picked.where(F.col(feature_ts).isNotNull())
-        return picked
-
-    # max_by form: collapse candidates in a hash aggregate keyed by the label
-    # row. Aggregate over a single struct so "latest" picks all feature
-    # columns atomically; null when no candidate matched (left join).
-    feat_struct = F.when(
-        F.col(f"f.{feature_ts}").isNotNull(),
-        F.struct(*[F.col(f"f.{c}") for c in [feature_ts] + value_cols]),
-    )
-    group_cols = labels.columns + ["_pit_row_id"]
-    grouped = (
-        joined.groupBy(*[F.col(f"l.{c}").alias(c) for c in group_cols])
-        .agg(F.max_by(feat_struct, F.col(f"f.{feature_ts}")).alias("_f"))
-        .select(
-            *labels.columns,
-            *[F.col(f"_f.{c}").alias(c) for c in [feature_ts] + value_cols],
-        )
-    )
-    if how == "inner":
-        grouped = grouped.where(F.col(feature_ts).isNotNull())
-    return grouped.select(*out_cols)
+    return out.drop("_as_of_date")
 
 
 def point_in_time_join_multi(
@@ -332,7 +270,6 @@ def point_in_time_join_multi(
     keys: list[str] | tuple[str, ...] = ("user_id",),
     label_ts: str = "as_of_ts",
     how: str = "left",
-    strategy: str = "max_by",
 ) -> DataFrame:
     """Labels as-of joined against MULTIPLE feature groups — the
     feature-store training-set assembly call (each group is a feature
@@ -377,7 +314,6 @@ def point_in_time_join_multi(
             label_ts=label_ts,
             feature_ts=ts_col,
             how=how,
-            strategy=strategy,
             lookback_days=g.get("lookback_days"),
         )
     return out

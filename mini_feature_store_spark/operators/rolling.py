@@ -203,27 +203,15 @@ def backfill_features_window_form(
       Fails fast via ``raise_error`` if >64 types show up at runtime.
     - ``"collect_set"``: exact for unbounded type cardinality, but carries the
       whole window's set per row — memory grows with window × cardinality,
-      which does not survive 100 TB. Opt-in fallback.
-    - ``"probe"``: the eager driver-side probe (counts distinct types NOW and
-      picks bitmask vs collect_set). Runs a Spark job at plan-build time —
-      opt-in only, for ad-hoc use where an extra pass is acceptable.
+      which does not survive 100 TB. Opt-in fallback, and the only path
+      for more than 64 types.
     """
-    spark = events.sparkSession
-    if distinct_types_strategy not in ("bitmask", "collect_set", "probe"):
+    if distinct_types_strategy not in ("bitmask", "collect_set"):
         raise ValueError(
             f"unknown distinct_types_strategy: {distinct_types_strategy!r}"
         )
 
     ev = _events_in_lookback(events, start, end, user_col, ts_col, type_col)
-
-    if distinct_types_strategy == "probe":
-        types_seen = [
-            r[0] for r in ev.select("event_type").distinct().limit(65).collect()
-        ]
-        if len(types_seen) <= 64:
-            distinct_types_strategy, known_types = "bitmask", types_seen
-        else:
-            distinct_types_strategy = "collect_set"
 
     use_bitmask = distinct_types_strategy == "bitmask"
     if use_bitmask:

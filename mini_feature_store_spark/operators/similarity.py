@@ -660,9 +660,10 @@ def _train_ivfpq(
     dim = sample.shape[1]
     sub = dim // m_sub
     n_codes = 1 << nbits
-    cent_unit = (
-        sample[:n_cells] / np.linalg.norm(sample[:n_cells], axis=1)[:, None]
-    )
+    cent = sample[:n_cells]
+    # zero-safe: a zero sample row must give a zero centroid, not a NaN one
+    # that wins every argmax and loses every probe ordering
+    cent_unit = _np_safe_div(cent, np.linalg.norm(cent, axis=1)[:, None])
     rng = np.random.default_rng(seed)
     subs = sample.reshape(len(sample), m_sub, sub)
     books = np.empty((m_sub, n_codes, sub))

@@ -71,7 +71,6 @@ def run_batch_inference(
         features.where(F.col(cfg.day_col) <= cutoff),
         keys=[cfg.key_col],
         order_cols=[cfg.day_col],
-        strategy="max_by",
     )
     out = users.join(latest, [cfg.key_col], "left")
     out.write.mode("overwrite").parquet(cfg.output_path)

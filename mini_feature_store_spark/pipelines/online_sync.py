@@ -142,7 +142,7 @@ def run_online_sync(
             & (F.col(cfg.order_col) >= F.date_sub(cutoff, cfg.lookback_days))
         )
     latest = latest_per_key(
-        features, keys=[cfg.key_col], order_cols=[cfg.order_col], strategy="max_by"
+        features, keys=[cfg.key_col], order_cols=[cfg.order_col]
     )
     value_cols = [c for c in latest.columns if c != cfg.key_col]
     payloads = latest.select(

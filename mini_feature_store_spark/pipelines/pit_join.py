@@ -72,7 +72,6 @@ def run_pit_join(spark: SparkSession, cfg: PointInTimeJoinConfig) -> DataFrame:
         keys=cfg.keys,
         label_ts=cfg.label_ts,
         feature_ts=cfg.feature_ts,
-        strategy="max_by",
         lookback_days=cfg.lookback_days,
     )
     if "as_of_date" in cfg.partition_by:

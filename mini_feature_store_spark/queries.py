@@ -279,7 +279,7 @@ def pit_training_data(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    return point_in_time_join(labels, features, strategy="max_by")
+    return point_in_time_join(labels, features)
 
 
 @_q(
@@ -396,7 +396,7 @@ def latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     _utc(spark)
     events = load_testdata(spark, sf_dir, "events")["events"]
     return latest_per_key(
-        events, keys=["user_id"], order_cols=["ts", "event_id"], strategy="max_by"
+        events, keys=["user_id"], order_cols=["ts", "event_id"]
     )
 
 
@@ -5943,7 +5943,7 @@ def feature_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def snap(df):
         return latest_per_key(
-            df, keys=["user_id"], order_cols=["ts", "event_id"], strategy="max_by"
+            df, keys=["user_id"], order_cols=["ts", "event_id"]
         ).select("user_id", "event_type", "value")
 
     old = snap(events.where(F.to_date("ts") < F.lit("2024-01-15")))
@@ -7440,11 +7440,10 @@ FROM cand WHERE rk = 1
 def pit_training_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The TYPED feature view composed through the leakage-safe as-of
     join — training-set assembly with the map-valued per-type counts
-    riding through the join (window strategy: ``row_number`` handles any
-    value type; maps are not orderable so they could never be a sort
-    key, only payload). The map serializes to sorted ``type:count``
-    pairs AFTER the join for the gate row, pinning that the join carried
-    the full map intact."""
+    riding through the join (the map is never an ordering key, only
+    ``max_by`` payload, so any value type rides along). The map
+    serializes to sorted ``type:count`` pairs AFTER the join for the
+    gate row, pinning that the join carried the full map intact."""
     from mini_feature_store_spark.operators.point_in_time import (
         point_in_time_join,
     )
@@ -7464,7 +7463,7 @@ def pit_training_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    out = point_in_time_join(labels, features, strategy="window")
+    out = point_in_time_join(labels, features)
     return out.select(
         "user_id",
         "label",

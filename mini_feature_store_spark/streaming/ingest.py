@@ -279,7 +279,7 @@ def stream_online_sync(
 
     def sync_batch(batch_df: DataFrame, batch_id: int) -> None:
         latest = latest_per_key(
-            batch_df, keys=[key_col], order_cols=[order_col], strategy="max_by"
+            batch_df, keys=[key_col], order_cols=[order_col]
         )
         value_cols = [c for c in latest.columns if c != key_col]
         payloads = latest.select(

@@ -139,9 +139,8 @@ def test_forms_agree_on_testdata(spark, sf_dir):
 def test_window_form_plan_build_runs_zero_jobs(spark):
     """Building the window-form plan must not trigger any Spark job
     (VERDICT r2 item 4): at 100 TB an eager probe is an extra full pass
-    over the corpus before the real job even starts. The old behavior
-    (distinct event_type collect at plan-build) is now the opt-in
-    ``distinct_types_strategy='probe'``."""
+    over the corpus before the real job even starts. Callers that know
+    their types pass ``known_types`` instead of an eager distinct."""
     events = _events(
         spark,
         [
@@ -159,6 +158,8 @@ def test_window_form_plan_build_runs_zero_jobs(spark):
 
 
 def test_window_form_known_types_and_probe_agree(spark):
+    """The lazy bitmask (type bits from a broadcast distinct), the
+    ``known_types`` literal map and ``collect_set`` give equal rows."""
     events = _events(
         spark,
         [
@@ -176,14 +177,6 @@ def test_window_form_known_types_and_probe_agree(spark):
             known_types=["click", "purchase"],
         )
     )
-    probe = _rows(
-        backfill_features_window_form(
-            events,
-            "2024-01-01",
-            "2024-01-03",
-            distinct_types_strategy="probe",
-        )
-    )
     cset = _rows(
         backfill_features_window_form(
             events,
@@ -192,7 +185,7 @@ def test_window_form_known_types_and_probe_agree(spark):
             distinct_types_strategy="collect_set",
         )
     )
-    assert base == known == probe == cset
+    assert base == known == cset
 
 
 def test_window_form_known_types_unseen_type_fails_loudly(spark):

@@ -478,6 +478,44 @@ def test_pq_topk_recall(emb):
     assert len(set(exact) & pure) / len(exact) >= 0.8
 
 
+def test_ivfpq_zero_vector_centroid_still_probes(spark, tmp_path):
+    """A zero vector drawn into the centroid sample must not poison the
+    inverted file: its centroid is zero (not NaN), so corpus vectors still
+    land in probe-able cells and every query gets its k neighbours; the
+    persisted index gets the same finite centroids."""
+    import json
+
+    import numpy as np
+
+    from mini_feature_store_spark.operators.ann_index import build_ivfpq_index
+    from mini_feature_store_spark.operators.similarity import pq_topk
+
+    rng = np.random.default_rng(3)
+    vecs = rng.normal(size=(300, 16))
+    ids = spark.range(300).withColumnRenamed("id", "vec_id")
+    # the hash-first row is centroid 0 of the sampled IVF (seed 42)
+    first = ids.orderBy(
+        F.xxhash64(F.col("vec_id").cast("string"), F.lit(42))
+    ).first().vec_id
+    vecs[first] = 0.0
+    emb = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    queries = emb.where(
+        (F.col("vec_id") < 11) & (F.col("vec_id") != first)
+    ).limit(10)
+    out = pq_topk(
+        queries, emb, k=5, n_cells=8, n_probe=2, m_sub=4, dim=16
+    ).collect()
+    assert len(out) == 50
+
+    idx = str(tmp_path / "ivfpq")
+    build_ivfpq_index(emb, idx, n_cells=8, m_sub=4)
+    meta = json.loads((tmp_path / "ivfpq" / "model.json").read_text())
+    assert np.isfinite(np.array(meta["centroids"])).all()
+
+
 def test_pq_topk_validation(spark):
     from mini_feature_store_spark.operators.similarity import pq_topk
 

@@ -3300,8 +3300,7 @@ def test_online_sync_bucketed_features_collapse_without_exchange(
             def latest_plan(features):
                 return plan_text(
                     latest_per_key(
-                        features, keys=["user_id"], order_cols=["day"],
-                        strategy="max_by",
+                        features, keys=["user_id"], order_cols=["day"]
                     )
                 )
 

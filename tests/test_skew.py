@@ -131,7 +131,7 @@ def test_pit_inner_join_aqe_skew_split_fires(spark, celebrity_pit):
     partition and split it (SortMergeJoin(skew=true) in the final plan)."""
     feats, labels = celebrity_pit
     with _aqe_skew_confs(spark):
-        out = point_in_time_join(labels, feats, how="inner", strategy="max_by")
+        out = point_in_time_join(labels, feats, how="inner")
         plan = _executed_plan(out)
     assert "isFinalPlan=true" in plan
     assert "skew=true" in plan, plan
@@ -143,36 +143,51 @@ def test_pit_left_outer_aqe_cannot_split_build_side(spark, celebrity_pit):
     knob below."""
     feats, labels = celebrity_pit
     with _aqe_skew_confs(spark):
-        out = point_in_time_join(labels, feats, how="left", strategy="max_by")
+        out = point_in_time_join(labels, feats, how="left")
         plan = _executed_plan(out)
     assert "isFinalPlan=true" in plan
     assert "skew=true" not in plan
 
 
 @pytest.mark.parametrize("how", ["left", "inner"])
-@pytest.mark.parametrize("strategy", ["max_by", "window"])
-def test_pit_salted_matches_unsalted(spark, celebrity_pit, how, strategy):
-    """salt > 0 must be result-identical to salt=0 for every strategy/how
-    combination, including null rows for the label-only user."""
+def test_pit_salted_matches_unsalted(spark, celebrity_pit, how):
+    """salt > 0 must be result-identical to salt=0 for both hows,
+    including null rows for the label-only user."""
     feats, labels = celebrity_pit
-    plain = point_in_time_join(labels, feats, how=how, strategy=strategy)
-    salted = point_in_time_join(
-        labels, feats, how=how, strategy=strategy, salt=8
-    )
+    plain = point_in_time_join(labels, feats, how=how)
+    salted = point_in_time_join(labels, feats, how=how, salt=8)
     assert Counter(map(tuple, plain.collect())) == Counter(
         map(tuple, salted.collect())
     )
 
 
 def test_pit_salted_join_key_includes_salt(spark, celebrity_pit):
-    """The salted plan must actually join on (user_id, _pit_salt) — i.e.
+    """The salted plan must actually join on (user_id, _asof_salt) — i.e.
     the hot key's rows are spread across `salt` shuffle partitions."""
     feats, labels = celebrity_pit
     out = point_in_time_join(labels, feats, how="left", salt=8)
     plan = out._jdf.queryExecution().analyzed().toString()
-    assert "_pit_salt" in plan
+    assert "_asof_salt" in plan
     # and the salt never leaks into the output schema
-    assert "_pit_salt" not in out.columns
+    assert "_asof_salt" not in out.columns
+
+
+def test_asof_inner_join_aqe_skew_split_fires(spark, celebrity_pit):
+    """Unsalted asof_join(how='inner') joins inner, so AQE may split the
+    celebrity partition on either side — the same pin as the PIT join."""
+    from mini_feature_store_spark.operators.point_in_time import asof_join
+
+    feats, labels = celebrity_pit
+    right = feats.select(
+        "user_id", F.col("day").cast("timestamp").alias("fts"), "f1"
+    )
+    with _aqe_skew_confs(spark):
+        out = asof_join(
+            labels, right, ["user_id"], "as_of_ts", "fts", how="inner"
+        )
+        plan = _executed_plan(out)
+    assert "isFinalPlan=true" in plan
+    assert "skew=true" in plan, plan
 
 
 @pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])

@@ -39,9 +39,12 @@ AUDITED: dict[str, str] = {
         "hash in the driver compare)."
     ),
     "pit_training_data": (
-        "As-of join: single shuffle on user_id for the left join, window "
-        "rank inside the same partitioning, rank=1 filter. No driver "
-        "materialization anywhere."
+        "As-of join: equi-join on user_id with the day <= as-of "
+        "residual, then one max_by aggregate per label row (partial "
+        "before its exchange; no window). At sf0.01 the feature side "
+        "broadcasts, so the collapse carries the one exchange; under a "
+        "sort-merge join it reuses the join's user_id partitioning. No "
+        "driver materialization anywhere."
     ),
     "user_sessions": (
         "Both window passes (lag, running sum) and the (user, session) "
@@ -814,11 +817,10 @@ AUDITED: dict[str, str] = {
         "Typed (map-valued) PIT training assembly (r9): the "
         "features_daily_typed subtree (two-level daily pre-aggregate, "
         "one user_id window exchange, bounded map fold) feeds the "
-        "window-strategy as-of join — row_number over (user, as_of) "
-        "with the map riding as PAYLOAD only (maps are not orderable; "
-        "the sort keys are day/ts). ONE shuffle on user_id for the "
-        "join + rank, rank=1 filter, and the gate-row map "
-        "serialization (sorted type:count pairs) is a post-join "
+        "as-of join — max_by per label row with the map riding as "
+        "PAYLOAD only (the ordering key is day). The join + collapse "
+        "add one exchange (as in pit_training_data), and the gate-row "
+        "map serialization (sorted type:count pairs) is a post-join "
         "projection. In-suite ~2.6s is the typed per-row map-fold "
         "payload documented at features_daily_typed (2 scans / 6 "
         "exchanges — fewer than the string form; don't chase)."
