@@ -6,6 +6,13 @@ serving path builds the index offline and amortizes it: at 100 TB the
 encode pass is a full-corpus job you run once per corpus version, while
 probes run thousands of times a day.
 
+Nothing here re-implements the search: training (``_train_ivfpq``), the
+nearest-cell kernel, the PQ codec, the probe, the PQ shortlist and the
+exact re-rank are ``similarity``'s, so ``pq_topk_indexed`` returns what
+``pq_topk`` returns for the same corpus and seed. The only difference is
+where the candidate rows come from: the persisted codes carry the raw
+vector, so the re-rank needs no second corpus scan.
+
 Layout under ``index_dir``:
 
 - ``model.json``   — driver-side artifacts: IVF centroids (n_cells·dim)
@@ -30,58 +37,39 @@ from pathlib import Path
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mini_feature_store_spark.functions import round_half_up, spread
+from mini_feature_store_spark.functions import spread
 from mini_feature_store_spark.operators.similarity import (
+    _exact_rerank,
     _hash_sample_matrix,
-    _pair_cos,
+    _nearest_cell,
+    _pq_assign_codes,
+    _pq_reconstruct,
+    _pq_shortlist,
+    _probed_queries,
+    _side,
     _train_ivfpq,
     with_vec_norm,
 )
 
 
-def _pq_assign_codes(
-    mat: "np.ndarray", books: "np.ndarray"
-) -> "np.ndarray":
-    """Nearest-codeword id per subspace → (n, m_sub) int16 codes. The ONE
-    copy of the PQ assignment math (build, append, drift, and the
-    reconstruct below all derive from it)."""
-    m_sub, _, sub = books.shape
-    s = mat.reshape(len(mat), m_sub, sub)
-    codes = np.empty((len(mat), m_sub), dtype=np.int16)
-    for j in range(m_sub):
-        d2 = ((s[:, j, None, :] - books[j][None, :, :]) ** 2).sum(-1)
-        codes[:, j] = d2.argmin(1).astype(np.int16)
-    return codes
-
-
-def _pq_reconstruct(codes: "np.ndarray", books: "np.ndarray") -> "np.ndarray":
-    """Decode (n, m_sub) codes back to (n, dim) via codebook gathers."""
-    m_sub = books.shape[0]
-    return np.concatenate(
-        [books[j][codes[:, j].astype(np.int64)] for j in range(m_sub)], axis=1
-    )
-
-
 def _encode_map(cent_unit: "np.ndarray", books: "np.ndarray"):
-    """mapInPandas closure: (id, v, nrm) carrier → (vec_id, cell, codes,
-    nrm, v) index rows. Shared by build and append so their encodings can
-    never diverge."""
+    """mapInPandas closure: corpus side ``(neighbor_id, c_v, c_nrm)`` →
+    (vec_id, cell, codes, nrm, v) index rows. Shared by build and append
+    so their encodings can never diverge."""
 
     def encode(batches):
         for pdf in batches:
-            mat = np.array(pdf["v"].tolist(), dtype=np.float64)
-            cells = np.argmax(mat @ cent_unit.T, axis=1).astype(np.int32)
-            codes = _pq_assign_codes(mat, books)
+            mat = np.array(pdf["c_v"].tolist(), dtype=np.float64)
             yield pd.DataFrame(
                 {
-                    "vec_id": pdf["id"].astype("int64"),
-                    "cell": cells,
-                    "codes": list(codes),
-                    "nrm": pdf["nrm"].astype("float64"),
-                    "v": pdf["v"],
+                    "vec_id": pdf["neighbor_id"].astype("int64"),
+                    "cell": _nearest_cell(mat, cent_unit),
+                    "codes": list(_pq_assign_codes(mat, books)),
+                    "nrm": pdf["c_nrm"].astype("float64"),
+                    "v": pdf["c_v"],
                 }
             )
 
@@ -115,13 +103,10 @@ def build_ivfpq_index(
 ) -> dict:
     """Train (bounded sample, driver) + encode (one distributed pass) +
     write. Returns a small summary dict (also persisted in model.json)."""
-    c = with_vec_norm(spread(corpus), vec_col, id_col)
+    c = _side(spread(corpus), "c", vec_col, id_col)
     sample = _hash_sample_matrix(c, max(sample_size, n_cells), seed)
     if len(sample) < n_cells:
         raise ValueError(f"corpus smaller than n_cells={n_cells}")
-    dim = sample.shape[1]
-    if dim % m_sub:
-        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
     cent_unit, books = _train_ivfpq(
         sample, n_cells, m_sub, nbits, kmeans_iters, seed
     )
@@ -141,7 +126,7 @@ def build_ivfpq_index(
         "n_cells": n_cells,
         "m_sub": m_sub,
         "nbits": nbits,
-        "dim": dim,
+        "dim": sample.shape[1],
         "seed": seed,
         "sample_size": sample_size,
         "kmeans_iters": kmeans_iters,
@@ -173,20 +158,8 @@ def pq_topk_indexed(
     corpus by directory structure.
     """
     meta = _load_model(index_dir)
-    cent_unit, books = meta["centroids_np"], meta["codebooks_np"]
-    m_sub = meta["m_sub"]
-
-    @F.pandas_udf("array<int>")
-    def probe_cells(vs: pd.Series) -> pd.Series:
-        mat = np.array(vs.tolist(), dtype=np.float64)
-        order = np.argsort(-(mat @ cent_unit.T), axis=1)[:, :n_probe]
-        return pd.Series(list(order.astype(np.int32)))
-
-    q = with_vec_norm(queries, vec_col, id_col).select(
-        F.col("id").alias("query_id"),
-        F.col("v").alias("q_v"),
-        F.col("nrm").alias("q_nrm"),
-        F.explode(probe_cells("v")).alias("cell"),
+    q = _probed_queries(
+        queries, meta["centroids_np"], n_probe, vec_col, id_col
     )
     # literal cell list → PartitionFilters on the codes scan
     probed = sorted(
@@ -203,61 +176,13 @@ def pq_topk_indexed(
             F.col("v").alias("c_v"),
         )
     )
-
-    @F.pandas_udf("double")
-    def approx_cos(
-        qv: pd.Series, qn: pd.Series, cs: pd.Series, cn: pd.Series
-    ) -> pd.Series:
-        qm = np.array(qv.tolist(), dtype=np.float64)
-        cm = np.array(cs.tolist(), dtype=np.int64)
-        dec = np.concatenate(
-            [books[j][cm[:, j]] for j in range(m_sub)], axis=1
-        )
-        return pd.Series(
-            np.einsum("ij,ij->i", qm, dec) / (qn.to_numpy() * cn.to_numpy())
-        )
-
-    cand = (
-        q.join(codes, "cell")
-        .where(
-            (F.col("query_id") != F.col("neighbor_id"))
-            # degenerate (zero-norm) pairs excluded from ranking — the
-            # bruteforce ground-truth convention (also keeps the numpy
-            # approx denominator strictly positive)
-            & (F.col("q_nrm") * F.col("c_nrm") > 0)
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            "q_v",
-            "q_nrm",
-            "c_v",
-            "c_nrm",
-            approx_cos("q_v", "q_nrm", "codes", "c_nrm").alias("approx"),
-        )
+    cand = q.join(codes, "cell").where(
+        F.col("query_id") != F.col("neighbor_id")
     )
-    w_a = Window.partitionBy("query_id").orderBy(
-        F.col("approx").desc(), F.col("neighbor_id").asc()
+    shortlist = _pq_shortlist(
+        cand, meta["codebooks_np"], refine * k, ("q_v", "q_nrm", "c_v", "c_nrm")
     )
-    exact = (
-        cand.withColumn("arank", F.row_number().over(w_a))
-        .where(F.col("arank") <= refine * k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            round_half_up(
-                _pair_cos("q_v", "c_v", "q_nrm", "c_nrm")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int"))
-    )
+    return _exact_rerank(shortlist, k)
 
 
 def append_to_ivfpq_index(
@@ -265,9 +190,7 @@ def append_to_ivfpq_index(
     index_dir: str,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    skip_existing_ids: bool = False,
-    return_count: bool = True,
-) -> int | None:
+) -> None:
     """Encode an arriving batch with the EXISTING model artifacts and
     append its codes to the cell-partitioned parquet — the daily-ingest
     path: codebooks/centroids stay frozen between full rebuilds (the
@@ -275,35 +198,25 @@ def append_to_ivfpq_index(
     accumulates), so appends never touch existing files and probes see
     new vectors immediately.
 
-    ``skip_existing_ids`` anti-joins the batch against the ids already in
-    the index (a column-pruned vec_id scan) before encoding — the
-    idempotency guard replayed streaming micro-batches need, same
-    re-probe-the-store discipline as ``incremental_dedup_stream``.
-    ``return_count=True`` counts the appended batch with one extra plain
-    scan of the (filtered) input; pass False on hot ingest paths that
-    discard it. Dynamic partition append: only the cells the batch lands
-    in gain new files; compaction of small appended files is the same
-    ``VersionedTable.compact`` story as any other table.
+    Idempotent: the batch is anti-joined against the ids already in the
+    index (a column-pruned vec_id scan) before encoding, so a replayed
+    batch — streaming ``foreachBatch`` is at-least-once — appends nothing
+    twice; same re-probe-the-store discipline as
+    ``incremental_dedup_stream``. Dynamic partition append: only the
+    cells the batch lands in gain new files; compaction of small appended
+    files is the same ``VersionedTable.compact`` story as any other table.
     """
     meta = _load_model(index_dir)
-    if skip_existing_ids:
-        seen = (
-            batch.sparkSession.read.parquet(str(Path(index_dir) / "codes"))
-            .select(F.col("vec_id").alias(id_col))
-        )
-        batch = batch.join(seen, id_col, "left_anti")
-
-    c = with_vec_norm(batch, vec_col, id_col)
+    codes_dir = str(Path(index_dir) / "codes")
+    seen = batch.sparkSession.read.parquet(codes_dir).select(
+        F.col("vec_id").alias(id_col)
+    )
+    c = _side(batch.join(seen, id_col, "left_anti"), "c", vec_col, id_col)
     enc = c.mapInPandas(
         _encode_map(meta["centroids_np"], meta["codebooks_np"]),
         _INDEX_ROW_SCHEMA,
     )
-    enc.write.mode("append").partitionBy("cell").parquet(
-        str(Path(index_dir) / "codes")
-    )
-    # count the INPUT batch (plain scan) — counting `enc` would run the
-    # whole encode pass a second time
-    return batch.count() if return_count else None
+    enc.write.mode("append").partitionBy("cell").parquet(codes_dir)
 
 
 def index_drift_report(

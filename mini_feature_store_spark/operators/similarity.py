@@ -1,16 +1,36 @@
 """Embedding similarity search (prompt north star; no reference analog).
 
-- ``cosine_topk_bruteforce``  exact top-k neighbors: queries × corpus with a
-  JVM-expression dot product (``zip_with`` + ``aggregate`` — no UDF). The
-  scale shape: broadcast the (small) query side, stream the corpus — one pass,
-  no shuffle of the corpus; per-partition partial top-k via the final
-  window is AQE-coalesced. Baseline + oracle for the approximate variants.
-- ``cosine_pairs``            all-pairs near-dup by cosine ≥ threshold
-  (corpus self-product — only for modest corpora / verification).
-- ``lsh_topk``                random-hyperplane LSH ANN: sign-bit bucket of H
-  deterministic hyperplanes, candidates = bucket collisions (multi-probe on
-  1-bit flips), exact re-rank of candidates. The 100 TB path: candidate
-  generation is an equi-join on bucket id.
+Pair miners (all pairs with cosine ≥ threshold):
+
+- ``cosine_pairs``            exact block-GEMM all-pairs (verification
+  baseline for modest corpora).
+- ``cosine_pairs_lsh``        LSH-bucketed GEMM: the scale path.
+
+Top-k search, output (query_id, neighbor_id, cosine, rank) ordered by
+(cosine desc, neighbor_id asc), self and degenerate pairs excluded:
+
+- ``cosine_topk_bruteforce``  exact: queries × corpus with a JVM-expression
+  dot product (``zip_with`` + ``aggregate`` — no UDF); broadcast queries,
+  streamed corpus. The oracled reference for every approximate variant.
+- ``lsh_topk``                random-hyperplane LSH: candidates are bucket
+  collisions (multi-probe on 1-bit flips) — an equi-join on bucket id.
+- ``ivf_topk``                IVF-Flat: hash-sampled centroids, queries probe
+  their ``n_probe`` nearest cells.
+- ``pq_topk``                 IVF-PQ: IVF probe + product-quantized codes for
+  the approximate score, exact re-rank of a ``refine·k`` shortlist.
+- ``int8_topk``               full scan over ``int8_quantize`` codes,
+  exact re-rank of a ``refine·k`` shortlist.
+- ``ann_index.pq_topk_indexed`` the same IVF-PQ search over a persisted
+  index.
+
+All of them share one search core: ``_side`` (the renamed carrier of one
+search side), ``_pq_shortlist`` (the approximate stage of both IVF-PQ
+searches), ``_exact_rerank`` (drop degenerate pairs, ``_pair_cos``, rank)
+and ``_rank_tail`` (the one per-query window). The IVF kernels
+(``_ivf_centroids``, ``_nearest_cell``, ``_probed_queries``) and the PQ
+codec (``_train_ivfpq``, ``_pq_assign_codes``, ``_pq_reconstruct``) are
+likewise shared with the persistent index. ``semantic_decontaminate`` is
+the max-cosine-per-vector sibling used for eval decontamination.
 
 Representation note: vectors are carried as ``(v: array<double>, nrm:
 double)`` — the L2 norm is computed ONCE per row and materialized as a
@@ -80,6 +100,74 @@ def with_vec_norm(
     )
 
 
+# ── shared search core ──────────────────────────────────────────────────────
+# Every top-k operator is candidate pairs → (approximate shortlist) → exact
+# re-rank → per-query rank tail; each stage below is the one copy.
+
+
+def _side(df: DataFrame, side: str, vec_col: str, id_col: str) -> DataFrame:
+    """``with_vec_norm`` renamed for one side of a search: ``"q"`` →
+    ``(query_id, q_v, q_nrm)``, ``"c"`` → ``(neighbor_id, c_v, c_nrm)``."""
+    return with_vec_norm(df, vec_col, id_col).select(
+        F.col("id").alias("query_id" if side == "q" else "neighbor_id"),
+        F.col("v").alias(f"{side}_v"),
+        F.col("nrm").alias(f"{side}_nrm"),
+    )
+
+
+def _rank_tail(df: DataFrame, score: str, n: int) -> DataFrame:
+    """Best ``n`` rows per query by (``score`` desc, neighbor_id asc), with
+    their 1-based ``rank`` — the one per-query window of every top-k
+    operator, for shortlists and final rankings alike."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id").asc()
+    )
+    return df.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= n
+    )
+
+
+def _pair_cos(qv, cv, qn, cn):
+    """Arrow-batched exact cosine for candidate PAIRS: one einsum per batch
+    instead of an interpreted ``aggregate(zip_with(...))`` per row (the
+    exact re-rank is the hot loop of every ANN path — CodegenFallback there
+    costs 10-100×, same rationale as the block-GEMM in ``cosine_pairs``).
+
+    Built lazily: ``pandas_udf`` return-type parsing needs an active
+    session, so the decorator must not run at import time."""
+
+    @F.pandas_udf("double")
+    def cosf(
+        qv: pd.Series, cv: pd.Series, qn: pd.Series, cn: pd.Series
+    ) -> pd.Series:
+        a = np.array(qv.tolist(), dtype=np.float64)
+        b = np.array(cv.tolist(), dtype=np.float64)
+        return pd.Series(
+            _np_safe_div(
+                np.einsum("ij,ij->i", a, b), qn.to_numpy() * cn.to_numpy()
+            )
+        )
+
+    return cosf(qv, cv, qn, cn)
+
+
+def _exact_rerank(pairs: DataFrame, k: int) -> DataFrame:
+    """Exact top-``k`` of candidate ``pairs`` carrying both sides' vectors
+    and norms. Degenerate (zero-norm) pairs are dropped — the
+    ``cosine_topk_bruteforce`` convention, so recall never skews on zero
+    vectors. Output: (query_id, neighbor_id, cosine, rank)."""
+    scored = pairs.where(F.col("q_nrm") * F.col("c_nrm") > 0).select(
+        "query_id",
+        "neighbor_id",
+        round_half_up(_pair_cos("q_v", "c_v", "q_nrm", "c_nrm")).alias(
+            "cosine"
+        ),
+    )
+    return _rank_tail(scored, "cosine", k).select(
+        "query_id", "neighbor_id", "cosine", "rank"
+    )
+
+
 def cosine_topk_bruteforce(
     queries: DataFrame,
     corpus: DataFrame,
@@ -92,16 +180,8 @@ def cosine_topk_bruteforce(
     Output: (query_id, neighbor_id, cosine, rank) with deterministic
     (cosine desc, neighbor_id asc) ordering.
     """
-    q = with_vec_norm(queries, vec_col, id_col).select(
-        F.col("id").alias("query_id"),
-        F.col("v").alias("q_v"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    c = with_vec_norm(spread(corpus), vec_col, id_col).select(
-        F.col("id").alias("neighbor_id"),
-        F.col("v").alias("c_v"),
-        F.col("nrm").alias("c_nrm"),
-    )
+    q = _side(queries, "q", vec_col, id_col)
+    c = _side(spread(corpus), "c", vec_col, id_col)
     # ANSI mode (Spark 4's default) turns a zero-norm denominator into a
     # hard DIVIDE_BY_ZERO job failure; the CaseWhen only evaluates the
     # division when the norm product is positive. Degenerate (zero-norm)
@@ -121,13 +201,8 @@ def cosine_topk_bruteforce(
             round_half_up(cos).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int"))
+    return _rank_tail(scored, "cosine", k).select(
+        "query_id", "neighbor_id", "cosine", "rank"
     )
 
 
@@ -277,13 +352,7 @@ def cosine_pairs_lsh(
     real near-dup corpora (threshold ≥ 0.8, p ≥ 0.79) prune by orders of
     magnitude under the same operator. See SCALING.md.
     """
-    tables = np.stack(
-        [
-            np.array(_hyperplanes(dim, n_planes, seed + 1000 * t))
-            for t in range(n_tables)
-        ]
-    )
-    bucketer = _bucket_udf(tables)
+    bucketer = _lsh_bucketer(dim, n_planes, n_tables, seed)
     unit = with_vec_norm(spread(df), vec_col, id_col)
 
     sig = unit.select(
@@ -386,44 +455,24 @@ def cosine_pairs_lsh(
     )
 
 
-def _pair_cos(qv, cv, qn, cn):
-    """Arrow-batched exact cosine for candidate PAIRS: one einsum per batch
-    instead of an interpreted ``aggregate(zip_with(...))`` per row (the
-    re-rank is the hot loop of both ANN paths — CodegenFallback there costs
-    10-100×, same rationale as the block-GEMM in ``cosine_pairs``).
-
-    Built lazily: ``pandas_udf`` return-type parsing needs an active
-    session, so the decorator must not run at import time."""
-
-    @F.pandas_udf("double")
-    def cosf(
-        qv: pd.Series, cv: pd.Series, qn: pd.Series, cn: pd.Series
-    ) -> pd.Series:
-        a = np.array(qv.tolist(), dtype=np.float64)
-        b = np.array(cv.tolist(), dtype=np.float64)
-        return pd.Series(
-            _np_safe_div(
-                np.einsum("ij,ij->i", a, b), qn.to_numpy() * cn.to_numpy()
-            )
-        )
-
-    return cosf(qv, cv, qn, cn)
-
-
-def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_planes, dim)).tolist()
-
-
-def _bucket_udf(tables: np.ndarray):
-    """Arrow-batched bucket computation for ALL hash tables at once.
+def _lsh_bucketer(dim: int, n_planes: int, n_tables: int, seed: int):
+    """Arrow-batched bucket ids for ALL hash tables at once — the one
+    hyperplane stack of both LSH operators (table ``t`` draws its
+    ``n_planes`` Gaussian hyperplanes from seed ``seed + 1000·t``).
 
     One numpy matmul per Arrow batch replaces L·r interpreted plane-dot
     expressions per row (CodegenFallback chains). Returns, per vector, an
     array of L bucket ids (sign bits of the projections, little-endian).
+    Scale-invariant: operates on the raw (un-normalized) vector.
     """
-    n_tables, n_planes, _dim = tables.shape
-    planes = tables.reshape(n_tables * n_planes, -1)
+    planes = np.concatenate(
+        [
+            np.random.default_rng(seed + 1000 * t).standard_normal(
+                (n_planes, dim)
+            )
+            for t in range(n_tables)
+        ]
+    )
     weights = (1 << np.arange(n_planes)).astype(np.int64)
 
     @F.pandas_udf("array<long>")
@@ -434,19 +483,6 @@ def _bucket_udf(tables: np.ndarray):
         return pd.Series(list(bits @ weights))
 
     return buckets
-
-
-def lsh_bucket(vec, planes: list[list[float]]):
-    """Sign-bit bucket id of a vector under fixed hyperplanes (JVM exprs).
-
-    Scale-invariant: operates on the raw (un-normalized) vector."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        proj = _dot(vec, F.array(*[F.lit(float(x)) for x in p]))
-        bucket = bucket.bitwiseXOR(
-            F.shiftleft(F.when(proj > 0, F.lit(1).cast("long")).otherwise(0), i)
-        )
-    return bucket
 
 
 def lsh_topk(
@@ -474,23 +510,9 @@ def lsh_topk(
     occupancy stays bounded. At 100 TB this is the difference between a
     crossJoin (impossible) and an equi-join (routine).
     """
-    tables = np.stack(
-        [
-            np.array(_hyperplanes(dim, n_planes, seed + 1000 * t))
-            for t in range(n_tables)
-        ]
-    )
-    bucketer = _bucket_udf(tables)
-    c_unit = with_vec_norm(spread(corpus), vec_col, id_col).select(
-        F.col("id").alias("neighbor_id"),
-        F.col("v").alias("c_v"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    q_unit = with_vec_norm(queries, vec_col, id_col).select(
-        F.col("id").alias("query_id"),
-        F.col("v").alias("q_v"),
-        F.col("nrm").alias("q_nrm"),
-    )
+    bucketer = _lsh_bucketer(dim, n_planes, n_tables, seed)
+    c_unit = _side(spread(corpus), "c", vec_col, id_col)
+    q_unit = _side(queries, "q", vec_col, id_col)
 
     # Bucket keys only — the candidate-generation join and the
     # (query, neighbor) dedup shuffle carry 16-byte id rows, never the
@@ -524,27 +546,63 @@ def lsh_topk(
         .select("query_id", "neighbor_id")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    cand = (
-        cand_ids.join(c_unit, "neighbor_id")
-        .join(F.broadcast(q_unit), "query_id")
-        # degenerate (zero-norm) pairs are excluded from every ranking —
-        # the bruteforce ground-truth convention, so recall never skews
-        .where(F.col("q_nrm") * F.col("c_nrm") > 0)
-        .select(
-            "query_id",
-            "neighbor_id",
-            round_half_up(_pair_cos("q_v", "c_v", "q_nrm", "c_nrm")).alias(
-                "cosine"
-            ),
-        )
+    return _exact_rerank(
+        cand_ids.join(c_unit, "neighbor_id").join(
+            F.broadcast(q_unit), "query_id"
+        ),
+        k,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+
+
+# ── IVF kernels (shared with ann_index) ─────────────────────────────────────
+
+
+def _hash_sample_matrix(c: DataFrame, n: int, seed: int) -> "np.ndarray":
+    """Deterministic hash-ordered sample of a corpus side (``_side(..., "c")``)
+    → float64 matrix: the one training sample of IVF cells and PQ
+    codebooks."""
+    rows = (
+        c.orderBy(F.xxhash64(F.col("neighbor_id").cast("string"), F.lit(seed)))
+        .limit(n)
+        .select("c_v")
+        .collect()
     )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int"))
+    return np.array([r["c_v"] for r in rows], dtype=np.float64)
+
+
+def _ivf_centroids(sample: "np.ndarray", n_cells: int) -> "np.ndarray":
+    """Sampled-centroid IVF cells: the hash-ordered sample's first
+    ``n_cells`` rows at unit length. Zero-safe: a zero sample row gives a
+    zero centroid, not a NaN one that wins every argmax and loses every
+    probe ordering."""
+    cent = sample[:n_cells]
+    return _np_safe_div(cent, np.linalg.norm(cent, axis=1)[:, None])
+
+
+def _nearest_cell(mat: "np.ndarray", cent_unit: "np.ndarray") -> "np.ndarray":
+    """Max-cosine cell id per row. A row's own norm is the same for every
+    cell, so the argmax of the raw dot product is the max-cosine cell."""
+    return np.argmax(mat @ cent_unit.T, axis=1).astype(np.int32)
+
+
+def _probed_queries(
+    queries: DataFrame,
+    cent_unit: "np.ndarray",
+    n_probe: int,
+    vec_col: str,
+    id_col: str,
+) -> DataFrame:
+    """Query side of an IVF probe: ``(query_id, q_v, q_nrm, cell)``, one row
+    per each of the query's ``n_probe`` nearest cells."""
+
+    @F.pandas_udf("array<int>")
+    def probe_cells(vs: pd.Series) -> pd.Series:
+        mat = np.array(vs.tolist(), dtype=np.float64)
+        order = np.argsort(-(mat @ cent_unit.T), axis=1)[:, :n_probe]
+        return pd.Series(list(order.astype(np.int32)))
+
+    return _side(queries, "q", vec_col, id_col).select(
+        "*", F.explode(probe_cells("q_v")).alias("cell")
     )
 
 
@@ -574,77 +632,23 @@ def ivf_topk(
     centroids, and AQE's skew handling covers hot cells. Recall depends on
     ``n_probe/n_cells``; validated against brute force in tests.
     """
-    c = with_vec_norm(spread(corpus), vec_col, id_col)
-    cent_rows = (
-        c.orderBy(F.xxhash64(F.col("id").cast("string"), F.lit(seed)))
-        .limit(n_cells)
-        .select("v", "nrm")
-        .collect()
-    )
-    cent = np.array([r["v"] for r in cent_rows], dtype=np.float64)
-    cent_unit = _np_safe_div(cent, np.array([r["nrm"] for r in cent_rows])[:, None])
+    c = _side(spread(corpus), "c", vec_col, id_col)
+    cent_unit = _ivf_centroids(_hash_sample_matrix(c, n_cells, seed), n_cells)
 
     @F.pandas_udf("int")
     def nearest_cell(vs: pd.Series) -> pd.Series:
         mat = np.array(vs.tolist(), dtype=np.float64)
-        sims = mat @ cent_unit.T  # norm of v is constant per row → argmax safe
-        return pd.Series(np.argmax(sims, axis=1).astype(np.int32))
-
-    @F.pandas_udf("array<int>")
-    def probe_cells(vs: pd.Series) -> pd.Series:
-        mat = np.array(vs.tolist(), dtype=np.float64)
-        sims = mat @ cent_unit.T
-        order = np.argsort(-sims, axis=1)[:, :n_probe].astype(np.int32)
-        return pd.Series(list(order))
-
-    corpus_cells = c.select(
-        F.col("id").alias("neighbor_id"),
-        F.col("v").alias("c_v"),
-        F.col("nrm").alias("c_nrm"),
-        nearest_cell("v").alias("cell"),
-    )
-    q = with_vec_norm(queries, vec_col, id_col).select(
-        F.col("id").alias("query_id"),
-        F.col("v").alias("q_v"),
-        F.col("nrm").alias("q_nrm"),
-        F.explode(probe_cells("v")).alias("cell"),
-    )
+        return pd.Series(_nearest_cell(mat, cent_unit))
 
     cand = (
-        q.join(corpus_cells, "cell")
-        .where(
-            (F.col("query_id") != F.col("neighbor_id"))
-            # degenerate pairs excluded — bruteforce convention
-            & (F.col("q_nrm") * F.col("c_nrm") > 0)
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            round_half_up(_pair_cos("q_v", "c_v", "q_nrm", "c_nrm")).alias(
-                "cosine"
-            ),
-        )
+        _probed_queries(queries, cent_unit, n_probe, vec_col, id_col)
+        .join(c.withColumn("cell", nearest_cell("c_v")), "cell")
+        .where(F.col("query_id") != F.col("neighbor_id"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int"))
-    )
+    return _exact_rerank(cand, k)
 
 
-def _hash_sample_matrix(c: DataFrame, n: int, seed: int) -> "np.ndarray":
-    """Deterministic hash-ordered sample of the ``with_vec_norm`` carrier →
-    float64 matrix (the standard offline-training sample for IVF/PQ)."""
-    rows = (
-        c.orderBy(F.xxhash64(F.col("id").cast("string"), F.lit(seed)))
-        .limit(n)
-        .select("v")
-        .collect()
-    )
-    return np.array([r["v"] for r in rows], dtype=np.float64)
+# ── PQ codec (shared with ann_index) ────────────────────────────────────────
 
 
 def _train_ivfpq(
@@ -656,14 +660,16 @@ def _train_ivfpq(
     seed: int,
 ) -> tuple["np.ndarray", "np.ndarray"]:
     """Driver-side IVF centroids + per-subspace PQ codebooks from a bounded
-    sample. Returns (cent_unit (n_cells, dim), books (m_sub, 2^nbits, sub))."""
+    sample. Returns (cent_unit (n_cells, dim), books (m_sub, 2^nbits, sub)).
+
+    Codebooks are Euclidean k-means per sub-vector from a random start —
+    deliberately not ``clustering.kmeans_fit`` (spherical, maxmin start),
+    which would change every PQ code."""
     dim = sample.shape[1]
+    if dim % m_sub:
+        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
     sub = dim // m_sub
     n_codes = 1 << nbits
-    cent = sample[:n_cells]
-    # zero-safe: a zero sample row must give a zero centroid, not a NaN one
-    # that wins every argmax and loses every probe ordering
-    cent_unit = _np_safe_div(cent, np.linalg.norm(cent, axis=1)[:, None])
     rng = np.random.default_rng(seed)
     subs = sample.reshape(len(sample), m_sub, sub)
     books = np.empty((m_sub, n_codes, sub))
@@ -679,7 +685,62 @@ def _train_ivfpq(
                 if m.any():
                     cb[q_] = data[m].mean(0)
         books[j] = cb
-    return cent_unit, books
+    return _ivf_centroids(sample, n_cells), books
+
+
+def _pq_assign_codes(
+    mat: "np.ndarray", books: "np.ndarray"
+) -> "np.ndarray":
+    """Nearest-codeword id per subspace → (n, m_sub) int16 codes: the one
+    PQ encoder (``pq_topk``, index build, append and drift report)."""
+    m_sub, _, sub = books.shape
+    s = mat.reshape(len(mat), m_sub, sub)
+    codes = np.empty((len(mat), m_sub), dtype=np.int16)
+    for j in range(m_sub):
+        d2 = ((s[:, j, None, :] - books[j][None, :, :]) ** 2).sum(-1)
+        codes[:, j] = d2.argmin(1).astype(np.int16)
+    return codes
+
+
+def _pq_reconstruct(codes: "np.ndarray", books: "np.ndarray") -> "np.ndarray":
+    """Decode (n, m_sub) codes back to (n, dim) via codebook gathers."""
+    m_sub = books.shape[0]
+    return np.concatenate(
+        [books[j][codes[:, j].astype(np.int64)] for j in range(m_sub)], axis=1
+    )
+
+
+def _pq_shortlist(
+    cand: DataFrame, books: "np.ndarray", n: int, carry: tuple[str, ...]
+) -> DataFrame:
+    """Approximate stage of both IVF-PQ searches: the best ``n`` candidates
+    per query by cosine(query, DECODED candidate), one gather+einsum per
+    Arrow batch. ``cand`` carries (query_id, neighbor_id, q_v, q_nrm,
+    codes, c_nrm); the shortlist keeps the ids plus ``carry``.
+
+    Degenerate pairs are dropped FIRST: a zero vector's 0.0 approximate
+    score outranks every negative cosine, so it would take a shortlist
+    slot that the exact stage then empties."""
+
+    @F.pandas_udf("double")
+    def approx_cos(
+        qv: pd.Series, qn: pd.Series, codes: pd.Series, cn: pd.Series
+    ) -> pd.Series:
+        qm = np.array(qv.tolist(), dtype=np.float64)
+        dec = _pq_reconstruct(np.array(codes.tolist(), dtype=np.int64), books)
+        return pd.Series(
+            _np_safe_div(
+                np.einsum("ij,ij->i", qm, dec), qn.to_numpy() * cn.to_numpy()
+            )
+        )
+
+    scored = cand.where(F.col("q_nrm") * F.col("c_nrm") > 0).select(
+        "query_id",
+        "neighbor_id",
+        *carry,
+        approx_cos("q_v", "q_nrm", "codes", "c_nrm").alias("approx"),
+    )
+    return _rank_tail(scored, "approx", n)
 
 
 def pq_topk(
@@ -694,7 +755,6 @@ def pq_topk(
     seed: int = 42,
     sample_size: int = 2048,
     kmeans_iters: int = 8,
-    dim: int = 64,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
@@ -718,23 +778,20 @@ def pq_topk(
     2. encode: corpus → (cell, codes) via one Arrow matmul batch; codes
        (array<smallint>) + norm are the ONLY per-row payload shuffled to
        the candidate join.
-    3. probe + approx score: queries join their ``n_probe`` cells,
-       decode-gather-einsum per batch, window top ``refine·k``.
+    3. probe + approx score (``_pq_shortlist``): queries join their
+       ``n_probe`` cells, degenerate pairs drop, decode-gather-einsum per
+       batch, window top ``refine·k``.
     4. exact re-rank: join true vectors for the survivors only; window
        top ``k``. Output: (query_id, neighbor_id, cosine, rank) — same
        contract as the other topk operators; ``cosine`` is EXACT.
 
-    Recall on isotropic vectors (PQ's adversarial case — no subspace
-    structure to exploit) is pinned in tests; structured/real embeddings
-    quantize far better. Precision of emitted cosines is 1.0 by
-    construction (final scores are exact).
+    The vector dimension is read off the training sample; ``m_sub`` must
+    divide it (``ValueError`` otherwise). Recall on isotropic vectors
+    (PQ's adversarial case — no subspace structure to exploit) is pinned
+    in tests; structured/real embeddings quantize far better. Precision
+    of emitted cosines is 1.0 by construction (final scores are exact).
     """
-    if dim % m_sub:
-        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
-    sub = dim // m_sub
-    n_codes = 1 << nbits
-
-    c = with_vec_norm(spread(corpus), vec_col, id_col)
+    c = _side(spread(corpus), "c", vec_col, id_col)
     sample = _hash_sample_matrix(c, max(sample_size, n_cells), seed)
     cent_unit, books = _train_ivfpq(
         sample, n_cells, m_sub, nbits, kmeans_iters, seed
@@ -743,92 +800,25 @@ def pq_topk(
     @F.pandas_udf("struct<cell:int, codes:array<smallint>>")
     def encode(vs: pd.Series) -> pd.DataFrame:
         mat = np.array(vs.tolist(), dtype=np.float64)
-        cells = np.argmax(mat @ cent_unit.T, axis=1).astype(np.int32)
-        s = mat.reshape(len(mat), m_sub, sub)
-        codes = np.empty((len(mat), m_sub), dtype=np.int16)
-        for j in range(m_sub):
-            d2 = ((s[:, j, None, :] - books[j][None, :, :]) ** 2).sum(-1)
-            codes[:, j] = d2.argmin(1).astype(np.int16)
-        return pd.DataFrame({"cell": cells, "codes": list(codes)})
+        return pd.DataFrame(
+            {
+                "cell": _nearest_cell(mat, cent_unit),
+                "codes": list(_pq_assign_codes(mat, books)),
+            }
+        )
 
-    @F.pandas_udf("array<int>")
-    def probe_cells(vs: pd.Series) -> pd.Series:
-        mat = np.array(vs.tolist(), dtype=np.float64)
-        order = np.argsort(-(mat @ cent_unit.T), axis=1)[:, :n_probe]
-        return pd.Series(list(order.astype(np.int32)))
-
-    enc = c.select(
-        F.col("id").alias("neighbor_id"),
-        F.col("nrm").alias("c_nrm"),
-        encode("v").alias("e"),
-    ).select("neighbor_id", "c_nrm", "e.cell", "e.codes")
-
-    q = with_vec_norm(queries, vec_col, id_col).select(
-        F.col("id").alias("query_id"),
-        F.col("v").alias("q_v"),
-        F.col("nrm").alias("q_nrm"),
-        F.explode(probe_cells("v")).alias("cell"),
+    enc = c.select("neighbor_id", "c_nrm", encode("c_v").alias("e")).select(
+        "neighbor_id", "c_nrm", "e.cell", "e.codes"
     )
-
-    @F.pandas_udf("double")
-    def approx_cos(
-        qv: pd.Series, qn: pd.Series, codes: pd.Series, cn: pd.Series
-    ) -> pd.Series:
-        qm = np.array(qv.tolist(), dtype=np.float64)
-        cm = np.array(codes.tolist(), dtype=np.int64)  # (batch, m_sub)
-        # decode: gather codewords per subspace → (batch, dim)
-        dec = np.concatenate(
-            [books[j][cm[:, j]] for j in range(m_sub)], axis=1
-        )
-        return pd.Series(
-            _np_safe_div(
-                np.einsum("ij,ij->i", qm, dec), qn.to_numpy() * cn.to_numpy()
-            )
-        )
-
     cand = (
-        q.join(enc, "cell")
+        _probed_queries(queries, cent_unit, n_probe, vec_col, id_col)
+        .join(enc, "cell")
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "q_v",
-            "q_nrm",
-            approx_cos("q_v", "q_nrm", "codes", "c_nrm").alias("approx"),
-        )
     )
-    w_a = Window.partitionBy("query_id").orderBy(
-        F.col("approx").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = cand.withColumn("arank", F.row_number().over(w_a)).where(
-        F.col("arank") <= refine * k
-    )
-
-    full = c.select(
-        F.col("id").alias("neighbor_id"),
-        F.col("v").alias("c_v"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    exact = (
-        shortlist.join(full, "neighbor_id")
-        # degenerate pairs excluded — bruteforce convention
-        .where(F.col("q_nrm") * F.col("c_nrm") > 0)
-        .select(
-            "query_id",
-            "neighbor_id",
-            round_half_up(_pair_cos("q_v", "c_v", "q_nrm", "c_nrm")).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int"))
-    )
+    shortlist = _pq_shortlist(cand, books, refine * k, ("q_v", "q_nrm"))
+    # raw vectors never ride the probe join; they join back for the
+    # shortlist only
+    return _exact_rerank(shortlist.join(c, "neighbor_id"), k)
 
 
 def int8_quantize(
@@ -921,21 +911,17 @@ def int8_topk(
     vectors; emitted cosines are EXACT.
 
     Output: (query_id, neighbor_id, cosine, rank) — same contract as the
-    other topk operators.
+    other topk operators. Zero-norm queries and zero-norm decoded corpus
+    rows score no pair (cosine is undefined for them), so neither takes a
+    shortlist slot.
     """
-    import pandas as pd
-
-    q_rows = (
-        with_vec_norm(queries, vec_col, id_col)
-        .select("id", "v", "nrm")
-        .collect()
-    )
-    q_ids = np.array([r["id"] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r["v"] for r in q_rows], dtype=np.float64)
-    q_mat /= np.maximum(
-        np.array([r["nrm"] for r in q_rows], dtype=np.float64), 1e-30
-    )[:, None]
-    q_t = q_mat.T.copy()
+    q = _side(queries, "q", vec_col, id_col)
+    q_rows = q.collect()
+    q_nrm = np.array([r["q_nrm"] for r in q_rows], dtype=np.float64)
+    live = q_nrm > 0
+    q_ids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)[live]
+    q_mat = np.array([r["q_v"] for r in q_rows], dtype=np.float64)[live]
+    q_t = (q_mat / q_nrm[live, None]).T.copy()
 
     enc = int8_quantize(spread(corpus), vec_col, id_col).select(
         F.col(id_col).alias("neighbor_id"), "qscale", "codes"
@@ -947,9 +933,9 @@ def int8_topk(
             scales = pdf["qscale"].to_numpy(dtype=np.float64)
             dec = codes.astype(np.float64) * scales[:, None]
             nrm = np.linalg.norm(dec, axis=1)
-            nrm[nrm == 0] = 1.0
-            sims = (dec / nrm[:, None]) @ q_t  # (batch, n_queries)
-            nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
+            keep = nrm > 0
+            sims = (dec[keep] / nrm[keep, None]) @ q_t  # (batch, n_queries)
+            nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)[keep]
             n_q = len(q_ids)
             yield pd.DataFrame(
                 {
@@ -962,43 +948,11 @@ def int8_topk(
     cand = enc.mapInPandas(
         score, "query_id long, neighbor_id long, approx double"
     ).where(F.col("query_id") != F.col("neighbor_id"))
-    w_a = Window.partitionBy("query_id").orderBy(
-        F.col("approx").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = cand.withColumn("arank", F.row_number().over(w_a)).where(
-        F.col("arank") <= refine * k
-    )
-
-    full = with_vec_norm(corpus, vec_col, id_col).select(
-        F.col("id").alias("neighbor_id"),
-        F.col("v").alias("c_v"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    q_full = with_vec_norm(queries, vec_col, id_col).select(
-        F.col("id").alias("query_id"),
-        F.col("v").alias("q_v"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    exact = (
-        shortlist.join(full, "neighbor_id")
-        .join(F.broadcast(q_full), "query_id")
-        # degenerate pairs excluded — bruteforce convention
-        .where(F.col("q_nrm") * F.col("c_nrm") > 0)
-        .select(
-            "query_id",
-            "neighbor_id",
-            round_half_up(
-                _pair_cos("q_v", "c_v", "q_nrm", "c_nrm")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int"))
+    shortlist = _rank_tail(cand, "approx", refine * k)
+    full = _side(corpus, "c", vec_col, id_col)
+    return _exact_rerank(
+        shortlist.join(full, "neighbor_id").join(F.broadcast(q), "query_id"),
+        k,
     )
 
 

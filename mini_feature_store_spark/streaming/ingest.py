@@ -612,10 +612,9 @@ def ann_index_ingest_stream(
     streaming and batch ingest share one encode path (same rule as
     ``stream_online_sync``). ``foreachBatch`` is at-least-once — a crash
     between the parquet append and the checkpoint commit replays the
-    batch — so the append runs with ``skip_existing_ids``: replayed ids
-    anti-join against the index's (column-pruned) id set and append
-    nothing twice, the same re-probe-the-store idempotency as
-    ``incremental_dedup_stream``. Model refresh (re-train on drift)
+    batch — and the append is idempotent: replayed ids anti-join against
+    the index's (column-pruned) id set and append nothing twice, the same
+    re-probe-the-store idempotency as ``incremental_dedup_stream``. Model refresh (re-train on drift)
     stays an offline decision — rebuilding under a running stream is a
     swap of ``index_dir``, not a streaming concern.
 
@@ -627,14 +626,7 @@ def ann_index_ingest_stream(
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.isEmpty():
-            append_to_ivfpq_index(
-                batch_df,
-                index_dir,
-                vec_col,
-                id_col,
-                skip_existing_ids=True,
-                return_count=False,
-            )
+            append_to_ivfpq_index(batch_df, index_dir, vec_col, id_col)
 
     return (
         stream.writeStream.outputMode("append")

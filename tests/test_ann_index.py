@@ -14,6 +14,10 @@ from mini_feature_store_spark.operators.ann_index import (
 from mini_feature_store_spark.operators.similarity import pq_topk
 
 
+def _n_codes(spark, idx: str) -> int:
+    return spark.read.parquet(f"{idx}/codes").count()
+
+
 def test_indexed_matches_per_call_pq(spark, sf_dir, tmp_path):
     """Same corpus, same seed → identical codebooks → identical results
     (the index is a pure amortization of pq_topk's training/encoding)."""
@@ -34,6 +38,42 @@ def test_indexed_matches_per_call_pq(spark, sf_dir, tmp_path):
         ).collect()
     }
     assert got == want
+
+
+def test_zero_vector_takes_no_shortlist_slot(spark, tmp_path):
+    """A zero vector's 0.0 approximate score outranks every negative
+    cosine; it must not take a refine·k shortlist slot that the exact
+    stage then drops. Against a corpus whose every real neighbour has a
+    negative cosine, pq_topk must still equal pq_topk_indexed and
+    int8_topk must still equal brute force (all k rows)."""
+    import numpy as np
+
+    from mini_feature_store_spark.operators.similarity import (
+        cosine_topk_bruteforce,
+        int8_topk,
+    )
+
+    rng = np.random.default_rng(0)
+    neg = -np.abs(rng.normal(size=(11, 4))) - 0.1
+    rows = [(0, [1.0, 0.0, 0.0, 0.0])]
+    rows += [(i + 1, v.tolist()) for i, v in enumerate(neg)]
+    rows.append((12, [0.0, 0.0, 0.0, 0.0]))
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = emb.where(F.col("vec_id") == 0)
+
+    def ranked(df):
+        return sorted((r.rank, r.neighbor_id, r.cosine) for r in df.collect())
+
+    idx = str(tmp_path / "ivfpq")
+    build_ivfpq_index(emb, idx, n_cells=2, m_sub=2)
+    pq = ranked(pq_topk(q, emb, k=5, n_cells=2, n_probe=2, m_sub=2, refine=1))
+    indexed = ranked(pq_topk_indexed(spark, idx, q, k=5, n_probe=2, refine=1))
+    assert len(indexed) == 5
+    assert pq == indexed
+
+    exact = ranked(cosine_topk_bruteforce(q, emb, k=5))
+    assert len(exact) == 5
+    assert ranked(int8_topk(q, emb, k=5, refine=1)) == exact
 
 
 def test_indexed_probe_prunes_partitions(spark, sf_dir, tmp_path):
@@ -93,8 +133,9 @@ def test_append_batch_visible_to_probes(spark, sf_dir, tmp_path):
     twins = emb.where((F.col("vec_id") >= 10) & (F.col("vec_id") < 15)).select(
         (F.col("vec_id") + 8990).alias("vec_id"), "embedding"
     )
-    n = append_to_ivfpq_index(twins, idx)
-    assert n == 5
+    before = _n_codes(spark, idx)
+    append_to_ivfpq_index(twins, idx)
+    assert _n_codes(spark, idx) == before + 5
 
     q = emb.where((F.col("vec_id") >= 10) & (F.col("vec_id") < 15))
     top = {
@@ -138,8 +179,8 @@ def test_drift_report_in_and_out_of_distribution(spark, sf_dir, tmp_path):
 
 
 def test_append_skip_existing_ids_is_idempotent(spark, sf_dir, tmp_path):
-    """Replaying the same batch with skip_existing_ids appends nothing:
-    the guard streaming replays rely on."""
+    """Replaying the same batch appends nothing: the append skips ids
+    already in the index, the guard streaming replays rely on."""
     from pyspark.sql import functions as F
 
     from mini_feature_store_spark.operators.ann_index import (
@@ -152,9 +193,11 @@ def test_append_skip_existing_ids_is_idempotent(spark, sf_dir, tmp_path):
     batch = emb.where(F.col("vec_id") < 5).select(
         (F.col("vec_id") + 5000).alias("vec_id"), "embedding"
     )
-    n1 = append_to_ivfpq_index(batch, idx, skip_existing_ids=True)
-    n2 = append_to_ivfpq_index(batch, idx, skip_existing_ids=True)  # replay
-    assert n1 == 5 and n2 == 0
+    n0 = _n_codes(spark, idx)
+    append_to_ivfpq_index(batch, idx)
+    n1 = _n_codes(spark, idx)
+    append_to_ivfpq_index(batch, idx)  # replay
+    assert n1 - n0 == 5 and _n_codes(spark, idx) == n1
     codes = spark.read.parquet(f"{idx}/codes")
     dup = (
         codes.groupBy("vec_id").count().where(F.col("count") > 1).count()

@@ -505,9 +505,7 @@ def test_ivfpq_zero_vector_centroid_still_probes(spark, tmp_path):
     queries = emb.where(
         (F.col("vec_id") < 11) & (F.col("vec_id") != first)
     ).limit(10)
-    out = pq_topk(
-        queries, emb, k=5, n_cells=8, n_probe=2, m_sub=4, dim=16
-    ).collect()
+    out = pq_topk(queries, emb, k=5, n_cells=8, n_probe=2, m_sub=4).collect()
     assert len(out) == 50
 
     idx = str(tmp_path / "ivfpq")
@@ -750,17 +748,24 @@ def test_duplicate_span_coverage_gate(spark):
     assert got[3] == (9, 0, 0.0, True)
 
 
-def test_cosine_zero_norm_vectors_never_crash_or_match(spark):
+def test_cosine_zero_norm_vectors_never_crash_or_match(spark, tmp_path):
     """A zero vector in the corpus must not kill the job (ANSI mode
     turns an unguarded 0/0 into a hard DIVIDE_BY_ZERO failure) and must
     never surface in ANY output: degenerate (zero-norm) pairs are
     EXCLUDED from rankings and pair emission everywhere — bruteforce,
     GEMM pair miners, and every ANN rescorer share the convention, so
     recall comparisons between paths can't skew on zero vectors."""
+    from mini_feature_store_spark.operators.ann_index import (
+        build_ivfpq_index,
+        pq_topk_indexed,
+    )
     from mini_feature_store_spark.operators.similarity import (
         cosine_pairs,
         cosine_topk_bruteforce,
+        int8_topk,
+        ivf_topk,
         lsh_topk,
+        pq_topk,
     )
 
     rows = [
@@ -798,10 +803,19 @@ def test_cosine_zero_norm_vectors_never_crash_or_match(spark):
     }
     assert pairs0 and all(2 not in p for p in pairs0)
 
-    ann = lsh_topk(
-        emb.where(F.col("vec_id") == 0), emb, k=3, dim=4
-    ).collect()
-    assert all(r.neighbor_id != 2 for r in ann)
+    idx = str(tmp_path / "ivfpq")
+    build_ivfpq_index(emb, idx, n_cells=2, m_sub=2)
+    rescorers = {
+        "lsh": lambda q: lsh_topk(q, emb, k=3, dim=4),
+        "ivf": lambda q: ivf_topk(q, emb, k=3, n_cells=2, n_probe=2),
+        "pq": lambda q: pq_topk(q, emb, k=3, n_cells=2, n_probe=2, m_sub=2),
+        "int8": lambda q: int8_topk(q, emb, k=3),
+        "pq_indexed": lambda q: pq_topk_indexed(spark, idx, q, k=3, n_probe=2),
+    }
+    for name, topk in rescorers.items():
+        ann = topk(emb.where(F.col("vec_id") == 0)).collect()
+        assert all(r.neighbor_id != 2 for r in ann), name
+        assert topk(emb.where(F.col("vec_id") == 2)).count() == 0, name
 
 
 def test_semantic_decontaminate_planted_and_tiebreak(spark):

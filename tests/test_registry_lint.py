@@ -277,12 +277,9 @@ _LIMIT_ALLOWLIST: dict[tuple[str, str], tuple[str, int]] = {
         "driver-local vocab-bounded createDataFrame carrier",
         3,
     ),
-    ("operators/similarity.py", "n_cells"): (
-        "config-bounded IVF centroid table",
-        1,
-    ),
     ("operators/similarity.py", "n"): (
-        "config-bounded IVF/PQ training sample (callers pass sample_size)",
+        "config-bounded IVF/PQ training sample (callers pass "
+        "max(sample_size, n_cells), or n_cells for IVF-Flat)",
         1,
     ),
 }
