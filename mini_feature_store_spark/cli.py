@@ -721,8 +721,7 @@ def main(argv: list[str] | None = None) -> int:
             version, n = VersionedTable(args.table).delete_keys(
                 spark.read.parquet(args.ids_path), args.keys.split(",")
             )
-            scope = "full rewrite" if n < 0 else f"{n} partition(s) rewritten"
-            print(f"committed v{version} ({scope})")
+            print(f"committed v{version} ({n} partition(s) rewritten)")
         elif args.pipeline == "corpus-curate":
             from mini_feature_store_spark.pipelines.corpus_curate import (
                 CorpusCurationConfig,

@@ -138,10 +138,10 @@ def _sync_bucket_table(
 
     - ``fresh_overwrite`` (the versioned write just overwrote from
       scratch) or no bucket table yet → full bucketed rewrite;
-    - column sets differ (VersionedTable append supports schema
-      evolution via unionByName null-padding — after a version adds a
-      feature column, appending new-day rows to the old-schema bucket
-      table raises AnalysisException forever) → full rewrite;
+    - column sets differ (a VersionedTable append may add a column that
+      older rows read as null — after a version adds a feature column,
+      appending new-day rows to the old-schema bucket table raises
+      AnalysisException forever) → full rewrite;
     - bucket table carries days the versioned table lacks (the
       versioned table was reset under a lingering bucket table —
       appending would DUPLICATE history), or a shared day's row counts

@@ -84,6 +84,13 @@ def test_incremental_backfill_extends_range(spark, tmp_path, events_path):
     assert run_backfill_incremental(spark, cfg2) == []
     vt = VersionedTable(table)
     assert len(vt.versions()) == 2
+    # the append wrote only the new days: every data file of v=0 is
+    # hard-linked into v=1
+    v0_inodes, v1_inodes = (
+        set().union(*_data_file_inodes(str(tmp_path / "inc" / v)).values())
+        for v in ("v=0", "v=1")
+    )
+    assert v0_inodes <= v1_inodes
 
     # incremental result ≡ from-scratch backfill over the full range
     full = str(tmp_path / "full")
@@ -567,60 +574,11 @@ def test_delete_keys_no_matches_links_everything(spark, tmp_path):
     assert table.read(spark, version=v1).count() == 1
 
 
-def test_partition_escape_matches_spark_on_disk(spark, tmp_path):
-    """_escape_partition_value must byte-match the directory names
-    DataFrameWriter.partitionBy actually writes — a mismatch makes
-    delete_keys both rewrite AND hard-link a partition (duplicate rows,
-    resurrected deletes). Adversarial values: space (not escaped), colon,
-    hash, percent, equals, quote, brackets, unicode, empty-ish."""
-    import os
-
-    from mini_feature_store_spark.io.tables import _escape_partition_value
-
-    values = [
-        "plain",
-        "has space",
-        "a:b",
-        "c#d",
-        "p%q",
-        "k=v",
-        'q"r',
-        "s[t]u",
-        "ünïcødé",
-        "slash/esc",
-        "star*x",
-    ]
-    df = spark.createDataFrame([(v, 1) for v in values], "p string, x int")
-    out = str(tmp_path / "esc")
-    df.write.partitionBy("p").parquet(out)
-    on_disk = {e for e in os.listdir(out) if e.startswith("p=")}
-    predicted = {f"p={_escape_partition_value(v)}" for v in values}
-    assert predicted == on_disk
-
-    # date + int + bool partition values too
-    for typed_df, col in [
-        (
-            spark.createDataFrame(
-                [(dt.date(2024, 2, 29), 1)], "p date, x int"
-            ),
-            dt.date(2024, 2, 29),
-        ),
-        (spark.createDataFrame([(42, 1)], "p long, x int"), 42),
-        (spark.createDataFrame([(True, 1)], "p boolean, x int"), True),
-    ]:
-        d = str(tmp_path / f"esc_{type(col).__name__}")
-        typed_df.write.partitionBy("p").parquet(d)
-        on_disk = {e for e in os.listdir(d) if e.startswith("p=")}
-        assert on_disk == {f"p={_escape_partition_value(col)}"}
-
-
 def test_delete_keys_special_char_string_partitions(spark, tmp_path):
     """Targeted delete on a string partition column whose values Spark
     escapes on disk: the affected partition is rewritten (not also
     linked), untouched ones are linked, and no rows duplicate or
     resurrect."""
-    import os
-
     table = VersionedTable(str(tmp_path / "t"))
     rows = [
         (1, "us east", 1.0),
@@ -638,42 +596,228 @@ def test_delete_keys_special_char_string_partitions(spark, tmp_path):
     got = sorted((r.user_id, r.region) for r in after.collect())
     assert got == [(1, "us east"), (3, "eu:west"), (4, "ap#south")]
 
-    # the affected dir must NOT share inodes with v0 (it was rewritten)
-    from mini_feature_store_spark.io.tables import _escape_partition_value
+    # directory names as Spark wrote them (escaped on disk)
+    from urllib.parse import unquote
 
-    aff = f"region={_escape_partition_value('us east')}"
-    src = str(tmp_path / "t" / f"v={v0}" / aff)
-    dst = str(tmp_path / "t" / f"v={v1}" / aff)
-    src_i = {os.stat(os.path.join(src, f)).st_ino for f in os.listdir(src)}
-    dst_i = {os.stat(os.path.join(dst, f)).st_ino for f in os.listdir(dst)}
-    assert not (src_i & dst_i)
+    before = _data_file_inodes(str(tmp_path / "t" / f"v={v0}"))
+    now = _data_file_inodes(str(tmp_path / "t" / f"v={v1}"))
+    on_disk = {unquote(d.split("=", 1)[1]): d for d in before}
+    assert set(on_disk) == {"us east", "eu:west", "ap#south"}
+    # the affected dir must NOT share inodes with v0 (it was rewritten)
+    assert not (before[on_disk["us east"]] & now[on_disk["us east"]])
     # untouched escaped dirs share inodes (linked, not rewritten)
     for val in ("eu:west", "ap#south"):
-        d = f"region={_escape_partition_value(val)}"
-        src = str(tmp_path / "t" / f"v={v0}" / d)
-        dst = str(tmp_path / "t" / f"v={v1}" / d)
-        src_i = {os.stat(os.path.join(src, f)).st_ino for f in os.listdir(src)}
-        dst_i = {os.stat(os.path.join(dst, f)).st_ino for f in os.listdir(dst)}
-        assert src_i == dst_i
+        assert before[on_disk[val]] == now[on_disk[val]]
+
+
+def _data_file_inodes(version_dir: str) -> dict[str, set[int]]:
+    """{partition dir relative to the version root: inodes of its data
+    files}."""
+    import os
+
+    out: dict[str, set[int]] = {}
+    for root, _, files in os.walk(version_dir):
+        inos = {
+            os.stat(os.path.join(root, f)).st_ino
+            for f in files
+            if f.endswith(".parquet")
+        }
+        if inos:
+            out[os.path.relpath(root, version_dir)] = inos
+    return out
+
+
+#: (schema, rows, partition_by) per layout the delete must target; user 1
+#: shares its directory with user 3, user 2 (and 4) sit elsewhere.
+_DELETE_LAYOUTS = {
+    "timestamp": (
+        "user_id long, ts timestamp, v double",
+        [(1, dt.datetime(2024, 1, 1, 12, 30), 1.0),
+         (3, dt.datetime(2024, 1, 1, 12, 30), 3.0),
+         (2, dt.datetime(2024, 1, 2, 8, 15), 2.0)],
+        ["ts"],
+    ),
+    "double": (
+        "user_id long, p double, v double",
+        [(1, 0.5, 1.0), (3, 0.5, 3.0), (2, 2.25, 2.0)],
+        ["p"],
+    ),
+    "two_columns": (
+        "user_id long, a int, b string, v double",
+        [(1, 1, "x", 1.0), (3, 1, "x", 3.0), (2, 1, "y", 2.0), (4, 2, "x", 4.0)],
+        ["a", "b"],
+    ),
+    "unpartitioned": (
+        "user_id long, v double",
+        [(1, 1.0), (3, 3.0), (2, 2.0)],
+        [],
+    ),
+}
 
 
 def test_delete_keys_unverified_partition_type_full_rewrite(spark, tmp_path):
-    """Timestamp partition values have engine-internal dir formatting we
-    don't replicate — delete_keys must take the full-rewrite path (n=-1),
-    never the hard-link fast path."""
-    table = VersionedTable(str(tmp_path / "t"))
-    df = spark.createDataFrame(
-        [(1, dt.datetime(2024, 1, 1, 12, 30), 1.0),
-         (2, dt.datetime(2024, 1, 2, 8, 15), 2.0)],
-        "user_id long, ts timestamp, v double",
+    """Every layout gets a targeted delete: the partition directories come
+    from the files Spark read the matching rows from, so timestamp, float,
+    multi-column and unpartitioned layouts (once full rewrites) rewrite
+    exactly the one directory holding the deleted key and hard-link every
+    other one. One case per layout in ``_DELETE_LAYOUTS``."""
+    for name, (schema, rows, partition_by) in _DELETE_LAYOUTS.items():
+        root = tmp_path / name
+        table = VersionedTable(str(root))
+        v0 = table.write(
+            spark.createDataFrame(rows, schema), partition_by=partition_by
+        )
+        v1, n = table.delete_keys(
+            spark.createDataFrame([(1,)], "user_id long"), ["user_id"]
+        )
+        assert n == 1, name
+        after = table.read(spark, version=v1)
+        assert sorted(r.user_id for r in after.collect()) == sorted(
+            r[0] for r in rows if r[0] != 1
+        ), name
+        assert after.schema == table.read(spark, version=v0).schema, name
+        before = _data_file_inodes(str(root / f"v={v0}"))
+        now = _data_file_inodes(str(root / f"v={v1}"))
+        assert set(now) == set(before), name
+        rewritten = [d for d in before if not (before[d] & now[d])]
+        linked = [d for d in before if before[d] == now[d]]
+        assert len(rewritten) == 1 and len(linked) == len(before) - 1, name
+
+
+def test_upsert_keeps_unmatched_rows_sharing_a_key(spark, tmp_path):
+    """Only source keys are replaced: a target key the source never names
+    keeps every one of its rows, even when it repeats."""
+    vt = VersionedTable(str(tmp_path / "t"))
+    vt.write(
+        spark.createDataFrame([("u1", 1), ("u1", 2), ("u2", 3)], "k string, v int")
     )
-    table.write(df, partition_by=["ts"])
-    v1, n = table.delete_keys(
+    vt.upsert(spark.createDataFrame([("u2", 30)], "k string, v int"), keys=["k"])
+    got = sorted(tuple(r) for r in vt.read(spark).collect())
+    assert got == [("u1", 1), ("u1", 2), ("u2", 30)]
+
+
+def test_read_keeps_partition_column_type(spark, tmp_path):
+    """A string partition column reads back as a string with its written
+    value — the recorded schema, not a re-inference from the directory
+    name (which would make "007" the int 7)."""
+    vt = VersionedTable(str(tmp_path / "t"))
+    vt.write(
+        spark.createDataFrame([(1, "007"), (2, "010")], "x int, p string"),
+        partition_by=["p"],
+    )
+    df = vt.read(spark)
+    assert df.dtypes == [("x", "int"), ("p", "string")]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "007"), (2, "010")]
+
+
+def test_append_rejects_layout_or_type_change_before_spark_jobs(spark, tmp_path):
+    """An append or upsert inherits the table's partitioning and column
+    types; a conflicting request fails before any Spark job, with no new
+    version."""
+    vt = VersionedTable(str(tmp_path / "t"))
+    vt.write(
+        spark.createDataFrame([(1, "a")], "x int, p string"), partition_by=["p"]
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("append-guard", "append-guard")
+    try:
+        with pytest.raises(ValueError, match="partitioned by"):
+            vt.write(
+                spark.createDataFrame([(2, "b")], "x int, p string"),
+                partition_by=["x"],
+                mode="append",
+            )
+        with pytest.raises(ValueError, match="column 'x'"):
+            vt.write(
+                spark.createDataFrame([(2.5, "b")], "x double, p string"),
+                mode="append",
+            )
+        with pytest.raises(ValueError, match="partitioned by"):
+            vt.upsert(
+                spark.createDataFrame([(2, "b")], "x int, p string"),
+                keys=["x"],
+                partition_by=["x"],
+            )
+        assert sc.statusTracker().getJobIdsForGroup("append-guard") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [v["version"] for v in vt.versions()] == [0]
+
+
+def test_manifest_without_schema_still_reads_appends_and_deletes(
+    spark, tmp_path
+):
+    """Tables written before versions recorded their schema: the schema is
+    inferred, and append and delete_keys still work on them."""
+    path = tmp_path / "t"
+    vt = VersionedTable(str(path))
+    vt.write(
+        spark.createDataFrame(
+            [(1, dt.date(2024, 1, 1)), (2, dt.date(2024, 1, 2))],
+            "user_id long, day date",
+        ),
+        partition_by=["day"],
+    )
+    manifest = json.loads((path / "_manifest.json").read_text())
+    for entry in manifest["versions"]:
+        del entry["schema"]
+    (path / "_manifest.json").write_text(json.dumps(manifest))
+
+    assert sorted(r.user_id for r in vt.read(spark).collect()) == [1, 2]
+    vt.write(
+        spark.createDataFrame(
+            [(3, dt.date(2024, 1, 3))], "user_id long, day date"
+        ),
+        partition_by=["day"],
+        mode="append",
+    )
+    assert "schema" in vt.versions()[-1]
+    _, n = vt.delete_keys(
         spark.createDataFrame([(1,)], "user_id long"), ["user_id"]
     )
-    assert n == -1  # full rewrite fallback
-    after = table.read(spark, version=v1)
-    assert [r.user_id for r in after.collect()] == [2]
+    assert n == 1
+    got = sorted((r.user_id, r.day) for r in vt.read(spark).collect())
+    assert got == [(2, dt.date(2024, 1, 2)), (3, dt.date(2024, 1, 3))]
+
+
+def test_concurrent_appends_commit_or_raise(spark, tmp_path):
+    """Four threads append at once. Each either commits or raises, and the
+    latest version holds exactly v0 plus the committed rows — no lost or
+    half-written append."""
+    import sys
+    import threading
+
+    vt = VersionedTable(str(tmp_path / "t"))
+    vt.write(spark.createDataFrame([("v0", 0)], "k string, v int"))
+    start = threading.Barrier(4)
+    outcome: dict[int, object] = {}
+
+    def append(i: int) -> None:
+        df = spark.createDataFrame([(f"t{i}", i)], "k string, v int")
+        start.wait(timeout=60)
+        try:
+            outcome[i] = vt.write(df, mode="append")
+        except Exception as e:  # noqa: BLE001 — the outcome under test
+            outcome[i] = e
+
+    threads = [threading.Thread(target=append, args=(i,)) for i in range(4)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    committed = [i for i, o in outcome.items() if isinstance(o, int)]
+    assert len(outcome) == 4 and committed
+    assert sorted(outcome[i] for i in committed) == list(
+        range(1, len(committed) + 1)
+    )
+    got = sorted(r.k for r in vt.read(spark).collect())
+    assert got == sorted(["v0"] + [f"t{i}" for i in committed])
 
 
 def test_analyze_high_cardinality_column_skips_exact_domain(spark, tmp_path):
