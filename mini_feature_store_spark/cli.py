@@ -178,68 +178,69 @@ def build_parser() -> argparse.ArgumentParser:
         "corpus-curate",
         help="raw documents parquet → training-ready corpus: quality gate, "
         "exact + near-dup dedup, optional decontamination, sharded export",
+        # an omitted flag falls through to the CorpusCurationConfig default
+        argument_default=argparse.SUPPRESS,
     )
     cc.add_argument("--input-path", required=True, help="documents parquet")
     cc.add_argument("--output-path", required=True)
     cc.add_argument(
-        "--benchmark-path", default=None, help="eval parquet to decontaminate against"
+        "--benchmark-path", help="eval parquet to decontaminate against"
     )
     cc.add_argument(
         "--embeddings-path",
-        default=None,
         help="doc-embedding parquet enabling the SemDeDup semantic stage",
     )
-    cc.add_argument("--min-tokens", type=int, default=5)
-    cc.add_argument("--min-quality", type=float, default=0.3)
-    cc.add_argument("--jaccard-threshold", type=float, default=0.5)
-    cc.add_argument("--semantic-threshold", type=float, default=0.95)
-    cc.add_argument("--semantic-k", type=int, default=16)
-    cc.add_argument("--contamination-threshold", type=float, default=0.2)
+    cc.add_argument("--min-tokens", type=int)
+    cc.add_argument("--min-quality", type=float)
+    cc.add_argument("--jaccard-threshold", type=float)
+    cc.add_argument("--semantic-threshold", type=float)
+    cc.add_argument("--semantic-k", type=int)
+    cc.add_argument("--contamination-threshold", type=float)
     cc.add_argument(
-        "--url-col", default=None,
+        "--url-col",
         help="URL column: enables stage-0 canonical-URL dedup",
     )
     cc.add_argument(
-        "--max-per-domain", type=int, default=None,
+        "--max-per-domain", type=int,
         help="per-registrable-domain doc cap (needs --url-col)",
     )
     cc.add_argument(
-        "--line-filter-min-lines", type=int, default=None,
+        "--line-filter-min-lines", type=int,
         help="C4 line-cleaning stage: apply per-line terminal-punctuation/"
         "min-words/'javascript' rules before the quality gate and drop "
         "pages with fewer than this many surviving lines (or containing "
         "'{' / 'lorem ipsum'); kept pages keep their cleaned text",
     )
     cc.add_argument(
-        "--quality-model-dir", default=None,
+        "--quality-model-dir",
         help="learned quality stage: drop docs scoring below 0.5 under a "
         "clf-train artifact (directory holding coeffs.parquet); runs "
         "right after the heuristic quality gate",
     )
     cc.add_argument(
-        "--dsir-target-path", default=None,
+        "--dsir-target-path",
         help="DSIR data-selection stage (Xie et al. 2023): hashed-ngram "
         "importance against this curated target parquet, Gumbel top-k "
         "resample keeps --dsir-keep docs (runs after the quality gates)",
     )
     cc.add_argument(
-        "--dsir-keep", type=int, default=None,
+        "--dsir-keep", type=int,
         help="number of docs the DSIR stage keeps (required with "
         "--dsir-target-path)",
     )
     cc.add_argument(
-        "--dsir-seed", type=int, default=42,
+        "--dsir-seed", type=int,
         help="Gumbel seed for the DSIR resample (default 42)",
     )
     cc.add_argument(
-        "--dsir-model-dir", default=None,
+        "--dsir-model-dir",
         help="score the DSIR stage under a frozen dsir-train artifact "
         "(weights.parquet) instead of refitting from --dsir-target-path "
         "(mutually exclusive with it; needs --dsir-keep or "
         "--dsir-min-log-weight)",
     )
     cc.add_argument(
-        "--dsir-min-log-weight", type=float, default=None,
+        "--dsir-min-log-weight", type=float,
         help="DSIR threshold admission instead of the fixed-size "
         "resample (mutually exclusive with --dsir-keep): keep docs "
         "whose log importance is at/above this value — the batch twin "
@@ -248,6 +249,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
     cc.add_argument(
         "--dsir-suggested-threshold", action="store_true",
+        dest="dsir_use_suggested",
         help="DSIR threshold admission under the --dsir-model-dir "
         "artifact's calibrated suggested_min_log_weight (written by "
         "`dsir-train --suggest-keep-rate`) — the probe-free steady "
@@ -255,18 +257,18 @@ def build_parser() -> argparse.ArgumentParser:
         "--dsir-min-log-weight",
     )
     cc.add_argument(
-        "--lm-reference-path", default=None,
+        "--lm-reference-path",
         help="CCNet-style LM filter stage: train an add-1 bigram model on "
         "this parquet and drop docs whose average bigram NLL exceeds "
         "--lm-max-nll",
     )
     cc.add_argument(
-        "--lm-max-nll", type=float, default=7.0,
+        "--lm-max-nll", type=float,
         help="max average n-gram NLL (natural log) a doc may score under "
         "the --lm-reference-path model (default 7.0)",
     )
     cc.add_argument(
-        "--lm-order", type=int, default=2, choices=(2, 3, 4, 5),
+        "--lm-order", type=int, choices=(2, 3, 4, 5),
         help="n-gram order of the LM filter stage: 2 = add-1 bigram, "
         "3-5 = stupid-backoff n-gram (Brants 2007; 5 matches CCNet's "
         "KenLM order; default 2)",
@@ -291,80 +293,79 @@ def build_parser() -> argparse.ArgumentParser:
         "pool mean inside the plan (no probe jobs)",
     )
     cc.add_argument(
-        "--ensemble-clf-min-prob", type=float, default=0.5,
+        "--ensemble-clf-min-prob", type=float,
         help="classifier admission probability for --ensemble "
         "(default 0.5; artifact weights under --quality-model-dir, "
         "the frozen default vector otherwise)",
     )
     cc.add_argument(
-        "--ensemble-lm-max-nll", type=float, default=None,
+        "--ensemble-lm-max-nll", type=float,
         help="LM gate bound for --ensemble; omitted = the pool-mean "
         "relative gate of the oracled query (unscored docs drop)",
     )
     cc.add_argument(
-        "--ensemble-cap", type=int, default=None,
+        "--ensemble-cap", type=int, dest="ensemble_cap_per_domain",
         help="per-registrable-domain cap over the --ensemble survivors "
         "(needs --ensemble-cap-url-col)",
     )
     cc.add_argument(
         "--ensemble-cap-mode", choices=("exact", "approx"),
-        default="exact",
         help="'exact' = survivors-first window cap; 'approx' = "
         "scan-side hash-rate admission (crawl-shaped skew — no "
         "per-domain order anywhere)",
     )
     cc.add_argument(
-        "--ensemble-cap-url-col", default=None,
+        "--ensemble-cap-url-col",
         help="URL column the --ensemble-cap groups by (independent of "
         "--url-col, so the cap can run without stage-0 URL dedup)",
     )
     cc.add_argument(
-        "--cut-spans-k", type=int, default=None,
+        "--cut-spans-k", type=int,
         help="ExactSubstr stage: cut cross-doc duplicated spans of this "
         "window size from surviving docs (GPT-3 used 13); docs that lose "
         "a span are rewritten as normalized token text (lowercased, "
         "single-spaced), untouched docs keep their original bytes",
     )
     cc.add_argument(
-        "--max-dup-share", type=float, default=None,
+        "--max-dup-share", type=float,
         help="Gopher-style coverage gate: drop docs whose cross-document "
         "duplicated-token share (windows of --dup-share-k) is at or above "
         "this fraction (runs after near-dup dedup and any span cut)",
     )
     cc.add_argument(
-        "--dup-share-k", type=int, default=50,
+        "--dup-share-k", type=int,
         help="window size for --max-dup-share coverage (default 50)",
     )
     cc.add_argument(
-        "--shards", type=int, default=None, help="write N training shards + manifest"
+        "--shards", type=int, dest="n_shards", help="write N training shards + manifest"
     )
     cc.add_argument(
-        "--pack-max-tokens", type=int, default=None,
+        "--pack-max-tokens", type=int,
         help="terminal packing stage: assign every exported doc a "
         "training context (shard, bin_id) by doc-preserving "
         "next-fit-decreasing bin packing at this token capacity; the "
         "assignment manifest lands at <output-path>_packing",
     )
     cc.add_argument(
-        "--pack-shards", type=int, default=8,
+        "--pack-shards", type=int,
         help="parallel shards for the packing stage (the greedy fold is "
         "sequential per shard; default 8)",
     )
     cc.add_argument(
-        "--pack-tokenizer-dir", default=None,
+        "--pack-tokenizer-dir",
         help="size packing bins by a TRAINED tokenizer instead of "
         "whitespace counts: directory holding merges.parquet (bpe-train "
         "output) or pieces.parquet (unigram-train output); requires "
         "--pack-max-tokens",
     )
     cc.add_argument(
-        "--mixture-strata-col", default=None,
+        "--mixture-strata-col",
         help="temperature-mixture stage before export: rebalance the "
         "surviving corpus across this stratum column (mT5/PaLM recipe, "
         "deterministic md5 admission)",
     )
     cc.add_argument(
-        "--mixture-alpha", type=float, default=0.5,
+        "--mixture-alpha", type=float,
         help="temperature exponent for --mixture-strata-col (default "
         "0.5 — the engine-portable sqrt case)",
     )
@@ -374,7 +375,7 @@ def build_parser() -> argparse.ArgumentParser:
         "instead of document counts — the token-budgeted form",
     )
     cc.add_argument(
-        "--mixture-weights-dir", default=None,
+        "--mixture-weights-dir",
         help="realize the TARGET shares of a doremi-weights artifact "
         "(weights.parquet under this dir) instead of the temperature "
         "rule — pure down-sampling toward the learned mixture",
@@ -515,6 +516,19 @@ def build_parser() -> argparse.ArgumentParser:
     v.add_argument("--host", default="0.0.0.0")
     v.add_argument("--port", type=int, default=8000)
     return p
+
+
+def corpus_curation_config(args: argparse.Namespace):
+    """The ``CorpusCurationConfig`` of a parsed ``corpus-curate`` command:
+    each flag's ``dest`` is the field it sets, and an omitted flag is
+    absent from ``args``, so the dataclass default applies."""
+    from mini_feature_store_spark.pipelines.corpus_curate import (
+        CorpusCurationConfig,
+    )
+
+    kw = vars(args).copy()
+    del kw["pipeline"], kw["master"]
+    return CorpusCurationConfig(**kw)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -724,55 +738,11 @@ def main(argv: list[str] | None = None) -> int:
             print(f"committed v{version} ({n} partition(s) rewritten)")
         elif args.pipeline == "corpus-curate":
             from mini_feature_store_spark.pipelines.corpus_curate import (
-                CorpusCurationConfig,
                 run_corpus_curation,
             )
 
             funnel = run_corpus_curation(
-                spark,
-                CorpusCurationConfig(
-                    input_path=args.input_path,
-                    output_path=args.output_path,
-                    benchmark_path=args.benchmark_path,
-                    embeddings_path=args.embeddings_path,
-                    min_tokens=args.min_tokens,
-                    min_quality=args.min_quality,
-                    jaccard_threshold=args.jaccard_threshold,
-                    semantic_threshold=args.semantic_threshold,
-                    semantic_k=args.semantic_k,
-                    contamination_threshold=args.contamination_threshold,
-                    n_shards=args.shards,
-                    url_col=args.url_col,
-                    max_per_domain=args.max_per_domain,
-                    line_filter_min_lines=args.line_filter_min_lines,
-                    quality_model_dir=args.quality_model_dir,
-                    dsir_target_path=args.dsir_target_path,
-                    dsir_keep=args.dsir_keep,
-                    dsir_seed=args.dsir_seed,
-                    dsir_model_dir=args.dsir_model_dir,
-                    dsir_min_log_weight=args.dsir_min_log_weight,
-                    dsir_use_suggested=args.dsir_suggested_threshold,
-                    lm_reference_path=args.lm_reference_path,
-                    lm_max_nll=args.lm_max_nll,
-                    lm_order=args.lm_order,
-                    dedup_keep_best_quality=args.dedup_keep_best_quality,
-                    ensemble=args.ensemble,
-                    ensemble_clf_min_prob=args.ensemble_clf_min_prob,
-                    ensemble_lm_max_nll=args.ensemble_lm_max_nll,
-                    ensemble_cap_per_domain=args.ensemble_cap,
-                    ensemble_cap_mode=args.ensemble_cap_mode,
-                    ensemble_cap_url_col=args.ensemble_cap_url_col,
-                    cut_spans_k=args.cut_spans_k,
-                    max_dup_share=args.max_dup_share,
-                    dup_share_k=args.dup_share_k,
-                    pack_max_tokens=args.pack_max_tokens,
-                    pack_shards=args.pack_shards,
-                    pack_tokenizer_dir=args.pack_tokenizer_dir,
-                    mixture_strata_col=args.mixture_strata_col,
-                    mixture_alpha=args.mixture_alpha,
-                    mixture_by_tokens=args.mixture_by_tokens,
-                    mixture_weights_dir=args.mixture_weights_dir,
-                ),
+                spark, corpus_curation_config(args)
             )
             for stage, n in funnel.items():
                 print(f"{stage}: {n}")

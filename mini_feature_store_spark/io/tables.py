@@ -32,6 +32,7 @@ import os
 import shutil
 import time
 import urllib.parse
+import uuid
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
@@ -68,9 +69,10 @@ class VersionedTable:
             return {"versions": []}
 
     def _commit(self, manifest: dict) -> None:
-        """Write the manifest to a tmp file and rename it over the live
-        one — the atomic commit point of every table mutation."""
-        tmp = self._manifest_path() + ".tmp"
+        """Write the manifest to a temp file of this writer's own and
+        rename it over the live one — the atomic commit point of every
+        table mutation."""
+        tmp = f"{self._manifest_path()}.{uuid.uuid4().hex}.tmp"
         with open(tmp, "w") as f:
             json.dump(manifest, f)
         os.replace(tmp, self._manifest_path())
@@ -289,10 +291,10 @@ class VersionedTable:
         columns: Sequence[str] | None = None,
         small_domain_max: int = 64,
     ) -> dict:
-        """ANALYZE-style statistics for the latest version, persisted in the
-        manifest: row count plus per-column approx NDV, min, max, and — for
-        small-domain columns (NDV ≤ ``small_domain_max``) — the exact value
-        list.
+        """ANALYZE-style statistics for the latest version, recorded in the
+        manifest on the version read: row count plus per-column approx
+        NDV, min, max, and — for small-domain columns (NDV ≤
+        ``small_domain_max``) — the exact value list.
 
         Two passes, both map-side combined: pass 1 computes count / approx
         NDV / min / max for every column (constant-size sketch buffers);
@@ -307,7 +309,8 @@ class VersionedTable:
         (``BackfillConfig.known_event_types = stats['columns']
         ['event_type']['values']`` — a pure literal plan, no type-dim scan).
         """
-        df = self.read(spark)
+        version = self._latest()["version"]
+        df = self.read(spark, version=version)
         cols = list(columns) if columns is not None else df.columns
         aggs = [F.count(F.lit(1)).alias("_rows")]
         for c in cols:
@@ -353,8 +356,12 @@ class VersionedTable:
                     else None
                 ),
             }
+        # recorded on the version read: a commit that landed meanwhile
+        # must not inherit these stats
         manifest = self._load_manifest()
-        manifest["versions"][-1]["stats"] = stats
+        for c in manifest["versions"]:
+            if c["version"] == version:
+                c["stats"] = stats
         self._commit(manifest)
         return stats
 

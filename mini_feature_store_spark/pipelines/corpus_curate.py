@@ -68,17 +68,22 @@ One command takes a raw document corpus to a training-ready one:
 
 Every stage is the already-tested distributed operator; this module only
 sequences them and reports the funnel (admitted counts per stage — the
-number every corpus pipeline logs). The admitted set is persisted once
-after the quality gate: stages 2-4 and the final write all read it, and
-everything downstream of pair generation joins back by doc id
-(left_semi / left_anti — survivors never carry cluster metadata).
+number every corpus pipeline logs). Each stage's output is persisted and
+counted once by one step (``_Stages.step``); that count job fills the
+cache the next stage and the export read, and the step then releases the
+previous stage's frame, so at most two stage frames are cached at once.
+Every frame a run persists has that one owner, and one ``finally``
+releases it all, with the operator caches the stages tracked, whether the
+run succeeds or fails. Downstream of pair generation every stage joins
+back by doc id (left_semi / left_anti — survivors never carry cluster
+metadata).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -236,33 +241,96 @@ class CorpusCurationConfig:
     mixture_weights_dir: str | None = None
 
 
+class _Stages:
+    """The one owner of every frame a curation run persists.
+
+    ``step`` moves the funnel on by one stage: it persists the stage's
+    output and counts it once (that count job is what fills the cache),
+    records the count under ``name`` and releases the previous stage's
+    frame, so at most two stage frames are cached at once. A stage that
+    rewrites rows without dropping any passes ``where`` and records how
+    many rows match it instead. ``hold`` persists a side frame that a
+    stage reads more than once; ``close`` releases every frame held,
+    then the operator-internal caches the stages tracked.
+    """
+
+    def __init__(self) -> None:
+        self.funnel: dict[str, int] = {}
+        #: row count of the current stage frame
+        self.rows = 0
+        self._held: list[DataFrame] = []
+        self._stage: DataFrame | None = None
+
+    def hold(self, df: DataFrame) -> DataFrame:
+        if not df.is_cached:
+            self._held.append(df.persist())
+        return df
+
+    def step(
+        self, name: str, df: DataFrame, where: Column | None = None
+    ) -> DataFrame:
+        prev, self._stage = self._stage, self.hold(df)
+        if where is None:
+            self.funnel[name] = self.rows = df.count()
+        else:
+            self.funnel[name] = df.where(where).count()
+        if prev is not None and prev is not df:
+            prev.unpersist()
+        return df
+
+    def close(self) -> None:
+        from mini_feature_store_spark.functions import release_operator_caches
+
+        for df in self._held:
+            df.unpersist()
+        release_operator_caches()
+
+
 def run_corpus_curation(
     spark: SparkSession, cfg: CorpusCurationConfig
 ) -> dict[str, int]:
-    """Run the full curation funnel; returns per-stage admitted counts."""
-    from mini_feature_store_spark.io.sinks import write_training_shards
-    from mini_feature_store_spark.operators.dedup import (
-        exact_dedup,
-        ngram_jaccard_pairs,
-    )
-    from mini_feature_store_spark.operators.graph import dedup_clusters
-    from mini_feature_store_spark.operators.text import (
-        decontaminate,
-        quality_filter,
-    )
+    """Run the full curation funnel; returns per-stage admitted counts.
 
-    docs = spark.read.parquet(cfg.input_path)
-    funnel: dict[str, int] = {"input": docs.count()}
+    A bad config raises before any Spark job, and an unusable DSIR or
+    mixture-weights artifact before the first stage's job. Success or
+    failure, the run leaves nothing cached.
+    """
+    _check_config(cfg)
+    dsir_signal = None
+    if cfg.dsir_model_dir is not None:
+        dsir_signal = _load_dsir_signal(spark, cfg)
+    target_weights = None
+    if cfg.mixture_weights_dir is not None:
+        # a doremi-weights artifact: bounded (domain, weight) table
+        wrows = spark.read.parquet(
+            cfg.mixture_weights_dir.rstrip("/") + "/weights.parquet"
+        ).collect()
+        if not wrows:
+            raise ValueError(
+                "empty mixture-weights artifact at "
+                f"{cfg.mixture_weights_dir!r}"
+            )
+        target_weights = {r["domain"]: float(r["weight"]) for r in wrows}
+    stages = _Stages()
+    try:
+        _curate(spark, cfg, stages, dsir_signal, target_weights)
+    finally:
+        stages.close()
+    return stages.funnel
 
+
+def _check_config(cfg: CorpusCurationConfig) -> None:
+    """Every config check, run before any Spark job: at scale the
+    upstream stages are hours, so a bad knob of a late stage must fail
+    first."""
     if cfg.max_per_domain is not None and cfg.url_col is None:
         raise ValueError(
             "max_per_domain requires url_col — the cap groups by the "
             "registrable domain parsed from the URL column"
         )
-    # fail BEFORE any stage runs (at scale the upstream stages are hours):
-    # a negative share would silently drop the whole corpus (share >= 0 is
-    # never < a negative bound), and duplicate_spans rejects k < 2 only
-    # when stage 3c finally executes
+    # a negative share would silently drop the whole corpus (share >= 0
+    # is never < a negative bound), and duplicate_spans rejects k < 2
+    # only when stage 3c finally executes
     if cfg.max_dup_share is not None and not (0.0 < cfg.max_dup_share <= 1.0):
         raise ValueError(
             f"max_dup_share must be in (0, 1], got {cfg.max_dup_share}"
@@ -271,8 +339,6 @@ def run_corpus_curation(
         raise ValueError(
             f"dup_share_k must be at least 2, got {cfg.dup_share_k}"
         )
-    # packing knobs validated up front too — the stage runs LAST, after
-    # every expensive dedup stage, so a bad knob must not cost hours
     if cfg.pack_max_tokens is not None and cfg.pack_max_tokens <= 0:
         raise ValueError(
             f"pack_max_tokens must be positive, got {cfg.pack_max_tokens}"
@@ -402,7 +468,33 @@ def run_corpus_curation(
             "weight artifact only decides the TARGET shares, the "
             "stratum column enables the stage"
         )
-    stage0 = None
+
+
+def _curate(
+    spark: SparkSession,
+    cfg: CorpusCurationConfig,
+    stages: _Stages,
+    dsir_signal: tuple[DataFrame, int, int, float | None] | None,
+    target_weights: dict[str, float] | None,
+) -> None:
+    """The stages of ``run_corpus_curation``, in funnel order; every
+    frame they persist goes through ``stages``."""
+    from mini_feature_store_spark.io.sinks import write_training_shards
+    from mini_feature_store_spark.operators.dedup import (
+        exact_dedup,
+        ngram_jaccard_pairs,
+    )
+    from mini_feature_store_spark.operators.graph import dedup_clusters
+    from mini_feature_store_spark.operators.text import (
+        decontaminate,
+        quality_filter,
+    )
+
+    funnel = stages.funnel
+    docs = spark.read.parquet(cfg.input_path)
+    funnel["input"] = docs.count()
+    step = stages.step
+
     if cfg.url_col is not None:
         from mini_feature_store_spark.operators.urls import (
             domain_cap,
@@ -412,20 +504,14 @@ def run_corpus_curation(
         keep = url_dedup(docs, cfg.url_col, cfg.id_col).select(
             F.col("keep_id").alias(cfg.id_col)
         )
-        # persisted: the stage-0 result feeds its funnel count, the
-        # optional cap, AND the quality gate — without this the
-        # canonicalize+dedup subtree (the most expensive scans on a
-        # crawl-shaped input) recomputes up to three times
-        docs = docs.join(keep, cfg.id_col, "left_semi").persist()
-        stage0 = docs
-        funnel["after_url_dedup"] = docs.count()
+        docs = step(
+            "after_url_dedup", docs.join(keep, cfg.id_col, "left_semi")
+        )
         if cfg.max_per_domain is not None:
-            capped = domain_cap(
-                docs, cfg.max_per_domain, cfg.url_col, cfg.id_col
-            ).persist()
-            funnel["after_domain_cap"] = capped.count()
-            stage0.unpersist()
-            docs = stage0 = capped
+            docs = step(
+                "after_domain_cap",
+                domain_cap(docs, cfg.max_per_domain, cfg.url_col, cfg.id_col),
+            )
 
     if cfg.line_filter_min_lines is not None:
         from mini_feature_store_spark.operators.text import line_filter
@@ -439,20 +525,15 @@ def run_corpus_curation(
         # page gate + line-level rewrite in one join: non-kept pages
         # drop, kept pages carry the CLEANED text into every later stage
         # (kept lines pass through byte-identical — no normalization)
-        cleaned = (
-            docs.drop(cfg.text_col)
-            .join(
+        docs = step(
+            "after_line_filter",
+            docs.drop(cfg.text_col).join(
                 lf.where(F.col("kept")).select(
                     cfg.id_col, F.col("text_clean").alias(cfg.text_col)
                 ),
                 cfg.id_col,
-            )
-            .persist()
+            ),
         )
-        funnel["after_line_filter"] = cleaned.count()
-        if stage0 is not None:
-            stage0.unpersist()
-        docs = stage0 = cleaned
 
     gate = quality_filter(
         docs,
@@ -461,12 +542,8 @@ def run_corpus_curation(
         text_col=cfg.text_col,
         id_col=cfg.id_col,
     )
-    admitted = docs.join(
-        gate.where(F.col("kept")).select(cfg.id_col), cfg.id_col, "left_semi"
-    ).persist()
-    funnel["after_quality"] = admitted.count()
-    if stage0 is not None:
-        stage0.unpersist()
+    kept = gate.where(F.col("kept")).select(cfg.id_col)
+    admitted = step("after_quality", docs.join(kept, cfg.id_col, "left_semi"))
 
     if cfg.ensemble:
         clf_w = clf_b = None
@@ -478,47 +555,41 @@ def run_corpus_curation(
             clf_w, clf_b = load_quality_classifier(
                 spark, cfg.quality_model_dir
             )
-        wdf, nb, mo, thr = _resolve_dsir_signal(spark, cfg, admitted)
-        frame = ensemble_admission(
-            spark,
-            admitted,
-            cfg,
-            lm_reference=spark.read.parquet(cfg.lm_reference_path),
-            dsir_weights=wdf,
-            dsir_n_buckets=nb,
-            dsir_max_order=mo,
-            dsir_threshold=thr,
-            clf_weights=clf_w,
-            clf_bias=clf_b,
+        wdf, nb, mo, thr = dsir_signal or _fit_dsir_signal(
+            spark, cfg, admitted
         )
-        # the narrow flag frame (id + flags) feeds TWO actions — the
-        # gate-count aggregate and the survivor semi-join — so persist
-        # it like every other double-consumed stage result: without
-        # this, the LM scoring and DSIR gram chains over the full pool
-        # execute twice (review r15)
-        frame = frame.persist()
-        try:
-            # one bounded job reports all three gate counts (the
-            # oracled query's conditional-aggregate shape); the cap
-            # count comes from the persisted survivor materialization
-            gates = frame.agg(
-                F.count(F.when(F.col("_f1"), 1)).alias("c1"),
-                F.count(F.when(F.col("_f2"), 1)).alias("c2"),
-                F.count(F.when(F.col("_f3"), 1)).alias("c3"),
-            ).first()
-            funnel["after_ensemble_clf"] = gates["c1"]
-            funnel["after_ensemble_lm"] = gates["c2"]
-            funnel["after_ensemble_dsir"] = gates["c3"]
-            prev = admitted
-            admitted = admitted.join(
-                frame.where(F.col("_cap_keep")).select(cfg.id_col),
-                cfg.id_col,
-                "left_semi",
-            ).persist()
-            funnel["after_ensemble_cap"] = admitted.count()
-            prev.unpersist()
-        finally:
-            frame.unpersist()
+        # the narrow flag frame (id + flags) feeds two actions, the
+        # gate-count aggregate and the survivor semi-join: held, the LM
+        # scoring and DSIR gram chains over the pool run once
+        flags = stages.hold(
+            ensemble_admission(
+                spark,
+                admitted,
+                cfg,
+                lm_reference=spark.read.parquet(cfg.lm_reference_path),
+                dsir_weights=wdf,
+                dsir_n_buckets=nb,
+                dsir_max_order=mo,
+                dsir_threshold=thr,
+                clf_weights=clf_w,
+                clf_bias=clf_b,
+            )
+        )
+        # one job reports all three gate counts (the oracled query's
+        # conditional-aggregate shape) and fills the flag cache
+        gates = flags.agg(
+            F.count(F.when(F.col("_f1"), 1)).alias("c1"),
+            F.count(F.when(F.col("_f2"), 1)).alias("c2"),
+            F.count(F.when(F.col("_f3"), 1)).alias("c3"),
+        ).first()
+        funnel["after_ensemble_clf"] = gates["c1"]
+        funnel["after_ensemble_lm"] = gates["c2"]
+        funnel["after_ensemble_dsir"] = gates["c3"]
+        kept = flags.where(F.col("_cap_keep")).select(cfg.id_col)
+        admitted = step(
+            "after_ensemble_cap", admitted.join(kept, cfg.id_col, "left_semi")
+        )
+        flags.unpersist()
 
     if cfg.quality_model_dir is not None and not cfg.ensemble:
         from mini_feature_store_spark.operators.text import (
@@ -539,64 +610,47 @@ def run_corpus_curation(
         # semi-join on the kept set is safe here (unlike the LM stage's
         # anti-join rationale): every document gets a score row — the
         # classifier has no unscorable class
-        prev = admitted
-        admitted = admitted.join(
-            clf.where(F.col("keep")).select(cfg.id_col),
-            cfg.id_col,
-            "left_semi",
-        ).persist()
-        funnel["after_quality_clf"] = admitted.count()
-        prev.unpersist()
+        kept = clf.where(F.col("keep")).select(cfg.id_col)
+        admitted = step(
+            "after_quality_clf", admitted.join(kept, cfg.id_col, "left_semi")
+        )
 
-    if (
-        not cfg.ensemble
-        and _dsir_on
-        and (cfg.dsir_min_log_weight is not None or cfg.dsir_use_suggested)
-    ):
-        # threshold admission — the batch twin of dsir_gated_stream: no
-        # resample, no plan-build probe jobs. Scoring uses the BATCH
-        # explode scorer (broadcast weight join + one map-side-combined
-        # doc_id aggregate), not the streaming gate's stateless column
-        # form: Spark's higher-order functions are CodegenFallback, so
-        # the per-gram column arithmetic runs interpreted — measured
-        # ~16× slower at sf0.1 (BENCH_WATCH_r14_dsir_probe.json). Both
-        # scorers are pinned value-equal at the shared scale-4 rounding
-        # (test_dsir.py), so the admitted set is identical.
+    dsir_on = (
+        cfg.dsir_target_path is not None or cfg.dsir_model_dir is not None
+    )
+    if dsir_on and not cfg.ensemble:
         from mini_feature_store_spark.operators.dsir import (
+            dsir_resample,
+            dsir_resample_with_weights,
             dsir_score_with_weights,
         )
 
-        wdf, nb, mo, _dsir_threshold = _resolve_dsir_signal(
-            spark, cfg, admitted
-        )
-        picked = (
-            dsir_score_with_weights(
+        if cfg.dsir_keep is None:
+            # threshold admission — the batch twin of dsir_gated_stream:
+            # no resample, no plan-build probe jobs. Scoring uses the
+            # BATCH explode scorer (broadcast weight join + one
+            # map-side-combined doc_id aggregate), not the streaming
+            # gate's stateless column form: Spark's higher-order
+            # functions are CodegenFallback, so the per-gram column
+            # arithmetic runs interpreted — measured ~16× slower at
+            # sf0.1 (BENCH_WATCH_r14_dsir_probe.json). Both scorers are
+            # pinned value-equal at the shared scale-4 rounding
+            # (test_dsir.py), so the admitted set is identical.
+            wdf, nb, mo, thr = dsir_signal or _fit_dsir_signal(
+                spark, cfg, admitted
+            )
+            picked = dsir_score_with_weights(
                 wdf,
                 admitted,
                 id_col=cfg.id_col,
                 text_col=cfg.text_col,
                 n_buckets=nb,
                 max_order=mo,
-            )
-            .where(F.col("log_weight") >= F.lit(float(_dsir_threshold)))
-            .select(cfg.id_col)
-        )
-        prev = admitted
-        admitted = admitted.join(picked, cfg.id_col, "left_semi").persist()
-        funnel["after_dsir_select"] = admitted.count()
-        prev.unpersist()
-    elif not cfg.ensemble and (
-        cfg.dsir_target_path is not None or cfg.dsir_model_dir is not None
-    ):
-        if cfg.dsir_model_dir is not None:
-            from mini_feature_store_spark.operators.dsir import (
-                dsir_resample_with_weights,
-                load_dsir_weights,
-            )
-
-            w, nb, mo = load_dsir_weights(spark, cfg.dsir_model_dir)
+            ).where(F.col("log_weight") >= F.lit(float(thr)))
+        elif dsir_signal is not None:
+            wdf, nb, mo, _ = dsir_signal
             picked = dsir_resample_with_weights(
-                w,
+                wdf,
                 admitted,
                 k=cfg.dsir_keep,
                 seed=cfg.dsir_seed,
@@ -604,25 +658,20 @@ def run_corpus_curation(
                 text_col=cfg.text_col,
                 n_buckets=nb,
                 max_order=mo,
-            ).select(cfg.id_col)
-        else:
-            from mini_feature_store_spark.operators.dsir import (
-                dsir_resample,
             )
-
-            target = spark.read.parquet(cfg.dsir_target_path)
+        else:
             picked = dsir_resample(
-                target,
+                spark.read.parquet(cfg.dsir_target_path),
                 admitted,
                 k=cfg.dsir_keep,
                 seed=cfg.dsir_seed,
                 id_col=cfg.id_col,
                 text_col=cfg.text_col,
-            ).select(cfg.id_col)
-        prev = admitted
-        admitted = admitted.join(picked, cfg.id_col, "left_semi").persist()
-        funnel["after_dsir_select"] = admitted.count()
-        prev.unpersist()
+            )
+        kept = picked.select(cfg.id_col)
+        admitted = step(
+            "after_dsir_select", admitted.join(kept, cfg.id_col, "left_semi")
+        )
 
     if cfg.lm_reference_path is not None and not cfg.ensemble:
         import functools
@@ -655,16 +704,16 @@ def run_corpus_curation(
         drop_lm = scored.where(F.col("avg_nll") > cfg.lm_max_nll).select(
             cfg.id_col
         )
-        prev = admitted
-        admitted = admitted.join(drop_lm, cfg.id_col, "left_anti").persist()
-        funnel["after_lm_filter"] = admitted.count()
-        prev.unpersist()
+        admitted = step(
+            "after_lm_filter", admitted.join(drop_lm, cfg.id_col, "left_anti")
+        )
 
     keep_ids = exact_dedup(admitted, cfg.text_col, cfg.id_col).select(
         F.col("keep_id").alias(cfg.id_col)
     )
-    deduped = admitted.join(keep_ids, cfg.id_col, "left_semi").persist()
-    funnel["after_exact_dedup"] = deduped.count()
+    deduped = step(
+        "after_exact_dedup", admitted.join(keep_ids, cfg.id_col, "left_semi")
+    )
 
     pairs = ngram_jaccard_pairs(
         deduped,
@@ -701,8 +750,9 @@ def run_corpus_curation(
     ).where(~F.col("keep")).select(
         F.col("doc_id").alias(cfg.id_col)
     )
-    survivors: DataFrame = deduped.join(drops, cfg.id_col, "left_anti")
-    funnel["after_near_dedup"] = survivors.count()
+    survivors = step(
+        "after_near_dedup", deduped.join(drops, cfg.id_col, "left_anti")
+    )
 
     if cfg.cut_spans_k is not None:
         from mini_feature_store_spark.operators.dedup import (
@@ -716,21 +766,15 @@ def run_corpus_curation(
         # (paragraph_dedup's contract — lowercased, single-spaced);
         # span-free docs keep their original bytes. Row count is
         # unchanged, so the funnel records docs TOUCHED instead.
-        # survivors feeds the cut operator (which scans it for windows
-        # and tokens), the metadata join below, the touched count, AND —
-        # through the returned plan's lineage — every downstream stage
-        # count and the final write, so the persist must outlive them
-        # all: unpersist happens at the end next to admitted/deduped
-        # (pipeline tier persists; registry gate replicas stay lazy).
-        cut_input = survivors.persist()
         cut = cut_duplicate_spans(
-            cut_input,
+            survivors,
             k=cfg.cut_spans_k,
             text_col=cfg.text_col,
             id_col=cfg.id_col,
         )
-        survivors = (
-            cut_input.join(
+        survivors = step(
+            "spans_cut_docs",
+            survivors.join(
                 cut.select(cfg.id_col, "text_cut", "n_spans"), cfg.id_col
             )
             .withColumn(
@@ -739,12 +783,9 @@ def run_corpus_curation(
                     F.col("n_spans") > 0, F.col("text_cut")
                 ).otherwise(F.col(cfg.text_col)),
             )
-            .drop("text_cut")
-        )
-        funnel["spans_cut_docs"] = survivors.where(
-            F.col("n_spans") > 0
-        ).count()
-        survivors = survivors.drop("n_spans")
+            .drop("text_cut"),
+            where=F.col("n_spans") > 0,
+        ).drop("n_spans")
 
     if cfg.max_dup_share is not None:
         from mini_feature_store_spark.operators.dedup import (
@@ -756,22 +797,18 @@ def run_corpus_curation(
         # wherever they differ — the Gopher-style policy. Coverage is
         # recomputed over the CURRENT survivor text, so a preceding cut
         # stage has already lowered every share it scrubbed.
-        # survivors' lineage (the near-dedup pair mining when no cut
-        # stage persisted it) feeds the span subtree TWICE, the
-        # token-count base, the semi-join left side, the funnel count,
-        # AND the downstream stages — persist like the sibling stages,
-        # release at the end next to admitted/deduped.
-        cov_input = survivors.persist()
         cov_keep = duplicate_span_coverage(
-            cov_input,
+            survivors,
             k=cfg.dup_share_k,
             min_docs=2,
             max_share=cfg.max_dup_share,
             text_col=cfg.text_col,
             id_col=cfg.id_col,
         ).where(F.col("keep")).select(cfg.id_col)
-        survivors = cov_input.join(cov_keep, cfg.id_col, "left_semi")
-        funnel["after_dup_share_drop"] = survivors.count()
+        survivors = step(
+            "after_dup_share_drop",
+            survivors.join(cov_keep, cfg.id_col, "left_semi"),
+        )
 
     if cfg.embeddings_path is not None:
         from mini_feature_store_spark.operators.clustering import (
@@ -780,13 +817,12 @@ def run_corpus_curation(
 
         # embeddings restricted to still-surviving docs FIRST, so dropped
         # text dups can't crowd out semantically distinct survivors
-        emb = (
+        emb = stages.hold(
             spark.read.parquet(cfg.embeddings_path)
             .select(
                 F.col(cfg.embedding_id_col).alias(cfg.id_col), "embedding"
             )
             .join(survivors.select(cfg.id_col), cfg.id_col, "left_semi")
-            .persist()
         )
         # clamp k to the embedded-survivor count: a small corpus (or an
         # embeddings file covering few docs) must degrade to fewer
@@ -807,7 +843,7 @@ def run_corpus_curation(
             # docs without an embedding are untouched (semantics: this
             # stage can only drop rows it has evidence about)
             survivors = survivors.join(sem_drops, cfg.id_col, "left_anti")
-        funnel["after_semantic_dedup"] = survivors.count()
+        survivors = step("after_semantic_dedup", survivors)
         emb.unpersist()
 
     if cfg.benchmark_path is not None:
@@ -819,12 +855,11 @@ def run_corpus_curation(
             text_col=cfg.text_col,
             id_col=cfg.id_col,
         )
-        survivors = survivors.join(
-            flagged.where(F.col("contaminated")).select(cfg.id_col),
-            cfg.id_col,
-            "left_anti",
+        dirty = flagged.where(F.col("contaminated")).select(cfg.id_col)
+        survivors = step(
+            "after_decontamination",
+            survivors.join(dirty, cfg.id_col, "left_anti"),
         )
-        funnel["after_decontamination"] = survivors.count()
 
     if cfg.mixture_strata_col is not None:
         from mini_feature_store_spark.operators.sampling import (
@@ -832,19 +867,6 @@ def run_corpus_curation(
             temperature_mixture_sample,
         )
         from mini_feature_store_spark.operators.text import word_chunk_count
-
-        target_weights = None
-        if cfg.mixture_weights_dir is not None:
-            # a doremi-weights artifact: bounded (domain, weight) table
-            wrows = spark.read.parquet(
-                cfg.mixture_weights_dir.rstrip("/") + "/weights.parquet"
-            ).collect()
-            if not wrows:
-                raise ValueError(
-                    "empty mixture-weights artifact at "
-                    f"{cfg.mixture_weights_dir!r}"
-                )
-            target_weights = {r["domain"]: float(r["weight"]) for r in wrows}
 
         def _mix(frame, tokens_col=None):
             if target_weights is not None:
@@ -878,15 +900,10 @@ def run_corpus_curation(
             )
         else:
             survivors = _mix(survivors)
-        funnel["after_mixture"] = survivors.count()
+        survivors = step("after_mixture", survivors)
 
-    pack_input = None
-    if cfg.pack_max_tokens is not None:
-        # the final survivor set feeds BOTH the corpus export and the
-        # packing pass below — persist around the double consumption
-        pack_input = survivors.persist()
-        survivors = pack_input
-
+    # the final frame is cached (or a projection of the cached one), so
+    # the export and the packing pass below read it without recomputing
     if cfg.n_shards:
         manifest = write_training_shards(
             survivors, cfg.output_path, cfg.n_shards, key_col=cfg.id_col
@@ -894,22 +911,7 @@ def run_corpus_curation(
         funnel["written"] = sum(s["rows"] for s in manifest)
     else:
         survivors.write.mode("overwrite").parquet(cfg.output_path)
-        funnel["written"] = next(
-            funnel[k]
-            for k in (
-                # latest-configured-filter first: each optional stage
-                # that changes the ROW COUNT must appear here or
-                # 'written' over-reports when it is the last one on
-                # (the span cut rewrites text without dropping rows,
-                # so it has no entry)
-                "after_mixture",
-                "after_decontamination",
-                "after_semantic_dedup",
-                "after_dup_share_drop",
-                "after_near_dedup",
-            )
-            if k in funnel
-        )
+        funnel["written"] = stages.rows
 
     if cfg.pack_max_tokens is not None:
         from mini_feature_store_spark.operators.packing import (
@@ -988,66 +990,49 @@ def run_corpus_curation(
             written.select("shard", "bin_id").distinct().count()
         )
 
-    admitted.unpersist()
-    deduped.unpersist()
-    if cfg.cut_spans_k is not None:
-        cut_input.unpersist()
-    if cfg.max_dup_share is not None:
-        cov_input.unpersist()
-    if pack_input is not None:
-        pack_input.unpersist()
-    return funnel
 
-
-def _resolve_dsir_signal(
-    spark: SparkSession,
-    cfg: CorpusCurationConfig,
-    pool: DataFrame,
+def _load_dsir_signal(
+    spark: SparkSession, cfg: CorpusCurationConfig
 ) -> tuple[DataFrame, int, int, float | None]:
-    """``(weights_df, n_buckets, max_order, threshold)`` for
-    threshold-mode DSIR scoring under ``cfg`` — ONE resolution shared by
-    the standalone threshold stage and the ensemble stage (review r15:
-    two hand-synced copies, byte-identical error message included).
+    """``(weights_df, n_buckets, max_order, threshold)`` of the
+    ``dsir-train`` artifact at ``cfg.dsir_model_dir``, opened in one
+    aggregate job before the first stage runs, so an artifact without a
+    calibrated threshold fails under ``dsir_use_suggested`` before any
+    stage job. ``threshold`` is the artifact's suggested one under
+    ``dsir_use_suggested``, else ``dsir_min_log_weight`` (None in
+    resample mode and in the ensemble's pool-mean mode)."""
+    from mini_feature_store_spark.operators.dsir import load_dsir_artifact
 
-    Frozen artifact (``dsir_model_dir``; one ``load_dsir_artifact`` open
-    serves threshold and weight table — review r14) with
-    ``dsir_use_suggested`` honored, or an in-line fit against
-    ``dsir_target_path`` over ``pool``. ``threshold`` is None when
-    neither an explicit nor a suggested threshold applies (the
-    ensemble's pool-mean mode)."""
-    thr = cfg.dsir_min_log_weight
-    if cfg.dsir_model_dir is not None:
-        from mini_feature_store_spark.operators.dsir import (
-            load_dsir_artifact,
+    wdf, nb, mo, suggested = load_dsir_artifact(spark, cfg.dsir_model_dir)
+    if not cfg.dsir_use_suggested:
+        return wdf, nb, mo, cfg.dsir_min_log_weight
+    if suggested is None:
+        raise ValueError(
+            "dsir_use_suggested: artifact at "
+            f"{cfg.dsir_model_dir!r} carries no "
+            "suggested_min_log_weight — retrain with "
+            "`dsir-train --suggest-keep-rate` or pass an "
+            "explicit dsir_min_log_weight"
         )
+    return wdf, nb, mo, suggested
 
-        wdf, nb, mo, suggested = load_dsir_artifact(
-            spark, cfg.dsir_model_dir
-        )
-        if cfg.dsir_use_suggested:
-            thr = suggested
-            if thr is None:
-                raise ValueError(
-                    "dsir_use_suggested: artifact at "
-                    f"{cfg.dsir_model_dir!r} carries no "
-                    "suggested_min_log_weight — retrain with "
-                    "`dsir-train --suggest-keep-rate` or pass an "
-                    "explicit dsir_min_log_weight"
-                )
-    else:
-        from mini_feature_store_spark.operators.dsir import (
-            dsir_bucket_weights,
-        )
 
-        nb, mo = 8192, 2
-        wdf = dsir_bucket_weights(
-            spark.read.parquet(cfg.dsir_target_path),
-            pool,
-            text_col=cfg.text_col,
-            n_buckets=nb,
-            max_order=mo,
-        )
-    return wdf, nb, mo, thr
+def _fit_dsir_signal(
+    spark: SparkSession, cfg: CorpusCurationConfig, pool: DataFrame
+) -> tuple[DataFrame, int, int, float | None]:
+    """The ``_load_dsir_signal`` tuple from an in-line fit of
+    ``cfg.dsir_target_path`` against ``pool``."""
+    from mini_feature_store_spark.operators.dsir import dsir_bucket_weights
+
+    nb, mo = 8192, 2
+    wdf = dsir_bucket_weights(
+        spark.read.parquet(cfg.dsir_target_path),
+        pool,
+        text_col=cfg.text_col,
+        n_buckets=nb,
+        max_order=mo,
+    )
+    return wdf, nb, mo, cfg.dsir_min_log_weight
 
 
 def ensemble_admission(

@@ -1421,7 +1421,7 @@ def top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (the quarter filter pushes down; the rescan is one narrow
         # 3-column read). The production pipeline shape for repeated
         # consumption is persist-then-unpersist around materialization,
-        # as run_corpus_curate does.
+        # as run_corpus_curation does.
     )
     mx = srev.agg(F.max("units").alias("max_units"))
     return (
@@ -3328,8 +3328,9 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality gate → exact dedup → near-dup dedup → decontamination, each
     stage the already-tested operator, composed exactly as
     ``pipelines/corpus_curate.py:run_corpus_curation`` sequences them
-    (tests/test_corpus_curate.py pins the pipeline's funnel dict to this
-    query's rows, so the PIPELINE is transitively oracled too). Docs
+    (tests/test_pipelines.py::test_corpus_curate_funnel_matches_oracled_query
+    pins the pipeline's funnel dict to this query's rows, so the PIPELINE
+    is transitively oracled too). Docs
     from source 'src0' play the external benchmark (the
     ``doc_decontaminate`` convention); the corpus under curation is
     everything else.
@@ -3356,7 +3357,7 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     after_near_dedup = |deduped| − |drops|, after_decontamination =
     |deduped| − |drops| − |contaminated ∩ survivors|. r16: the flag
     frame is persisted (shared-subtree class — see module docstring
-    exception #1); the production pipeline (run_corpus_curate)
+    exception #1); the production pipeline (run_corpus_curation)
     persists around its eager counts the same way."""
     from mini_feature_store_spark.operators.dedup import ngram_jaccard_pairs
     from mini_feature_store_spark.operators.graph import dedup_clusters

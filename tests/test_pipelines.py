@@ -878,6 +878,33 @@ def test_analyze_large_domain_caps_values(spark, tmp_path):
     assert stats["columns"]["name"]["approx_ndv"] > 150
 
 
+def test_analyze_records_stats_on_the_version_it_read(
+    spark, tmp_path, monkeypatch
+):
+    """A commit that lands while analyze() aggregates must not inherit
+    its stats: they sit on the version analyze() read, and the newer
+    version (whose rows differ) carries none."""
+    path = str(tmp_path / "t")
+    VersionedTable(path).write(spark.createDataFrame([("a",)], "tag string"))
+    read = VersionedTable.read
+
+    def read_then_commit(self, spark, *args, **kwargs):
+        df = read(self, spark, *args, **kwargs)
+        monkeypatch.setattr(VersionedTable, "read", read)
+        VersionedTable(path).write(
+            spark.createDataFrame([("b",)], "tag string"), mode="append"
+        )
+        return df
+
+    monkeypatch.setattr(VersionedTable, "read", read_then_commit)
+    table = VersionedTable(path)
+    stats = table.analyze(spark)
+    assert stats["columns"]["tag"]["values"] == ["a"]
+    by_version = {c["version"]: c.get("stats") for c in table.versions()}
+    assert by_version == {0: stats, 1: None}
+    assert table.stats() is None
+
+
 def test_batch_inference_latest_at_cutoff(spark, tmp_path, events_path):
     """Reference README Example 2 (batch inference): each inference user gets
     its latest snapshot at or before as_of; unknown users keep a null-feature
