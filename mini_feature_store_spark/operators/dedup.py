@@ -34,7 +34,15 @@ from mini_feature_store_spark.functions import (
     spread,
     track_cache,
 )
-from mini_feature_store_spark.operators.text import _tokens, normalize
+from mini_feature_store_spark.operators.text import (
+    _doc_tokens,
+    _gram,
+    _gram_re,
+    _tokens,
+    _window_starts,
+    fingerprint,
+    normalize,
+)
 
 
 def exact_dedup(
@@ -45,7 +53,7 @@ def exact_dedup(
     Returns one row per distinct content: ``(keep_id, n_dupes, fingerprint)``.
     """
     return (
-        df.select(F.col(id_col), F.md5(normalize(F.col(text_col))).alias("fingerprint"))
+        df.select(F.col(id_col), fingerprint(F.col(text_col)).alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(
             F.min(id_col).alias("keep_id"),
@@ -69,9 +77,8 @@ def shingles(text, n: int = 3):
     """
     norm = normalize(text)
     toks = _tokens(norm)
-    gram = r"(?=((?:\S+ ){%d}\S+))(?:\S+ ?)" % (n - 1)
     return F.when(F.size(toks) < n, F.array(norm)).otherwise(
-        F.array_distinct(F.regexp_extract_all(norm, F.lit(gram), 1))
+        F.array_distinct(F.regexp_extract_all(norm, F.lit(_gram_re(n)), 1))
     )
 
 
@@ -359,7 +366,7 @@ def simhash(
         raise ValueError("packed-lane simhash supports bits=64 only")
     base = spread(df).select(
         F.col(id_col).alias("id"),
-        F.explode(_tokens(normalize(F.col(text_col)))).alias("tok"),
+        F.explode(_doc_tokens(F.col(text_col))).alias("tok"),
     )
     # Expressions are assembled as SQL strings parsed ONCE on the JVM:
     # building this ~380-node tree through the Column API costs hundreds of
@@ -680,31 +687,23 @@ def duplicate_spans(
 def _token_windows(
     df: DataFrame, k: int, text_col: str, id_col: str
 ) -> DataFrame:
-    """(id, pos, h) — every k-token window of every doc, 1-based start
-    positions, 8-byte xxhash64 keys over the joined window text. The one
-    projection every span-level operator shares (codegen sequence+slice
-    Generate, no UDF)."""
-    toks = _tokens(normalize(F.col(text_col)))
+    """(id, pos, h) — every k-token window of every doc (docs shorter
+    than k emit none), 1-based start positions, 8-byte xxhash64 keys
+    over the window's ``_gram`` string. The one projection every
+    span-level operator shares (codegen sequence+slice Generate, no
+    UDF)."""
+    toks = _doc_tokens(F.col(text_col))
     return (
         spread(df)
         .select(
             F.col(id_col).alias("id"),
             toks.alias("_toks"),
-            # docs shorter than k emit no windows: sequence(1, 0) would
-            # DESCEND ([1, 0]) and fabricate positions, so gate on size
-            F.explode(
-                F.when(
-                    F.size(toks) >= k,
-                    F.sequence(F.lit(1), F.size(toks) - (k - 1)),
-                ).otherwise(F.array().cast("array<int>"))
-            ).alias("pos"),
+            F.explode(_window_starts(toks, k)).alias("pos"),
         )
         .select(
             "id",
             "pos",
-            F.xxhash64(F.array_join(F.slice("_toks", F.col("pos"), k), " ")).alias(
-                "h"
-            ),
+            F.xxhash64(_gram(F.col("_toks"), F.col("pos"), k)).alias("h"),
         )
     )
 
@@ -832,7 +831,7 @@ def cut_duplicate_spans(
     toks = spread(df).select(
         F.col(id_col),
         F.coalesce(
-            _tokens(normalize(F.col(text_col))),
+            _doc_tokens(F.col(text_col)),
             F.array().cast("array<string>"),
         ).alias("_toks"),
     )
@@ -895,7 +894,7 @@ def duplicate_span_coverage(
         # NULL-text doc has zero tokens, not -1 — without the clamp it
         # would emit n_tokens=-1 (share still 0.0, but the count is a lie)
         F.greatest(
-            F.size(_tokens(normalize(F.col(text_col)))).cast("long"),
+            F.size(_doc_tokens(F.col(text_col))).cast("long"),
             F.lit(0).cast("long"),
         ).alias("n_tokens"),
     )

@@ -53,7 +53,11 @@ from mini_feature_store_spark.functions import (
     spread,
     track_cache,
 )
-from mini_feature_store_spark.operators.text import _tokens, normalize
+from mini_feature_store_spark.operators.text import (
+    _doc_tokens,
+    _grams_from,
+    _window_starts,
+)
 
 #: 2^32 — the md5-prefix digit space shared with the samplers.
 _HASH_SPACE = 4294967296.0
@@ -77,31 +81,23 @@ def _bucketed_grams(
     id_cols: tuple[str, ...] = (),
     with_sentinel: bool = False,
 ) -> DataFrame:
-    """One row per n-gram OCCURRENCE (k = 1..``max_order``, space-joined
-    over the normalized whitespace tokens), carrying ``id_cols`` and the
-    hashed ``bucket``. One scan, map-only.
+    """One row per n-gram OCCURRENCE (k = 1..``max_order``, the text
+    tier's token-window kernel in ``operators/text.py``), carrying
+    ``id_cols`` and the hashed ``bucket``. One scan, map-only.
 
     ``with_sentinel=True`` additionally emits exactly one NULL-bucket
-    row per input row (even gram-less ones) — the ``_stacked_gram_counts``
-    sentinel trick, so a downstream ``groupBy(id)`` covers EVERY document
-    without a corpus-keyed join back onto the id list (which would cost a
-    second scan and a second doc_id exchange at 100 TB).
-
-    (The positional explosion deliberately parallels
-    ``text.py:_stacked_gram_counts`` — that one counts every-order grams
-    with a token-total sentinel for the LM tier; this one carries id
-    columns, hashes to buckets, and its sentinel marks the DOCUMENT.
-    A change to the shared tokenize/window conventions must land in
-    both.)
+    row per input row (even gram-less ones), so a downstream
+    ``groupBy(id)`` covers EVERY document without a corpus-keyed join
+    back onto the id list (which would cost a second scan and a second
+    doc_id exchange at 100 TB).
 
     NULL text is treated as empty (the ``paragraph_dedup`` contract:
     degenerate docs keep their row, dropping them is a gate's decision).
     """
     t = F.coalesce(
-        _tokens(normalize(F.col(text_col))),
-        F.array().cast("array<string>"),
+        _doc_tokens(F.col(text_col)), F.array().cast("array<string>")
     )
-    lo = 0 if with_sentinel else 1
+    toks, i = F.col("_toks"), F.col("i")
     pos = (
         spread(df)
         .select(*id_cols, t.alias("_toks"))
@@ -109,27 +105,11 @@ def _bucketed_grams(
             *id_cols,
             "_toks",
             F.explode(
-                F.when(
-                    F.size("_toks") >= F.lit(1 if lo else 0),
-                    F.sequence(F.lit(lo), F.size("_toks")),
-                ).otherwise(F.array().cast("array<int>"))
+                _window_starts(toks, 1, sentinel=with_sentinel)
             ).alias("i"),
         )
     )
-    gram_arr = F.transform(
-        F.sequence(
-            F.lit(1),
-            F.least(
-                F.lit(max_order),
-                F.size("_toks") - F.col("i") + F.lit(1),
-            ),
-        ),
-        lambda k: F.array_join(F.slice("_toks", F.col("i"), k), " "),
-    )
-    if with_sentinel:
-        gram_arr = F.when(
-            F.col("i") == 0, F.array(F.lit(None).cast("string"))
-        ).otherwise(gram_arr)
+    gram_arr = _grams_from(toks, i, max_order, sentinel=with_sentinel)
     grams = pos.select(*id_cols, F.explode(gram_arr).alias("g"))
     return grams.select(*id_cols, _bucket(F.col("g"), n_buckets))
 
@@ -157,12 +137,11 @@ def dsir_bucket_weights(
     sums stay exact at the scale-4 output rounding.
 
     Everything here is bounded AND single-pass: both corpora stack into
-    ONE gram explosion with a target flag (the ``_stacked_gram_counts``
-    pattern), so one map-side-combined aggregate produces both count
-    columns (≤ B rows) — one corpus read instead of two; totals are
-    1-row aggregates over that bounded table (no second corpus scan),
-    and the result is B rows — broadcast by construction at any corpus
-    size.
+    ONE gram explosion with a target flag, so one map-side-combined
+    aggregate produces both count columns (≤ B rows) — one corpus read
+    instead of two; totals are 1-row aggregates over that bounded table
+    (no second corpus scan), and the result is B rows — broadcast by
+    construction at any corpus size.
     """
     both = target.select(
         F.lit(True).alias("_t"), F.col(text_col).alias(text_col)
@@ -532,26 +511,11 @@ def dsir_score_column(
     if n_buckets == 0:
         raise ValueError("dsir_score_column: weights must be non-empty")
     arr = F.lit([float(w) for w in weights])
-    toks = F.coalesce(
-        _tokens(normalize(col)), F.array().cast("array<string>")
-    )
-    # Spark's sequence(1, 0) infers step -1 and yields [1, 0] — guard
-    # the gram-less case explicitly (the _bucketed_grams discipline)
-    positions = F.when(
-        F.size(toks) >= 1, F.sequence(F.lit(1), F.size(toks))
-    ).otherwise(F.array().cast("array<int>"))
+    toks = F.coalesce(_doc_tokens(col), F.array().cast("array<string>"))
     grams = F.flatten(
         F.transform(
-            positions,
-            lambda i: F.transform(
-                F.sequence(
-                    F.lit(1),
-                    F.least(
-                        F.lit(max_order), F.size(toks) - i + F.lit(1)
-                    ),
-                ),
-                lambda k: F.array_join(F.slice(toks, i, k), " "),
-            ),
+            _window_starts(toks, 1),
+            lambda i: _grams_from(toks, i, max_order),
         )
     )
     bucket_ix = lambda g: (  # noqa: E731 — shared by both folds

@@ -64,13 +64,82 @@ def word_chunk_count(col: Column) -> Column:
 
 def normalize(col: Column) -> Column:
     """Canonical text form shared by fingerprinting and exact dedup:
-    lowercase, whitespace collapsed to single spaces, trimmed."""
-    return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
+    lowercase, whitespace collapsed to single spaces, trimmed. The
+    collapse runs first: Spark's ``trim`` strips only U+0020, so a
+    trailing newline or a leading tab must already be a space."""
+    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
 def fingerprint(col: Column) -> Column:
     """Deterministic document fingerprint: md5 of the normalized text."""
     return F.md5(normalize(col))
+
+
+# ── the token-window kernel ─────────────────────────────────────────────
+# Every n-gram operator of the text tier (the LM scorers, the DSIR/DoReMi
+# buckets, the span operators, chunking) takes its tokens, window starts
+# and gram strings from the functions below, so they all see the same
+# grams.
+
+
+def _doc_tokens(col: Column) -> Column:
+    """The document's tokens: whitespace tokens of the normalized text
+    (NULL text stays NULL)."""
+    return _tokens(normalize(col))
+
+
+def _window_starts(
+    toks: Column, n: int, *, step: int = 1, sentinel: bool = False
+) -> Column:
+    """1-based start positions of the width-``n`` windows of ``toks``
+    (every ``step``-th one): ``[1 .. size − n + 1]``, empty when the
+    document is shorter than ``n``. The guard is required: Spark's
+    ``sequence(1, 0)`` descends to ``[1, 0]``. ``sentinel=True`` starts
+    at 0 instead, so every document, even a token-less one, has exactly
+    one extra position 0 for ``_grams_from`` to turn into its NULL
+    sentinel gram."""
+    first = 0 if sentinel else 1
+    last = F.size(toks) if n == 1 else F.size(toks) - (n - 1)
+    bounds = [F.lit(first), last] + ([F.lit(step)] if step != 1 else [])
+    short = F.array(F.lit(0)) if sentinel else F.array()
+    return F.when(
+        F.size(toks) >= n - 1 + first, F.sequence(*bounds)
+    ).otherwise(short.cast("array<int>"))
+
+
+def _gram(toks: Column, start, width) -> Column:
+    """The gram string of ``width`` tokens from 1-based ``start``: the
+    tokens joined by single spaces. Tokens hold no whitespace, so the
+    string is injective and its token count recovers the width."""
+    return F.array_join(F.slice(toks, start, width), " ")
+
+
+def _grams_from(
+    toks: Column, start, max_order: int, *, sentinel: bool = False
+) -> Column:
+    """The grams of orders 1..``max_order`` that start at ``start``,
+    orders that run past the document's end left out. With
+    ``sentinel=True`` start position 0 yields one NULL gram instead."""
+    grams = F.transform(
+        F.sequence(
+            F.lit(1),
+            F.least(F.lit(max_order), F.size(toks) - start + F.lit(1)),
+        ),
+        lambda k: _gram(toks, start, k),
+    )
+    if sentinel:
+        return F.when(
+            start == 0, F.array(F.lit(None).cast("string"))
+        ).otherwise(grams)
+    return grams
+
+
+def _gram_re(n: int) -> str:
+    """The lookahead regex whose group 1 is each ``n``-token gram of a
+    normalized (single-spaced) text: the lookahead captures the gram at
+    a token boundary while the consumed part advances exactly one
+    token, so ``regexp_extract_all`` visits each token start once."""
+    return r"(?=((?:\S+ ){%d}\S+))(?:\S+ ?)" % (n - 1)
 
 
 def chunk_documents(
@@ -92,10 +161,10 @@ def chunk_documents(
     predecessor. Zero-token documents emit no chunks. Output per chunk:
     ``(id, chunk_id, chunk_start, chunk_len, chunk_text)``.
 
-    Plan shape: tokenize → ``sequence``/``filter``/``posexplode`` →
-    ``slice`` + ``array_join`` — one narrow Generate, zero shuffles, all
-    whole-stage codegen; the 1→N fan-out composes with any downstream
-    embedding UDF the way the video frame-sampler does.
+    Plan shape: tokenize → ``_window_starts``/``filter``/``posexplode``
+    → ``_gram`` — one narrow Generate, zero shuffles, all whole-stage
+    codegen; the 1→N fan-out composes with any downstream embedding UDF
+    the way the video frame-sampler does.
     """
     if chunk_tokens <= 0:
         raise ValueError(f"chunk_tokens must be positive, got {chunk_tokens}")
@@ -107,29 +176,24 @@ def chunk_documents(
     toks = _tokens(F.col(text_col))
     n = F.size(toks)
     starts = F.filter(
-        F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)), F.lit(step)),
-        lambda s: (s == 0) | (s + overlap < n),
+        _window_starts(toks, 1, step=step),
+        lambda s: (s == 1) | (s - 1 + overlap < n),
     )
-    return (
-        df.select(
-            F.col(id_col).alias("id"),
-            toks.alias("_toks"),
-            n.alias("_n"),
-            F.posexplode(starts).alias("chunk_id", "chunk_start"),
-        )
-        .where(F.col("_n") > 0)
-        .select(
-            "id",
-            F.col("chunk_id").cast("long"),
-            F.col("chunk_start").cast("long"),
-            F.least(F.lit(chunk_tokens), F.col("_n") - F.col("chunk_start"))
-            .cast("long")
-            .alias("chunk_len"),
-            F.array_join(
-                F.slice(F.col("_toks"), F.col("chunk_start") + 1, chunk_tokens),
-                " ",
-            ).alias("chunk_text"),
-        )
+    return df.select(
+        F.col(id_col).alias("id"),
+        toks.alias("_toks"),
+        n.alias("_n"),
+        F.posexplode(starts).alias("chunk_id", "_start"),
+    ).select(
+        "id",
+        F.col("chunk_id").cast("long"),
+        (F.col("_start") - 1).cast("long").alias("chunk_start"),
+        F.least(F.lit(chunk_tokens), F.col("_n") - F.col("_start") + 1)
+        .cast("long")
+        .alias("chunk_len"),
+        _gram(F.col("_toks"), F.col("_start"), chunk_tokens).alias(
+            "chunk_text"
+        ),
     )
 
 
@@ -264,9 +328,8 @@ def winnow_fingerprints(
 
     norm = normalize(F.col(text_col))
     toks = _tokens(norm)
-    gram_re = r"(?=((?:\S+ ){%d}\S+))(?:\S+ ?)" % (k - 1)
     grams = F.when(F.size(toks) < k, F.array(norm)).otherwise(
-        F.regexp_extract_all(norm, F.lit(gram_re), 1)
+        F.regexp_extract_all(norm, F.lit(_gram_re(k)), 1)
     )
     positioned = spread(df).select(
         F.col(id_col), F.posexplode(grams).alias("pos", "gram")
@@ -393,14 +456,13 @@ def tf_idf_top_terms(
 
 
 #: Shingle extraction WITHOUT dedup (occurrence counts matter for
-#: repetition scoring): same lookahead regex as ``dedup.shingles`` minus the
+#: repetition scoring): ``dedup.shingles``' regex minus the
 #: ``array_distinct``.
 def _gram_occurrences(col: Column, n: int = 3) -> Column:
     norm = normalize(col)
-    gram = r"(?=((?:\S+ ){%d}\S+))(?:\S+ ?)" % (n - 1)
     return F.when(
         F.length(F.trim(col)) == 0, F.array().cast("array<string>")
-    ).otherwise(F.regexp_extract_all(norm, F.lit(gram), 1))
+    ).otherwise(F.regexp_extract_all(norm, F.lit(_gram_re(n)), 1))
 
 
 def repetition_stats(
@@ -421,7 +483,7 @@ def repetition_stats(
     """
     toks = spread(df).select(
         F.col(id_col).alias("id"),
-        F.explode(_tokens(normalize(F.col(text_col)))).alias("tok"),
+        F.explode(_doc_tokens(F.col(text_col))).alias("tok"),
     )
     tok_counts = toks.groupBy("id", "tok").agg(F.count(F.lit(1)).alias("c"))
     tok_stats = tok_counts.groupBy("id").agg(
@@ -493,7 +555,7 @@ def gopher_quality_flags(
     from BOTH sides of a kept/rejected split.
     """
     t = F.coalesce(F.col(text_col), F.lit(""))
-    toks = _tokens(normalize(t))
+    toks = _doc_tokens(t)
     n_words = F.size(toks)
     nw = F.when(n_words > 0, n_words.cast("double"))
     mean_wl = round_half_up(
@@ -1379,6 +1441,32 @@ def _small_reference(train: DataFrame) -> bool:
     return collect_if_bounded(probe, BROADCAST_REF_MAX_DOCS) is not None
 
 
+def _lm_strategy(strategy: str, train: DataFrame, op: str) -> str:
+    """The LM scorers' one strategy check and ``auto`` dispatch:
+    ``position`` under a provably small reference (at most
+    ``BROADCAST_REF_MAX_DOCS`` documents — one bounded
+    ``collect_if_bounded`` job at plan build), ``type`` otherwise."""
+    if strategy not in ("auto", "position", "type"):
+        raise ValueError(f"unknown {op} strategy: {strategy!r}")
+    if strategy == "auto":
+        strategy = "position" if _small_reference(train) else "type"
+    return strategy
+
+
+def _reference_checked(size: Column, op: str) -> Column:
+    """``size`` (the reference's vocabulary or token total) when it is
+    positive, else an in-plan error: an EMPTY reference corpus would
+    make every smoothing denominator 0 and every score NULL. In-plan,
+    so laziness is preserved and the check costs nothing; a NULL size
+    fails the same way."""
+    return F.when(size > 0, size).otherwise(
+        F.expr(
+            f"raise_error('{op}: reference corpus is empty (empty"
+            " vocabulary) - nothing to train on')"
+        ).cast("long")
+    )
+
+
 def bigram_lm_score(
     train: DataFrame,
     df: DataFrame,
@@ -1408,7 +1496,9 @@ def bigram_lm_score(
     ``n_oov_bigrams`` counts bigrams absent from the training table.
 
     Two scoring strategies producing the IDENTICAL result (pinned by
-    test), dispatched exactly like ``ngram_lm_score``:
+    test), chosen by the same ``_lm_strategy`` dispatch as
+    ``ngram_lm_score``; both explode bigrams with ``_exploded_ngrams``
+    and end in ``_lm_doc_aggregate``:
 
     - ``"position"`` — the two count tables + 1-row vocabulary join
       UNHINTED onto the score-side bigram explosion; when the reference
@@ -1422,42 +1512,16 @@ def bigram_lm_score(
     """
     if alpha <= 0:
         raise ValueError(f"alpha must be positive, got {alpha}")
-    if strategy not in ("auto", "position", "type"):
-        raise ValueError(f"unknown bigram_lm_score strategy: {strategy!r}")
-    if strategy == "auto":
-        strategy = "position" if _small_reference(train) else "type"
-
-    def _bigrams(frame: DataFrame) -> DataFrame:
-        t = _tokens(normalize(F.col(text_col)))
-        return (
-            spread(frame)
-            .select(
-                F.col(id_col).alias("id"),
-                t.alias("_toks"),
-                F.explode(
-                    F.when(
-                        F.size(t) >= 2, F.sequence(F.lit(1), F.size(t) - 1)
-                    ).otherwise(F.array().cast("array<int>"))
-                ).alias("i"),
-            )
-            .select(
-                "id",
-                F.element_at("_toks", F.col("i")).alias("w1"),
-                F.element_at("_toks", F.col("i") + 1).alias("w2"),
-            )
-        )
-
-    tb = _bigrams(train)
+    strategy = _lm_strategy(strategy, train, "bigram_lm_score")
+    tb = _exploded_ngrams(train, 2, text_col, id_col)
     cb = tb.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("_cb"))
     cu = tb.groupBy("w1").agg(F.count(F.lit(1)).alias("_cu"))
     vocab = (
         spread(train)
-        .select(
-            F.explode(_tokens(normalize(F.col(text_col)))).alias("w")
-        )
+        .select(F.explode(_doc_tokens(F.col(text_col))).alias("w"))
         .agg(F.count_distinct("w").alias("_v"))
     )
-    pos = _bigrams(df)
+    pos = _exploded_ngrams(df, 2, text_col, id_col)
     score_side = (
         pos.select("w1", "w2").distinct() if strategy == "type" else pos
     )
@@ -1466,15 +1530,7 @@ def bigram_lm_score(
         .join(cu, ["w1"], "left")
         .crossJoin(F.broadcast(vocab))
     )
-    # an EMPTY reference corpus would make the smoothing denominator
-    # alpha * 0 = 0 and every score NULL — fail loudly instead (in-plan,
-    # so laziness is preserved and the check costs nothing)
-    v_checked = F.when(F.col("_v") > 0, F.col("_v")).otherwise(
-        F.expr(
-            "raise_error('bigram_lm_score: reference corpus has an empty"
-            " vocabulary - nothing to train on')"
-        ).cast("long")
-    )
+    v_checked = _reference_checked(F.col("_v"), "bigram_lm_score")
     p = (F.coalesce(F.col("_cb"), F.lit(0)) + F.lit(alpha)) / (
         F.coalesce(F.col("_cu"), F.lit(0)) + F.lit(alpha) * v_checked
     )
@@ -1490,19 +1546,11 @@ def bigram_lm_score(
     else:
         scored = scored.withColumn("_oov", F.col("_cb").isNull())
         nll = -F.log(p)
-    return (
-        scored.groupBy("id")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.count(F.when(F.col("_oov"), 1)).alias("n_oov_bigrams"),
-            round_half_up(F.avg(nll), 4).alias("avg_nll"),
-        )
-        .select(
-            F.col("id").alias(id_col),
-            F.col("n_bigrams").cast("long"),
-            F.col("n_oov_bigrams").cast("long"),
-            "avg_nll",
-        )
+    return _lm_doc_aggregate(scored, id_col, nll).select(
+        id_col,
+        F.col("n_ngrams").alias("n_bigrams"),
+        F.col("n_oov_ngrams").alias("n_oov_bigrams"),
+        "avg_nll",
     )
 
 
@@ -1510,9 +1558,8 @@ def _exploded_ngrams(
     frame: DataFrame, n: int, text_col: str, id_col: str
 ) -> DataFrame:
     """``(id, w1..wn)`` — one row per length-``n`` token window of each
-    document (normalized whitespace tokens; docs with < n tokens emit
-    no rows)."""
-    t = _tokens(normalize(F.col(text_col)))
+    document (docs with < n tokens emit no rows)."""
+    t = _doc_tokens(F.col(text_col))
     cols = [
         F.element_at("_toks", F.col("i") + k).alias(f"w{k + 1}")
         for k in range(n)
@@ -1522,12 +1569,7 @@ def _exploded_ngrams(
         .select(
             F.col(id_col).alias("id"),
             t.alias("_toks"),
-            F.explode(
-                F.when(
-                    F.size(t) >= n,
-                    F.sequence(F.lit(1), F.size(t) - (n - 1)),
-                ).otherwise(F.array().cast("array<int>"))
-            ).alias("i"),
+            F.explode(_window_starts(t, n)).alias("i"),
         )
         .select("id", *cols)
     )
@@ -1537,27 +1579,20 @@ def _stacked_gram_counts(
     train: DataFrame, order: int, text_col: str
 ) -> DataFrame:
     """``(g, _c)`` — exact occurrence counts of EVERY k-gram of the
-    reference corpus for k = 1..``order``, keyed by the space-joined
-    gram string (tokens are whitespace-split so the key is injective
-    and its token count recovers k), plus one sentinel ``''`` row whose
-    count is the corpus token total N.
+    reference corpus for k = 1..``order``, keyed by the ``_gram``
+    string, plus one sentinel ``''`` row whose count is the corpus token
+    total N.
 
     One scan + one map-side-combined hash aggregate replaces ``order``
     separate train-side explosions: each token position emits its
     sentinel and the grams of every length that still fits, so the
     union over positions is exactly the per-order window counts."""
-    t = _tokens(normalize(F.col(text_col)))
     pos = (
         spread(train)
-        .select(t.alias("_toks"))
+        .select(_doc_tokens(F.col(text_col)).alias("_toks"))
         .select(
             "_toks",
-            F.explode(
-                F.when(
-                    F.size("_toks") >= 1,
-                    F.sequence(F.lit(1), F.size("_toks")),
-                ).otherwise(F.array().cast("array<int>"))
-            ).alias("i"),
+            F.explode(_window_starts(F.col("_toks"), 1)).alias("i"),
         )
     )
     grams = pos.select(
@@ -1565,18 +1600,7 @@ def _stacked_gram_counts(
             F.concat(
                 # one sentinel per token position ⇒ C('') = N
                 F.array(F.lit("")),
-                F.transform(
-                    F.sequence(
-                        F.lit(1),
-                        F.least(
-                            F.lit(order),
-                            F.size("_toks") - F.col("i") + F.lit(1),
-                        ),
-                    ),
-                    lambda k: F.array_join(
-                        F.slice("_toks", F.col("i"), k), " "
-                    ),
-                ),
+                _grams_from(F.col("_toks"), F.col("i"), order),
             )
         ).alias("g")
     )
@@ -1612,8 +1636,9 @@ def _backoff_case(order: int, backoff: float, n_checked: Column) -> Column:
 
 def _lm_doc_aggregate(scored: DataFrame, id_col: str, nll):
     """One row per doc from per-position rows carrying the ``_oov``
-    marker and the score/nll expression — the shared tail of both
-    strategies."""
+    marker and the score/nll expression — the shared tail of every LM
+    scorer and strategy (``bigram_lm_score`` and ``trigram_lm_score``
+    rename its ``n_ngrams``/``n_oov_ngrams``)."""
     return (
         scored.groupBy("id")
         .agg(
@@ -1656,7 +1681,8 @@ def ngram_lm_score(
     FULL n-gram is unseen (positions that took any backoff).
 
     Two scoring strategies producing the IDENTICAL result (pinned by
-    test), dispatched like ``bpe_encode``'s fold→replay:
+    test), chosen by ``_lm_strategy`` (the dispatch ``bigram_lm_score``
+    shares):
 
     - ``"position"`` — ``order`` + 1 count aggregates off the reference
       joined UNHINTED onto the per-position n-gram explosion. When the
@@ -1685,11 +1711,7 @@ def ngram_lm_score(
         raise ValueError(f"order must be at least 2, got {order}")
     if not 0 < backoff < 1:
         raise ValueError(f"backoff must be in (0, 1), got {backoff}")
-    if strategy not in ("auto", "position", "type"):
-        raise ValueError(f"unknown ngram_lm_score strategy: {strategy!r}")
-    if strategy == "auto":
-        strategy = "position" if _small_reference(train) else "type"
-    if strategy == "position":
+    if _lm_strategy(strategy, train, "ngram_lm_score") == "position":
         return _ngram_lm_positions(
             train, df, order, backoff, text_col, id_col
         )
@@ -1713,7 +1735,7 @@ def _ngram_lm_positions(
     }
     total = (
         spread(train)
-        .select(F.explode(_tokens(normalize(F.col(text_col)))).alias("w"))
+        .select(F.explode(_doc_tokens(F.col(text_col))).alias("w"))
         .agg(F.count(F.lit(1)).alias("_n"))
     )
 
@@ -1739,12 +1761,7 @@ def _ngram_lm_positions(
         scored = scored.join(tbl, ctx, "left")
     scored = scored.crossJoin(F.broadcast(total))
 
-    n_checked = F.when(F.col("_n") > 0, F.col("_n")).otherwise(
-        F.expr(
-            "raise_error('ngram_lm_score: reference corpus is empty"
-            " - nothing to train on')"
-        ).cast("long")
-    )
+    n_checked = _reference_checked(F.col("_n"), "ngram_lm_score")
     s = _backoff_case(order, backoff, n_checked)
     scored = scored.withColumn("_oov", F.col(f"_c{order}").isNull())
     return _lm_doc_aggregate(scored, id_col, -F.log(s))
@@ -1787,7 +1804,10 @@ def _ngram_lm_types(
 
     wcols = [f"w{j + 1}" for j in range(order)]
     pos = _exploded_ngrams(df, order, text_col, id_col)
-    key = F.concat_ws(" ", *wcols)
+    # every key is a ``_gram`` over the position's window, the string
+    # the stacked count table is keyed by
+    win = F.array(*wcols)
+    key = _gram(win, 1, order)
 
     # one lookup slot per count the backoff CASE consumes: numerator
     # c_k = the k-gram ENDING at the position (suffix w_{order-k+1} ..
@@ -1795,11 +1815,9 @@ def _ngram_lm_types(
     # w_{order-1}), and the sentinel '' row carrying N
     slots: list[tuple[str, Column]] = []
     for k in range(1, order + 1):
-        suffix = [f"w{order - k + j}" for j in range(1, k + 1)]
-        slots.append((f"c{k}", F.concat_ws(" ", *suffix)))
+        slots.append((f"c{k}", _gram(win, order - k + 1, k)))
     for k in range(2, order + 1):
-        ctx = [f"w{order - k + j}" for j in range(1, k)]
-        slots.append((f"x{k}", F.concat_ws(" ", *ctx)))
+        slots.append((f"x{k}", _gram(win, order - k + 1, k - 1)))
     slots.append(("n", F.lit("")))
 
     lookups = (
@@ -1837,15 +1855,8 @@ def _ngram_lm_types(
     )
 
     # empty reference ⇒ the stacked table has no sentinel row and _n is
-    # NULL on every type: fail loudly in-plan (laziness preserved)
-    n_checked = F.when(
-        F.col("_n").isNotNull() & (F.col("_n") > 0), F.col("_n")
-    ).otherwise(
-        F.expr(
-            "raise_error('ngram_lm_score: reference corpus is empty"
-            " - nothing to train on')"
-        ).cast("long")
-    )
+    # NULL on every type
+    n_checked = _reference_checked(F.col("_n"), "ngram_lm_score")
     s = _backoff_case(order, backoff, n_checked)
     scored_types = typed.select(
         "_gh",

@@ -1654,17 +1654,24 @@ def customer_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ── training-data pipeline: text analysis (operators/text.py) ───────────────
 
-#: DuckDB mirror of operators/text.py:_tokens(normalize(text)). The CASE
-#: arm pins the one latent divergence (r12 ADVICE): DuckDB's
+def _norm_sql(col: str = "text") -> str:
+    """DuckDB mirror of operators/text.py:normalize — lowercase, collapse
+    whitespace runs to one space, THEN trim (DuckDB's ``trim`` strips only
+    spaces too, so a trailing newline or a leading tab must already be a
+    space when it runs)."""
+    return f"trim(regexp_replace(lower({col}), '\\s+', ' ', 'g'))"
+
+
+#: DuckDB mirror of operators/text.py:_doc_tokens(text). The CASE arm
+#: pins the one latent divergence (r12 ADVICE): DuckDB's
 #: regexp_split_to_array('') yields [''] (one splittable gram) where
 #: Spark's _tokens yields [] — without it an empty/whitespace-only doc
 #: would score n_features = 1 in the DSIR/Gopher oracles vs 0 in Spark.
-#: NULL text stays NULL on both engines (trim(NULL) = '' is NULL → ELSE
-#: → split(NULL) = NULL), matching Spark's NULL propagation.
+#: NULL text stays NULL on both engines (NULL = '' is NULL → ELSE →
+#: split(NULL) = NULL), matching Spark's NULL propagation.
 _TOKS_SQL = (
-    "(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) "
-    "ELSE regexp_split_to_array("
-    "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') END)"
+    f"(CASE WHEN {_norm_sql()} = '' THEN CAST([] AS VARCHAR[]) "
+    f"ELSE regexp_split_to_array({_norm_sql()}, ' ') END)"
 )
 
 
@@ -1688,7 +1695,7 @@ SELECT doc_id,
   FLOOR(((nc - no_upper) * 1.0 / nc) * 10000 + 0.5) / 10000 AS upper_ratio,
   FLOOR((len(list_filter(toks, x -> lower(x) IN ('the','a','of','and','to')))
         * 1.0 / len(toks)) * 10000 + 0.5) / 10000 AS stopword_ratio,
-  md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint
+  md5({_norm_sql()}) AS fingerprint
 FROM t
 """,
 )
@@ -2078,8 +2085,8 @@ def doc_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "dedup_exact_props",
-    """
-SELECT md5(regexp_replace(lower(trim(props)), '\\s+', ' ', 'g')) AS fingerprint,
+    f"""
+SELECT md5({_norm_sql("props")}) AS fingerprint,
        MIN(event_id) AS keep_id,
        COUNT(*) AS n_dupes
 FROM events
@@ -2485,9 +2492,9 @@ def doc_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SHINGLES5_SQL = """
+_SHINGLES5_SQL = f"""
 d5 AS (SELECT doc_id, source,
-       regexp_split_to_array(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS toks
+       regexp_split_to_array({_norm_sql()}, ' ') AS toks
        FROM documents),
 sh5 AS (
   SELECT doc_id, source,
@@ -2555,9 +2562,7 @@ WITH sp AS (
 ),
 d5 AS (
   SELECT d.doc_id, s.split,
-         regexp_split_to_array(
-           regexp_replace(lower(trim(d.text)), '\\s+', ' ', 'g'), ' ')
-           AS toks
+         regexp_split_to_array({_norm_sql("d.text")}, ' ') AS toks
   FROM documents d JOIN sp s USING (doc_id)
 ),
 sh5 AS (
@@ -3244,7 +3249,7 @@ admitted AS (
 deduped AS (
   SELECT MIN(doc_id) AS doc_id
   FROM corpus SEMI JOIN admitted USING (doc_id)
-  GROUP BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
+  GROUP BY md5({_norm_sql()})
 ),
 -- stage 3: near-dup dedup over the DEDUPED set (3-gram Jaccard >= 0.5,
 -- shingle-frequency cap 1000 recomputed on this subset, connected
@@ -7103,7 +7108,7 @@ admitted AS (
 _FUNNEL_DEDUP_TAIL_SQL = """deduped AS (
   SELECT MIN(doc_id) AS doc_id
   FROM corpus SEMI JOIN lm_admitted USING (doc_id)
-  GROUP BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
+  GROUP BY md5({norm})
 ),
 ndocs AS (
   SELECT doc_id, {toks} AS toks
@@ -7148,7 +7153,7 @@ UNION ALL SELECT 1, 'after_quality', COUNT(*) FROM admitted
 UNION ALL SELECT 2, 'after_lm_filter', COUNT(*) FROM lm_admitted
 UNION ALL SELECT 3, 'after_exact_dedup', COUNT(*) FROM deduped
 UNION ALL SELECT 4, 'after_near_dedup', COUNT(*) FROM survivors
-""".replace("{toks}", _TOKS_SQL)
+""".replace("{toks}", _TOKS_SQL).replace("{norm}", _norm_sql())
 
 
 @_q(
@@ -9927,11 +9932,10 @@ def doc_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return classifier_eval(scored.join(labels, "doc_id"))
 
 
-_CLF_PL_SQL = """
+_CLF_PL_SQL = f"""
 WITH t AS (
   SELECT doc_id, text,
-         regexp_split_to_array(regexp_replace(lower(trim(text)),
-                               '\\s+', ' ', 'g'), ' ') AS toks,
+         regexp_split_to_array({_norm_sql()}, ' ') AS toks,
          length(text) AS nc,
          length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS no_punct,
          length(regexp_replace(text, '[A-Z]', '', 'g')) AS no_upper

@@ -48,8 +48,15 @@ def curation_corpus(spark, root: str) -> dict[str, str]:
     2-3, 32-35 share a verbatim license blurb, 36-37 quote the benchmark
     and 38-39 fail the quality gate. Returns the paths of the corpus
     (``docs``), the benchmark (``bench``), an LM reference corpus
-    (``lm_ref``) and a DSIR target corpus (``dsir_target``).
+    (``lm_ref``), a DSIR target corpus (``dsir_target``) and a quality
+    classifier artifact holding the default weights (``clf``).
     """
+    from mini_feature_store_spark.operators.text import (
+        QUALITY_CLF_BIAS,
+        QUALITY_CLF_WEIGHTS,
+        save_quality_classifier,
+    )
+
     rng = random.Random(7)
     rows = [(i, _prose(rng, 4), "en") for i in range(22)]
     rows += [
@@ -77,6 +84,10 @@ def curation_corpus(spark, root: str) -> dict[str, str]:
         spark.createDataFrame(
             [(i, _prose(ref, 3)) for i in range(12)], "doc_id long, text string"
         ).write.parquet(paths[key])
+    paths["clf"] = f"{root}/clf"
+    save_quality_classifier(
+        {"weights": QUALITY_CLF_WEIGHTS, "bias": QUALITY_CLF_BIAS}, paths["clf"]
+    )
     return paths
 
 
@@ -99,12 +110,16 @@ CURATION_CONFIGS = {
         "ensemble_cap_per_domain": 2,
         "ensemble_cap_url_col": "url",
     },
+    "classifier+best_quality": lambda p: {
+        "quality_model_dir": p["clf"], "dedup_keep_best_quality": True
+    },
 }
 
 
 #: Spark jobs of one run of each configuration on ``curation_corpus``
 #: (local[4], 4 shuffle partitions). Each stage's count job fills its
-#: cache, so neither the next stage nor the export re-runs a stage.
+#: cache, so neither the next stage nor the export re-runs a stage, and
+#: a run opens its classifier artifact once, however many stages use it.
 JOB_CEILINGS = {
     "plain": 26,
     "decontamination": 36,
@@ -113,6 +128,7 @@ JOB_CEILINGS = {
     "span_cut": 35,
     "coverage_drop": 35,
     "ensemble": 64,
+    "classifier+best_quality": 36,
 }
 
 _SOURCE = (
@@ -176,9 +192,12 @@ def test_curation_job_ceiling_and_no_cache_left(spark, corpus, tmp_path, name):
 
 @pytest.fixture(scope="module")
 def bad_artifacts(spark, corpus, tmp_path_factory) -> dict[str, str]:
-    """A dsir-train artifact without a calibrated threshold and an empty
-    doremi-weights artifact."""
+    """A dsir-train artifact without a calibrated threshold, an empty
+    doremi-weights artifact, a tokenizer directory holding neither
+    tokenizer table and a classifier artifact whose feature set no
+    longer matches the scorer's."""
     from mini_feature_store_spark import cli
+    from mini_feature_store_spark.operators.text import save_quality_classifier
 
     root = tmp_path_factory.mktemp("artifacts")
     dsir = str(root / "dsir")
@@ -191,7 +210,28 @@ def bad_artifacts(spark, corpus, tmp_path_factory) -> dict[str, str]:
     spark.createDataFrame([], "domain string, weight double").write.parquet(
         mix + "/weights.parquet"
     )
-    return {"dsir": dsir, "mixture": mix}
+    tok = root / "tokenizer"
+    tok.mkdir()
+    clf = str(root / "clf")
+    save_quality_classifier({"weights": {"n_words": 0.5}, "bias": 0.1}, clf)
+    return {"dsir": dsir, "mixture": mix, "tokenizer": str(tok), "clf": clf}
+
+
+def _open_alone(spark, name: str, a: dict[str, str]) -> None:
+    """Open the bad artifact of ``_ARTIFACT_ERRORS[name]`` the way a
+    caller would without the pipeline."""
+    from mini_feature_store_spark.operators.dsir import load_dsir_artifact
+    from mini_feature_store_spark.operators.text import load_quality_classifier
+
+    if name == "uncalibrated_dsir":
+        load_dsir_artifact(spark, a["dsir"])
+    elif name == "empty_mixture_weights":
+        spark.read.parquet(a["mixture"] + "/weights.parquet").collect()
+    elif name == "stale_classifier":
+        with pytest.raises(ValueError):
+            load_quality_classifier(spark, a["clf"])
+    else:  # a directory listing, no job
+        assert not any(Path(a["tokenizer"]).iterdir())
 
 
 _ARTIFACT_ERRORS = {
@@ -203,6 +243,14 @@ _ARTIFACT_ERRORS = {
         lambda a: {"mixture_strata_col": "lang",
                    "mixture_weights_dir": a["mixture"]},
         "empty mixture-weights artifact",
+    ),
+    "missing_tokenizer": (
+        lambda a: {"pack_max_tokens": 64, "pack_tokenizer_dir": a["tokenizer"]},
+        "holds neither merges.parquet nor pieces.parquet",
+    ),
+    "stale_classifier": (
+        lambda a: {"quality_model_dir": a["clf"]},
+        "does not match QUALITY_CLF_FEATURES",
     ),
 }
 
@@ -227,9 +275,7 @@ def test_artifact_errors_raise_before_the_first_stage_job(
 ):
     """The input path does not exist, so the first stage job would fail
     with a different error; the run spends no more jobs than opening the
-    artifact alone does."""
-    from mini_feature_store_spark.operators.dsir import load_dsir_artifact
-
+    artifact alone does, and none when opening it needs none."""
     kw, match = _ARTIFACT_ERRORS[name]
     with _job_group(spark, f"bad-artifact-{name}") as jobs, pytest.raises(
         ValueError, match=match
@@ -237,13 +283,9 @@ def test_artifact_errors_raise_before_the_first_stage_job(
         _curate(spark, str(tmp_path / "missing"), str(tmp_path / "out"),
                 **kw(bad_artifacts))
     with _job_group(spark, f"open-artifact-{name}") as alone:
-        if name == "uncalibrated_dsir":
-            load_dsir_artifact(spark, bad_artifacts["dsir"])
-        else:
-            spark.read.parquet(
-                bad_artifacts["mixture"] + "/weights.parquet"
-            ).collect()
-    assert 0 < len(jobs) <= len(alone)
+        _open_alone(spark, name, bad_artifacts)
+    assert len(jobs) <= len(alone)
+    assert bool(jobs) == bool(alone)
 
 
 def test_failed_runs_leave_no_cache(spark, corpus, bad_artifacts, tmp_path,
