@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from mini_feature_store_spark.functions import collect_if_bounded, spread
 from mini_feature_store_spark.operators.similarity import (
+    _block_pair_join,
     _np_round_half_up,
     with_vec_norm,
 )
@@ -357,97 +358,25 @@ def cluster_cosine_pairs(
     The point of clustering first: the GEMM block join is keyed on
     ``(cluster, sub_block)``, so cross-cluster pairs never materialize —
     total work drops from O(n²·d) to O(Σ nᵢ²·d) over cluster sizes nᵢ.
-    Within a cluster the same flat-block layout as
-    ``similarity.cosine_pairs`` applies: ids + one flattened vector array
-    per block, one numpy matmul per block pair. ``sub_blocks`` bounds a
-    block to (cluster size / sub_blocks) vectors so a hot cluster cannot
-    exceed executor memory.
+    Within a cluster, blocks are verified by the pair-join kernel of
+    ``similarity.cosine_pairs`` (``_block_pair_join``), so a same-cluster
+    pair is emitted exactly when ``cosine_pairs`` emits it: the cosine
+    rounded half-up to 4 places is ≥ threshold, and zero-norm vectors
+    never pair. ``sub_blocks`` bounds a block to (cluster size /
+    sub_blocks) vectors so a hot cluster cannot exceed executor memory.
 
     Output: (id_a, id_b, cosine).
     """
-    base = (
+    rows = (
         with_vec_norm(vectors, vec_col, id_col)
         .join(assignments.select(F.col("vec_id").alias("id"), "cluster"), "id")
         .select(
             "cluster",
             F.pmod(F.xxhash64(F.col("id")), F.lit(sub_blocks)).alias("sb"),
-            F.struct(
-                F.col("id").cast("long").alias("id"),
-                F.transform(
-                    "v", lambda x: x / F.greatest(F.col("nrm"), F.lit(1e-30))
-                ).alias("u"),
-            ).alias("item"),
+            F.struct(F.col("id").cast("long").alias("id"), "v").alias("item"),
         )
     )
-    blocks = (
-        base.groupBy("cluster", "sb")
-        .agg(F.sort_array(F.collect_list("item")).alias("items"))
-        .select(
-            "cluster",
-            "sb",
-            F.expr("transform(items, x -> x.id)").alias("ids"),
-            F.expr("flatten(transform(items, x -> x.u))").alias("flat"),
-            F.expr("size(items[0].u)").alias("dim"),
-        )
-    )
-    a = blocks.select(
-        F.col("cluster").alias("a_cl"),
-        F.col("sb").alias("a_sb"),
-        F.col("ids").alias("a_ids"),
-        F.col("flat").alias("a_flat"),
-        "dim",
-    )
-    b = blocks.select(
-        F.col("cluster").alias("b_cl"),
-        F.col("sb").alias("b_sb"),
-        F.col("ids").alias("b_ids"),
-        F.col("flat").alias("b_flat"),
-    )
-    pairs = a.join(
-        b, (F.col("a_cl") == F.col("b_cl")) & (F.col("a_sb") <= F.col("b_sb"))
-    )
-
-    def gemm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_a, out_b, out_c = [], [], []
-            for a_sb, a_ids, a_flat, dim, b_sb, b_ids, b_flat in zip(
-                pdf["a_sb"],
-                pdf["a_ids"],
-                pdf["a_flat"],
-                pdf["dim"],
-                pdf["b_sb"],
-                pdf["b_ids"],
-                pdf["b_flat"],
-            ):
-                am = np.asarray(a_flat, dtype=np.float64).reshape(-1, dim)
-                bm = np.asarray(b_flat, dtype=np.float64).reshape(-1, dim)
-                sims = am @ bm.T
-                ai = np.asarray(a_ids, dtype=np.int64)
-                bi = np.asarray(b_ids, dtype=np.int64)
-                ii, jj = np.nonzero(sims >= threshold)
-                if a_sb == b_sb:
-                    keep = ai[ii] < bi[jj]
-                else:
-                    keep = ai[ii] != bi[jj]
-                ii, jj = ii[keep], jj[keep]
-                x, y = ai[ii], bi[jj]
-                lo, hi = np.minimum(x, y), np.maximum(x, y)
-                out_a.append(lo)
-                out_b.append(hi)
-                out_c.append(sims[ii, jj])
-            if out_a:
-                yield pd.DataFrame(
-                    {
-                        "id_a": np.concatenate(out_a),
-                        "id_b": np.concatenate(out_b),
-                        "cosine": _np_round_half_up(np.concatenate(out_c)),
-                    }
-                )
-
-    # Each unordered pair appears exactly once: ids land in exactly one
-    # (cluster, sub_block), block pairs join once under a_sb <= b_sb, and
-    # the diagonal (a_sb == b_sb) keeps only id_a < id_b.
-    return pairs.mapInPandas(gemm, "id_a long, id_b long, cosine double")
+    return _block_pair_join(rows, threshold, "sb", within=("cluster",))
 
 
 def semantic_dedup(

@@ -1,10 +1,20 @@
 """Embedding similarity search (prompt north star; no reference analog).
 
-Pair miners (all pairs with cosine ≥ threshold):
+Pair miners (all pairs with cosine ≥ threshold, output (id_a, id_b,
+cosine) with id_a < id_b):
 
-- ``cosine_pairs``            exact block-GEMM all-pairs (verification
-  baseline for modest corpora).
+- ``cosine_pairs``            exact block-GEMM all-pairs over hash blocks
+  (verification baseline for modest corpora).
 - ``cosine_pairs_lsh``        LSH-bucketed GEMM: the scale path.
+- ``clustering.cluster_cosine_pairs`` the same within k-means clusters.
+
+They differ only in candidate blocking. Verification is one pair-join
+kernel: ``_flat_block`` (a block as ids + one flattened vector array),
+``_score_blocks`` (one thresholded GEMM per pair of blocks) and
+``_block_pair_join`` (blocks of a group meet in pairs; one
+``mapInPandas`` body verifies them).
+Every miner therefore thresholds the cosine rounded half-up to 4 places,
+as the DuckDB oracles do, and never pairs a zero-norm vector.
 
 Top-k search, output (query_id, neighbor_id, cosine, rank) ordered by
 (cosine desc, neighbor_id asc), self and degenerate pairs excluded:
@@ -46,7 +56,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mini_feature_store_spark.functions import round_half_up, spread
@@ -206,6 +216,127 @@ def cosine_topk_bruteforce(
     )
 
 
+# ── cosine pair-join kernel ─────────────────────────────────────────────────
+# The threshold pair miners (``cosine_pairs``, ``cosine_pairs_lsh`` and
+# ``clustering.cluster_cosine_pairs``) differ only in how they block
+# candidates: hash blocks, LSH buckets, k-means clusters. Verification is
+# below, once: one flat-block layout and one thresholded GEMM per pair of
+# blocks, under the oracle's rounding and zero-norm rules.
+
+_PAIR_SCHEMA = "id_a long, id_b long, cosine double"
+
+
+def _flat_block(items: str, prefix: str = "") -> list[Column]:
+    """``{prefix}ids``, ``{prefix}flat`` and ``{prefix}dim`` of one block
+    ``items: array<struct<id: long, v: array<double>>>``: the ids, every
+    ``v`` in item order as ONE flattened array, and the vector width.
+
+    Blocks travel as flat columns so the Arrow→numpy conversion in the
+    worker is a contiguous buffer copy + reshape; an array<struct<id,v>>
+    column forces a per-item dict conversion in Python (measured as the
+    dominant cost of ``cosine_pairs``, ~2s of a 3s query). ``dim`` reads
+    the first item, so it needs a non-empty block."""
+    items = F.col(items)
+    return [
+        F.transform(items, lambda x: x["id"]).alias(f"{prefix}ids"),
+        F.flatten(F.transform(items, lambda x: x["v"])).alias(f"{prefix}flat"),
+        F.size(items[0]["v"]).alias(f"{prefix}dim"),
+    ]
+
+
+def _score_blocks(ids_a, flat_a, ids_b, flat_b, dim, threshold, diagonal):
+    """Pairs of block a × block b with cosine ≥ ``threshold``, as
+    ``(id_min, id_max, cosine)`` arrays — the one verification step of
+    every pair miner.
+
+    The cosine is rounded half-up to 4 places BEFORE the threshold, as
+    the DuckDB oracles do (``FLOOR(cos·10⁴+0.5)/10⁴ >= t``), and a
+    degenerate (zero-norm) pair never emits, whatever the threshold.
+    ``diagonal`` marks a block meeting itself: it keeps one orientation
+    (``id_a < id_b``); disjoint blocks meet once, and a pair's
+    orientation is (min, max) whichever block holds which id."""
+    ia = np.asarray(ids_a, dtype=np.int64)
+    ib = np.asarray(ids_b, dtype=np.int64)
+    ma = np.asarray(flat_a, dtype=np.float64).reshape(len(ia), dim)
+    mb = np.asarray(flat_b, dtype=np.float64).reshape(len(ib), dim)
+    den = np.outer(np.linalg.norm(ma, axis=1), np.linalg.norm(mb, axis=1))
+    cos = _np_round_half_up(_np_safe_div(ma @ mb.T, den))
+    mask = (cos >= threshold) & (den > 0)
+    if diagonal:
+        mask &= ia[:, None] < ib[None, :]
+    ii, jj = np.nonzero(mask)
+    x, y = ia[ii], ib[jj]
+    return np.minimum(x, y), np.maximum(x, y), cos[ii, jj]
+
+
+def _pair_frames(parts):
+    """The ``_score_blocks`` results of one Arrow batch as at most one
+    output frame."""
+    if sum(len(p[0]) for p in parts):
+        yield pd.DataFrame(
+            {
+                name: np.concatenate([p[i] for p in parts])
+                for i, name in enumerate(("id_a", "id_b", "cosine"))
+            }
+        )
+
+
+def _block_pair_join(
+    rows: DataFrame, threshold: float, block: str, within: tuple[str, ...] = ()
+) -> DataFrame:
+    """Thresholded pairs of ``rows`` (``within`` + ``block`` + ``item``
+    columns) as ``(id_a, id_b, cosine)``: one flat block per (``within``,
+    ``block``) group; the blocks of one ``within`` group meet in pairs
+    (a ≤ b on ``block``), and one ``mapInPandas`` body verifies every
+    block pair with ``_score_blocks``. Each unordered pair of items is
+    emitted once: an id lands in one block, block pairs meet once, and
+    a block meeting itself keeps ``id_a < id_b``. ``sort_array`` gives
+    the derived block columns one consistent item order (two independent
+    collect_lists would not be aligned)."""
+    keys = [*within, block]
+    blocks = (
+        rows.groupBy(*keys)
+        .agg(F.sort_array(F.collect_list("item")).alias("items"))
+        .select(*keys, *_flat_block("items"))
+    )
+    a, b = (
+        blocks.select([F.col(c).alias(side + c) for c in blocks.columns])
+        for side in ("a_", "b_")
+    )
+    on = F.col("a_" + block) <= F.col("b_" + block)
+    for key in within:
+        on = (F.col("a_" + key) == F.col("b_" + key)) & on
+
+    def verify(batches):
+        for pdf in batches:
+            yield from _pair_frames(
+                [
+                    _score_blocks(*row, threshold, diagonal)
+                    for *row, diagonal in zip(
+                        pdf["a_ids"],
+                        pdf["a_flat"],
+                        pdf["b_ids"],
+                        pdf["b_flat"],
+                        pdf["a_dim"],
+                        pdf["diagonal"],
+                    )
+                ]
+            )
+
+    return (
+        a.join(b, on)
+        .select(
+            "a_ids",
+            "a_flat",
+            "b_ids",
+            "b_flat",
+            "a_dim",
+            (F.col("a_" + block) == F.col("b_" + block)).alias("diagonal"),
+        )
+        .mapInPandas(verify, _PAIR_SCHEMA)
+    )
+
+
 def cosine_pairs(
     df: DataFrame,
     threshold: float = 0.9,
@@ -219,93 +350,23 @@ def cosine_pairs(
     all-pairs: vectors are hashed into ``num_blocks`` blocks (collect_list
     per block), block pairs (bi ≤ bj) meet in an equi-free join of
     B(B+1)/2 rows, and each block pair is ONE vectorized numpy matmul
-    inside Arrow-batched ``mapInPandas``. Work is O(n²·d) either way, but
-    GEMM runs at SIMD throughput while a per-pair ``aggregate(zip_with(...))``
-    expression is interpreted (CodegenFallback) — measured 10-100× slower
-    and variance-prone. Tune ``num_blocks`` so a block (n/B vectors) fits
-    executor memory; the B² join fan-out is inherent to exact all-pairs.
+    inside Arrow-batched ``mapInPandas`` (``_block_pair_join``). Work is
+    O(n²·d) either way, but GEMM runs at SIMD throughput while a per-pair
+    ``aggregate(zip_with(...))`` expression is interpreted
+    (CodegenFallback) — measured 10-100× slower and variance-prone. Tune
+    ``num_blocks`` so a block (n/B vectors) fits executor memory; the B²
+    join fan-out is inherent to exact all-pairs.
     """
-    # Blocks travel as FLAT columns (ids: array<long>, vecs: one flattened
-    # array<double> + dim) so the Arrow→numpy conversion in the worker is a
-    # contiguous buffer copy + reshape. The earlier array<struct<id,v>>
-    # layout forced a per-item dict conversion in Python — measured as the
-    # dominant cost of the whole operator, ~2s of a 3s query.
-    blocks = (
-        spread(df)
-        .select(
+    return _block_pair_join(
+        spread(df).select(
             F.pmod(F.xxhash64(F.col(id_col)), F.lit(num_blocks)).alias("bid"),
             F.struct(
                 F.col(id_col).cast("long").alias("id"),
                 F.transform(vec_col, lambda x: x.cast("double")).alias("v"),
             ).alias("item"),
-        )
-        .groupBy("bid")
-        # sort_array gives both derived columns one consistent item order
-        # (two independent collect_lists would not be aligned).
-        .agg(F.sort_array(F.collect_list("item")).alias("items"))
-        .select(
-            "bid",
-            F.expr("transform(items, x -> x.id)").alias("ids"),
-            F.expr("flatten(transform(items, x -> x.v))").alias("flat"),
-            F.expr("size(items[0].v)").alias("dim"),
-        )
-    )
-    a = blocks.select(
-        F.col("bid").alias("a_bid"),
-        F.col("ids").alias("a_ids"),
-        F.col("flat").alias("a_flat"),
-        "dim",
-    )
-    b = blocks.select(
-        F.col("bid").alias("b_bid"),
-        F.col("ids").alias("b_ids"),
-        F.col("flat").alias("b_flat"),
-    )
-    pairs = a.join(b, F.col("a_bid") <= F.col("b_bid"))
-
-    def gemm(batches):
-        for pdf in batches:
-            for a_bid, a_ids, a_flat, dim, b_bid, b_ids, b_flat in zip(
-                pdf["a_bid"],
-                pdf["a_ids"],
-                pdf["a_flat"],
-                pdf["dim"],
-                pdf["b_bid"],
-                pdf["b_ids"],
-                pdf["b_flat"],
-            ):
-                ids_a = np.asarray(a_ids, dtype=np.int64)
-                ids_b = np.asarray(b_ids, dtype=np.int64)
-                ma = np.asarray(a_flat, dtype=np.float64).reshape(len(ids_a), dim)
-                mb = np.asarray(b_flat, dtype=np.float64).reshape(len(ids_b), dim)
-                na = np.linalg.norm(ma, axis=1)
-                nb = np.linalg.norm(mb, axis=1)
-                den = np.outer(na, nb)
-                cos = _np_round_half_up(_np_safe_div(ma @ mb.T, den))
-                if a_bid == b_bid:
-                    # same block meets itself once: keep one orientation
-                    mask = (
-                        (cos >= threshold)
-                        & (den > 0)  # degenerate pairs never emit
-                        & (ids_a[:, None] < ids_b[None, :])
-                    )
-                else:
-                    # disjoint blocks meet once; normalize pair orientation
-                    # to (min, max) — id order is independent of block order
-                    mask = (cos >= threshold) & (den > 0)
-                ii, jj = np.nonzero(mask)
-                if len(ii):
-                    ia, ib = ids_a[ii], ids_b[jj]
-                    yield pd.DataFrame(
-                        {
-                            "id_a": np.minimum(ia, ib),
-                            "id_b": np.maximum(ia, ib),
-                            "cosine": cos[ii, jj],
-                        }
-                    )
-
-    return pairs.mapInPandas(
-        gemm, schema="id_a long, id_b long, cosine double"
+        ),
+        threshold,
+        "bid",
     )
 
 
@@ -317,7 +378,6 @@ def cosine_pairs_lsh(
     n_planes: int = 4,
     n_tables: int = 8,
     seed: int = 42,
-    dim: int = 64,
     multiprobe: bool = True,
 ) -> DataFrame:
     """Approximate all-pairs cosine ≥ threshold: LSH bucketing + exact
@@ -352,7 +412,7 @@ def cosine_pairs_lsh(
     real near-dup corpora (threshold ≥ 0.8, p ≥ 0.79) prune by orders of
     magnitude under the same operator. See SCALING.md.
     """
-    bucketer = _lsh_bucketer(dim, n_planes, n_tables, seed)
+    bucketer = _lsh_bucketer(n_planes, n_tables, seed)
     unit = with_vec_norm(spread(df), vec_col, id_col)
 
     sig = unit.select(
@@ -383,8 +443,6 @@ def cosine_pairs_lsh(
         F.struct(F.col("id").cast("long").alias("id"), "v").alias("item"),
     ).select("tbl", F.col("m.bucket").alias("bucket"), F.col("m.is_base").alias("is_base"), "item")
 
-    # Same flat-column layout as cosine_pairs: contiguous Arrow buffers,
-    # one reshape per group instead of per-item conversion.
     groups = (
         rows.groupBy("tbl", "bucket")
         .agg(
@@ -396,88 +454,57 @@ def cosine_pairs_lsh(
             ).alias("p_items"),
         )
         .where(F.size("b_items") > 0)
-        .select(
-            F.expr("transform(b_items, x -> x.id)").alias("b_ids"),
-            F.expr("flatten(transform(b_items, x -> x.v))").alias("b_flat"),
-            F.expr("transform(p_items, x -> x.id)").alias("p_ids"),
-            F.expr("flatten(transform(p_items, x -> x.v))").alias("p_flat"),
-            F.expr("size(b_items[0].v)").alias("dim"),
-        )
+        # a probe list can be empty: its vectors have the base's width
+        .select(*_flat_block("b_items", "b_"), *_flat_block("p_items", "p_")[:2])
     )
 
-    def gemm(batches):
+    def verify(batches):
         for pdf in batches:
-            for b_ids, b_flat, p_ids, p_flat, d in zip(
-                pdf["b_ids"], pdf["b_flat"], pdf["p_ids"], pdf["p_flat"], pdf["dim"]
+            parts = []
+            for b_ids, b_flat, dim, p_ids, p_flat in zip(
+                pdf["b_ids"], pdf["b_flat"], pdf["b_dim"], pdf["p_ids"], pdf["p_flat"]
             ):
-                ib = np.asarray(b_ids, dtype=np.int64)
-                mb = np.asarray(b_flat, dtype=np.float64).reshape(len(ib), d)
-                nb = np.linalg.norm(mb, axis=1)
-                out = []
-                if len(ib) > 1:
-                    den = np.outer(nb, nb)
-                    cos = _np_round_half_up(_np_safe_div(mb @ mb.T, den))
-                    mask = (
-                        (cos >= threshold)
-                        & (den > 0)  # degenerate pairs never emit
-                        & (ib[:, None] < ib[None, :])
-                    )
-                    ii, jj = np.nonzero(mask)
-                    if len(ii):
-                        out.append((ib[ii], ib[jj], cos[ii, jj]))
-                if len(p_ids):
-                    ip = np.asarray(p_ids, dtype=np.int64)
-                    mp_ = np.asarray(p_flat, dtype=np.float64).reshape(len(ip), d)
-                    np_ = np.linalg.norm(mp_, axis=1)
-                    den = np.outer(nb, np_)
-                    cos = _np_round_half_up(_np_safe_div(mb @ mp_.T, den))
-                    # probe member ≠ base member always (signatures differ)
-                    mask = (cos >= threshold) & (den > 0)
-                    ii, jj = np.nonzero(mask)
-                    if len(ii):
-                        ia, ic = ib[ii], ip[jj]
-                        out.append(
-                            (np.minimum(ia, ic), np.maximum(ia, ic), cos[ii, jj])
-                        )
-                if out:
-                    yield pd.DataFrame(
-                        {
-                            "id_a": np.concatenate([o[0] for o in out]),
-                            "id_b": np.concatenate([o[1] for o in out]),
-                            "cosine": np.concatenate([o[2] for o in out]),
-                        }
-                    )
+                # base × base meets itself; a probe member never is a base
+                # member of the same group (their signatures differ)
+                parts.append(
+                    _score_blocks(b_ids, b_flat, b_ids, b_flat, dim, threshold, True)
+                )
+                parts.append(
+                    _score_blocks(b_ids, b_flat, p_ids, p_flat, dim, threshold, False)
+                )
+            yield from _pair_frames(parts)
 
     return (
-        groups.mapInPandas(gemm, schema="id_a long, id_b long, cosine double")
+        groups.mapInPandas(verify, schema=_PAIR_SCHEMA)
         # a pair can clear the threshold in several tables/probe groups
         .dropDuplicates(["id_a", "id_b"])
     )
 
 
-def _lsh_bucketer(dim: int, n_planes: int, n_tables: int, seed: int):
+def _lsh_bucketer(n_planes: int, n_tables: int, seed: int):
     """Arrow-batched bucket ids for ALL hash tables at once — the one
     hyperplane stack of both LSH operators (table ``t`` draws its
-    ``n_planes`` Gaussian hyperplanes from seed ``seed + 1000·t``).
+    ``n_planes`` Gaussian hyperplanes from seed ``seed + 1000·t``), drawn
+    at the width of the batch it hashes.
 
     One numpy matmul per Arrow batch replaces L·r interpreted plane-dot
     expressions per row (CodegenFallback chains). Returns, per vector, an
     array of L bucket ids (sign bits of the projections, little-endian).
     Scale-invariant: operates on the raw (un-normalized) vector.
     """
-    planes = np.concatenate(
-        [
-            np.random.default_rng(seed + 1000 * t).standard_normal(
-                (n_planes, dim)
-            )
-            for t in range(n_tables)
-        ]
-    )
     weights = (1 << np.arange(n_planes)).astype(np.int64)
 
     @F.pandas_udf("array<long>")
     def buckets(vs: pd.Series) -> pd.Series:
         mat = np.array(vs.tolist(), dtype=np.float64)
+        planes = np.concatenate(
+            [
+                np.random.default_rng(seed + 1000 * t).standard_normal(
+                    (n_planes, mat.shape[1])
+                )
+                for t in range(n_tables)
+            ]
+        )
         proj = (mat @ planes.T) > 0
         bits = proj.reshape(len(mat), n_tables, n_planes).astype(np.int64)
         return pd.Series(list(bits @ weights))
@@ -492,7 +519,6 @@ def lsh_topk(
     n_planes: int = 4,
     n_tables: int = 8,
     seed: int = 42,
-    dim: int = 64,
     multiprobe: bool = True,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
@@ -510,7 +536,7 @@ def lsh_topk(
     occupancy stays bounded. At 100 TB this is the difference between a
     crossJoin (impossible) and an equi-join (routine).
     """
-    bucketer = _lsh_bucketer(dim, n_planes, n_tables, seed)
+    bucketer = _lsh_bucketer(n_planes, n_tables, seed)
     c_unit = _side(spread(corpus), "c", vec_col, id_col)
     q_unit = _side(queries, "q", vec_col, id_col)
 

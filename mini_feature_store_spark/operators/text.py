@@ -38,10 +38,24 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 
 
 def _tokens(col: Column) -> Column:
-    """Whitespace tokens of trimmed text; empty text → empty array."""
+    """Whitespace tokens of trimmed text; empty text → empty array.
+    Spark's ``trim`` strips only U+0020, so ``col`` must already have
+    its whitespace collapsed (``_collapse``), or a leading tab or a
+    trailing newline becomes an empty token."""
     return F.when(
         F.length(F.trim(col)) == 0, F.array().cast("array<string>")
     ).otherwise(F.split(F.trim(col), r"\s+"))
+
+
+def _collapse(col: Column) -> Column:
+    """Every whitespace run as one space."""
+    return F.regexp_replace(col, r"\s+", " ")
+
+
+def _text_tokens(col: Column) -> Column:
+    """Whitespace tokens of raw text, case kept: collapsed, then
+    ``_tokens``, in ``normalize``'s order."""
+    return _tokens(_collapse(col))
 
 
 #: BPE-ish chunking: letter runs, digit runs, and punctuation runs are
@@ -54,7 +68,7 @@ CHUNK_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"
 def token_count(col: Column) -> Column:
     """Number of whitespace-delimited tokens (BPE-ish regex variant lives in
     ``text_stats`` as ``n_word_chunks``)."""
-    return F.size(_tokens(col)).cast("long")
+    return F.size(_text_tokens(col)).cast("long")
 
 
 def word_chunk_count(col: Column) -> Column:
@@ -67,7 +81,7 @@ def normalize(col: Column) -> Column:
     lowercase, whitespace collapsed to single spaces, trimmed. The
     collapse runs first: Spark's ``trim`` strips only U+0020, so a
     trailing newline or a leading tab must already be a space."""
-    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
+    return F.trim(_collapse(F.lower(col)))
 
 
 def fingerprint(col: Column) -> Column:
@@ -173,7 +187,7 @@ def chunk_documents(
             f"overlap must satisfy 0 <= overlap < chunk_tokens, got {overlap}"
         )
     step = chunk_tokens - overlap
-    toks = _tokens(F.col(text_col))
+    toks = _text_tokens(F.col(text_col))
     n = F.size(toks)
     starts = F.filter(
         _window_starts(toks, 1, step=step),
@@ -202,7 +216,7 @@ def _text_stat_exprs(t: Column) -> dict[str, Column]:
     definition shared by the ``text_stats`` projection and the inline
     column scorers (``quality_prob_column``), so the batch and
     streaming paths can never drift."""
-    toks = _tokens(t)
+    toks = _text_tokens(t)
     n_chars = F.length(t).cast("long")
     n_tokens = F.size(toks).cast("long")
     stop_hits = F.size(
@@ -275,7 +289,7 @@ def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     aggregate width."""
     toks_tbl = df.select(
         F.col(id_col),
-        F.explode_outer(_tokens(F.col(text_col))).alias("tok"),
+        F.explode_outer(_text_tokens(F.col(text_col))).alias("tok"),
     )
     low = F.lower(F.col("tok"))
     scored = toks_tbl.groupBy(id_col).agg(

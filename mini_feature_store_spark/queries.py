@@ -1654,12 +1654,18 @@ def customer_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ── training-data pipeline: text analysis (operators/text.py) ───────────────
 
+def _collapse_sql(col: str = "text") -> str:
+    """Collapse whitespace runs to one space, THEN trim (DuckDB's ``trim``
+    strips only spaces too, so a trailing newline or a leading tab must
+    already be a space when it runs) — the order of operators/text.py's
+    ``_text_tokens`` and ``normalize``."""
+    return f"trim(regexp_replace({col}, '\\s+', ' ', 'g'))"
+
+
 def _norm_sql(col: str = "text") -> str:
-    """DuckDB mirror of operators/text.py:normalize — lowercase, collapse
-    whitespace runs to one space, THEN trim (DuckDB's ``trim`` strips only
-    spaces too, so a trailing newline or a leading tab must already be a
-    space when it runs)."""
-    return f"trim(regexp_replace(lower({col}), '\\s+', ' ', 'g'))"
+    """DuckDB mirror of operators/text.py:normalize — lowercase, then
+    ``_collapse_sql``."""
+    return _collapse_sql(f"lower({col})")
 
 
 #: DuckDB mirror of operators/text.py:_doc_tokens(text). The CASE arm
@@ -2013,12 +2019,12 @@ def doc_token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "doc_chunk_windows",
-    """
+    f"""
 WITH t AS (
-  -- the trim(text) <> '' guard mirrors Spark's _tokens(): DuckDB splits
-  -- an empty string into [''] (len 1), which would mint a phantom chunk
-  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-  FROM documents WHERE trim(text) <> ''
+  -- the <> '' guard mirrors Spark's _text_tokens(): DuckDB splits an
+  -- empty string into [''] (len 1), which would mint a phantom chunk
+  SELECT doc_id, regexp_split_to_array({_collapse_sql()}, ' ') AS toks
+  FROM documents WHERE {_collapse_sql()} <> ''
 ), s AS (
   SELECT doc_id, toks, len(toks) AS n,
          list_filter(generate_series(0, GREATEST(len(toks) - 1, 0), 32),

@@ -68,6 +68,11 @@ def get_spark(
         # ns-precision parquet timestamps (testdata events.ts) truncate to µs.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")
+        # Every action renders its plan into a string for the SQL
+        # execution event. With many curation stages stacked that string
+        # outgrew a 2 GB driver heap (OutOfMemoryError in
+        # StringBuilder.toString at a localCheckpoint); 1 MiB bounds it.
+        .config("spark.sql.maxPlanStringLength", str(1 << 20))
     )
     if HAVE_DELTA:
         builder = builder.config(

@@ -147,7 +147,8 @@ def test_cluster_pairs_match_numpy_within_clusters(spark, blobs):
     a = assigns.toPandas().sort_values("vec_id")
     mat = np.array([r[1] for r in sorted(rows)], dtype=np.float64)
     mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    sims = mat @ mat.T
+    # rounded half-up to 4 places, THEN thresholded, as the oracles do
+    sims = np.floor((mat @ mat.T) * 1e4 + 0.5) / 1e4
     cl = a["cluster"].to_numpy()
     want = {
         (i, j)

@@ -48,8 +48,9 @@ def curation_corpus(spark, root: str) -> dict[str, str]:
     2-3, 32-35 share a verbatim license blurb, 36-37 quote the benchmark
     and 38-39 fail the quality gate. Returns the paths of the corpus
     (``docs``), the benchmark (``bench``), an LM reference corpus
-    (``lm_ref``), a DSIR target corpus (``dsir_target``) and a quality
-    classifier artifact holding the default weights (``clf``).
+    (``lm_ref``), a DSIR target corpus (``dsir_target``), a quality
+    classifier artifact holding the default weights (``clf``) and
+    document embeddings in which 5 points the way 4 does (``emb``).
     """
     from mini_feature_store_spark.operators.text import (
         QUALITY_CLF_BIAS,
@@ -88,6 +89,13 @@ def curation_corpus(spark, root: str) -> dict[str, str]:
     save_quality_classifier(
         {"weights": QUALITY_CLF_WEIGHTS, "bias": QUALITY_CLF_BIAS}, paths["clf"]
     )
+    vec = random.Random(13)
+    emb = [[vec.gauss(0.0, 1.0) for _ in range(8)] for _ in range(40)]
+    emb[5] = [2.0 * x for x in emb[4]]
+    paths["emb"] = f"{root}/emb"
+    spark.createDataFrame(
+        list(enumerate(emb)), "vec_id long, embedding array<double>"
+    ).write.parquet(paths["emb"])
     return paths
 
 
@@ -113,6 +121,15 @@ CURATION_CONFIGS = {
     "classifier+best_quality": lambda p: {
         "quality_model_dir": p["clf"], "dedup_keep_best_quality": True
     },
+    "semantic": lambda p: {"embeddings_path": p["emb"]},
+    "every_stage": lambda p: {
+        "url_col": "url",
+        "max_per_domain": 12,
+        "line_filter_min_lines": 1,
+        "dsir_target_path": p["dsir_target"],
+        "dsir_keep": 24,
+        "lm_reference_path": p["lm_ref"],
+    },
 }
 
 
@@ -129,6 +146,8 @@ JOB_CEILINGS = {
     "coverage_drop": 35,
     "ensemble": 64,
     "classifier+best_quality": 36,
+    "semantic": 47,
+    "every_stage": 70,
 }
 
 _SOURCE = (

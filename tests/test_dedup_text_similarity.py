@@ -7,6 +7,9 @@ near-duplicates / true top-k."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -759,8 +762,13 @@ def test_cosine_zero_norm_vectors_never_crash_or_match(spark, tmp_path):
         build_ivfpq_index,
         pq_topk_indexed,
     )
+    from mini_feature_store_spark.operators.clustering import (
+        cluster_cosine_pairs,
+        semantic_dedup,
+    )
     from mini_feature_store_spark.operators.similarity import (
         cosine_pairs,
+        cosine_pairs_lsh,
         cosine_topk_bruteforce,
         int8_topk,
         ivf_topk,
@@ -791,22 +799,30 @@ def test_cosine_zero_norm_vectors_never_crash_or_match(spark, tmp_path):
         == 0
     )
 
-    pairs = {
-        (r.id_a, r.id_b)
-        for r in cosine_pairs(emb, threshold=0.5).collect()
+    one_cluster = spark.createDataFrame(
+        [(i, 0) for i, _ in rows], "vec_id long, cluster int"
+    )
+    miners = {
+        "exact": lambda t: cosine_pairs(emb, threshold=t),
+        "lsh": lambda t: cosine_pairs_lsh(emb, threshold=t),
+        "cluster": lambda t: cluster_cosine_pairs(emb, one_cluster, threshold=t),
     }
-    assert pairs and all(2 not in p for p in pairs)
-    # even a 0.0/negative threshold never admits a degenerate pair
-    pairs0 = {
-        (r.id_a, r.id_b)
-        for r in cosine_pairs(emb, threshold=0.0).collect()
+    for name, mine in miners.items():
+        # even a 0.0 threshold never admits a degenerate pair
+        for t in (0.5, 0.0):
+            pairs = {(r.id_a, r.id_b) for r in mine(t).collect()}
+            assert pairs and all(2 not in p for p in pairs), (name, t)
+    # semantic dedup never folds the zero vector into a duplicate group
+    sem = {
+        r.vec_id: (r.component, r.is_survivor)
+        for r in semantic_dedup(emb, k=1, threshold=0.0, iters=1).collect()
     }
-    assert pairs0 and all(2 not in p for p in pairs0)
+    assert sem[2] == (2, True)
 
     idx = str(tmp_path / "ivfpq")
     build_ivfpq_index(emb, idx, n_cells=2, m_sub=2)
     rescorers = {
-        "lsh": lambda q: lsh_topk(q, emb, k=3, dim=4),
+        "lsh": lambda q: lsh_topk(q, emb, k=3),
         "ivf": lambda q: ivf_topk(q, emb, k=3, n_cells=2, n_probe=2),
         "pq": lambda q: pq_topk(q, emb, k=3, n_cells=2, n_probe=2, m_sub=2),
         "int8": lambda q: int8_topk(q, emb, k=3),
@@ -816,6 +832,96 @@ def test_cosine_zero_norm_vectors_never_crash_or_match(spark, tmp_path):
         ann = topk(emb.where(F.col("vec_id") == 0)).collect()
         assert all(r.neighbor_id != 2 for r in ann), name
         assert topk(emb.where(F.col("vec_id") == 2)).count() == 0, name
+
+
+def test_pair_miners_share_rounding_and_zero_norm_rules(spark):
+    """The three pair miners verify candidates alike: the cosine is
+    rounded to 4 places before the threshold (0.89996 is a 0.9 pair, as
+    in the DuckDB oracles) and zero vectors never pair, even at 0.0.
+    ``cluster_cosine_pairs`` equals ``cosine_pairs`` restricted to
+    same-cluster pairs (the boundary pair and both zero vectors share
+    cluster 0); ``cosine_pairs_lsh`` finds a subset of ``cosine_pairs``.
+    The corpus is 2-d: the LSH planes take the width of the vectors."""
+    from mini_feature_store_spark.operators.clustering import (
+        cluster_cosine_pairs,
+    )
+    from mini_feature_store_spark.operators.similarity import (
+        cosine_pairs,
+        cosine_pairs_lsh,
+    )
+
+    c = 0.89996
+    rows = [
+        (0, [1.0, 0.0]),
+        (1, [c, (1.0 - c * c) ** 0.5]),
+        (2, [0.0, 0.0]),
+        (3, [0.0, 0.0]),
+        (4, [0.5, 0.5]),
+        (5, [0.3, 1.0]),
+        (6, [-1.0, 0.2]),
+    ]
+    cluster = {i: int(i == 5) for i, _ in rows}
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    assigns = spark.createDataFrame(
+        list(cluster.items()), "vec_id long, cluster int"
+    )
+    for t in (0.9, 0.0):
+        exact = {tuple(r) for r in cosine_pairs(emb, threshold=t).collect()}
+        assert (0, 1, 0.9) in exact, t
+        assert all(2 not in p and 3 not in p for p in exact), t
+        clustered = {
+            tuple(r)
+            for r in cluster_cosine_pairs(emb, assigns, threshold=t).collect()
+        }
+        assert clustered == {
+            p for p in exact if cluster[p[0]] == cluster[p[1]]
+        }, t
+        lsh = {tuple(r) for r in cosine_pairs_lsh(emb, threshold=t).collect()}
+        assert lsh <= exact, t
+
+
+#: The kernel functions: the only place in the pair-miner modules that
+#: may flatten a block (``flatten(transform(...))``) or select pairs
+#: from a score matrix (``np.nonzero``).
+_PAIR_KERNEL = {"_flat_block", "_score_blocks"}
+
+
+def _called(node, owner: str, attr: str) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and isinstance(node.func.value, ast.Name)
+        and (node.func.value.id, node.func.attr) == (owner, attr)
+    )
+
+
+def _is_kernel_step(node: ast.AST) -> bool:
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return "flatten(transform(" in node.value.replace(" ", "")
+    flattens = (
+        _called(node, "F", "flatten")
+        and bool(node.args)
+        and _called(node.args[0], "F", "transform")
+    )
+    return flattens or _called(node, "np", "nonzero")
+
+
+@pytest.mark.parametrize("module", ["similarity.py", "clustering.py"])
+def test_flat_blocks_and_pair_masks_only_in_the_kernel(module):
+    path = (
+        Path(__file__).resolve().parent.parent
+        / "mini_feature_store_spark/operators" / module
+    )
+    owners = {}
+    for top in ast.parse(path.read_text()).body:
+        for node in ast.walk(top):
+            if _is_kernel_step(node):
+                owner = getattr(top, "name", "<module>")
+                owners.setdefault(owner, []).append(node.lineno)
+    if module == "similarity.py":
+        assert set(owners) == _PAIR_KERNEL, owners
+    else:
+        assert not owners, owners
 
 
 def test_semantic_decontaminate_planted_and_tiebreak(spark):

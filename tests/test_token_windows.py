@@ -182,6 +182,55 @@ def test_windows_number_tokens_minus_k_plus_one(spark, edge_docs, k):
     }
 
 
+@pytest.mark.parametrize(
+    "query",
+    ["doc_text_stats", "doc_lang_id", "doc_chunk_windows", "doc_sequence_packing"],
+)
+def test_raw_text_tokens_match_the_duckdb_mirrors(spark, tmp_path, query):
+    """The raw-text tokenizers (``token_count``, ``text_stats``,
+    ``lang_id``, ``chunk_documents``) collapse whitespace before they
+    trim, like ``normalize``: a trailing newline or a leading tab makes
+    no empty token. Each query equals its DuckDB oracle on such
+    documents, and the token counts are Python's ``str.split``."""
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entry
+
+    texts = [
+        "hello world\n",
+        "\tthe cat sat on the mat",
+        " Der Hund\t und die  Katze\r\n",
+        "\n\tle chat et la souris \t",
+    ]
+    pd.DataFrame(
+        {
+            "doc_id": range(len(texts)),
+            "text": texts,
+            "lang": "en",
+            "source": ["a", "b", "a", "b"],
+            "n_chars": [len(t) for t in texts],
+        }
+    ).to_parquet(tmp_path / "documents.parquet")
+    got = entry.queries()[query](spark, str(tmp_path))
+    cols = sorted(got.columns)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/documents.parquet')"
+    )
+    res = con.execute(entry.oracle_sql()[query])
+    order = sorted(range(len(res.description)), key=lambda i: res.description[i][0])
+    mirror = sorted(tuple(row[i] for i in order) for row in res.fetchall())
+    assert sorted(tuple(r[c] for c in cols) for r in got.collect()) == mirror
+    # every document is shorter than one chunk
+    count = "chunk_len" if query == "doc_chunk_windows" else "n_tokens"
+    key = "id" if query == "doc_chunk_windows" else "doc_id"
+    if count in cols:
+        n_tokens = {r[0]: r[1] for r in got.select(key, count).collect()}
+        assert n_tokens == {i: len(t.split()) for i, t in enumerate(texts)}
+
+
 #: The kernel functions: the only place in the token-window modules that
 #: may build window starts (``F.sequence``) or gram strings
 #: (``F.array_join(F.slice(...))``).
