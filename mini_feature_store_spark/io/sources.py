@@ -2,9 +2,10 @@
 
 Re-expresses the reference's ``platform/Fetchers.scala`` trait surface
 (readParquet :79-90, readJson :92-103, readCsv :105-120, readIcebergTable
-:122-128) as plain functions. An explicit schema is always accepted and always
-passed by pipelines (schema-on-write regime, SURVEY.md §1.3); inference is the
-``schema=None`` fallback, exactly like ``Fetchers.scala:85-89``.
+:122-128) as plain functions. An explicit schema is always accepted
+(schema-on-write regime, SURVEY.md §1.3); inference is the ``schema=None``
+fallback, exactly like ``Fetchers.scala:85-89``. The pipelines infer: each
+``read_parquet`` of their inputs costs one footer-reading Spark job.
 
 Scale notes:
 - An explicit schema skips the file-footer sampling pass entirely — on a

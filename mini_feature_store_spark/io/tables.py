@@ -27,6 +27,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -197,6 +198,18 @@ class VersionedTable:
             keys_df.select(*keys), keys, "left_anti"
         )
         return rest, lambda d: d not in touched, len(uris)
+
+    def partition_values(self, column: str) -> set[str]:
+        """Values of partition column ``column`` in the latest version: its
+        ``column=value`` directory names, decoded as ``_rewrite`` decodes
+        Spark's paths. Runs no Spark job."""
+        latest = self._latest()
+        part = latest["partition_by"]
+        if column not in part:
+            raise ValueError(f"table {self.path} is partitioned by {part}, not by {column!r}")
+        vdir = glob.escape(self._version_dir(latest["version"]))
+        dirs = glob.glob(os.path.join(vdir, *["*"] * part.index(column), f"{column}=*"))
+        return {urllib.parse.unquote(os.path.basename(d).partition("=")[2]) for d in dirs}
 
     def versions(self) -> list[dict]:
         """Commit log: [{version, timestamp, partition_by, schema}]."""

@@ -21,44 +21,39 @@ Two physical formulations, asserted equal in tests:
 
 2. ``backfill_features_window_form`` — the scale plan (SURVEY.md §4.4):
    pre-aggregate one row per (user, day-with-events) — the map-side-combinable
-   shuffle — densify against the scaffold with a cheap equi join, then compute
-   every rolling stat with ``rangeBetween`` window frames over day numbers.
-   ONE shuffle by user_id replaces the 31× fanout join, and the per-user
-   partition is the only sort. Skew note: a celebrity user is one partition's
-   worth of *daily* rows (≤ range length), not raw events — bounded by design.
+   shuffle — densify by a UNION with the per-user day grid (no join, no
+   broadcast), then compute every rolling stat with ``rangeBetween`` window
+   frames over day numbers. ONE shuffle by user_id replaces the 31× fanout
+   join, and the per-user partition is the only sort. Skew note: a celebrity
+   user is one partition's worth of *daily* rows (≤ range length + 30), not
+   raw events — bounded by design.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
-
-from mini_feature_store_spark.functions import date_range
 
 #: Rolling windows in days, inclusive of both endpoints (8 / 31 calendar days).
 SHORT_WINDOW_DAYS = 7
 LONG_WINDOW_DAYS = 30
 
-_FEATURE_COLS = [
-    "event_count_7d",
-    "event_count_30d",
-    "last_event_days_ago",
-    "event_type_counts",
-]
-
-
 def _scaffold(events: DataFrame, start, end, user_col: str, day_col: str) -> DataFrame:
     """Dense (user × day) grid: every user gets a row for every day even with
     zero events (rationale: BackfillPipeline.scala:30-32).
 
-    The date side is ≤ a few thousand rows → broadcast, so the grid is built
-    without shuffling the user list.
+    Each distinct user explodes its own ``sequence`` of days: a narrow
+    step over the users distinct, with no cross join and no broadcast.
     """
-    days = date_range(events.sparkSession, start, end, day_col)
-    users = events.select(user_col).distinct()
-    return users.crossJoin(F.broadcast(days))
+    days = F.sequence(F.lit(start).cast("date"), F.lit(end).cast("date"))
+    return (
+        events.select(user_col)
+        .distinct()
+        .select(user_col, F.explode(days).alias(day_col))
+    )
 
 
 def backfill_features_join_form(
@@ -115,63 +110,68 @@ def _events_in_lookback(
 ) -> DataFrame:
     """(user_id, event_type, day) rows for [start - 30d, end]: events older
     than ``start`` by up to the long window still influence early rows, so
-    the daily pre-agg keeps the lookback and the scaffold join trims to
-    [start, end] afterwards. Shared by both window-form feature views."""
+    the daily pre-agg keeps the lookback and the densify trims to
+    [start, end] afterwards. Events of a null user are dropped: the join
+    form's equi join never matches them, so its null-user grid rows read
+    zero. Shared by both window-form feature views."""
     return events.select(
         F.col(user_col).alias("user_id"),
         F.col(type_col).alias("event_type"),
         F.to_date(F.col(ts_col)).alias("day"),
     ).where(
-        (F.col("day") >= F.date_sub(F.lit(start).cast("date"), LONG_WINDOW_DAYS))
+        F.col("user_id").isNotNull()
+        & (F.col("day") >= F.date_sub(F.lit(start).cast("date"), LONG_WINDOW_DAYS))
         & (F.col("day") <= F.lit(end).cast("date"))
     )
 
 
-def _densify_and_frames(events: DataFrame, daily: DataFrame, start, end, user_col: str):
-    """Shared densify + rolling-frame scaffolding for the window-form
-    feature views. ``daily`` is a (user_id, day)-keyed pre-aggregate
-    carrying at least ``n_events``.
+#: Tags the grid's rows in the union ``_densify_and_frames`` builds.
+_GRID = "_grid"
 
-    Rows before ``start`` must still be visible to the range frames of
-    early days. A FULL OUTER join expresses both needs with ONE daily
-    aggregate: grid rows (day ∈ [start, end]) pick up their stats or stay
-    null-padded, and pre-start daily rows (day < start, never in the grid)
-    ride along as the daily-only side. (A left-join + union of two daily
-    branches scans and aggregates the events twice — visible as duplicate
-    subtrees in the physical plan.) The caller's final day >= start filter
-    trims the pre rows.
 
-    Returns ``(dense, w7, w30, last_event_day, start_lit)``.
+def _densify_and_frames(
+    events: DataFrame,
+    daily: DataFrame,
+    start,
+    end,
+    user_col: str,
+    type_counts: Callable[[WindowSpec], Column],
+) -> DataFrame:
+    """Shared densify + rolling frames of the window-form feature views.
+    ``daily`` is a (user_id, day)-keyed pre-aggregate carrying at least
+    ``n_events``; ``type_counts`` builds the view's ``event_type_counts``
+    from the 30-day frame.
+
+    The grid and ``daily`` are UNIONed, grid rows tagged — no join. A
+    ``rangeBetween`` frame holds every row whose day number is in range,
+    so a grid row and the daily row of its day are peers, and every frame
+    aggregate equals the one over a joined row. Daily rows before
+    ``start`` (never in the grid) stay visible to early days' frames.
+    Keeping only grid rows at the end also trims that lookback.
     """
     grid = _scaffold(
         events.select(F.col(user_col).alias("user_id")), start, end, "user_id", "day"
     )
-    dense = grid.join(daily, ["user_id", "day"], "full")
-    day_no = F.unix_date(F.col("day"))
-    w7 = (
-        Window.partitionBy("user_id")
-        .orderBy(day_no)
-        .rangeBetween(-SHORT_WINDOW_DAYS, 0)
+    dense = grid.withColumn(_GRID, F.lit(True)).unionByName(
+        daily.withColumn(_GRID, F.lit(False)), allowMissingColumns=True
     )
-    w30 = (
-        Window.partitionBy("user_id")
-        .orderBy(day_no)
-        .rangeBetween(-LONG_WINDOW_DAYS, 0)
-    )
+    by_day = Window.partitionBy("user_id").orderBy(F.unix_date(F.col("day")))
+    w7 = by_day.rangeBetween(-SHORT_WINDOW_DAYS, 0)
+    w30 = by_day.rangeBetween(-LONG_WINDOW_DAYS, 0)
     last_event_day = F.max(F.when(F.col("n_events") > 0, F.col("day"))).over(w30)
-    return dense, w7, w30, last_event_day, F.lit(start).cast("date")
-
-
-def _base_feature_cols(w7, w30, last_event_day) -> list:
-    """The three features both window-form views share, over the frames
-    ``_densify_and_frames`` built."""
-    return [
-        F.coalesce(F.sum("n_events").over(w7), F.lit(0)).alias("event_count_7d"),
-        F.coalesce(F.sum("n_events").over(w30), F.lit(0)).alias("event_count_30d"),
-        F.datediff(F.col("day"), last_event_day).cast("int").alias(
-            "last_event_days_ago"
-        ),
-    ]
+    return (
+        dense.select(
+            "user_id",
+            "day",
+            F.coalesce(F.sum("n_events").over(w7), F.lit(0)).alias("event_count_7d"),
+            F.coalesce(F.sum("n_events").over(w30), F.lit(0)).alias("event_count_30d"),
+            F.datediff("day", last_event_day).cast("int").alias("last_event_days_ago"),
+            type_counts(w30).alias("event_type_counts"),
+            _GRID,
+        )
+        .where(F.col(_GRID))
+        .drop(_GRID)
+    )
 
 
 def backfill_features_window_form(
@@ -187,8 +187,8 @@ def backfill_features_window_form(
     """Scale plan: daily pre-aggregation + range-frame windows (SURVEY.md §4.4).
 
     Events older than ``start`` by up to 30 days still influence early rows, so
-    the daily pre-agg keeps [start-30, end] and the scaffold join trims to
-    [start, end] afterwards.
+    the daily pre-agg keeps [start-30, end] and the densify keeps only the
+    [start, end] grid rows afterwards.
 
     ``distinct_types_strategy`` picks the distinct-types-over-window
     representation; every choice builds the plan LAZILY (zero Spark jobs until
@@ -213,8 +213,7 @@ def backfill_features_window_form(
 
     ev = _events_in_lookback(events, start, end, user_col, ts_col, type_col)
 
-    use_bitmask = distinct_types_strategy == "bitmask"
-    if use_bitmask:
+    if distinct_types_strategy == "bitmask":
         if known_types is not None:
             if len(known_types) > 64:
                 raise ValueError(
@@ -241,18 +240,13 @@ def backfill_features_window_form(
             )
             ev_with_bit = ev.withColumn("type_bit", type_bit)
         else:
-            # Lazy bit assignment: tiny distinct on the type column (map-side
-            # combined — the shuffle is |types| rows, not |events|), bit
-            # positions by alphabetical rank, broadcast back. No job runs
-            # until the caller triggers an action. >64 types at runtime hits
-            # raise_error instead of silently wrapping shiftleft mod 64.
-            # limit(65) makes the ≤64-types contract PLAN-visible (the
-            # broadcast side is GlobalLimit-capped, auditable by
-            # plan_walk.broadcast_hint_sites) without changing semantics:
-            # with >65 distinct types the 66th..nth rows drop from the
-            # dim, their events left-join to NULL type_bit_pos, and the
-            # CASE below falls through to raise_error exactly as the
-            # bit_pos-64 row does.
+            # Lazy bit assignment: a map-side-combined distinct on the type
+            # column (|types| rows shuffled), bit positions by alphabetical
+            # rank, broadcast back; no job runs until an action. limit(65)
+            # makes the ≤64-types contract plan-visible (a GlobalLimit-capped
+            # broadcast, auditable by plan_walk.broadcast_hint_sites): types
+            # past the 64th — cut from the dim or not — reach raise_error in
+            # the CASE below instead of wrapping shiftleft mod 64.
             types_dim = (
                 ev.select("event_type")
                 .distinct()
@@ -277,31 +271,24 @@ def backfill_features_window_form(
             F.count(F.lit(1)).alias("n_events"),
             F.bit_or("type_bit").alias("type_mask"),
         )
+        distinct_types = lambda w30: F.coalesce(  # noqa: E731
+            F.bit_count(F.bit_or("type_mask").over(w30)), F.lit(0)
+        )
     else:
         daily = ev.groupBy("user_id", "day").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.collect_set("event_type").alias("types"),
         )
-
-    dense, w7, w30, last_event_day, start_lit = _densify_and_frames(
-        events, daily, start, end, user_col
-    )
-    if use_bitmask:
-        distinct_types = F.coalesce(
-            F.bit_count(F.bit_or("type_mask").over(w30)), F.lit(0)
-        )
-    else:
-        distinct_types = F.size(
+        distinct_types = lambda w30: F.size(  # noqa: E731
             F.array_distinct(F.flatten(F.collect_list("types").over(w30)))
         )
-    return (
-        dense.select(
-            "user_id",
-            "day",
-            *_base_feature_cols(w7, w30, last_event_day),
-            distinct_types.cast("long").cast("string").alias("event_type_counts"),
-        )
-        .where(F.col("day") >= start_lit)
+    return _densify_and_frames(
+        events,
+        daily,
+        start,
+        end,
+        user_col,
+        lambda w30: distinct_types(w30).cast("long").cast("string"),
     )
 
 
@@ -354,25 +341,19 @@ def backfill_features_typed(
             ).alias("type_map"),
         )
     )
-    dense, w7, w30, last_event_day, start_lit = _densify_and_frames(
-        events, daily, start, end, user_col
-    )
-    # collect_list skips the nulls event-free grid days contribute, so the
-    # fold sees exactly the window's daily maps; additive map_zip_with
+    # collect_list skips the nulls the grid rows contribute, so the fold
+    # sees exactly the window's daily maps; additive map_zip_with
     # union-merges them (either side null for a type the other day lacks).
-    merged = F.aggregate(
-        F.collect_list("type_map").over(w30),
-        F.create_map().cast("map<string,bigint>"),
-        lambda acc, m: F.map_zip_with(
-            acc,
-            m,
-            lambda _k, a, b: F.coalesce(a, F.lit(0).cast("bigint"))
-            + F.coalesce(b, F.lit(0).cast("bigint")),
-        ),
-    )
-    return dense.select(
-        "user_id",
-        "day",
-        *_base_feature_cols(w7, w30, last_event_day),
-        merged.alias("event_type_counts"),
-    ).where(F.col("day") >= start_lit)
+    def merged(w30: WindowSpec) -> Column:
+        return F.aggregate(
+            F.collect_list("type_map").over(w30),
+            F.create_map().cast("map<string,bigint>"),
+            lambda acc, m: F.map_zip_with(
+                acc,
+                m,
+                lambda _k, a, b: F.coalesce(a, F.lit(0).cast("bigint"))
+                + F.coalesce(b, F.lit(0).cast("bigint")),
+            ),
+        )
+
+    return _densify_and_frames(events, daily, start, end, user_col, merged)

@@ -37,6 +37,13 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 
+#: Java regex's ``\s`` spelled out, for the operators and their DuckDB
+#: mirrors alike: RE2's ``\s`` leaves out the vertical tab.
+_WS_CHARS = r" \t\n\x0B\f\r"
+WS = f"[{_WS_CHARS}]"
+PUNCT_RE = rf"[^\w{_WS_CHARS}]"  # text_stats' punctuation
+
+
 def _tokens(col: Column) -> Column:
     """Whitespace tokens of trimmed text; empty text → empty array.
     Spark's ``trim`` strips only U+0020, so ``col`` must already have
@@ -44,12 +51,12 @@ def _tokens(col: Column) -> Column:
     trailing newline becomes an empty token."""
     return F.when(
         F.length(F.trim(col)) == 0, F.array().cast("array<string>")
-    ).otherwise(F.split(F.trim(col), r"\s+"))
+    ).otherwise(F.split(F.trim(col), WS + "+"))
 
 
 def _collapse(col: Column) -> Column:
     """Every whitespace run as one space."""
-    return F.regexp_replace(col, r"\s+", " ")
+    return F.regexp_replace(col, WS + "+", " ")
 
 
 def _text_tokens(col: Column) -> Column:
@@ -62,7 +69,7 @@ def _text_tokens(col: Column) -> Column:
 #: separate chunks (the pre-tokenization split most BPE vocabularies apply).
 #: The three classes are disjoint, so Java regex and RE2 (DuckDB) produce
 #: identical matches.
-CHUNK_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"
+CHUNK_RE = rf"[A-Za-z]+|[0-9]+|[^A-Za-z0-9{_WS_CHARS}]+"
 
 
 def token_count(col: Column) -> Column:
@@ -223,7 +230,7 @@ def _text_stat_exprs(t: Column) -> dict[str, Column]:
         F.filter(toks, lambda x: F.lower(x).isin(*LANG_MARKERS["en"]))
     ).cast("long")
     n_punct = (
-        n_chars - F.length(F.regexp_replace(t, r"[^\w\s]", ""))
+        n_chars - F.length(F.regexp_replace(t, PUNCT_RE, ""))
     ).cast("long")
     n_upper = (
         n_chars - F.length(F.regexp_replace(t, r"[A-Z]", ""))
@@ -1419,7 +1426,7 @@ def line_filter(
     def _line_ok(l: Column) -> Column:
         cond = (
             F.trim(l).rlike(TERMINAL_PUNCT_RE)
-            & (F.size(F.split(F.trim(l), r"\s+")) >= min_words)
+            & (F.size(F.split(F.trim(l), WS + "+")) >= min_words)
         )
         for term in banned_line_terms:
             cond = cond & ~F.lower(l).contains(term.lower())

@@ -63,9 +63,10 @@ def run_backfill_incremental(
     already current, nothing written). The daily cron case — yesterday's
     run covered days 1..N, today extends to N+1 — recomputes one day, not
     the whole history; at 100 TB that is the difference between a 5-minute
-    and a multi-hour job. Days are discovered from the table itself (one
-    distinct-scan of the partition column, prunable), so crashed partial
-    runs self-heal on the next invocation.
+    and a multi-hour job. Present days are the ``day=…`` directory names of
+    the latest committed version (no Spark job), so crashed partial runs
+    self-heal on the next invocation; a table not partitioned by ``day``
+    raises ``ValueError`` before any job.
 
     The feature compute still sees the FULL events input (rolling windows
     need the 30-day lookback before the first missing day); only the
@@ -75,16 +76,11 @@ def run_backfill_incremental(
     import datetime as dt
 
     vt = VersionedTable(cfg.output_table)
-    have: set[dt.date] = set()
-    if vt.versions():
-        have = {
-            r["day"]
-            for r in vt.read(spark).select("day").distinct().collect()
-        }
+    have = vt.partition_values("day") if vt.versions() else set()
     start = dt.date.fromisoformat(cfg.start_date)
     end = dt.date.fromisoformat(cfg.end_date)
     want = {start + dt.timedelta(days=i) for i in range((end - start).days + 1)}
-    missing = sorted(want - have)
+    missing = sorted(d for d in want if d.isoformat() not in have)
     mode = "append" if vt.versions() else "overwrite"
     if missing:
         events = read_parquet(spark, cfg.events_path)

@@ -95,6 +95,7 @@ from mini_feature_store_spark.operators.point_in_time import point_in_time_join
 from mini_feature_store_spark.operators.rolling import (
     backfill_features_window_form,
 )
+from mini_feature_store_spark.operators.text import CHUNK_RE, PUNCT_RE, WS
 
 #: Events tables span exactly 2024-01-01 .. 2024-01-30 at every sf.
 EVENTS_START, EVENTS_END = "2024-01-01", "2024-01-30"
@@ -1659,7 +1660,7 @@ def _collapse_sql(col: str = "text") -> str:
     strips only spaces too, so a trailing newline or a leading tab must
     already be a space when it runs) — the order of operators/text.py's
     ``_text_tokens`` and ``normalize``."""
-    return f"trim(regexp_replace({col}, '\\s+', ' ', 'g'))"
+    return f"trim(regexp_replace({col}, '{WS}+', ' ', 'g'))"
 
 
 def _norm_sql(col: str = "text") -> str:
@@ -1687,14 +1688,14 @@ _TOKS_SQL = (
 WITH t AS (
   SELECT doc_id, text, {_TOKS_SQL} AS toks,
          length(text) AS nc,
-         length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS no_punct,
+         length(regexp_replace(text, '{PUNCT_RE}', '', 'g')) AS no_punct,
          length(regexp_replace(text, '[A-Z]', '', 'g')) AS no_upper
   FROM documents
 )
 SELECT doc_id,
   CAST(nc AS BIGINT) AS n_chars,
   CAST(len(toks) AS BIGINT) AS n_tokens,
-  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]+'))
+  CAST(len(regexp_extract_all(text, '{CHUNK_RE}'))
        AS BIGINT) AS n_word_chunks,
   FLOOR((nc * 1.0 / len(toks)) * 10000 + 0.5) / 10000 AS chars_per_token,
   FLOOR(((nc - no_punct) * 1.0 / nc) * 10000 + 0.5) / 10000 AS punct_ratio,
@@ -1763,7 +1764,7 @@ def doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
 WITH t AS (
   SELECT doc_id, text, {_TOKS_SQL} AS toks, length(text) AS nc,
-         length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS no_punct
+         length(regexp_replace(text, '{PUNCT_RE}', '', 'g')) AS no_punct
   FROM documents
 ),
 s AS (
@@ -2231,7 +2232,7 @@ reach AS (
 comp AS (SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id FROM reach GROUP BY u),
 qt AS (
   SELECT doc_id, {_TOKS_SQL} AS toks, length(text) AS nc,
-         length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS no_punct,
+         length(regexp_replace(text, '{PUNCT_RE}', '', 'g')) AS no_punct,
          length(regexp_replace(text, '[A-Z]', '', 'g')) AS no_upper
   FROM documents
 ),
@@ -3229,7 +3230,7 @@ WITH RECURSIVE corpus AS (SELECT * FROM documents WHERE source <> 'src0'),
 -- stage 1: quality gate (doc_quality_filter's scoring, over the corpus)
 qt AS (
   SELECT doc_id, text, {_TOKS_SQL} AS toks, length(text) AS nc,
-         length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS no_punct
+         length(regexp_replace(text, '{PUNCT_RE}', '', 'g')) AS no_punct
   FROM corpus
 ),
 qs AS (
@@ -3619,7 +3620,7 @@ def doc_training_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
 WITH t AS (
   SELECT doc_id, text, {_TOKS_SQL} AS toks, length(text) AS nc,
-         length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS no_punct,
+         length(regexp_replace(text, '{PUNCT_RE}', '', 'g')) AS no_punct,
          length(regexp_replace(text, '[A-Z]', '', 'g')) AS no_upper
   FROM documents
 ),
@@ -4860,7 +4861,7 @@ def user_event_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
 WITH t AS (
   SELECT doc_id, source, text, {_TOKS_SQL} AS toks, length(text) AS nc,
-         length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS no_punct
+         length(regexp_replace(text, '{PUNCT_RE}', '', 'g')) AS no_punct
   FROM documents
 ),
 s AS (
@@ -6535,7 +6536,7 @@ keptl AS (
   SELECT doc_id, real_lines, full_lower,
     list_filter(real_lines, l ->
       regexp_matches(trim(l), '[.!?"'']$')
-      AND len(string_split_regex(trim(l), '\\s+')) >= 3
+      AND len(string_split_regex(trim(l), '{WS}+')) >= 3
       AND NOT contains(lower(l), 'javascript')) AS kept_lines
   FROM scored
 )
@@ -7088,7 +7089,7 @@ def doc_lm_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FUNNEL_QUALITY_HEAD_SQL = f"""corpus AS (SELECT * FROM documents WHERE source <> 'src0'),
 qt AS (
   SELECT doc_id, text, {_TOKS_SQL} AS toks, length(text) AS nc,
-         length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS no_punct
+         length(regexp_replace(text, '{PUNCT_RE}', '', 'g')) AS no_punct
   FROM corpus
 ),
 qs AS (
@@ -7518,7 +7519,7 @@ def _bpe_ctes(n_rounds: int) -> str:
     left == right, where greedy takes every other match in a run)."""
     ctes = [
         "wd AS (SELECT unnest(regexp_extract_all(lower(text),"
-        f" '{_CHUNK_RE_SQL}')) AS word FROM documents)",
+        f" '{CHUNK_RE}')) AS word FROM documents)",
         "w0 AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS freq,"
         " [word[i] for i in generate_series(1, length(word))] AS syms"
         " FROM wd GROUP BY word)",
@@ -7567,11 +7568,6 @@ def _bpe_rewrite_cte(out: str, prev: str, best: str, carry: str) -> str:
     )
 
 
-# the CHUNK_RE classes are disjoint, so Java regex (Spark) and RE2
-# (DuckDB) produce identical matches — the text.py contract
-_CHUNK_RE_SQL = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"
-
-
 @_q(
     "doc_bpe_vocab",
     "WITH "
@@ -7611,7 +7607,7 @@ def doc_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     + _bpe_ctes(_BPE_N_MERGES)
     + f""",
 smp AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '{_CHUNK_RE_SQL}') AS cks
+  SELECT doc_id, regexp_extract_all(lower(text), '{CHUNK_RE}') AS cks
   FROM documents WHERE doc_id % 11 = 0
 ),
 tk AS (
@@ -7660,12 +7656,12 @@ def doc_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 smp AS (
   SELECT doc_id,
          CASE WHEN doc_id % 26 = 0
-              THEN regexp_replace(lower(text), '\\s+', '', 'g')
+              THEN regexp_replace(lower(text), '{WS}+', '', 'g')
               ELSE lower(text) END AS stext
   FROM documents WHERE doc_id % 13 = 0
 ),
 ck AS (
-  SELECT doc_id, regexp_extract_all(stext, '{_CHUNK_RE_SQL}') AS cks FROM smp
+  SELECT doc_id, regexp_extract_all(stext, '{CHUNK_RE}') AS cks FROM smp
 ),
 tk AS (
   SELECT doc_id, pos, word FROM (
@@ -7714,7 +7710,7 @@ def doc_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.when(
             F.col("doc_id") % 26 == 0,
-            F.regexp_replace(F.col("text"), r"\s+", ""),
+            F.regexp_replace(F.col("text"), WS + "+", ""),
         )
         .otherwise(F.col("text"))
         .alias("text"),
@@ -7729,7 +7725,7 @@ def doc_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     + f""",
 cw AS (
   SELECT doc_id,
-         unnest(regexp_extract_all(lower(text), '{_CHUNK_RE_SQL}')) AS word
+         unnest(regexp_extract_all(lower(text), '{CHUNK_RE}')) AS word
   FROM documents
 ),
 cnt AS (
@@ -7797,7 +7793,7 @@ def doc_bpe_greedy_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     + _bpe_ctes(_BPE_N_MERGES)
     + f""",
 ck AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '{_CHUNK_RE_SQL}') AS cks
+  SELECT doc_id, regexp_extract_all(lower(text), '{CHUNK_RE}') AS cks
   FROM documents
 ),
 tk AS (SELECT doc_id, unnest(cks) AS word FROM ck),
@@ -7817,9 +7813,9 @@ FROM lt),
 lg AS (SELECT doc_id, {_GUESS_CASE} AS lang_guess FROM ls),
 base AS (
   SELECT d.doc_id, lg.lang_guess,
-         CAST(len(regexp_extract_all(lower(d.text), '{_CHUNK_RE_SQL}'))
+         CAST(len(regexp_extract_all(lower(d.text), '{CHUNK_RE}'))
               AS BIGINT) AS n_words,
-         CAST(length(regexp_replace(d.text, '\\s+', '', 'g'))
+         CAST(length(regexp_replace(d.text, '{WS}+', '', 'g'))
               AS BIGINT) AS n_chars,
          COALESCE(e.n_tokens, CAST(0 AS BIGINT)) AS n_tokens
   FROM documents d
@@ -7857,7 +7853,7 @@ def bpe_tokenizer_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lang-id) and shuffled only by doc_id for the joins; the final
     aggregate is a tiny (≤ 6-language) hash agg."""
     from mini_feature_store_spark.operators.bpe import bpe_encode, bpe_train
-    from mini_feature_store_spark.operators.text import CHUNK_RE, lang_id
+    from mini_feature_store_spark.operators.text import lang_id
 
     _utc(spark)
     docs = load_testdata(spark, sf_dir, "documents")["documents"]
@@ -7877,7 +7873,7 @@ def bpe_tokenizer_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("long")
             .alias("n_words"),
-            F.length(F.regexp_replace(F.col("text"), r"\s+", ""))
+            F.length(F.regexp_replace(F.col("text"), WS + "+", ""))
             .cast("long")
             .alias("n_chars"),
         )
@@ -7905,7 +7901,7 @@ def bpe_tokenizer_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     + _bpe_ctes(_BPE_N_MERGES)
     + f""",
 ck AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '{_CHUNK_RE_SQL}') AS cks
+  SELECT doc_id, regexp_extract_all(lower(text), '{CHUNK_RE}') AS cks
   FROM documents
 ),
 tk AS (SELECT doc_id, unnest(cks) AS word FROM ck),
@@ -7997,7 +7993,7 @@ WITH RECURSIVE {_DOC_URL_SQL.strip()},
 {_URL_CANON_SQL.strip()},
 tok AS MATERIALIZED (
   SELECT doc_id,
-         CAST(COALESCE(len(regexp_extract_all(text, '{_CHUNK_RE_SQL}')), 0)
+         CAST(COALESCE(len(regexp_extract_all(text, '{CHUNK_RE}')), 0)
               AS BIGINT) AS n_tokens
   FROM documents
 ),
@@ -8224,7 +8220,7 @@ def _unigram_dp_ctes(
 _UNI_TRAIN_SQL = (
     f"""wt AS MATERIALIZED (
   SELECT word, CAST(COUNT(*) AS BIGINT) AS freq FROM (
-    SELECT unnest(regexp_extract_all(lower(text), '{_CHUNK_RE_SQL}')) AS word
+    SELECT unnest(regexp_extract_all(lower(text), '{CHUNK_RE}')) AS word
     FROM documents) GROUP BY word
 ),
 pc0 AS MATERIALIZED (
@@ -8298,7 +8294,7 @@ def doc_unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     + _UNI_TRAIN_SQL
     + f""",
 smp AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '{_CHUNK_RE_SQL}') AS cks
+  SELECT doc_id, regexp_extract_all(lower(text), '{CHUNK_RE}') AS cks
   FROM documents WHERE doc_id % 11 = 0
 ),
 tk AS MATERIALIZED (
@@ -8386,7 +8382,7 @@ def doc_unigram_vocab_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     + _UNI_TRAIN_SQL
     + f""",
 ck AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '{_CHUNK_RE_SQL}') AS cks
+  SELECT doc_id, regexp_extract_all(lower(text), '{CHUNK_RE}') AS cks
   FROM documents
 ),
 tk2 AS (SELECT doc_id, unnest(cks) AS word FROM ck),
@@ -8409,9 +8405,9 @@ encu AS (
 ),
 cbase AS (
   SELECT doc_id,
-         CAST(len(regexp_extract_all(lower(text), '{_CHUNK_RE_SQL}'))
+         CAST(len(regexp_extract_all(lower(text), '{CHUNK_RE}'))
               AS BIGINT) AS n_words,
-         CAST(length(regexp_replace(text, '\\s+', '', 'g'))
+         CAST(length(regexp_replace(text, '{WS}+', '', 'g'))
               AS BIGINT) AS n_chars
   FROM documents
 )
@@ -8454,7 +8450,6 @@ def tokenizer_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the heaviest composed oracle in the registry, and the reason the
     two tokenizer tiers share one chunk convention."""
     from mini_feature_store_spark.operators.bpe import (
-        CHUNK_RE,
         bpe_encode,
         bpe_train,
         word_table,
@@ -8497,7 +8492,7 @@ def tokenizer_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("n_words"),
-        F.length(F.regexp_replace(F.col("text"), r"\s+", ""))
+        F.length(F.regexp_replace(F.col("text"), WS + "+", ""))
         .cast("long")
         .alias("n_chars"),
     )
@@ -8809,7 +8804,7 @@ sel AS MATERIALIZED (
 {_URL_CANON_SQL.strip()},
 tok AS MATERIALIZED (
   SELECT doc_id,
-         CAST(COALESCE(len(regexp_extract_all(text, '{_CHUNK_RE_SQL}')), 0)
+         CAST(COALESCE(len(regexp_extract_all(text, '{CHUNK_RE}')), 0)
               AS BIGINT) AS n_tokens
   FROM documents
 ),
@@ -9039,7 +9034,7 @@ lmsc AS (
 ),
 qt AS (
   SELECT doc_id, text, {_TOKS_SQL} AS toks, length(text) AS nc,
-         length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS no_punct,
+         length(regexp_replace(text, '{PUNCT_RE}', '', 'g')) AS no_punct,
          length(regexp_replace(text, '[A-Z]', '', 'g')) AS no_upper
   FROM documents WHERE source <> 'src0'
 ),
@@ -9076,7 +9071,7 @@ dst AS (
 {_URL_CANON_SQL.strip()},
 tok AS MATERIALIZED (
   SELECT doc_id,
-         CAST(COALESCE(len(regexp_extract_all(text, '{_CHUNK_RE_SQL}')), 0)
+         CAST(COALESCE(len(regexp_extract_all(text, '{CHUNK_RE}')), 0)
               AS BIGINT) AS n_tokens
   FROM documents
 ),
@@ -9462,7 +9457,7 @@ def corpus_selection_manifest_ensemble_approx(
     f"""
 WITH tok AS (
   SELECT doc_id, source,
-         CAST(COALESCE(len(regexp_extract_all(text, '{_CHUNK_RE_SQL}')), 0)
+         CAST(COALESCE(len(regexp_extract_all(text, '{CHUNK_RE}')), 0)
               AS BIGINT) AS n_tokens
   FROM documents
 ),
@@ -9842,7 +9837,7 @@ def doc_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
 WITH t AS (
   SELECT doc_id, text, {_TOKS_SQL} AS toks, length(text) AS nc,
-         length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS no_punct,
+         length(regexp_replace(text, '{PUNCT_RE}', '', 'g')) AS no_punct,
          length(regexp_replace(text, '[A-Z]', '', 'g')) AS no_upper
   FROM documents
 ),
@@ -9943,7 +9938,7 @@ WITH t AS (
   SELECT doc_id, text,
          regexp_split_to_array({_norm_sql()}, ' ') AS toks,
          length(text) AS nc,
-         length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS no_punct,
+         length(regexp_replace(text, '{PUNCT_RE}', '', 'g')) AS no_punct,
          length(regexp_replace(text, '[A-Z]', '', 'g')) AS no_upper
   FROM documents
 ),
@@ -10033,7 +10028,7 @@ _AGREE_FRAG, _AGREE_J = _ngram_lm_fragment(2, "refd", "scd", "Q")
 WITH docs0 AS (
   SELECT doc_id, source, text, {_TOKS_SQL} AS toks,
          length(text) AS nc,
-         length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS no_punct,
+         length(regexp_replace(text, '{PUNCT_RE}', '', 'g')) AS no_punct,
          length(regexp_replace(text, '[A-Z]', '', 'g')) AS no_upper
   FROM documents
 ),

@@ -52,6 +52,8 @@ def get_spark(
     master = master or os.environ.get("SPARK_MASTER") or f"local[{os.cpu_count() or 4}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap = f"{min(ram // 2, 16 << 30) >> 20}m"
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -63,8 +65,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Local mode runs every executor thread in the driver JVM; with 32
-        # task slots 8g thrashes GC on the wide aggregates. Env-overridable.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        # task slots 8g thrashes GC on the wide aggregates. Half the host's
+        # RAM, at most 16g, leaves room for a second JVM. Env-overridable.
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or heap)
         # ns-precision parquet timestamps (testdata events.ts) truncate to µs.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")

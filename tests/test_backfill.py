@@ -123,6 +123,29 @@ def test_events_before_start_are_visible(spark, form):
     assert out[("u1", "2024-01-07")] == (2, 2, 1, "2")
 
 
+@pytest.mark.parametrize("form", FORMS, ids=["join", "window"])
+def test_null_user_gets_zero_rows(spark, form):
+    """A null user_id is one grid user whose events match nothing (the
+    join form's equi join never matches null): one zero row per day, no
+    duplicate day, and the other users' rows are untouched."""
+    events = _events(
+        spark,
+        [
+            ("a", "click", "2024-01-02 10:00:00"),
+            (None, "view", "2024-01-02 11:00:00"),
+            (None, "click", "2023-12-30 12:00:00"),
+        ],
+    )
+    df = form(events, "2024-01-01", "2024-01-03")
+    assert df.count() == 6
+    out = _rows(df)
+    for d in ("2024-01-01", "2024-01-02", "2024-01-03"):
+        assert out[(None, d)] == (0, 0, None, "0")
+    assert out[("a", "2024-01-01")] == (0, 0, None, "0")
+    assert out[("a", "2024-01-02")] == (1, 1, 0, "1")
+    assert out[("a", "2024-01-03")] == (1, 1, 1, "1")
+
+
 def test_forms_agree_on_testdata(spark, sf_dir):
     """Property: join form ≡ window form on the real events table."""
     from mini_feature_store_spark.io import load_testdata

@@ -100,6 +100,57 @@ def test_incremental_backfill_extends_range(spark, tmp_path, events_path):
     assert inc_rows == full_rows
 
 
+def _jobs_of(spark, group: str, fn) -> int:
+    """Spark jobs ``fn`` runs, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_backfill_job_ceilings(spark, tmp_path, events_path):
+    """Job ceilings of the backfill and the daily refresh: the full
+    backfill and a one-day incremental append run at most 7 jobs each
+    (schema inference, then the feature plan's query stages); finding
+    the present days reads directory names, so an already-current run
+    and a run refused for its layout run none."""
+    from mini_feature_store_spark.pipelines import run_backfill_incremental
+
+    table = str(tmp_path / "features")
+    full = BackfillConfig(events_path, table, "2024-01-01", "2024-01-04")
+    assert _jobs_of(spark, "bf-full", lambda: run_backfill(spark, full)) <= 7
+    one_day = BackfillConfig(events_path, table, "2024-01-01", "2024-01-05")
+    assert (
+        _jobs_of(spark, "bf-incr", lambda: run_backfill_incremental(spark, one_day))
+        <= 7
+    )
+    assert VersionedTable(table).partition_values("day") == {
+        f"2024-01-0{d}" for d in range(1, 6)
+    }
+    assert (
+        _jobs_of(spark, "bf-current", lambda: run_backfill_incremental(spark, one_day))
+        == 0
+    )
+
+    flat = str(tmp_path / "flat")
+    run_backfill(
+        spark,
+        BackfillConfig(events_path, flat, "2024-01-01", "2024-01-04", partition_by=()),
+    )
+
+    def refused():
+        with pytest.raises(ValueError, match="not by 'day'"):
+            run_backfill_incremental(
+                spark, BackfillConfig(events_path, flat, "2024-01-01", "2024-01-05")
+            )
+
+    assert _jobs_of(spark, "bf-flat", refused) == 0
+    assert len(VersionedTable(flat).versions()) == 1
+
+
 def test_online_offline_diff_detects_drift(spark, tmp_path, events_path):
     from mini_feature_store_spark.pipelines import online_offline_diff
 

@@ -202,13 +202,14 @@ def test_raw_text_tokens_match_the_duckdb_mirrors(spark, tmp_path, query):
         "\tthe cat sat on the mat",
         " Der Hund\t und die  Katze\r\n",
         "\n\tle chat et la souris \t",
+        "a\x0bb",
     ]
     pd.DataFrame(
         {
             "doc_id": range(len(texts)),
             "text": texts,
             "lang": "en",
-            "source": ["a", "b", "a", "b"],
+            "source": ["a", "b", "a", "b", "a"],
             "n_chars": [len(t) for t in texts],
         }
     ).to_parquet(tmp_path / "documents.parquet")

@@ -21,11 +21,11 @@ SF_DIR = "/root/testdata/sf0.01"
 #: query → the plan properties a reviewer should check (rendered as notes)
 AUDITED: dict[str, str] = {
     "features_daily": (
-        "ONE daily aggregate (full-outer densify — no duplicated agg "
-        "subtrees), one hash exchange on user_id feeding every range-frame "
+        "ONE daily aggregate, densified by a tagged UNION with the grid "
+        "(no join, no broadcast: each distinct user explodes its own day "
+        "sequence), one hash exchange on user_id feeding every range-frame "
         "window; the distinct-types rolling count is bit_or/bit_count over "
-        "a 64-bit dictionary mask (no per-row collections). The grid cross "
-        "join broadcasts the date side."
+        "a 64-bit dictionary mask (no per-row collections)."
     ),
     "features_daily_typed": (
         "Map-valued feature view (r9): TWO-LEVEL daily pre-aggregate "
@@ -33,8 +33,8 @@ AUDITED: dict[str, str] = {
         "before the user_id window exchange; the rolling map is an "
         "aggregate/map_zip_with fold over the <=31 daily maps the "
         "range frame exposes — per-row cost bounded by window length x "
-        "type cardinality, never raw event volume. Same full-outer "
-        "densify + broadcast date grid as features_daily; the gate row "
+        "type cardinality, never raw event volume. Same union densify "
+        "+ per-user day grid as features_daily; the gate row "
         "serializes the map as sorted type:count pairs (maps can't "
         "hash in the driver compare)."
     ),
@@ -822,8 +822,8 @@ AUDITED: dict[str, str] = {
         "add one exchange (as in pit_training_data), and the gate-row "
         "map serialization (sorted type:count pairs) is a post-join "
         "projection. In-suite ~2.6s is the typed per-row map-fold "
-        "payload documented at features_daily_typed (2 scans / 6 "
-        "exchanges — fewer than the string form; don't chase)."
+        "payload documented at features_daily_typed (2 scans / 4 "
+        "exchanges — no more than the string form; don't chase)."
     ),
     "corpus_curation_funnel": (
         "The composed curation funnel, tagged two-pass form (r10 — the "
