@@ -27,6 +27,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import json
 import os
@@ -34,7 +35,7 @@ import shutil
 import time
 import urllib.parse
 import uuid
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterator, Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -91,10 +92,13 @@ class VersionedTable:
 
         ``os.mkdir`` claims ``v=N``, so of two writers that read the same
         manifest one commits and the other raises ``FileExistsError``; a
-        failed commit removes its directory.
+        failed commit removes its directory. The entry is appended to the
+        manifest re-read after the data write, still under the claim, so a
+        ``vacuum()`` or ``analyze()`` that ran meanwhile is kept; a claim
+        that the manifest has since passed (its ``v=N`` was vacuumed)
+        raises ``FileExistsError`` too.
         """
-        manifest = self._load_manifest()
-        commits = manifest["versions"]
+        commits = self._load_manifest()["versions"]
         version = max((c["version"] for c in commits), default=-1) + 1
         vdir = self._version_dir(version)
         os.makedirs(self.path, exist_ok=True)
@@ -123,10 +127,13 @@ class VersionedTable:
                             os.link(src, dst)
                         except OSError:  # cross-device etc. — copy, still correct
                             shutil.copy2(src, dst)
+            manifest = self._load_manifest()
+            if any(c["version"] >= version for c in manifest["versions"]):
+                raise FileExistsError(f"version {version} is already committed")
         except BaseException:
             shutil.rmtree(vdir, ignore_errors=True)
             raise
-        commits.append(
+        manifest["versions"].append(
             {
                 "version": version,
                 "timestamp": time.time(),
@@ -136,6 +143,20 @@ class VersionedTable:
         )
         self._commit(manifest)
         return version
+
+    @contextlib.contextmanager
+    def _claimed_manifest(self) -> Iterator[dict]:
+        """The manifest, read while holding ``os.mkdir`` of the next
+        version's directory — the claim every commit takes — for a
+        read-modify-write that no commit can interleave. Raises
+        ``FileExistsError`` while a writer holds that claim."""
+        commits = self._load_manifest()["versions"]
+        vdir = self._version_dir(max((c["version"] for c in commits), default=-1) + 1)
+        os.mkdir(vdir)
+        try:
+            yield self._load_manifest()
+        finally:
+            os.rmdir(vdir)
 
     def _latest(self) -> dict:
         commits = self.versions()
@@ -317,10 +338,10 @@ class VersionedTable:
         columns — a single-pass collect_set over those would buffer the
         full O(NDV) domain per column before the cap could be applied.
 
-        Downstream use: join-size estimation, and the catalog-stats path of
-        the rolling backfill's distinct-types bitmask
-        (``BackfillConfig.known_event_types = stats['columns']
-        ['event_type']['values']`` — a pure literal plan, no type-dim scan).
+        Downstream use: join-size estimation and small-domain lookups
+        (``stats['columns']['event_type']['values']``) without a scan.
+        Recording the stats raises ``FileExistsError`` while a commit is
+        in flight.
         """
         version = self._latest()["version"]
         df = self.read(spark, version=version)
@@ -371,11 +392,11 @@ class VersionedTable:
             }
         # recorded on the version read: a commit that landed meanwhile
         # must not inherit these stats
-        manifest = self._load_manifest()
-        for c in manifest["versions"]:
-            if c["version"] == version:
-                c["stats"] = stats
-        self._commit(manifest)
+        with self._claimed_manifest() as manifest:
+            for c in manifest["versions"]:
+                if c["version"] == version:
+                    c["stats"] = stats
+            self._commit(manifest)
         return stats
 
     def stats(self) -> dict | None:
@@ -427,16 +448,17 @@ class VersionedTable:
         )
 
     def vacuum(self, keep_last: int = 2) -> list[int]:
-        """Drop all but the last ``keep_last`` versions; returns dropped ids."""
+        """Drop all but the last ``keep_last`` versions; returns dropped ids.
+        Raises ``FileExistsError`` while a commit is in flight."""
         if keep_last < 1:
             # keep_last=0 would make versions[-0:] keep everything while the
             # drop list also covers everything — manifest and disk diverge.
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-        manifest = self._load_manifest()
-        keep = manifest["versions"][-keep_last:]
-        drop = manifest["versions"][:-keep_last]
-        for c in drop:
-            shutil.rmtree(self._version_dir(c["version"]), ignore_errors=True)
-        manifest["versions"] = keep
-        self._commit(manifest)
+        with self._claimed_manifest() as manifest:
+            keep = manifest["versions"][-keep_last:]
+            drop = manifest["versions"][:-keep_last]
+            for c in drop:
+                shutil.rmtree(self._version_dir(c["version"]), ignore_errors=True)
+            manifest["versions"] = keep
+            self._commit(manifest)
         return [c["version"] for c in drop]

@@ -633,11 +633,10 @@ def bpe_encode(
     the deepest merges its characters admit, never a blind char split).
 
     The merge table is collected driver-side (bounded: one row per
-    learned merge — the same class as IVF centroids / the limit(65)
-    type contract) and replayed over the DISTINCT chunk set of the
-    input, which then joins back to chunk positions — so the per-chunk
-    replay cost is paid once per distinct word, not once per
-    occurrence. Two replay strategies, pinned equal by
+    learned merge — the same class as IVF centroids) and replayed over
+    the DISTINCT chunk set of the input, which then joins back to chunk
+    positions — so the per-chunk replay cost is paid once per distinct
+    word, not once per occurrence. Two replay strategies, pinned equal by
     ``tests/test_bpe.py``:
 
     - ``"fold"`` — compile one greedy ``F.aggregate`` fold per merge

@@ -20,13 +20,14 @@ Two physical formulations, asserted equal in tests:
    makes it the wrong plan at 100 TB.
 
 2. ``backfill_features_window_form`` — the scale plan (SURVEY.md §4.4):
-   pre-aggregate one row per (user, day-with-events) — the map-side-combinable
-   shuffle — densify by a UNION with the per-user day grid (no join, no
-   broadcast), then compute every rolling stat with ``rangeBetween`` window
-   frames over day numbers. ONE shuffle by user_id replaces the 31× fanout
-   join, and the per-user partition is the only sort. Skew note: a celebrity
-   user is one partition's worth of *daily* rows (≤ range length + 30), not
-   raw events — bounded by design.
+   pre-aggregate one row per (user, day-with-events) carrying the day's
+   event count and type set — the map-side-combinable shuffle — densify by
+   a UNION with the per-user day grid (no join, no broadcast), then compute
+   every rolling stat with ``rangeBetween`` window frames over day numbers.
+   ONE shuffle by user_id replaces the 31× fanout join, and the per-user
+   partition is the only sort. Skew note: a celebrity user is one
+   partition's worth of *daily* rows (≤ range length + 30), not raw events
+   — bounded by design.
 """
 
 from __future__ import annotations
@@ -181,8 +182,6 @@ def backfill_features_window_form(
     user_col: str = "user_id",
     ts_col: str = "ts",
     type_col: str = "event_type",
-    distinct_types_strategy: str = "bitmask",
-    known_types: list[str] | None = None,
 ) -> DataFrame:
     """Scale plan: daily pre-aggregation + range-frame windows (SURVEY.md §4.4).
 
@@ -190,105 +189,29 @@ def backfill_features_window_form(
     the daily pre-agg keeps [start-30, end] and the densify keeps only the
     [start, end] grid rows afterwards.
 
-    ``distinct_types_strategy`` picks the distinct-types-over-window
-    representation; every choice builds the plan LAZILY (zero Spark jobs until
-    an action — building a 100 TB plan must not trigger a corpus scan):
-
-    - ``"bitmask"`` (default): each type gets a bit in a 64-bit mask — daily
-      pre-agg is ``bit_or``, rolling window is ``bit_or``, count is
-      ``bit_count``; all codegen'd, 8 bytes/row regardless of window length.
-      Bit positions come from ``known_types`` when the caller has catalog
-      stats (pure literal map, no extra scan), else from a lazy broadcast dim
-      built by a tiny map-side-combined distinct on the type column.
-      Fails fast via ``raise_error`` if >64 types show up at runtime.
-    - ``"collect_set"``: exact for unbounded type cardinality, but carries the
-      whole window's set per row — memory grows with window × cardinality,
-      which does not survive 100 TB. Opt-in fallback, and the only path
-      for more than 64 types.
+    Distinct types (SURVEY §4.4, §7.4): the daily pre-agg carries each day's
+    ``collect_set`` of types next to ``n_events``, and the 30-day frame
+    flattens its ≤31 daily sets and counts the distinct entries. Exact for
+    any type cardinality; a row holds at most 31 days × types strings, the
+    bound ``backfill_features_typed`` accepts too. The plan is lazy: no
+    Spark job runs until an action.
     """
-    if distinct_types_strategy not in ("bitmask", "collect_set"):
-        raise ValueError(
-            f"unknown distinct_types_strategy: {distinct_types_strategy!r}"
-        )
-
     ev = _events_in_lookback(events, start, end, user_col, ts_col, type_col)
-
-    if distinct_types_strategy == "bitmask":
-        if known_types is not None:
-            if len(known_types) > 64:
-                raise ValueError(
-                    "bitmask strategy supports at most 64 types; "
-                    "use distinct_types_strategy='collect_set'"
-                )
-            # literal type → single-bit-mask map; lookup is one codegen'd
-            # map access (bit positions assigned on the driver from stats)
-            mask_map = F.create_map(
-                *[
-                    c
-                    for i, t in enumerate(sorted(known_types))
-                    for c in (F.lit(t), F.lit(1 << i).cast("long"))
-                ]
-            )
-            # A type outside known_types must fail loudly, not vanish from
-            # the distinct count (bit_or skips NULLs).
-            type_bit = F.coalesce(
-                mask_map[F.col("event_type")],
-                F.expr(
-                    "raise_error(concat('event type not in known_types: ',"
-                    " event_type))"
-                ).cast("long"),
-            )
-            ev_with_bit = ev.withColumn("type_bit", type_bit)
-        else:
-            # Lazy bit assignment: a map-side-combined distinct on the type
-            # column (|types| rows shuffled), bit positions by alphabetical
-            # rank, broadcast back; no job runs until an action. limit(65)
-            # makes the ≤64-types contract plan-visible (a GlobalLimit-capped
-            # broadcast, auditable by plan_walk.broadcast_hint_sites): types
-            # past the 64th — cut from the dim or not — reach raise_error in
-            # the CASE below instead of wrapping shiftleft mod 64.
-            types_dim = (
-                ev.select("event_type")
-                .distinct()
-                .withColumn(
-                    "type_bit_pos",
-                    F.row_number().over(Window.orderBy("event_type")) - 1,
-                )
-                .limit(65)
-            )
-            ev_with_bit = ev.join(
-                F.broadcast(types_dim), "event_type", "left"
-            ).withColumn(
-                "type_bit",
-                F.expr(
-                    "CASE WHEN type_bit_pos < 64 THEN"
-                    " shiftleft(1L, CAST(type_bit_pos AS INT))"
-                    " ELSE raise_error('more than 64 distinct event types;"
-                    " use distinct_types_strategy=collect_set') END"
-                ),
-            )
-        daily = ev_with_bit.groupBy("user_id", "day").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.bit_or("type_bit").alias("type_mask"),
-        )
-        distinct_types = lambda w30: F.coalesce(  # noqa: E731
-            F.bit_count(F.bit_or("type_mask").over(w30)), F.lit(0)
-        )
-    else:
-        daily = ev.groupBy("user_id", "day").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.collect_set("event_type").alias("types"),
-        )
-        distinct_types = lambda w30: F.size(  # noqa: E731
-            F.array_distinct(F.flatten(F.collect_list("types").over(w30)))
-        )
+    daily = ev.groupBy("user_id", "day").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.collect_set("event_type").alias("types"),
+    )
+    # collect_list skips the grid rows' null sets, so an eventless window
+    # flattens to an empty array and counts 0.
     return _densify_and_frames(
         events,
         daily,
         start,
         end,
         user_col,
-        lambda w30: distinct_types(w30).cast("long").cast("string"),
+        lambda w30: F.size(
+            F.array_distinct(F.flatten(F.collect_list("types").over(w30)))
+        ).cast("string"),
     )
 
 

@@ -1419,14 +1419,16 @@ def line_filter(
     prunes the scan to (id, text).
     """
     lines = F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
-    # split('') yields [''] — strip blank-only entries from the line count
-    # so an empty page has 0 lines, not 1
-    real_lines = F.filter(lines, lambda l: F.trim(l) != "")
+    # Each line is tested collapsed, then trimmed: Spark's ``trim`` strips
+    # only U+0020, so a tab-only line would count and a leading tab would
+    # split off an empty word. split('') yields [''] — blank-only entries
+    # leave the line count, so an empty page has 0 lines, not 1.
+    real_lines = F.filter(lines, lambda l: F.trim(_collapse(l)) != "")
 
     def _line_ok(l: Column) -> Column:
-        cond = (
-            F.trim(l).rlike(TERMINAL_PUNCT_RE)
-            & (F.size(F.split(F.trim(l), WS + "+")) >= min_words)
+        t = F.trim(_collapse(l))
+        cond = t.rlike(TERMINAL_PUNCT_RE) & (
+            F.size(F.split(t, WS + "+")) >= min_words
         )
         for term in banned_line_terms:
             cond = cond & ~F.lower(l).contains(term.lower())

@@ -31,12 +31,6 @@ class BackfillConfig:
     ts_col: str = "ts"
     type_col: str = "event_type"
     partition_by: tuple[str, ...] = ("day",)
-    #: Catalog-stats path for the distinct-types bitmask (VERDICT r2 item 4):
-    #: when the event-type domain is known (e.g. from VersionedTable.analyze
-    #: stats or a registry), bit positions are a pure literal map — the plan
-    #: needs no type-dim scan at all. None = lazy broadcast dim (still zero
-    #: plan-build jobs).
-    known_event_types: list[str] | None = None
     #: when set, the computed features are ALSO persisted as a bucketed
     #: managed table of this name (io/sinks.py:write_bucketed_table —
     #: bucketBy(buckets, user_col) + sortBy(user_col)): the feature-store
@@ -91,7 +85,6 @@ def run_backfill_incremental(
             user_col=cfg.user_col,
             ts_col=cfg.ts_col,
             type_col=cfg.type_col,
-            known_types=cfg.known_event_types,
         )
         if len(missing) != (missing[-1] - missing[0]).days + 1:
             # Holes (a crashed run): keep only genuinely missing days.
@@ -224,7 +217,6 @@ def run_backfill(spark: SparkSession, cfg: BackfillConfig) -> DataFrame:
         user_col=cfg.user_col,
         ts_col=cfg.ts_col,
         type_col=cfg.type_col,
-        known_types=cfg.known_event_types,
     )
     vt = VersionedTable(cfg.output_table)
     vt.write(features, partition_by=cfg.partition_by)

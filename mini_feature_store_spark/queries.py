@@ -6528,15 +6528,15 @@ synth AS (
 ),
 scored AS (
   SELECT doc_id,
-    list_filter(lines, l -> trim(l) <> '') AS real_lines,
+    list_filter(lines, l -> {_collapse_sql("l")} <> '') AS real_lines,
     lower(array_to_string(lines, chr(10))) AS full_lower
   FROM synth
 ),
 keptl AS (
   SELECT doc_id, real_lines, full_lower,
     list_filter(real_lines, l ->
-      regexp_matches(trim(l), '[.!?"'']$')
-      AND len(string_split_regex(trim(l), '{WS}+')) >= 3
+      regexp_matches({_collapse_sql("l")}, '[.!?"'']$')
+      AND len(string_split_regex({_collapse_sql("l")}, '{WS}+')) >= 3
       AND NOT contains(lower(l), 'javascript')) AS kept_lines
   FROM scored
 )

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import SparkSession
@@ -27,3 +28,41 @@ def spark() -> SparkSession:
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return os.environ["SPARK_GRAFT_SF_DIR"]
+
+
+class _RegistryBuilds(dict):
+    """Query name -> its build; a query whose build raised re-raises here,
+    so only the checks that read it fail."""
+
+    def __getitem__(self, name: str) -> SimpleNamespace:
+        build = super().__getitem__(name)
+        if isinstance(build, Exception):
+            raise build
+        return build
+
+
+@pytest.fixture(scope="session")
+def registry_builds(spark, sf_dir) -> _RegistryBuilds:
+    """Every registered query's plan, built once per session on a clean
+    cache manager: its broadcast hint sites, its output schema, and
+    whether the build left a cache entry behind (cleared after each
+    build). Building every plan takes over a minute, so the registry-wide
+    lints share this one pass instead of each building them all."""
+    from mini_feature_store_spark.plan_walk import broadcast_hint_sites
+    from mini_feature_store_spark.queries import QUERIES
+
+    jcm = spark._jsparkSession.sharedState().cacheManager()
+    jcm.clearCache()
+    builds = _RegistryBuilds()
+    for name, fn in QUERIES.items():
+        try:
+            df = fn(spark, sf_dir)
+            builds[name] = SimpleNamespace(
+                sites=broadcast_hint_sites(df),
+                schema=df.schema,
+                left_cache=not jcm.isEmpty(),
+            )
+        except Exception as e:
+            builds[name] = e
+        jcm.clearCache()
+    return builds

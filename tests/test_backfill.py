@@ -162,8 +162,7 @@ def test_forms_agree_on_testdata(spark, sf_dir):
 def test_window_form_plan_build_runs_zero_jobs(spark):
     """Building the window-form plan must not trigger any Spark job
     (VERDICT r2 item 4): at 100 TB an eager probe is an extra full pass
-    over the corpus before the real job even starts. Callers that know
-    their types pass ``known_types`` instead of an eager distinct."""
+    over the corpus before the real job even starts."""
     events = _events(
         spark,
         [
@@ -180,50 +179,19 @@ def test_window_form_plan_build_runs_zero_jobs(spark):
     assert _rows(df)[("user1", "2024-01-03")] == (2, 2, 0, "2")
 
 
-def test_window_form_known_types_and_probe_agree(spark):
-    """The lazy bitmask (type bits from a broadcast distinct), the
-    ``known_types`` literal map and ``collect_set`` give equal rows."""
+@pytest.mark.parametrize("form", FORMS, ids=["join", "window"])
+def test_more_than_64_types_in_one_window(spark, form):
+    """70 distinct types for one user inside one 30-day window count 70:
+    the distinct-types count has no type ceiling."""
     events = _events(
         spark,
         [
-            ("u1", "click", "2024-01-01 10:00:00"),
-            ("u1", "purchase", "2024-01-02 11:00:00"),
-            ("u2", "click", "2024-01-02 12:00:00"),
+            ("u1", f"type{i:02d}", f"2024-01-{1 + i % 10:02d} 10:00:00")
+            for i in range(70)
         ],
     )
-    base = _rows(backfill_features_window_form(events, "2024-01-01", "2024-01-03"))
-    known = _rows(
-        backfill_features_window_form(
-            events,
-            "2024-01-01",
-            "2024-01-03",
-            known_types=["click", "purchase"],
-        )
-    )
-    cset = _rows(
-        backfill_features_window_form(
-            events,
-            "2024-01-01",
-            "2024-01-03",
-            distinct_types_strategy="collect_set",
-        )
-    )
-    assert base == known == cset
-
-
-def test_window_form_known_types_unseen_type_fails_loudly(spark):
-    """An event type missing from known_types must error, not silently
-    vanish from the distinct count."""
-    import pytest as _pytest
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors.exceptions.captured import SparkRuntimeException
-
-    events = _events(spark, [("u1", "scroll", "2024-01-01 10:00:00")])
-    df = backfill_features_window_form(
-        events, "2024-01-01", "2024-01-02", known_types=["click"]
-    )
-    with _pytest.raises((Py4JJavaError, SparkRuntimeException, Exception)):
-        df.collect()
+    out = _rows(form(events, "2024-01-10", "2024-01-10"))
+    assert out == {("u1", "2024-01-10"): (56, 70, 0, "70")}
 
 
 def test_typed_form_golden(spark):

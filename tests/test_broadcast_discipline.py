@@ -358,16 +358,14 @@ for _name, _n_sites in {
     _ALLOWLIST.setdefault(_name, []).extend([_LOCAL_CC_ENTRY] * _n_sites)
 
 
-def test_registry_wide_broadcast_hints_bounded(spark, sf_dir):
+def test_registry_wide_broadcast_hints_bounded(registry_builds):
     """Every forced-broadcast hint in every registry query must sit on a
     provably bounded relation or match a justified allowlist entry (by
     site marker, not just count — see _ALLOWLIST)."""
-    from mini_feature_store_spark.plan_walk import broadcast_hint_sites
-
     violations: list[str] = []
     matched_entries: set[tuple[str, str]] = set()
-    for name, fn in QUERIES.items():
-        sites = broadcast_hint_sites(fn(spark, sf_dir))
+    for name in QUERIES:
+        sites = registry_builds[name].sites
         allowed = list(_ALLOWLIST.get(name, []))
         for s in sites:
             if s.bounded:

@@ -487,6 +487,30 @@ def test_funnel_plan_shapes_stay_tagged(spark):
         assert exchanges <= max_exchanges, (name, exchanges)
 
 
+@pytest.mark.parametrize(
+    "name, max_jobs",
+    [
+        ("features_daily", 5),
+        ("features_daily_typed", 6),
+        ("pit_training_data", 8),
+        ("pit_training_multi", 11),
+        ("pit_training_typed", 9),
+    ],
+)
+def test_feature_view_query_job_ceilings(spark, sf_dir, name, max_jobs):
+    """Spark jobs (plan build + execution, counted by job group) of the
+    queries that reach the rolling feature views' shared densify."""
+    from mini_feature_store_spark.queries import QUERIES
+
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        QUERIES[name](spark, sf_dir).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(name)) <= max_jobs
+
+
 def test_orc_roundtrip_and_pushdown(spark, tmp_path):
     from pyspark.sql import types as T
 

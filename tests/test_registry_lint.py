@@ -18,8 +18,6 @@ from pyspark.sql import types as T
 
 from mini_feature_store_spark.queries import ORACLE, QUERIES, VERIFY_ORDER
 
-SF_DIR = "/root/testdata/sf0.001"
-
 _COMPLEX = (T.ArrayType, T.MapType, T.StructType)
 
 
@@ -111,11 +109,10 @@ def test_verify_window_freshness():
 
 
 @pytest.mark.parametrize("name", sorted(ORACLE))
-def test_oracled_output_is_scalar_only(spark, name):
-    df = QUERIES[name](spark, SF_DIR)
+def test_oracled_output_is_scalar_only(registry_builds, name):
     bad = [
         f"{f.name}: {f.dataType.simpleString()}"
-        for f in df.schema.fields
+        for f in registry_builds[name].schema.fields
         if isinstance(f.dataType, _COMPLEX)
     ]
     assert not bad, (
@@ -190,7 +187,7 @@ PLAN_BUILD_CACHE_ALLOWLIST = {
 }
 
 
-def test_registry_plans_stay_lazy(spark):
+def test_registry_plans_stay_lazy(registry_builds):
     """REGISTRY PLANS STAY LAZY (queries.py module docstring): outside the
     allowlisted operator-internal classes above, no registered callable may
     leave a CacheManager entry behind after building its (lazy) plan — a
@@ -198,15 +195,12 @@ def test_registry_plans_stay_lazy(spark):
     hides the subtree from the broadcast walker. r7 shipped exactly one
     such exception (top_supplier_revenue); this pins its removal and blocks
     the next one."""
-    jcm = spark._jsparkSession.sharedState().cacheManager()
-    jcm.clearCache()
-    offenders = []
-    for name, fn in QUERIES.items():
-        fn(spark, SF_DIR)  # build the lazy plan only — no action
-        if not jcm.isEmpty():
-            if name not in PLAN_BUILD_CACHE_ALLOWLIST:
-                offenders.append(name)
-            jcm.clearCache()
+    offenders = [
+        name
+        for name in QUERIES
+        if registry_builds[name].left_cache
+        and name not in PLAN_BUILD_CACHE_ALLOWLIST
+    ]
     assert not offenders, (
         f"registry callables persist() inside the returned plan: "
         f"{offenders}; registry plans must stay lazy — either recompute "

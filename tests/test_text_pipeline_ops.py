@@ -392,6 +392,24 @@ def test_line_filter_c4_rules(spark):
     assert line_filter(brace).collect()[0].kept is False
 
 
+def test_line_filter_tab_lines(spark):
+    """A line is tested collapsed and trimmed: a leading tab splits off no
+    empty word, so '\tfoo bar.' has two words like 'foo bar.', and a
+    tab-only line is blank and leaves the line count."""
+    from mini_feature_store_spark.operators.text import line_filter
+
+    docs = spark.createDataFrame(
+        [(1, "one two three.\n\tfoo bar.\nfoo bar.\n\t")],
+        "doc_id long, text string",
+    )
+    got = line_filter(docs, min_words=3, min_lines=1).collect()[0]
+    assert (got.n_lines, got.n_kept_lines, got.text_clean) == (
+        3,
+        1,
+        "one two three.",
+    )
+
+
 def test_bigram_lm_score_hand_case(spark):
     """Add-1 bigram NLL against a tiny reference corpus, verified by hand:
     train 'the cat sat on the mat the cat ran' -> C(the,cat)=2 C(the)=3

@@ -2,7 +2,9 @@
 
 Runs every ``__spark_entry__.queries()`` entry on Spark and its
 ``oracle_sql()`` on DuckDB over the same testdata dir, then compares
-row count + column names + an order-insensitive value multiset.
+row count + column names + an order-insensitive value multiset. Each
+line ends with ``spark_s`` (plan build + collect) and, for oracled
+queries, ``duck_s`` (oracle execute + fetch), in seconds.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -11,6 +13,7 @@ from __future__ import annotations
 
 import math
 import sys
+import time
 from collections import Counter
 from pathlib import Path
 
@@ -66,6 +69,7 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        t0 = time.perf_counter()
         sdf = fn(spark, sf_dir)
         if name in oracles:
             bad = complex_cols(sdf)
@@ -73,25 +77,32 @@ def main() -> int:
                 print(
                     f"  {name:28s} FAIL oracled output has non-scalar "
                     f"column(s) {bad} — driver's pandas canonicalizer "
-                    f"cannot hash these; serialize (array_join/md5) instead"
+                    f"cannot hash these; serialize (array_join/md5) instead "
+                    f"spark_s={time.perf_counter() - t0:.2f}"
                 )
                 failures += 1
                 continue
         srows = sdf.collect()
+        spark_s = time.perf_counter() - t0
         if name not in oracles:
             # Rows-only queries may legitimately return array/map columns
             # (the registry lint permits it); building the normalized
             # multiset here would raise on unhashable list cells, so only
             # the row count is taken for them.
-            print(f"  {name:28s} rows={len(srows):7d}  (no oracle — rows-only)")
+            print(
+                f"  {name:28s} rows={len(srows):7d}  (no oracle — rows-only) "
+                f"spark_s={spark_s:.2f}"
+            )
             continue
         scols = sorted(sdf.columns)
         spark_set = Counter(
             tuple(norm(r[c]) for c in scols) for r in srows
         )
+        t0 = time.perf_counter()
         res = con.execute(oracles[name])
         dcols_raw = [d[0] for d in res.description]
         drows = res.fetchall()
+        duck_s = time.perf_counter() - t0
         order = sorted(range(len(dcols_raw)), key=lambda i: dcols_raw[i])
         dcols = sorted(dcols_raw)
         duck_set = Counter(
@@ -103,7 +114,8 @@ def main() -> int:
         status = "OK " if (ok_cols and ok_rows and ok_vals) else "FAIL"
         print(
             f"  {name:28s} {status} rows={len(srows):7d}/{len(drows):7d} "
-            f"cols={'=' if ok_cols else f'{scols} vs {dcols}'} vals={'=' if ok_vals else 'DIFF'}"
+            f"cols={'=' if ok_cols else f'{scols} vs {dcols}'} vals={'=' if ok_vals else 'DIFF'} "
+            f"spark_s={spark_s:.2f} duck_s={duck_s:.2f}"
         )
         if not (ok_cols and ok_rows and ok_vals):
             failures += 1

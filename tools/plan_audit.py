@@ -24,8 +24,10 @@ AUDITED: dict[str, str] = {
         "ONE daily aggregate, densified by a tagged UNION with the grid "
         "(no join, no broadcast: each distinct user explodes its own day "
         "sequence), one hash exchange on user_id feeding every range-frame "
-        "window; the distinct-types rolling count is bit_or/bit_count over "
-        "a 64-bit dictionary mask (no per-row collections)."
+        "window; the daily aggregate carries each day's collect_set of "
+        "types, and the distinct-types rolling count is the size of the "
+        "flattened, de-duplicated sets in the frame (at most 31 daily "
+        "sets per row; no type dim, no broadcast)."
     ),
     "features_daily_typed": (
         "Map-valued feature view (r9): TWO-LEVEL daily pre-aggregate "
