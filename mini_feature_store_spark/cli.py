@@ -32,20 +32,6 @@ def build_parser() -> argparse.ArgumentParser:
         action="store_true",
         help="compute only days missing from the table (daily-cron mode)",
     )
-    b.add_argument(
-        "--bucket-table", default=None,
-        help="ALSO persist the features as this bucketed managed table "
-        "(bucketBy(--buckets, user_col) + sortBy) so downstream "
-        "user-keyed joins — the PIT training build via "
-        "`point-in-time-join --features-bucketed-table` — skip the "
-        "feature-side shuffle; the versioned table stays the source of "
-        "truth",
-    )
-    b.add_argument(
-        "--buckets", type=int, default=8,
-        help="bucket count for --bucket-table (match the target join "
-        "parallelism; default 8)",
-    )
 
     j = sub.add_parser(
         "point-in-time-join", help="labels + features → training data"
@@ -55,13 +41,6 @@ def build_parser() -> argparse.ArgumentParser:
     j.add_argument("--output-path", required=True)
     j.add_argument("--features-version", type=int, default=None)
     j.add_argument("--lookback-days", type=int, default=None)
-    j.add_argument(
-        "--features-bucketed-table", default=None,
-        help="read features from this bucketed managed table (written "
-        "by `backfill --bucket-table`) instead of the versioned table: "
-        "the training build then pays only the label-side shuffle; "
-        "mutually exclusive with --features-version (buckets track HEAD)",
-    )
 
     s = sub.add_parser("online-sync", help="features → online KV store")
     s.add_argument("--features-table", required=True)
@@ -69,13 +48,6 @@ def build_parser() -> argparse.ArgumentParser:
     s.add_argument("--redis-url", default=None, help="redis:// URL (needs redis pkg)")
     s.add_argument("--as-of", default=None, help="cutoff date YYYY-MM-DD")
     s.add_argument("--lookback-days", type=int, default=7)
-    s.add_argument(
-        "--features-bucketed-table", default=None,
-        help="read features from this bucketed managed table (written "
-        "by `backfill --bucket-table`): the latest-per-key collapse is "
-        "keyed on the bucket key, so the sync aggregate runs over the "
-        "buckets with no shuffle",
-    )
 
     c = sub.add_parser(
         "consistency-check", help="audit online KV store against offline table"
@@ -84,12 +56,6 @@ def build_parser() -> argparse.ArgumentParser:
     c.add_argument("--kv-dir", required=True, help="FileKVStore directory")
     c.add_argument("--key-col", default="user_id")
     c.add_argument("--order-col", default="day")
-    c.add_argument(
-        "--features-bucketed-table", default=None,
-        help="audit against this bucketed managed table instead of the "
-        "versioned table (the latest-per-key collapse reads the "
-        "buckets shuffle-free)",
-    )
 
     q = sub.add_parser(
         "dq-audit", help="data-quality gate over a parquet path (exit 1 on failure)"
@@ -140,14 +106,6 @@ def build_parser() -> argparse.ArgumentParser:
     bi.add_argument("--output-path", required=True)
     bi.add_argument("--as-of", required=True, help="cutoff date YYYY-MM-DD")
     bi.add_argument("--features-version", type=int, default=None)
-    bi.add_argument(
-        "--features-bucketed-table", default=None,
-        help="read features from this bucketed managed table (written "
-        "by `backfill --bucket-table`): the latest-per-key collapse and "
-        "the users join are both keyed on the bucket key, so the "
-        "feature side never shuffles; mutually exclusive with "
-        "--features-version (buckets track HEAD)",
-    )
 
     x = sub.add_parser(
         "delete-keys",
@@ -555,8 +513,6 @@ def main(argv: list[str] | None = None) -> int:
                 user_col=args.user_col,
                 ts_col=args.ts_col,
                 type_col=args.type_col,
-                bucket_table=args.bucket_table,
-                buckets=args.buckets,
             )
             if args.incremental:
                 done = run_backfill_incremental(spark, cfg)
@@ -582,7 +538,6 @@ def main(argv: list[str] | None = None) -> int:
                     output_path=args.output_path,
                     features_version=args.features_version,
                     lookback_days=args.lookback_days,
-                    features_bucketed_table=args.features_bucketed_table,
                 ),
             )
             print(f"training data written to {args.output_path}")
@@ -608,7 +563,6 @@ def main(argv: list[str] | None = None) -> int:
                     features_table=args.features_table,
                     as_of=args.as_of,
                     lookback_days=args.lookback_days,
-                    features_bucketed_table=args.features_bucketed_table,
                 ),
                 factory,
             )
@@ -620,13 +574,8 @@ def main(argv: list[str] | None = None) -> int:
                 online_offline_diff,
             )
 
-            offline_features = (
-                spark.table(args.features_bucketed_table)
-                if args.features_bucketed_table
-                else VersionedTable(args.features_table).read(spark)
-            )
             offline = latest_per_key(
-                offline_features,
+                VersionedTable(args.features_table).read(spark),
                 keys=[args.key_col],
                 order_cols=[args.order_col],
             )
@@ -725,7 +674,6 @@ def main(argv: list[str] | None = None) -> int:
                     output_path=args.output_path,
                     as_of=args.as_of,
                     features_version=args.features_version,
-                    features_bucketed_table=args.features_bucketed_table,
                 ),
             )
             print(f"scoring input written to {args.output_path}")

@@ -154,16 +154,20 @@ def write_bucketed_table(
 
     Why this matters at 100 TB (SURVEY.md's PIT-join bucketing lever):
     a feature table bucketed on ``user_id`` is ALREADY hash-partitioned
-    on disk, so every downstream join or aggregate keyed on it — the
-    point-in-time training-set build, the online-sync latest-per-key
-    collapse, batch inference — reads the buckets and skips the
-    EXCHANGE entirely (pinned by
-    ``test_bucketed_feature_join_is_shuffle_free``): the shuffle a
-    feature store otherwise pays on every training-set materialization
-    is paid ONCE at write time. ``sort_by`` additionally pre-sorts
-    within buckets, letting sort-merge joins skip their local sort when
-    the join key prefixes the sort key. Both sides of a join must use
-    the same bucket count (or a multiple, with
+    on disk, so a join keyed on it — the point-in-time training-set
+    build given ``spark.table(name)`` as its features — reads the
+    buckets and skips the feature-side EXCHANGE (pinned by
+    ``test_bucketed_tables_join_without_exchange`` and
+    ``test_bucketed_features_make_pit_training_build_shuffle_free``).
+    No pipeline writes or reads such a table: the name lives in the
+    writing session's catalog, and the copy does not follow the
+    versioned table's deletes, upserts or time travel, so a caller
+    whose catalog persists owns its freshness.
+
+    ``sort_by`` additionally pre-sorts within buckets, letting
+    sort-merge joins skip their local sort when the join key prefixes
+    the sort key. Both sides of a join must use the same bucket count
+    (or a multiple, with
     ``spark.sql.bucketing.coalesceBucketsInJoin.enabled``) for the
     shuffle-free plan.
     """

@@ -21,7 +21,6 @@ Scale controls:
   pre-filter on the feature scan — at 100 TB this is the difference between
   scanning a month and scanning the whole history (partition-prunes on
   ``feature_ts`` when the store is partitioned by it, SURVEY.md §7.4).
-- ``broadcast_features=True`` for small feature sides (dimension-sized).
 """
 
 from __future__ import annotations
@@ -53,7 +52,6 @@ def asof_join(
     how: str = "left",
     tie_breakers: list[str] | tuple[str, ...] = (),
     salt: int = 0,
-    salt_seed: int = 42,
 ) -> DataFrame:
     """Generalized as-of join at full timestamp precision (pandas
     ``merge_asof`` surface, distributed).
@@ -108,7 +106,7 @@ def asof_join(
             "_asof_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
         )
         right = right.withColumn(
-            "_asof_salt", F.floor(F.rand(salt_seed) * salt).cast("int")
+            "_asof_salt", F.floor(F.rand(42) * salt).cast("int")
         )
 
     l_ts, r_ts = F.col(f"l.{left_ts}"), F.col(f"r.{right_ts}")
@@ -192,9 +190,7 @@ def point_in_time_join(
     feature_ts: str = "day",
     how: str = "left",
     lookback_days: int | None = None,
-    broadcast_features: bool = False,
     salt: int = 0,
-    salt_seed: int = 42,
 ) -> DataFrame:
     """labels ⟕ latest feature row per (keys, as_of) with feature_ts <= date(as_of).
 
@@ -240,12 +236,9 @@ def point_in_time_join(
                 (F.col(feature_ts) >= F.date_sub(F.lit(lo), lookback_days))
                 & (F.col(feature_ts) <= F.lit(hi))
             )
-    if broadcast_features:
-        feat = F.broadcast(feat)
-
     out = asof_join(
         lab, feat, keys, "_as_of_date", feature_ts,
-        how=how, salt=salt, salt_seed=salt_seed,
+        how=how, salt=salt,
     )
     if lookback_days is not None:
         fresh = F.col(feature_ts) >= F.date_sub(

@@ -34,12 +34,6 @@ class BatchInferenceConfig:
     key_col: str = "user_id"
     day_col: str = "day"
     features_version: int | None = None  # time travel for reproducible reruns
-    #: when set, features come from this BUCKETED managed table (the
-    #: backfill pipeline's ``bucket_table``): the latest-per-key collapse
-    #: AND the users join are both keyed on ``key_col`` = the bucket key,
-    #: so the feature side never exchanges. Mutually exclusive with
-    #: ``features_version`` (buckets track HEAD).
-    features_bucketed_table: str | None = None
 
 
 def run_batch_inference(
@@ -51,21 +45,10 @@ def run_batch_inference(
     null features (left join — scoring handles cold-start), mirroring the
     reference example's ``"left"``.
     """
-    if (
-        cfg.features_bucketed_table is not None
-        and cfg.features_version is not None
-    ):
-        raise ValueError(
-            "features_bucketed_table tracks HEAD only — pin "
-            "features_version against the VersionedTable instead"
-        )
     users = read_parquet(spark, cfg.users_path)
-    if cfg.features_bucketed_table is not None:
-        features = spark.table(cfg.features_bucketed_table)
-    else:
-        features = VersionedTable(cfg.features_table).read(
-            spark, version=cfg.features_version
-        )
+    features = VersionedTable(cfg.features_table).read(
+        spark, version=cfg.features_version
+    )
     cutoff = F.lit(cfg.as_of).cast("date")
     latest = latest_per_key(
         features.where(F.col(cfg.day_col) <= cutoff),

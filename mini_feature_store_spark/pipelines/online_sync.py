@@ -110,14 +110,6 @@ class OnlineSyncConfig:
     key_prefix: str = "features:"
     as_of: str | None = None  # cutoff date (inclusive); None = no cutoff
     lookback_days: int = 7  # sync users active within this window of as_of
-    #: when set, features are read from this BUCKETED managed table (the
-    #: backfill pipeline's ``bucket_table`` materialization) instead of
-    #: the VersionedTable: the latest-per-key max_by collapse is keyed
-    #: on ``key_col`` = the bucket key, so the sync's one aggregate runs
-    #: straight over the buckets with NO Exchange (pinned by test) —
-    #: the second consumer the bucketed layout was built for, next to
-    #: the PIT training build
-    features_bucketed_table: str | None = None
 
 
 def run_online_sync(
@@ -131,10 +123,7 @@ def run_online_sync(
     partition and sums the counts the clients' ``mset`` return — the
     latest-per-key plan runs once, and no payload reaches the driver.
     """
-    if cfg.features_bucketed_table is not None:
-        features = spark.table(cfg.features_bucketed_table)
-    else:
-        features = VersionedTable(cfg.features_table).read(spark)
+    features = VersionedTable(cfg.features_table).read(spark)
     if cfg.as_of is not None:
         cutoff = F.lit(cfg.as_of).cast("date")
         features = features.where(

@@ -37,35 +37,13 @@ class PointInTimeJoinConfig:
     features_version: int | None = None  # time travel pin
     lookback_days: int | None = None
     partition_by: tuple[str, ...] = ("as_of_date",)
-    #: when set, features are read from this BUCKETED managed table (the
-    #: backfill pipeline's ``bucket_table`` materialization) instead of
-    #: the VersionedTable: the bucketed scan's output partitioning
-    #: already satisfies the PIT join's user_id distribution, so the
-    #: training build pays only the label-side Exchange
-    #: (test_pipelines.py pins zero feature-side shuffle E2E).
-    #: ``features_table`` stays required — it remains the lineage record
-    #: and the fallback — but is not read. Mutually exclusive with
-    #: ``features_version``: the bucketed materialization tracks HEAD
-    #: only; time travel reads the versioned table.
-    features_bucketed_table: str | None = None
 
 
 def run_pit_join(spark: SparkSession, cfg: PointInTimeJoinConfig) -> DataFrame:
-    if (
-        cfg.features_bucketed_table is not None
-        and cfg.features_version is not None
-    ):
-        raise ValueError(
-            "features_bucketed_table tracks HEAD only — pin "
-            "features_version against the VersionedTable instead"
-        )
     labels = read_parquet(spark, cfg.labels_path)
-    if cfg.features_bucketed_table is not None:
-        features = spark.table(cfg.features_bucketed_table)
-    else:
-        features = VersionedTable(cfg.features_table).read(
-            spark, version=cfg.features_version
-        )
+    features = VersionedTable(cfg.features_table).read(
+        spark, version=cfg.features_version
+    )
     training = point_in_time_join(
         labels,
         features,

@@ -100,6 +100,18 @@ def test_incremental_backfill_extends_range(spark, tmp_path, events_path):
     full_rows = {tuple(r) for r in VersionedTable(full).read(spark).collect()}
     assert inc_rows == full_rows
 
+    # present days come from directory names, so a version that added a
+    # feature column (history reads it as null) still reads as current
+    vt.write(
+        vt.read(spark)
+        .where(F.col("day") == "2024-01-05")
+        .withColumn("new_feat", F.lit(1)),
+        partition_by=("day",),
+        mode="append",
+    )
+    assert run_backfill_incremental(spark, cfg2) == []
+    assert "new_feat" in vt.read(spark).columns
+
 
 def _jobs_of(spark, group: str, fn) -> int:
     """Spark jobs ``fn`` runs, counted by job group."""
@@ -298,6 +310,22 @@ def test_online_sync_is_one_action(spark, tmp_path, events_path):
     assert FileKVStore(kv_dir).keys() == ["features:u1", "features:u2"]
     jobs = sc.statusTracker().getJobIdsForGroup("online-sync-once")
     assert len(jobs) <= 3, jobs
+
+    # the latest-per-key collapse over the versioned table is one
+    # max_by aggregate: exactly one Exchange (no sort, no window)
+    import re
+
+    from mini_feature_store_spark.functions import plan_text
+    from mini_feature_store_spark.operators.latest import latest_per_key
+
+    plan = plan_text(
+        latest_per_key(
+            VersionedTable(table).read(spark),
+            keys=["user_id"],
+            order_cols=["day"],
+        )
+    ).split("== Initial Plan ==")[0]
+    assert len(set(re.findall(r"Exchange \((\d+)\)", plan))) == 1, plan
 
 
 def test_online_sync_cutoff_excludes_stale_users(spark, tmp_path):
@@ -1062,6 +1090,62 @@ def test_batch_inference_latest_at_cutoff(spark, tmp_path, events_path):
     assert rows["u1"].event_count_7d == 2  # click Jan1 + purchase Jan3
     assert rows["u2"].day.isoformat() == "2024-01-03"
     assert rows["u_cold"].day is None  # cold start keeps the row
+
+
+def test_deleted_key_reaches_every_feature_consumer(
+    spark, tmp_path, events_path
+):
+    """Features have one source, the versioned table: after
+    ``delete_keys`` of one user, the PIT training build and batch
+    inference both read that user's features as null, and the other
+    user keeps theirs."""
+    from mini_feature_store_spark.pipelines import (
+        BatchInferenceConfig,
+        run_batch_inference,
+    )
+
+    table = str(tmp_path / "features")
+    run_backfill(
+        spark, BackfillConfig(events_path, table, "2024-01-01", "2024-01-05")
+    )
+    VersionedTable(table).delete_keys(
+        spark.createDataFrame([("u2",)], "user_id string"), ["user_id"]
+    )
+    labels_path = str(tmp_path / "labels")
+    spark.createDataFrame(
+        [("u1", 1.0, dt.datetime(2024, 1, 4, 12)),
+         ("u2", 0.0, dt.datetime(2024, 1, 4, 12))],
+        "user_id string, label double, as_of_ts timestamp",
+    ).write.parquet(labels_path)
+    users_path = str(tmp_path / "users")
+    spark.createDataFrame(
+        [("u1",), ("u2",)], "user_id string"
+    ).write.parquet(users_path)
+
+    train = str(tmp_path / "training")
+    run_pit_join(
+        spark,
+        PointInTimeJoinConfig(
+            labels_path=labels_path, features_table=table, output_path=train
+        ),
+    )
+    scoring = str(tmp_path / "scoring")
+    run_batch_inference(
+        spark,
+        BatchInferenceConfig(
+            users_path=users_path,
+            features_table=table,
+            output_path=scoring,
+            as_of="2024-01-04",
+        ),
+    )
+    for out in (train, scoring):
+        got = {r.user_id: r for r in spark.read.parquet(out).collect()}
+        assert set(got) == {"u1", "u2"}, out
+        assert got["u1"].day == dt.date(2024, 1, 4), out
+        assert got["u1"].event_count_30d == 2, out
+        assert got["u2"].day is None, out
+        assert got["u2"].event_count_30d is None, out
 
 
 def test_cli_lifecycle_subcommands(spark, tmp_path, events_path):
@@ -3154,131 +3238,6 @@ def test_ensemble_mode_validations(spark, tmp_path):
         )
 
 
-def test_backfill_bucket_table_makes_pit_build_shuffle_free_e2e(
-    spark, tmp_path, capsys
-):
-    """r14 judge directive #5 E2E: `backfill --bucket-table` persists the
-    features under the bucketed layout, and `point-in-time-join
-    --features-bucketed-table` consumes it with ZERO feature-side
-    Exchange (only the label side shuffles; the plain versioned-table
-    path pays both) — results pinned identical to the plain path."""
-    import re
-
-    from mini_feature_store_spark import cli
-    from mini_feature_store_spark.functions import plan_text
-    from mini_feature_store_spark.pipelines.pit_join import (
-        PointInTimeJoinConfig,
-        run_pit_join,
-    )
-
-    events = str(tmp_path / "events")
-    spark.createDataFrame(
-        [
-            (f"u{u}", "click" if i % 3 else "purchase",
-             dt.datetime(2024, 1, 1 + (i % 12), 8 + u % 10))
-            for u in range(20)
-            for i in range(5)
-        ],
-        "user_id string, event_type string, ts timestamp",
-    ).write.parquet(events)
-    table = str(tmp_path / "features")
-    spark.sql("DROP TABLE IF EXISTS feat_bucketed_e2e")
-    # a crashed earlier run can leave the dropped table's location behind
-    # in the local warehouse — saveAsTable refuses to adopt it
-    import shutil
-
-    shutil.rmtree(
-        "/tmp/mfss-test-warehouse/feat_bucketed_e2e", ignore_errors=True
-    )
-    assert cli.main(
-        [
-            "backfill",
-            "--events-path", events,
-            "--output-table", table,
-            "--start-date", "2024-01-01",
-            "--end-date", "2024-01-14",
-            "--bucket-table", "feat_bucketed_e2e",
-            "--buckets", "8",
-        ]
-    ) == 0
-    # the bucketed materialization carries the same rows as the table
-    from mini_feature_store_spark.io.tables import VersionedTable
-
-    cols = sorted(spark.table("feat_bucketed_e2e").columns)
-    vt_rows = {
-        tuple(r)
-        for r in VersionedTable(table).read(spark).select(*cols).collect()
-    }
-    b_rows = {
-        tuple(r)
-        for r in spark.table("feat_bucketed_e2e").select(*cols).collect()
-    }
-    assert vt_rows == b_rows and len(b_rows) > 0
-
-    labels = str(tmp_path / "labels")
-    spark.createDataFrame(
-        [(f"u{u}", dt.datetime(2024, 1, 10, 12), float(u % 2))
-         for u in range(20)],
-        "user_id string, as_of_ts timestamp, label double",
-    ).write.parquet(labels)
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        bucketed = run_pit_join(
-            spark,
-            PointInTimeJoinConfig(
-                labels_path=labels,
-                features_table=table,
-                output_path=str(tmp_path / "train_b"),
-                features_bucketed_table="feat_bucketed_e2e",
-            ),
-        )
-        plain = run_pit_join(
-            spark,
-            PointInTimeJoinConfig(
-                labels_path=labels,
-                features_table=table,
-                output_path=str(tmp_path / "train_p"),
-            ),
-        )
-        got_b = {
-            tuple(r)
-            for r in spark.read.parquet(str(tmp_path / "train_b")).collect()
-        }
-        got_p = {
-            tuple(r)
-            for r in spark.read.parquet(str(tmp_path / "train_p")).collect()
-        }
-        assert got_b == got_p and len(got_b) == 20
-
-        def final_exchanges(plan: str) -> int:
-            final = plan.split("== Initial Plan ==")[0]
-            return len(set(re.findall(r"Exchange \((\d+)\)", final)))
-
-        b_plan, p_plan = plan_text(bucketed), plan_text(plain)
-        assert "Bucketed: true" in b_plan
-        assert final_exchanges(b_plan) == 1, b_plan
-        assert final_exchanges(p_plan) == 2, p_plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.sql("DROP TABLE IF EXISTS feat_bucketed_e2e")
-
-    with pytest.raises(ValueError, match="tracks HEAD only"):
-        run_pit_join(
-            spark,
-            PointInTimeJoinConfig(
-                labels_path=labels,
-                features_table=table,
-                output_path=str(tmp_path / "train_x"),
-                features_bucketed_table="feat_bucketed_e2e",
-                features_version=0,
-            ),
-        )
-
-
 def test_dedup_keep_best_quality_survivor_policy(spark, tmp_path):
     """--dedup-keep-best-quality: the near-dup cluster keeps its
     best-classifier-scored member instead of the min-id one. Fixture: a
@@ -3323,368 +3282,3 @@ def test_dedup_keep_best_quality_survivor_policy(spark, tmp_path):
 
     assert run(False) == {1, 5}
     assert run(True) == {2, 5}
-
-
-def test_backfill_incremental_bucket_table_bootstraps_full_history(
-    spark, tmp_path
-):
-    """Enabling --bucket-table AFTER a table already has history must
-    bootstrap the bucketed materialization from the FULL committed
-    table (append-only-the-delta would leave it silently partial);
-    subsequent incremental runs append just the new days and stay
-    row-identical to the versioned table."""
-    import shutil
-
-    from mini_feature_store_spark.pipelines.backfill import (
-        run_backfill_incremental,
-    )
-
-    events = str(tmp_path / "events")
-    spark.createDataFrame(
-        [
-            (f"u{u}", "click", dt.datetime(2024, 1, 1 + i, 9))
-            for u in range(6)
-            for i in range(12)
-        ],
-        "user_id string, event_type string, ts timestamp",
-    ).write.parquet(events)
-    table = str(tmp_path / "features")
-    spark.sql("DROP TABLE IF EXISTS feat_b_inc")
-    shutil.rmtree("/tmp/mfss-test-warehouse/feat_b_inc", ignore_errors=True)
-
-    def rows(df, cols):
-        return {tuple(r) for r in df.select(*cols).collect()}
-
-    try:
-        # day 1-7 committed WITHOUT bucketing
-        run_backfill(
-            spark, BackfillConfig(events, table, "2024-01-01", "2024-01-07")
-        )
-        # bucketing enabled later; incremental extends to day 10 —
-        # bootstrap path (bucketed table must carry ALL 10 days)
-        done = run_backfill_incremental(
-            spark,
-            BackfillConfig(
-                events, table, "2024-01-01", "2024-01-10",
-                bucket_table="feat_b_inc", buckets=4,
-            ),
-        )
-        assert len(done) == 3
-        cols = sorted(spark.table("feat_b_inc").columns)
-        vt = VersionedTable(table).read(spark)
-        assert rows(spark.table("feat_b_inc"), cols) == rows(vt, cols)
-        # steady state: one more incremental day appends, stays identical
-        done = run_backfill_incremental(
-            spark,
-            BackfillConfig(
-                events, table, "2024-01-01", "2024-01-11",
-                bucket_table="feat_b_inc", buckets=4,
-            ),
-        )
-        assert len(done) == 1
-        vt = VersionedTable(table).read(spark)
-        assert rows(spark.table("feat_b_inc"), cols) == rows(vt, cols)
-        # crash-between-writes / enable-on-current: the bucket table is
-        # gone but the versioned table is CURRENT (missing = []) — the
-        # run must still reconcile, not early-return past it
-        spark.sql("DROP TABLE feat_b_inc")
-        shutil.rmtree(
-            "/tmp/mfss-test-warehouse/feat_b_inc", ignore_errors=True
-        )
-        done = run_backfill_incremental(
-            spark,
-            BackfillConfig(
-                events, table, "2024-01-01", "2024-01-11",
-                bucket_table="feat_b_inc", buckets=4,
-            ),
-        )
-        assert done == []
-        assert rows(spark.table("feat_b_inc"), cols) == rows(vt, cols)
-        # versioned table reset under a LINGERING bucket table: the
-        # fresh overwrite must not append duplicate history
-        shutil.rmtree(table)
-        run_backfill_incremental(
-            spark,
-            BackfillConfig(
-                events, table, "2024-01-01", "2024-01-11",
-                bucket_table="feat_b_inc", buckets=4,
-            ),
-        )
-        vt = VersionedTable(table).read(spark)
-        b = spark.table("feat_b_inc")
-        assert rows(b, cols) == rows(vt, cols)
-        assert b.count() == vt.count()  # set-equal AND no duplicates
-    finally:
-        spark.sql("DROP TABLE IF EXISTS feat_b_inc")
-
-
-def test_bucket_table_write_one_file_per_bucket_and_self_heals(
-    spark, tmp_path
-):
-    """r16 (r15 VERDICT "What's wrong" #1 + ADVICE): the bucketed
-    materialization must stay operable at scale —
-
-    - every bucketed write repartitions by the bucket key first, so a
-      multi-partition upstream still emits exactly ONE file per bucket
-      (pre-r16: one per task × bucket — unbounded files-per-bucket
-      growth on daily appends, and Spark drops the sorted-bucket
-      property past one file);
-    - a day whose bucket-side row count diverges from the versioned
-      table (crashed partial bucket append) is repaired on the next
-      reconciliation (pre-r16: day PRESENCE alone marked it done
-      forever);
-    - versioned-table schema evolution (a new feature column) triggers
-      a full bucket rewrite instead of an AnalysisException append
-      loop."""
-    import glob as _glob
-    import shutil
-
-    from mini_feature_store_spark.pipelines import run_backfill_incremental
-
-    events = str(tmp_path / "events")
-    spark.createDataFrame(
-        [
-            (f"u{u}", "click", dt.datetime(2024, 1, 1 + i, 9))
-            for u in range(8)
-            for i in range(6)
-        ],
-        "user_id string, event_type string, ts timestamp",
-    ).write.parquet(events)
-    table = str(tmp_path / "features")
-    wh = "/tmp/mfss-test-warehouse/feat_b_files"
-    spark.sql("DROP TABLE IF EXISTS feat_b_files")
-    shutil.rmtree(wh, ignore_errors=True)
-
-    def files_per_bucket() -> dict[int, int]:
-        counts: dict[int, int] = {}
-        for f in _glob.glob(f"{wh}/**/part-*", recursive=True):
-            b = int(f.rsplit("_", 1)[1].split(".")[0].split("-")[0])
-            counts[b] = counts.get(b, 0) + 1
-        return counts
-
-    def rows(df, cols):
-        return {tuple(r) for r in df.select(*cols).collect()}
-
-    try:
-        cfg = BackfillConfig(
-            events, table, "2024-01-01", "2024-01-04",
-            bucket_table="feat_b_files", buckets=4,
-        )
-        run_backfill(spark, cfg)
-        fpb = files_per_bucket()
-        assert fpb and all(n == 1 for n in fpb.values()), fpb
-        # steady-state append of 2 more days: one new file per bucket
-        done = run_backfill_incremental(
-            spark,
-            BackfillConfig(
-                events, table, "2024-01-01", "2024-01-06",
-                bucket_table="feat_b_files", buckets=4,
-            ),
-        )
-        assert len(done) == 2
-        fpb = files_per_bucket()
-        assert fpb and all(n <= 2 for n in fpb.values()), fpb
-        cols = sorted(spark.table("feat_b_files").columns)
-        vt = VersionedTable(table).read(spark)
-        assert rows(spark.table("feat_b_files"), cols) == rows(vt, cols)
-
-        # crashed PARTIAL append: drop one bucket file of the last day's
-        # write — day still present, counts now short
-        victim = sorted(_glob.glob(f"{wh}/**/part-*", recursive=True))[-1]
-        import os as _os
-
-        _os.remove(victim)
-        spark.sql("REFRESH TABLE feat_b_files")
-        assert rows(spark.table("feat_b_files"), cols) != rows(vt, cols)
-        done = run_backfill_incremental(
-            spark,
-            BackfillConfig(
-                events, table, "2024-01-01", "2024-01-06",
-                bucket_table="feat_b_files", buckets=4,
-            ),
-        )
-        assert done == []  # versioned table current; bucket side healed
-        spark.sql("REFRESH TABLE feat_b_files")
-        assert rows(spark.table("feat_b_files"), cols) == rows(vt, cols)
-
-        # schema evolution: append a version carrying an extra feature
-        # column (unionByName null-pads history); reconciliation must
-        # full-rewrite the bucket table, not die appending
-        extra = VersionedTable(table).read(spark).where(
-            F.col("day") == "2024-01-06"
-        ).withColumn("new_feat", F.lit(1).cast("int"))
-        VersionedTable(table).write(
-            extra, partition_by=("day",), mode="append"
-        )
-        done = run_backfill_incremental(
-            spark,
-            BackfillConfig(
-                events, table, "2024-01-01", "2024-01-06",
-                bucket_table="feat_b_files", buckets=4,
-            ),
-        )
-        assert done == []
-        spark.sql("REFRESH TABLE feat_b_files")
-        vt2 = VersionedTable(table).read(spark)
-        cols2 = sorted(vt2.columns)
-        assert "new_feat" in spark.table("feat_b_files").columns
-        assert rows(spark.table("feat_b_files"), cols2) == rows(vt2, cols2)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS feat_b_files")
-
-
-def test_online_sync_bucketed_features_collapse_without_exchange(
-    spark, tmp_path
-):
-    """online-sync --features-bucketed-table: the latest-per-key max_by
-    collapse is keyed on the bucket key, so the sync aggregate reads
-    the buckets and plans ZERO exchanges (the versioned-table path pays
-    one); synced payloads identical either way."""
-    import re
-    import shutil
-
-    from mini_feature_store_spark.functions import plan_text
-    from mini_feature_store_spark.operators.latest import latest_per_key
-
-    events = str(tmp_path / "events")
-    spark.createDataFrame(
-        [
-            (f"u{u}", "click", dt.datetime(2024, 1, 1 + i, 9))
-            for u in range(10)
-            for i in range(6)
-        ],
-        "user_id string, event_type string, ts timestamp",
-    ).write.parquet(events)
-    table = str(tmp_path / "features")
-    spark.sql("DROP TABLE IF EXISTS feat_b_sync")
-    shutil.rmtree("/tmp/mfss-test-warehouse/feat_b_sync", ignore_errors=True)
-    try:
-        run_backfill(
-            spark,
-            BackfillConfig(
-                events, table, "2024-01-01", "2024-01-06",
-                bucket_table="feat_b_sync", buckets=4,
-            ),
-        )
-        kv_b = str(tmp_path / "kv_b")
-        kv_p = str(tmp_path / "kv_p")
-        n_b = run_online_sync(
-            spark,
-            OnlineSyncConfig(
-                features_table=table,
-                features_bucketed_table="feat_b_sync",
-                as_of="2024-01-06",
-            ),
-            lambda: FileKVStore(kv_b),
-        )
-        n_p = run_online_sync(
-            spark,
-            OnlineSyncConfig(features_table=table, as_of="2024-01-06"),
-            lambda: FileKVStore(kv_p),
-        )
-        assert n_b == n_p == 10
-        sb, sp = FileKVStore(kv_b), FileKVStore(kv_p)
-        assert sb.keys() == sp.keys()
-        assert all(sb.get(k) == sp.get(k) for k in sb.keys())
-
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            def latest_plan(features):
-                return plan_text(
-                    latest_per_key(
-                        features, keys=["user_id"], order_cols=["day"]
-                    )
-                )
-
-            def final_exchanges(plan: str) -> int:
-                final = plan.split("== Initial Plan ==")[0]
-                return len(set(re.findall(r"Exchange \((\d+)\)", final)))
-
-            b_plan = latest_plan(spark.table("feat_b_sync"))
-            p_plan = latest_plan(VersionedTable(table).read(spark))
-            assert "Bucketed: true" in b_plan
-            assert final_exchanges(b_plan) == 0, b_plan
-            assert final_exchanges(p_plan) == 1, p_plan
-        finally:
-            spark.conf.set(
-                "spark.sql.autoBroadcastJoinThreshold", "10485760"
-            )
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS feat_b_sync")
-
-
-def test_batch_inference_bucketed_features_tie_and_version_guard(
-    spark, tmp_path
-):
-    """batch-inference --features-bucketed-table produces the same
-    scoring input as the versioned-table path (cold-start users keep
-    their null-feature row), and rejects a features_version pin."""
-    import shutil
-
-    from mini_feature_store_spark.pipelines import (
-        BatchInferenceConfig,
-        run_batch_inference,
-    )
-
-    events = str(tmp_path / "events")
-    spark.createDataFrame(
-        [
-            (f"u{u}", "click", dt.datetime(2024, 1, 1 + i, 9))
-            for u in range(8)
-            for i in range(5)
-        ],
-        "user_id string, event_type string, ts timestamp",
-    ).write.parquet(events)
-    table = str(tmp_path / "features")
-    spark.sql("DROP TABLE IF EXISTS feat_b_bi")
-    shutil.rmtree("/tmp/mfss-test-warehouse/feat_b_bi", ignore_errors=True)
-    users = str(tmp_path / "users")
-    spark.createDataFrame(
-        [(f"u{u}",) for u in range(10)], "user_id string"  # u8/u9 cold
-    ).write.parquet(users)
-    try:
-        run_backfill(
-            spark,
-            BackfillConfig(
-                events, table, "2024-01-01", "2024-01-05",
-                bucket_table="feat_b_bi", buckets=4,
-            ),
-        )
-
-        def run(bucketed: bool):
-            out = str(tmp_path / ("bi_b" if bucketed else "bi_p"))
-            run_batch_inference(
-                spark,
-                BatchInferenceConfig(
-                    users_path=users,
-                    features_table=table,
-                    output_path=out,
-                    as_of="2024-01-05",
-                    features_bucketed_table=(
-                        "feat_b_bi" if bucketed else None
-                    ),
-                ),
-            )
-            df = spark.read.parquet(out)
-            return {tuple(r) for r in df.select(*sorted(df.columns)).collect()}
-
-        got_b, got_p = run(True), run(False)
-        assert got_b == got_p and len(got_b) == 10
-
-        with pytest.raises(ValueError, match="tracks HEAD only"):
-            run_batch_inference(
-                spark,
-                BatchInferenceConfig(
-                    users_path=users,
-                    features_table=table,
-                    output_path=str(tmp_path / "bi_x"),
-                    as_of="2024-01-05",
-                    features_bucketed_table="feat_b_bi",
-                    features_version=0,
-                ),
-            )
-    finally:
-        spark.sql("DROP TABLE IF EXISTS feat_b_bi")
