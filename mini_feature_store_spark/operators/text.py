@@ -663,19 +663,6 @@ def gopher_quality_flags(
     )
 
 
-def _hashed_shingles(df: DataFrame, text_col: str, n: int, *label_cols: str):
-    """(label_cols…, shingle) rows: per-doc distinct n-gram shingles as
-    8-byte xxhash64 — the one projection every decontamination path
-    shares (hash seed/width, normalization, and the <n-token fallback
-    live HERE and nowhere else)."""
-    from mini_feature_store_spark.operators.dedup import shingles
-
-    return df.select(
-        *[F.col(c) for c in label_cols],
-        F.explode(shingles(F.col(text_col), n)).alias("shingle"),
-    ).select(*label_cols, F.xxhash64("shingle").alias("shingle"))
-
-
 def _frac4(num, den):
     """shared/total contamination ratio rounded to 4dp via the explicit
     floor form — positive domain, so floor(x·10⁴+0.5)/10⁴ == HALF_UP on
@@ -718,11 +705,10 @@ def decontaminate(
     SMJ (the honest price of corpus-vs-corpus overlap) instead of
     OOMing. Either way the result is identical; only the plan differs.
     """
-    tr = _hashed_shingles(
-        spread(train).select(F.col(id_col).alias("id"), text_col),
-        text_col, n, "id",
-    )
-    bench = _hashed_shingles(benchmark, text_col, n).distinct()
+    from mini_feature_store_spark.operators.dedup import _hashed_shingles
+
+    tr = _hashed_shingles(spread(train), text_col, n, F.col(id_col).alias("id"))
+    bench = _hashed_shingles(benchmark, text_col, n).select("shingle").distinct()
     if broadcast_benchmark:
         bench = F.broadcast(bench)
     shared = (
@@ -782,14 +768,12 @@ def decontaminate_multi(
     upstream if the second pass matters); the corpus is never shuffled
     by shingle.
     """
-    tr = _hashed_shingles(
-        spread(train).select(F.col(id_col).alias("id"), text_col),
-        text_col, n, "id",
-    )
+    from mini_feature_store_spark.operators.dedup import _hashed_shingles
+
+    tr = _hashed_shingles(spread(train), text_col, n, F.col(id_col).alias("id"))
     bench = _hashed_shingles(
-        benchmarks.select(F.col(bench_col).alias("_bench"), text_col),
-        text_col, n, "_bench",
-    ).distinct()
+        benchmarks, text_col, n, F.col(bench_col).alias("_bench")
+    ).select("_bench", "shingle").distinct()
     shared = (
         tr.join(F.broadcast(bench), "shingle")
         .groupBy("id", "_bench")

@@ -119,9 +119,8 @@ def run_online_sync(
 ) -> int:
     """Sync the latest feature snapshot per key into the online store.
 
-    Returns the number of keys written: ONE Spark action writes every
-    partition and sums the counts the clients' ``mset`` return — the
-    latest-per-key plan runs once, and no payload reaches the driver.
+    Returns the number of keys written; ``write_latest`` runs the
+    latest-per-key plan once, in one Spark action.
     """
     features = VersionedTable(cfg.features_table).read(spark)
     if cfg.as_of is not None:
@@ -133,12 +132,27 @@ def run_online_sync(
     latest = latest_per_key(
         features, keys=[cfg.key_col], order_cols=[cfg.order_col]
     )
-    value_cols = [c for c in latest.columns if c != cfg.key_col]
+    return write_latest(latest, kv_factory, cfg.key_col, cfg.key_prefix)
+
+
+def write_latest(
+    latest: DataFrame,
+    kv_factory: Callable[[], object],
+    key_col: str,
+    key_prefix: str,
+) -> int:
+    """Write one JSON payload per row of ``latest`` (one row per key)
+    under ``key_prefix + key``; returns the number of keys written.
+
+    The write path of every online sync, batch and streaming: ONE Spark
+    action writes every partition and sums the counts the clients'
+    ``mset`` return — each partition opens one client, and no payload
+    is collected.
+    """
+    value_cols = [c for c in latest.columns if c != key_col]
     payloads = latest.select(
-        F.concat(
-            F.lit(cfg.key_prefix), F.col(cfg.key_col).cast("string")
-        ).alias("key"),
-        F.to_json(F.struct(cfg.key_col, *value_cols)).alias("payload"),
+        F.concat(F.lit(key_prefix), F.col(key_col).cast("string")).alias("key"),
+        F.to_json(F.struct(key_col, *value_cols)).alias("payload"),
     )
 
     def write_partition(rows):

@@ -270,28 +270,19 @@ def stream_online_sync(
 ):
     """Continuously upsert the latest window per key into the online store.
 
-    ``foreachBatch`` routes each micro-batch through the *batch* sync path
-    (latest_per_key + partition-parallel KV writes) — the streaming analog
-    of OnlineSyncPipeline, with the driver-collect anti-pattern already
-    fixed in the shared code.
+    ``foreachBatch`` routes each micro-batch through the *batch* sync's
+    ``latest_per_key`` and its partition-parallel KV writer
+    (``pipelines.online_sync.write_latest``) — the streaming analog of
+    ``run_online_sync``, with one write path for both.
     """
     from mini_feature_store_spark.operators.latest import latest_per_key
+    from mini_feature_store_spark.pipelines.online_sync import write_latest
 
     def sync_batch(batch_df: DataFrame, batch_id: int) -> None:
         latest = latest_per_key(
             batch_df, keys=[key_col], order_cols=[order_col]
         )
-        value_cols = [c for c in latest.columns if c != key_col]
-        payloads = latest.select(
-            F.concat(F.lit(key_prefix), F.col(key_col).cast("string")).alias("key"),
-            F.to_json(F.struct(key_col, *value_cols)).alias("payload"),
-        )
-
-        def write_partition(rows):
-            client = kv_factory()
-            client.mset((r["key"], r["payload"]) for r in rows)
-
-        payloads.foreachPartition(write_partition)
+        write_latest(latest, kv_factory, key_col, key_prefix)
 
     writer = (
         windowed.writeStream.outputMode("update")
@@ -525,7 +516,7 @@ def incremental_neardedup_stream(
     threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_shingle_freq: int | None = 1000,
+    max_shingle_freq: int = 1000,
 ):
     """Streaming NEAR-dup ingest: the n-gram-Jaccard tier of
     ``incremental_dedup_stream`` — each micro-batch admits only docs that
@@ -547,6 +538,7 @@ def incremental_neardedup_stream(
 
     Returns the ``DataStreamWriter`` (caller starts/stops it).
     """
+    from mini_feature_store_spark.functions import release_operator_caches
     from mini_feature_store_spark.operators.dedup import (
         ngram_jaccard_against,
         ngram_jaccard_pairs,
@@ -558,35 +550,40 @@ def incremental_neardedup_stream(
     def admit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_df = batch_df.persist()
-        intra = ngram_jaccard_pairs(
-            batch_df,
-            threshold=threshold,
-            text_col=text_col,
-            id_col=id_col,
-            max_shingle_freq=max_shingle_freq,
-        )
-        novel = batch_df.join(
-            intra.select(F.col("id_b").alias(id_col)).distinct(),
-            id_col,
-            "left_anti",
-        )
-        if _store_exists(spark, admitted_path):
-            corpus = spark.read.parquet(admitted_path)
-            cross = ngram_jaccard_against(
-                novel,
-                corpus,
+        try:
+            intra = ngram_jaccard_pairs(
+                batch_df,
                 threshold=threshold,
                 text_col=text_col,
                 id_col=id_col,
                 max_shingle_freq=max_shingle_freq,
             )
-            novel = novel.join(
-                cross.select(F.col("new_id").alias(id_col)).distinct(),
+            novel = batch_df.join(
+                intra.select(F.col("id_b").alias(id_col)).distinct(),
                 id_col,
                 "left_anti",
             )
-        novel.write.mode("append").parquet(admitted_path)
-        batch_df.unpersist()
+            if _store_exists(spark, admitted_path):
+                corpus = spark.read.parquet(admitted_path)
+                cross = ngram_jaccard_against(
+                    novel,
+                    corpus,
+                    threshold=threshold,
+                    text_col=text_col,
+                    id_col=id_col,
+                    max_shingle_freq=max_shingle_freq,
+                )
+                novel = novel.join(
+                    cross.select(F.col("new_id").alias(id_col)).distinct(),
+                    id_col,
+                    "left_anti",
+                )
+            novel.write.mode("append").parquet(admitted_path)
+        finally:
+            # the batch and both operators' posting lists (track_cache)
+            # are read only by this batch's write
+            batch_df.unpersist()
+            release_operator_caches()
 
     return (
         stream.writeStream.outputMode("append")

@@ -210,11 +210,12 @@ def test_ngram_cap_drops_hot_shingle_and_rescues_quadratic_pair(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    # Cap OFF: the boilerplate connects everything (1,2) share 2 shingles.
+    # Cap at the doc count (drops nothing): the boilerplate connects
+    # everything (1,2) share 2 shingles.
     uncapped = {
         (r.id_a, r.id_b): r.jaccard
         for r in ngram_jaccard_pairs(
-            docs, threshold=0.01, max_shingle_freq=None
+            docs, threshold=0.01, max_shingle_freq=len(rows)
         ).collect()
     }
     assert (1, 2) in uncapped
@@ -264,7 +265,7 @@ def test_ngram_against_only_crosses_batch_and_corpus(spark):
     got = {
         (r.new_id, r.corpus_id): r.jaccard
         for r in ngram_jaccard_against(
-            batch, corpus, threshold=0.5, max_shingle_freq=None
+            batch, corpus, threshold=0.5, max_shingle_freq=6
         ).collect()
     }
     assert set(got) == {(10, 1), (10, 2)}
@@ -275,11 +276,140 @@ def test_ngram_against_only_crosses_batch_and_corpus(spark):
     full = {
         (max(r.id_a, r.id_b), min(r.id_a, r.id_b)): r.jaccard
         for r in ngram_jaccard_pairs(
-            union, threshold=0.5, max_shingle_freq=None
+            union, threshold=0.5, max_shingle_freq=6
         ).collect()
         if (r.id_a >= 10) != (r.id_b >= 10)
     }
     assert full == got
+
+
+def test_ngram_against_cap_counts_batch_and_corpus_together(spark):
+    """The cap's document frequency counts batch and corpus together, as
+    one combined corpus would: "all rights reserved" sits in two corpus
+    docs and one batch doc, so at cap 2 it is dropped although neither
+    side alone exceeds the cap, and the pair's Jaccard is over the
+    retained sets — the same value the self-join over the union gives."""
+    from mini_feature_store_spark.operators.dedup import (
+        ngram_jaccard_against,
+        ngram_jaccard_pairs,
+    )
+
+    colors = "red green blue cyan magenta yellow all rights reserved"
+    corpus = spark.createDataFrame(
+        [(1, colors), (2, "one two three four five six all rights reserved")],
+        "doc_id long, text string",
+    )
+    batch = spark.createDataFrame(
+        [(10, f"{colors} extra")], "doc_id long, text string"
+    )
+
+    def against(cap):
+        return {
+            (r.new_id, r.corpus_id): r.jaccard
+            for r in ngram_jaccard_against(
+                batch, corpus, threshold=0.5, max_shingle_freq=cap
+            ).collect()
+        }
+
+    # 7 shared of 7 and 8 shingles; capped, 6 shared of 6 and 7
+    assert against(3) == {(10, 1): 0.875}
+    assert against(2) == {(10, 1): 0.8571}
+    full = {
+        (r.id_b, r.id_a): r.jaccard
+        for r in ngram_jaccard_pairs(
+            corpus.unionByName(batch), threshold=0.5, max_shingle_freq=2
+        ).collect()
+        if r.id_b >= 10 > r.id_a
+    }
+    assert full == against(2)
+
+
+def test_shingle_projection_runs_the_regex_once(spark):
+    """An explode over a bare column makes Catalyst infer a
+    ``size(col) > 0`` filter and push it below the projection, where it
+    would run the shingle regex a second time per doc."""
+    from mini_feature_store_spark.operators.dedup import _hashed_shingles
+
+    df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    for labels in (("doc_id",), (F.col("doc_id").alias("id"),)):
+        plan = (
+            _hashed_shingles(df, "text", 3, *labels)
+            ._jdf.queryExecution()
+            .optimizedPlan()
+            .toString()
+        )
+        assert plan.count("regexp_extract_all") == 1, plan
+
+
+def _jaccard_steps(source: str) -> list[tuple[str, str, int]]:
+    """(step, owning top-level name, line) for every n-gram Jaccard
+    kernel step in ``source``: ``hash`` hashes a shingle (``xxhash64``
+    over the ``shingle`` column, Column or SQL form) and ``posting``
+    builds posting lists (``groupBy("shingle")``, whose ``agg`` collects
+    each shingle's docs)."""
+
+    def names_shingle(arg) -> bool:
+        if isinstance(arg, ast.Constant):
+            return arg.value == "shingle"
+        return _called(arg, "F", "col") and names_shingle(arg.args[0])
+
+    def step(node) -> str | None:
+        if _called(node, "F", "xxhash64") and any(map(names_shingle, node.args)):
+            return "hash"
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("expr", "selectExpr")
+        ):
+            sql = " ".join(
+                a.value.replace(" ", "")
+                for a in node.args
+                if isinstance(a, ast.Constant) and isinstance(a.value, str)
+            )
+            if "xxhash64(shingle)" in sql:
+                return "hash"
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "groupBy"
+            and any(map(names_shingle, node.args))
+        ):
+            return "posting"
+        return None
+
+    found = []
+    for top in ast.parse(source).body:
+        for node in ast.walk(top):
+            kind = step(node)
+            if kind:
+                found.append((kind, getattr(top, "name", "<module>"), node.lineno))
+    return found
+
+
+def test_shingle_hash_and_postings_only_in_the_jaccard_kernel():
+    """One shingle projection (``_hashed_shingles``) and one posting/cap/
+    Jaccard kernel (``_jaccard_join``) in the whole package: a third copy
+    of either, in any module, fails here."""
+    root = Path(__file__).resolve().parent.parent / "mini_feature_store_spark"
+    owners = {}
+    for path in sorted(root.rglob("*.py")):
+        for kind, owner, line in _jaccard_steps(path.read_text()):
+            where = f"{path.relative_to(root)}:{owner}"
+            owners.setdefault(kind, {}).setdefault(where, []).append(line)
+    assert {k: set(v) for k, v in owners.items()} == {
+        "hash": {"operators/dedup.py:_hashed_shingles"},
+        "posting": {"operators/dedup.py:_jaccard_join"},
+    }, owners
+    # the detector sees the forms the two former copies used
+    old_copy = (
+        "def index(df):\n"
+        "    sh = df.select(F.xxhash64(F.col('shingle')).alias('s'))\n"
+        "    q = df.selectExpr('xxhash64(shingle) AS s')\n"
+        "    return sh.groupBy('shingle').agg(F.collect_list('doc'))\n"
+    )
+    assert sorted(k for k, _, _ in _jaccard_steps(old_copy)) == [
+        "hash", "hash", "posting"
+    ]
 
 
 def test_simhash_packed_lanes_match_python_reference(spark):

@@ -79,7 +79,7 @@ class TestProperties:
         got = {
             (r.id_a, r.id_b): r.jaccard
             for r in ngram_jaccard_pairs(
-                df, threshold=0.0, max_shingle_freq=None
+                df, threshold=0.0, max_shingle_freq=len(rows)
             ).collect()
         }
 

@@ -386,6 +386,59 @@ def test_incremental_neardedup_stream_rejects_near_dups(spark, tmp_path):
     assert out2 == {1, 2, 11}  # 10 near-dups admitted doc 1 -> rejected
 
 
+def test_incremental_neardedup_stream_leaves_no_cache(spark, tmp_path):
+    """Each micro-batch releases what it persisted — the batch and both
+    Jaccard operators' posting lists — after three batches and after a
+    batch that raises."""
+    from pyspark.errors import StreamingQueryException
+
+    from mini_feature_store_spark import functions as fx
+    from mini_feature_store_spark.streaming.ingest import (
+        incremental_neardedup_stream,
+    )
+
+    jcm = spark._jsparkSession.sharedState().cacheManager()
+    fx.release_operator_caches()
+    jcm.clearCache()
+    schema = "doc_id long, text string"
+    src_dir = tmp_path / "incoming"
+    for i in range(3):
+        spark.createDataFrame(
+            [(i, f"doc {i} says alpha beta gamma delta epsilon zeta")], schema
+        ).coalesce(1).write.mode("append").json(str(src_dir))
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .json(str(src_dir))
+    )
+
+    def run(admitted: str, ckpt: str):
+        q = (
+            incremental_neardedup_stream(stream, admitted, ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination(120)
+        finally:
+            q.stop()
+        return q
+
+    q = run(str(tmp_path / "admitted"), str(tmp_path / "ckpt"))
+    assert len(q.recentProgress) == 3
+    assert not fx._OPERATOR_CACHES and jcm.isEmpty()
+
+    # a store without the text column fails the batch-vs-corpus probe
+    # after the batch and its self-join postings are persisted
+    broken = str(tmp_path / "broken")
+    spark.createDataFrame([(99, "x")], "doc_id long, body string").write.parquet(
+        broken
+    )
+    with pytest.raises(StreamingQueryException):
+        run(broken, str(tmp_path / "ckpt-broken"))
+    assert not fx._OPERATOR_CACHES and jcm.isEmpty()
+
+
 def test_ann_index_ingest_stream_appends_probe_visible(spark, tmp_path, sf_dir):
     """Streaming embeddings flow through the frozen-model encode path into
     the cell-partitioned index; after the batch boundary, probes find the

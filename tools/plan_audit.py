@@ -58,8 +58,11 @@ AUDITED: dict[str, str] = {
         "never shuffles before the final aggregation."
     ),
     "dedup_ngram_jaccard": (
-        "Single-shuffle posting lists (r4 rewrite): explode doc→shingle "
-        "with the doc's pre-filter set size riding in a struct, ONE "
+        "Single-shuffle posting lists (r4 rewrite) in the n-gram Jaccard "
+        "kernel shared with ngram_jaccard_against: explode doc→shingle "
+        "with the doc's pre-filter set size riding in a struct (the "
+        "explode reads an expression, not a bare column, so no inferred "
+        "size filter re-runs the shingle regex under the scan), ONE "
         "groupBy(xxhash64 shingle) builds sorted posting lists, the "
         "stop-shingle guard is a free length filter on the list, and "
         "candidate pairs come from a double Generate over each list — no "
