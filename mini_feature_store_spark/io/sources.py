@@ -3,13 +3,15 @@
 Re-expresses the reference's ``platform/Fetchers.scala`` trait surface
 (readParquet :79-90, readJson :92-103, readCsv :105-120, readIcebergTable
 :122-128) as plain functions. An explicit schema is always accepted
-(schema-on-write regime, SURVEY.md §1.3); inference is the ``schema=None``
-fallback, exactly like ``Fetchers.scala:85-89``. The pipelines infer: each
-``read_parquet`` of their inputs costs one footer-reading Spark job.
+(schema-on-write regime, SURVEY.md §1.3). Without one, ``read_parquet``
+reads the schema on the driver from the one footer Spark's own inference
+would read, converts it with Spark's own converter and passes it in, so a
+read costs no Spark job (Spark's inference runs one footer-reading job per
+read); ``load_testdata`` and ``read_table`` read parquet through it.
 
 Scale notes:
-- An explicit schema skips the file-footer sampling pass entirely — on a
-  100 TB path that inference pass is itself a large job.
+- The driver reads one footer, never a sampling pass over the files: on a
+  100 TB path the inference job alone schedules a task per file batch.
 - These return *lazy* DataFrames; filters/projections applied by callers reach
   the parquet scan via Catalyst pushdown (verify with
   ``df.explain('formatted')`` → ``PushedFilters`` / ``ReadSchema``).
@@ -20,14 +22,115 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+
+#: Characters that make a Hadoop path a glob (``SparkHadoopUtil.isGlobPath``).
+_GLOB_CHARS = frozenset("{}[]*?\\")
+#: Parquet summary files, read before any data file when present.
+_SUMMARIES = ("_common_metadata", "_metadata")
+
+
+def _listed(name: str) -> bool:
+    """Spark's file-index name filter (``HadoopFSUtils.shouldFilterOutPathName``):
+    ``_``/``.`` names and in-flight copies are skipped, except ``k=v``
+    names and the summary files."""
+    if name.startswith(_SUMMARIES):
+        return True
+    return not (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _schema_file(root: str) -> tuple[str, set[str]] | None:
+    """The file Spark's inference reads under a local ``root`` with
+    ``mergeSchema`` off (``ParquetUtils.inferSchema``): the first
+    ``_common_metadata``, else ``_metadata``, else data file by path, with
+    the partition keys of the ``k=v`` directories on the way. ``None`` for
+    a missing path, a directory with no data file, or a subdirectory that
+    is not ``k=v`` (layouts whose inference this does not mirror)."""
+    if os.path.isfile(root):
+        return root, set()
+    files, keys = [], set()
+    for top, dirs, names in os.walk(root):
+        dirs[:] = [d for d in dirs if _listed(d)]
+        if any("=" not in d for d in dirs):
+            return None
+        keys.update(d.split("=", 1)[0].lower() for d in dirs)
+        files += [os.path.join(top, n) for n in names if _listed(n)]
+    files.sort()
+    for summary in _SUMMARIES:
+        hit = next((f for f in files if os.path.basename(f) == summary), None)
+        if hit is not None:
+            return hit, keys
+    data = [f for f in files if os.path.basename(f) not in _SUMMARIES]
+    return (data[0], keys) if data else None
+
+
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema Spark's inference gives ``path``, read on the driver from
+    one footer through py4j with no Spark job. Spark's own
+    ``readSchemaFromFooter`` and a converter built from the session conf
+    keep its type rules (``inferTimestampNTZ``, ``nanosAsLong``, the
+    Spark-written row metadata). ``None`` where inference must run
+    instead: a session with no driver JVM (Spark Connect), a glob,
+    ``mergeSchema`` on, a non-local file system, a layout
+    ``_schema_file`` refuses, a footer that does not read or convert (a
+    corrupt file, an unsupported type), or a data file that holds a
+    partition column."""
+    jsession = getattr(spark, "_jsparkSession", None)
+    if jsession is None or _GLOB_CHARS.intersection(path):
+        return None
+    jvm = spark._jvm
+    state = jsession.sessionState()
+    if state.conf().isParquetSchemaMergingEnabled():
+        return None
+    conf = state.newHadoopConf()
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(conf)
+    if fs.getScheme() != "file":
+        return None
+    found = _schema_file(fs.makeQualified(hpath).toUri().getPath())
+    if found is None:
+        return None
+    chosen, part_keys = found
+    parquet = jvm.org.apache.parquet.hadoop
+    fmt = jvm.org.apache.spark.sql.execution.datasources.parquet
+    fpath = jvm.org.apache.hadoop.fs.Path(chosen)
+    try:
+        reader = parquet.ParquetFileReader.open(
+            parquet.util.HadoopInputFile.fromPath(fpath, conf)
+        )
+        try:
+            meta = reader.getFooter()
+        finally:
+            reader.close()
+        jschema = fmt.ParquetFileFormat.readSchemaFromFooter(
+            parquet.Footer(fpath, meta),
+            fmt.ParquetToSparkSchemaConverter(state.conf()),
+        )
+    except (Py4JJavaError, CapturedException):
+        return None
+    schema = T._parse_datatype_json_string(jschema.json())
+    if any(f.name.lower() in part_keys for f in schema.fields):
+        return None
+    return schema
 
 
 def read_parquet(
     spark: SparkSession, path: str, schema: T.StructType | None = None
 ) -> DataFrame:
-    """Parquet scan with optional explicit schema (Fetchers.scala:79-90)."""
+    """Parquet scan (Fetchers.scala:79-90). Without ``schema``, the schema
+    comes from ``_footer_schema`` (no Spark job); where that declines,
+    Spark infers it, with today's errors for a missing or empty path.
+    Partition columns are appended from the directory names either way."""
+    if schema is None:
+        schema = _footer_schema(spark, path)
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
@@ -108,13 +211,17 @@ def read_table(spark: SparkSession, name_or_path: str) -> DataFrame:
 
     if HAVE_DELTA and os.path.isdir(os.path.join(name_or_path, "_delta_log")):
         return spark.read.format("delta").load(name_or_path)
-    return spark.read.parquet(name_or_path)
+    return read_parquet(spark, name_or_path)
 
 
 def load_testdata(
     spark: SparkSession, sf_dir: str, *names: str
 ) -> dict[str, DataFrame]:
     """Load driver testdata tables (TESTDATA.md) from a scale-factor dir.
+
+    Each table goes through ``read_parquet``, so its schema comes from
+    the file footer under the session's parquet type rules, and loading
+    runs no Spark job.
 
     ``events.ts`` handling is *schema-adaptive*: depending on the parquet
     writer and Spark version, the physical column arrives either as a plain
@@ -139,7 +246,7 @@ def load_testdata(
             # load as BIGINT instead of erroring on Spark versions where the
             # legacy conf still applies.
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = spark.read.parquet(path)
+            df = read_parquet(spark, path)
             ts_type = df.schema["ts"].dataType
             if isinstance(ts_type, (T.LongType, T.IntegerType)):
                 df = df.withColumn(
@@ -150,7 +257,7 @@ def load_testdata(
                 # session-TZ-stable TIMESTAMP for window/date functions.
                 df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
         else:
-            df = spark.read.parquet(path)
+            df = read_parquet(spark, path)
         out[n] = df
     return out
 

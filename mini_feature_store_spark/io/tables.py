@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from mini_feature_store_spark.io.sources import read_parquet
+
 
 def _read_schema(fields, partition_by: Sequence[str]) -> StructType:
     """Data columns, then partition columns in ``partition_by`` order, all
@@ -282,10 +284,10 @@ class VersionedTable:
             if not commits:
                 raise ValueError(f"version {version} not in commit log")
         commit = commits[-1]
-        reader = spark.read
-        if "schema" in commit:
-            reader = reader.schema(StructType.fromJson(commit["schema"]))
-        return reader.parquet(self._version_dir(commit["version"]))
+        path = self._version_dir(commit["version"])
+        if "schema" not in commit:
+            return read_parquet(spark, path)
+        return spark.read.schema(StructType.fromJson(commit["schema"])).parquet(path)
 
     def upsert(
         self,

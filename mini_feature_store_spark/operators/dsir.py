@@ -53,6 +53,7 @@ from mini_feature_store_spark.functions import (
     spread,
     track_cache,
 )
+from mini_feature_store_spark.io.sources import read_parquet
 from mini_feature_store_spark.operators.text import (
     _doc_tokens,
     _grams_from,
@@ -381,7 +382,7 @@ def load_dsir_suggested_threshold(spark, model_dir: str) -> float | None:
     artifact, or ``None`` when the artifact predates / skipped
     calibration (head-row read — the value rides every row)."""
     base = model_dir.rstrip("/")
-    df = spark.read.parquet(base + "/weights.parquet")
+    df = read_parquet(spark, base + "/weights.parquet")
     return _suggested_from(df)
 
 
@@ -404,7 +405,7 @@ def load_dsir_artifact(
     validation as in ``load_dsir_weights`` — one aggregate job covers
     metadata, suggested threshold, and both density counts."""
     base = model_dir.rstrip("/")
-    df = spark.read.parquet(base + "/weights.parquet")
+    df = read_parquet(spark, base + "/weights.parquet")
     has_suggested = "suggested_min_log_weight" in df.columns
     _, _, n_buckets, max_order, suggested = _validate_dense(
         df, model_dir, with_suggested=has_suggested
@@ -473,7 +474,7 @@ def load_dsir_weights(spark, model_dir: str) -> tuple[DataFrame, int, int]:
     n_buckets rows) so a truncated artifact fails loudly — one
     aggregate job (``_validate_dense``)."""
     base = model_dir.rstrip("/")
-    df = spark.read.parquet(base + "/weights.parquet")
+    df = read_parquet(spark, base + "/weights.parquet")
     _, _, n_buckets, max_order, _ = _validate_dense(df, model_dir)
     return df.select("bucket", "weight"), n_buckets, max_order
 

@@ -20,14 +20,17 @@ Two physical formulations, asserted equal in tests:
    makes it the wrong plan at 100 TB.
 
 2. ``backfill_features_window_form`` — the scale plan (SURVEY.md §4.4):
-   pre-aggregate one row per (user, day-with-events) carrying the day's
-   event count and type set — the map-side-combinable shuffle — densify by
-   a UNION with the per-user day grid (no join, no broadcast), then compute
-   every rolling stat with ``rangeBetween`` window frames over day numbers.
-   ONE shuffle by user_id replaces the 31× fanout join, and the per-user
-   partition is the only sort. Skew note: a celebrity user is one
-   partition's worth of *daily* rows (≤ range length + 30), not raw events
-   — bounded by design.
+   ONE scan pre-aggregates one row per (user, day-with-events in the
+   lookback) carrying the day's event count and type set — the
+   map-side-combinable shuffle — plus one NULL-day row per user for
+   everything else, so the grid's users come from the same aggregate. A
+   per-user collect then emits each user's day grid and daily rows from
+   one ``inline`` (no join, no union, no broadcast), and every rolling
+   stat is a ``rangeBetween`` window frame over day numbers that reads
+   that user-keyed partitioning: two exchanges, neither over the grid,
+   replace the 31× fanout join, and the per-user partition is the only
+   sort. Skew note: a celebrity user is one partition's worth of *daily*
+   rows (≤ range length + 31), not raw events — bounded by design.
 """
 
 from __future__ import annotations
@@ -43,11 +46,12 @@ SHORT_WINDOW_DAYS = 7
 LONG_WINDOW_DAYS = 30
 
 def _scaffold(events: DataFrame, start, end, user_col: str, day_col: str) -> DataFrame:
-    """Dense (user × day) grid: every user gets a row for every day even with
-    zero events (rationale: BackfillPipeline.scala:30-32).
+    """Dense (user × day) grid of the join form: every user gets a row for
+    every day even with zero events (rationale: BackfillPipeline.scala:30-32).
 
     Each distinct user explodes its own ``sequence`` of days: a narrow
     step over the users distinct, with no cross join and no broadcast.
+    The window forms build the same grid inside ``_densify_and_frames``.
     """
     days = F.sequence(F.lit(start).cast("date"), F.lit(end).cast("date"))
     return (
@@ -101,7 +105,7 @@ def backfill_features_join_form(
     )
 
 
-def _events_in_lookback(
+def _events_by_lookback_day(
     events: DataFrame,
     start,
     end,
@@ -109,52 +113,75 @@ def _events_in_lookback(
     ts_col: str,
     type_col: str,
 ) -> DataFrame:
-    """(user_id, event_type, day) rows for [start - 30d, end]: events older
-    than ``start`` by up to the long window still influence early rows, so
-    the daily pre-agg keeps the lookback and the densify trims to
-    [start, end] afterwards. Events of a null user are dropped: the join
-    form's equi join never matches them, so its null-user grid rows read
-    zero. Shared by both window-form feature views."""
+    """(user_id, event_type, day) rows for EVERY event, ``day`` and
+    ``event_type`` NULL outside [start - 30d, end]: events older than
+    ``start`` by up to the long window still influence early rows, so the
+    daily pre-agg keeps the lookback, and the densify trims to
+    [start, end] afterwards. An event outside the lookback, or of a null
+    user, keeps only its user, as one NULL-day group per user: the grid's
+    users come from every event without a second scan. A null user's
+    events all fall in that group, so its grid rows read zero, as in the
+    join form, whose equi join never matches them. Shared by both
+    window-form feature views."""
+    day = F.to_date(F.col(ts_col))
+    in_lookback = (
+        F.col(user_col).isNotNull()
+        & (day >= F.date_sub(F.lit(start).cast("date"), LONG_WINDOW_DAYS))
+        & (day <= F.lit(end).cast("date"))
+    )
     return events.select(
         F.col(user_col).alias("user_id"),
-        F.col(type_col).alias("event_type"),
-        F.to_date(F.col(ts_col)).alias("day"),
-    ).where(
-        F.col("user_id").isNotNull()
-        & (F.col("day") >= F.date_sub(F.lit(start).cast("date"), LONG_WINDOW_DAYS))
-        & (F.col("day") <= F.lit(end).cast("date"))
+        F.when(in_lookback, F.col(type_col)).alias("event_type"),
+        F.when(in_lookback, day).alias("day"),
     )
 
 
-#: Tags the grid's rows in the union ``_densify_and_frames`` builds.
+#: Tags the grid's rows among the rows ``_densify_and_frames`` emits.
 _GRID = "_grid"
 
 
 def _densify_and_frames(
-    events: DataFrame,
     daily: DataFrame,
     start,
     end,
-    user_col: str,
     type_counts: Callable[[WindowSpec], Column],
 ) -> DataFrame:
     """Shared densify + rolling frames of the window-form feature views.
-    ``daily`` is a (user_id, day)-keyed pre-aggregate carrying at least
-    ``n_events``; ``type_counts`` builds the view's ``event_type_counts``
-    from the 30-day frame.
+    ``daily`` is a (user_id, day-or-NULL)-keyed pre-aggregate over
+    ``_events_by_lookback_day`` carrying at least ``n_events``;
+    ``type_counts`` builds the view's ``event_type_counts`` from the
+    30-day frame.
 
-    The grid and ``daily`` are UNIONed, grid rows tagged — no join. A
-    ``rangeBetween`` frame holds every row whose day number is in range,
-    so a grid row and the daily row of its day are peers, and every frame
-    aggregate equals the one over a joined row. Daily rows before
-    ``start`` (never in the grid) stay visible to early days' frames.
-    Keeping only grid rows at the end also trims that lookback.
+    One ``groupBy(user_id)`` collects each user's daily rows (the NULL-day
+    group only names the user), and one ``inline`` emits the user's grid
+    rows, tagged, and its daily rows together: no join, no union, and
+    the window reads the user-keyed partitioning of that aggregate, so
+    no exchange sits between it and the frames. Per-user state is the
+    ≤ (days in range + 31) daily structs the window partition holds
+    anyway. A ``rangeBetween`` frame holds every row whose day number is
+    in range, so a grid row and the daily row of its day are peers, and
+    every frame aggregate equals the one over a joined row. Daily rows
+    before ``start`` (never in the grid) stay visible to early days'
+    frames. Keeping only grid rows at the end also trims that lookback.
     """
-    grid = _scaffold(
-        events.select(F.col(user_col).alias("user_id")), start, end, "user_id", "day"
+    carried = [f for f in daily.schema.fields if f.name not in ("user_id", "day")]
+    days = F.sequence(F.lit(start).cast("date"), F.lit(end).cast("date"))
+    grid = F.transform(
+        days,
+        lambda d: F.struct(
+            d.alias("day"),
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in carried],
+            F.lit(True).alias(_GRID),
+        ),
     )
-    dense = grid.withColumn(_GRID, F.lit(True)).unionByName(
-        daily.withColumn(_GRID, F.lit(False)), allowMissingColumns=True
+    in_lookback = F.when(
+        F.col("day").isNotNull(),
+        F.struct("day", *[f.name for f in carried], F.lit(False).alias(_GRID)),
+    )
+    dense = (
+        daily.groupBy("user_id")
+        .agg(F.collect_list(in_lookback).alias("daily"))
+        .select("user_id", F.inline(F.concat(grid, F.col("daily"))))
     )
     by_day = Window.partitionBy("user_id").orderBy(F.unix_date(F.col("day")))
     w7 = by_day.rangeBetween(-SHORT_WINDOW_DAYS, 0)
@@ -196,7 +223,7 @@ def backfill_features_window_form(
     bound ``backfill_features_typed`` accepts too. The plan is lazy: no
     Spark job runs until an action.
     """
-    ev = _events_in_lookback(events, start, end, user_col, ts_col, type_col)
+    ev = _events_by_lookback_day(events, start, end, user_col, ts_col, type_col)
     daily = ev.groupBy("user_id", "day").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.collect_set("event_type").alias("types"),
@@ -204,11 +231,9 @@ def backfill_features_window_form(
     # collect_list skips the grid rows' null sets, so an eventless window
     # flattens to an empty array and counts 0.
     return _densify_and_frames(
-        events,
         daily,
         start,
         end,
-        user_col,
         lambda w30: F.size(
             F.array_distinct(F.flatten(F.collect_list("types").over(w30)))
         ).cast("string"),
@@ -252,15 +277,18 @@ def backfill_features_typed(
     ``Σ map values = event_count_30d`` are pinned by tests against the
     string-contract form.
     """
-    ev = _events_in_lookback(events, start, end, user_col, ts_col, type_col)
+    ev = _events_by_lookback_day(events, start, end, user_col, ts_col, type_col)
+    # The NULL-day group (events outside the lookback, type NULL) only
+    # names its user: it gets no map, so its NULL type is never a key.
     daily = (
         ev.groupBy("user_id", "day", "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .groupBy("user_id", "day")
         .agg(
             F.sum("n").alias("n_events"),
-            F.map_from_entries(
-                F.collect_list(F.struct("event_type", "n"))
+            F.when(
+                F.col("day").isNotNull(),
+                F.map_from_entries(F.collect_list(F.struct("event_type", "n"))),
             ).alias("type_map"),
         )
     )
@@ -279,4 +307,4 @@ def backfill_features_typed(
             ),
         )
 
-    return _densify_and_frames(events, daily, start, end, user_col, merged)
+    return _densify_and_frames(daily, start, end, merged)

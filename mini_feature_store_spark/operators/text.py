@@ -24,6 +24,7 @@ from mini_feature_store_spark.functions import (
     round_half_up,
     spread,
 )
+from mini_feature_store_spark.io.sources import read_parquet
 
 #: Tiny per-language marker-word lists for the heuristic language ID.
 #: Deterministic and tiny by design — a real lang-ID model is out of scope;
@@ -1245,9 +1246,7 @@ def load_quality_classifier(spark, model_dir: str) -> tuple[dict, float]:
     ``QUALITY_CLF_FEATURES`` so a stale artifact fails loudly."""
     from pathlib import Path
 
-    rows = spark.read.parquet(
-        str(Path(model_dir) / "coeffs.parquet")
-    ).collect()
+    rows = read_parquet(spark, str(Path(model_dir) / "coeffs.parquet")).collect()
     coefs = {r.feature: float(r.coef) for r in rows}
     if _CLF_BIAS_KEY not in coefs or set(coefs) - {_CLF_BIAS_KEY} != set(
         QUALITY_CLF_FEATURES

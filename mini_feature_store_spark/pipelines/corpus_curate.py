@@ -87,6 +87,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mini_feature_store_spark.io.sources import read_parquet
+
 
 @dataclass
 class CorpusCurationConfig:
@@ -333,8 +335,8 @@ def _open_artifacts(
         art.dsir = _load_dsir_signal(spark, cfg)
     if cfg.mixture_weights_dir is not None:
         # a doremi-weights artifact: bounded (domain, weight) table
-        wrows = spark.read.parquet(
-            cfg.mixture_weights_dir.rstrip("/") + "/weights.parquet"
+        wrows = read_parquet(
+            spark, cfg.mixture_weights_dir.rstrip("/") + "/weights.parquet"
         ).collect()
         if not wrows:
             raise ValueError(
@@ -376,7 +378,7 @@ def _open_tokenizer(
     ):
         path = spark._jvm.org.apache.hadoop.fs.Path(f"{base}/{name}")
         if path.getFileSystem(conf).exists(path):
-            return encode, spark.read.parquet(f"{base}/{name}")
+            return encode, read_parquet(spark, f"{base}/{name}")
     raise ValueError(
         f"pack_tokenizer_dir {tokenizer_dir!r} holds neither "
         "merges.parquet nor pieces.parquet"
@@ -554,7 +556,7 @@ def _curate(
     )
 
     funnel = stages.funnel
-    docs = spark.read.parquet(cfg.input_path)
+    docs = read_parquet(spark, cfg.input_path)
     funnel["input"] = docs.count()
     step = stages.step
 
@@ -622,7 +624,7 @@ def _curate(
                 spark,
                 admitted,
                 cfg,
-                lm_reference=spark.read.parquet(cfg.lm_reference_path),
+                lm_reference=read_parquet(spark, cfg.lm_reference_path),
                 dsir_weights=wdf,
                 dsir_n_buckets=nb,
                 dsir_max_order=mo,
@@ -713,7 +715,7 @@ def _curate(
             )
         else:
             picked = dsir_resample(
-                spark.read.parquet(cfg.dsir_target_path),
+                read_parquet(spark, cfg.dsir_target_path),
                 admitted,
                 k=cfg.dsir_keep,
                 seed=cfg.dsir_seed,
@@ -743,7 +745,7 @@ def _curate(
             scorer = trigram_lm_score
         else:
             scorer = functools.partial(ngram_lm_score, order=cfg.lm_order)
-        ref = spark.read.parquet(cfg.lm_reference_path)
+        ref = read_parquet(spark, cfg.lm_reference_path)
         scored = scorer(
             ref, admitted, text_col=cfg.text_col, id_col=cfg.id_col
         )
@@ -863,7 +865,7 @@ def _curate(
         # embeddings restricted to still-surviving docs FIRST, so dropped
         # text dups can't crowd out semantically distinct survivors
         emb = stages.hold(
-            spark.read.parquet(cfg.embeddings_path)
+            read_parquet(spark, cfg.embeddings_path)
             .select(
                 F.col(cfg.embedding_id_col).alias(cfg.id_col), "embedding"
             )
@@ -892,7 +894,7 @@ def _curate(
         emb.unpersist()
 
     if cfg.benchmark_path is not None:
-        bench = spark.read.parquet(cfg.benchmark_path)
+        bench = read_parquet(spark, cfg.benchmark_path)
         flagged = decontaminate(
             survivors,
             bench,
@@ -1003,7 +1005,7 @@ def _curate(
             )
         pack_path = cfg.output_path.rstrip("/") + "_packing"
         packing.write.mode("overwrite").parquet(pack_path)
-        written = spark.read.parquet(pack_path)
+        written = read_parquet(spark, pack_path)
         funnel["packed_docs"] = written.count()
         funnel["packing_bins"] = (
             written.select("shard", "bin_id").distinct().count()
@@ -1045,7 +1047,7 @@ def _fit_dsir_signal(
 
     nb, mo = 8192, 2
     wdf = dsir_bucket_weights(
-        spark.read.parquet(cfg.dsir_target_path),
+        read_parquet(spark, cfg.dsir_target_path),
         pool,
         text_col=cfg.text_col,
         n_buckets=nb,

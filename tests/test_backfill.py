@@ -265,3 +265,112 @@ def test_typed_form_agrees_with_string_contract(spark, sf_dir):
     base = backfill_features_window_form(events, "2024-01-01", "2024-01-30")
     a, b = flat.drop("_sum_counts"), base
     assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+
+#: Users at the edges of the densify's NULL-day group: a null user, a
+#: user whose only events fall before the 30-day lookback of 2024-01-05,
+#: and a user whose only events fall after 2024-01-07.
+_EDGE_EVENTS = [
+    ("a", "click", "2024-01-02 10:00:00"),
+    ("a", "view", "2024-01-06 10:00:00"),
+    (None, "view", "2024-01-05 11:00:00"),
+    (None, "click", "2023-12-01 12:00:00"),
+    ("early", "click", "2023-11-20 08:00:00"),
+    ("early", "view", "2023-12-05 23:59:59"),
+    ("late", "click", "2024-01-08 00:00:00"),
+    ("late", "view", "2024-02-01 00:00:00"),
+]
+
+
+def _sorted_rows(df) -> list[tuple]:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def test_densify_matches_join_form_on_edge_users(spark):
+    """The NULL-day group gives every user its grid, including a null
+    user and users with no event in [start - 30, end]; each reads zero
+    rows, as in the join form."""
+    events = _events(spark, _EDGE_EVENTS)
+    got = _sorted_rows(
+        backfill_features_window_form(events, "2024-01-05", "2024-01-07")
+    )
+    assert got == _sorted_rows(
+        backfill_features_join_form(events, "2024-01-05", "2024-01-07")
+    )
+    out = {(r[0], r[1].isoformat()): r[2:] for r in got}
+    assert len(out) == 4 * 3
+    for user in (None, "early", "late"):
+        for d in ("2024-01-05", "2024-01-06", "2024-01-07"):
+            assert out[(user, d)] == (0, 0, None, "0")
+    assert out[("a", "2024-01-06")] == (2, 2, 0, "2")
+
+
+def test_refresh_refilling_a_hole_matches_join_form(spark, tmp_path):
+    """A refresh over a table with a hole computes the hole and the new
+    day from one densify, and the table equals the join form's rows."""
+    from mini_feature_store_spark.io.tables import VersionedTable
+    from mini_feature_store_spark.pipelines import (
+        BackfillConfig,
+        run_backfill_incremental,
+    )
+
+    path = str(tmp_path / "events")
+    _events(spark, _EDGE_EVENTS).write.parquet(path)
+    table = str(tmp_path / "features")
+    for lo, hi in (("2024-01-05", "2024-01-05"), ("2024-01-07", "2024-01-07")):
+        run_backfill_incremental(spark, BackfillConfig(path, table, lo, hi))
+    cfg = BackfillConfig(path, table, "2024-01-05", "2024-01-08")
+    assert run_backfill_incremental(spark, cfg) == ["2024-01-06", "2024-01-08"]
+    expected = backfill_features_join_form(
+        spark.read.parquet(path), "2024-01-05", "2024-01-08"
+    )
+    got = VersionedTable(table).read(spark).select(*expected.columns)
+    assert _sorted_rows(got) == _sorted_rows(expected)
+
+
+@pytest.mark.parametrize(
+    "partitions, aqe", [("1", "true"), ("7", "true"), ("4", "false")]
+)
+def test_window_views_invariant_to_shuffle_width_and_aqe(
+    spark, sf_dir, partitions, aqe
+):
+    """Both window-form views equal the join form (the typed view through
+    its map invariants) whatever the shuffle width, with AQE on or off."""
+    from mini_feature_store_spark.io import load_testdata
+    from mini_feature_store_spark.operators.rolling import (
+        backfill_features_typed,
+    )
+
+    events = (
+        load_testdata(spark, sf_dir, "events")["events"]
+        .select(F.col("user_id").cast("string").alias("user_id"), "event_type", "ts")
+        .unionByName(_events(spark, _EDGE_EVENTS))
+    )
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    prev = [spark.conf.get(k) for k in keys]
+    try:
+        for k, v in zip(keys, (partitions, aqe)):
+            spark.conf.set(k, v)
+        oracle = _sorted_rows(
+            backfill_features_join_form(events, "2024-01-05", "2024-01-20")
+        )
+        window = backfill_features_window_form(events, "2024-01-05", "2024-01-20")
+        assert _sorted_rows(window) == oracle
+        typed = backfill_features_typed(events, "2024-01-05", "2024-01-20")
+        counts = F.map_values("event_type_counts")
+        flat = typed.select(
+            "user_id",
+            "day",
+            "event_count_7d",
+            "event_count_30d",
+            "last_event_days_ago",
+            F.size("event_type_counts").cast("string").alias("event_type_counts"),
+            F.aggregate(counts, F.lit(0).cast("bigint"), lambda a, b: a + b).alias(
+                "_sum"
+            ),
+        )
+        assert flat.where(F.col("_sum") != F.col("event_count_30d")).isEmpty()
+        assert _sorted_rows(flat.drop("_sum")) == oracle
+    finally:
+        for k, v in zip(keys, prev):
+            spark.conf.set(k, v)

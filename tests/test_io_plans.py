@@ -487,28 +487,60 @@ def test_funnel_plan_shapes_stay_tagged(spark):
         assert exchanges <= max_exchanges, (name, exchanges)
 
 
-@pytest.mark.parametrize(
-    "name, max_jobs",
-    [
-        ("features_daily", 5),
-        ("features_daily_typed", 6),
-        ("pit_training_data", 8),
-        ("pit_training_multi", 11),
-        ("pit_training_typed", 9),
-    ],
-)
-def test_feature_view_query_job_ceilings(spark, sf_dir, name, max_jobs):
-    """Spark jobs (plan build + execution, counted by job group) of the
-    queries that reach the rolling feature views' shared densify."""
+#: query -> (Spark jobs, parquet scans, exchanges) ceilings of the queries
+#: that reach the rolling feature views' shared densify, at sf0.001
+FEATURE_VIEW_CEILINGS = {
+    "features_daily": (3, 1, 2),
+    "features_daily_typed": (4, 1, 3),
+    "pit_training_data": (6, 2, 4),
+    "pit_training_multi": (9, 3, 6),
+    "pit_training_typed": (7, 2, 5),
+}
+
+
+@pytest.mark.parametrize("name", list(FEATURE_VIEW_CEILINGS))
+def test_feature_view_query_job_ceilings(spark, sf_dir, name):
+    """Spark jobs (plan build + execution, counted by job group), parquet
+    scans and exchanges of the queries that reach the rolling feature
+    views' shared densify: the events are scanned once, and the loads
+    read their schemas from the file footer."""
+    import re
+
     from mini_feature_store_spark.queries import QUERIES
+
+    max_jobs, max_scans, max_exchanges = FEATURE_VIEW_CEILINGS[name]
 
     sc = spark.sparkContext
     sc.setJobGroup(name, name)
     try:
-        QUERIES[name](spark, sf_dir).collect()
+        df = QUERIES[name](spark, sf_dir)
+        plan = plan_text(df)
+        df.collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(name)) <= max_jobs
+    assert len(set(re.findall(r"\((\d+)\) Scan parquet", plan))) <= max_scans
+    assert len(set(re.findall(r"\((\d+)\) Exchange", plan))) <= max_exchanges
+
+
+def test_backfill_executed_plan_one_scan_no_exchange_above_generate(spark, sf_dir):
+    """The window-form backfill scans the events once, and the window
+    reads the user-keyed partitioning the densify's Generate keeps: no
+    Exchange sits above the Generate in the executed plan."""
+    from mini_feature_store_spark.io import load_testdata
+    from mini_feature_store_spark.operators.rolling import (
+        backfill_features_window_form,
+    )
+
+    events = load_testdata(spark, sf_dir, "events")["events"]
+    df = backfill_features_window_form(events, "2024-01-05", "2024-01-20")
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    assert final.count("Scan parquet") == 1
+    above, generate, below = final.partition("Generate ")
+    assert generate and "Exchange" not in above
+    assert below.count("Exchange ") == 2
 
 
 def test_orc_roundtrip_and_pushdown(spark, tmp_path):

@@ -126,19 +126,20 @@ def _jobs_of(spark, group: str, fn) -> int:
 
 def test_backfill_job_ceilings(spark, tmp_path, events_path):
     """Job ceilings of the backfill and the daily refresh: the full
-    backfill and a one-day incremental append run at most 5 jobs each
-    (schema inference, then the feature plan's query stages); finding
+    backfill and a one-day incremental append run at most 3 jobs each
+    (the daily pre-aggregate's and the per-user exchange's stages, then
+    the write; the events schema comes from their footer); finding
     the present days reads directory names, so an already-current run
     and a run refused for its layout run none."""
     from mini_feature_store_spark.pipelines import run_backfill_incremental
 
     table = str(tmp_path / "features")
     full = BackfillConfig(events_path, table, "2024-01-01", "2024-01-04")
-    assert _jobs_of(spark, "bf-full", lambda: run_backfill(spark, full)) <= 5
+    assert _jobs_of(spark, "bf-full", lambda: run_backfill(spark, full)) <= 3
     one_day = BackfillConfig(events_path, table, "2024-01-01", "2024-01-05")
     assert (
         _jobs_of(spark, "bf-incr", lambda: run_backfill_incremental(spark, one_day))
-        <= 5
+        <= 3
     )
     assert VersionedTable(table).partition_values("day") == {
         f"2024-01-0{d}" for d in range(1, 6)
@@ -251,12 +252,13 @@ def test_pit_join_pipeline(spark, tmp_path, events_path):
     ).write.parquet(labels_path)
 
     out = str(tmp_path / "training")
-    run_pit_join(
-        spark,
-        PointInTimeJoinConfig(
-            labels_path=labels_path, features_table=table, output_path=out
-        ),
+    cfg = PointInTimeJoinConfig(
+        labels_path=labels_path, features_table=table, output_path=out
     )
+    # the labels schema comes from their footer; the join and its write
+    # run the rest
+    jobs = _jobs_of(spark, "pit-join", lambda: run_pit_join(spark, cfg))
+    assert jobs <= 3, jobs
     got = spark.read.parquet(out).collect()
     assert len(got) == 1
     assert got[0].day == dt.date(2024, 1, 4)
@@ -1075,15 +1077,16 @@ def test_batch_inference_latest_at_cutoff(spark, tmp_path, events_path):
     ).write.parquet(users_path)
 
     out = str(tmp_path / "scoring")
-    run_batch_inference(
-        spark,
-        BatchInferenceConfig(
-            users_path=users_path,
-            features_table=table,
-            output_path=out,
-            as_of="2024-01-03",
-        ),
+    cfg = BatchInferenceConfig(
+        users_path=users_path,
+        features_table=table,
+        output_path=out,
+        as_of="2024-01-03",
     )
+    # the users schema comes from their footer; the latest-per-key
+    # aggregate, the join and the write run the rest
+    jobs = _jobs_of(spark, "batch-inference", lambda: run_batch_inference(spark, cfg))
+    assert jobs <= 3, jobs
     rows = {r.user_id: r for r in spark.read.parquet(out).collect()}
     assert set(rows) == {"u1", "u2", "u_cold"}
     assert rows["u1"].day.isoformat() == "2024-01-03"  # not the Jan 5 row

@@ -21,24 +21,28 @@ SF_DIR = "/root/testdata/sf0.01"
 #: query → the plan properties a reviewer should check (rendered as notes)
 AUDITED: dict[str, str] = {
     "features_daily": (
-        "ONE daily aggregate, densified by a tagged UNION with the grid "
-        "(no join, no broadcast: each distinct user explodes its own day "
-        "sequence), one hash exchange on user_id feeding every range-frame "
-        "window; the daily aggregate carries each day's collect_set of "
-        "types, and the distinct-types rolling count is the size of the "
-        "flattened, de-duplicated sets in the frame (at most 31 daily "
-        "sets per row; no type dim, no broadcast)."
+        "ONE scan and ONE daily aggregate keyed by (user_id, day), where "
+        "the day is NULL outside [start-30, end] so every event's user "
+        "still reaches the grid; one user_id-keyed collect of each user's "
+        "daily rows, then one Generate (inline) emits the user's day grid "
+        "and daily rows together (no join, no union, no broadcast). The "
+        "range-frame window reads that user_id partitioning: no Exchange "
+        "sits above the Generate, so the grid is never shuffled. The "
+        "daily aggregate carries each day's collect_set of types, and "
+        "the distinct-types rolling count is the size of the flattened, "
+        "de-duplicated sets in the frame (at most 31 daily sets per row)."
     ),
     "features_daily_typed": (
         "Map-valued feature view (r9): TWO-LEVEL daily pre-aggregate "
         "(user,day,type)->(user,day) builds one small per-day count map "
-        "before the user_id window exchange; the rolling map is an "
+        "before the user_id collect; the rolling map is an "
         "aggregate/map_zip_with fold over the <=31 daily maps the "
         "range frame exposes — per-row cost bounded by window length x "
-        "type cardinality, never raw event volume. Same union densify "
-        "+ per-user day grid as features_daily; the gate row "
-        "serializes the map as sorted type:count pairs (maps can't "
-        "hash in the driver compare)."
+        "type cardinality, never raw event volume. Same single scan, "
+        "NULL-day users and Generate densify as features_daily (no "
+        "Exchange above the Generate); the gate row serializes the map "
+        "as sorted type:count pairs (maps can't hash in the driver "
+        "compare)."
     ),
     "pit_training_data": (
         "As-of join: equi-join on user_id with the day <= as-of "
@@ -821,14 +825,15 @@ AUDITED: dict[str, str] = {
     "pit_training_typed": (
         "Typed (map-valued) PIT training assembly (r9): the "
         "features_daily_typed subtree (two-level daily pre-aggregate, "
-        "one user_id window exchange, bounded map fold) feeds the "
-        "as-of join — max_by per label row with the map riding as "
-        "PAYLOAD only (the ordering key is day). The join + collapse "
-        "add one exchange (as in pit_training_data), and the gate-row "
-        "map serialization (sorted type:count pairs) is a post-join "
-        "projection. In-suite ~2.6s is the typed per-row map-fold "
-        "payload documented at features_daily_typed (2 scans / 4 "
-        "exchanges — no more than the string form; don't chase)."
+        "one user_id collect under the Generate densify, bounded map "
+        "fold) feeds the as-of join — max_by per label row with the map "
+        "riding as PAYLOAD only (the ordering key is day). The join + "
+        "collapse add one exchange (as in pit_training_data), and the "
+        "gate-row map serialization (sorted type:count pairs) is a "
+        "post-join projection. In-suite ~2.6s is the typed per-row "
+        "map-fold payload documented at features_daily_typed (1 scan / 3 "
+        "exchanges — one more than the string form, for the map's "
+        "second aggregate level; don't chase)."
     ),
     "corpus_curation_funnel": (
         "The composed curation funnel, tagged two-pass form (r10 — the "
