@@ -1,5 +1,4 @@
 from mini_feature_store_spark.io.sources import (  # noqa: F401
-    MemoryStore,
     read_csv,
     read_json,
     read_parquet,

@@ -1,4 +1,4 @@
-"""Sources: parquet / JSON / CSV / managed-table scans + in-memory test seam.
+"""Sources: parquet / JSON / CSV / managed-table scans.
 
 Re-expresses the reference's ``platform/Fetchers.scala`` trait surface
 (readParquet :79-90, readJson :92-103, readCsv :105-120, readIcebergTable
@@ -20,7 +20,6 @@ Scale notes:
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
 
 from py4j.protocol import Py4JJavaError
 from pyspark.errors.exceptions.captured import CapturedException
@@ -260,48 +259,6 @@ def load_testdata(
             df = read_parquet(spark, path)
         out[n] = df
     return out
-
-
-@dataclass
-class MemoryStore:
-    """In-memory storage seam for tests.
-
-    Plays the role of the reference's dependency-injected
-    ``TestWriter``/``TestFetcher`` pair (``suit/TestWriter.scala:16-92``,
-    ``suit/TestFetcher.scala:17-89``): writes materialize rows + schema into a
-    dict keyed by path/table name; reads rebuild DataFrames from them. Honors
-    overwrite / append / ignore / error modes (TestWriter.scala:40-59).
-
-    Test-only by design — production sinks never collect (SURVEY.md §4.3).
-    """
-
-    rows: dict[str, list] = field(default_factory=dict)
-    schemas: dict[str, T.StructType] = field(default_factory=dict)
-
-    def write(self, df: DataFrame, key: str, mode: str = "overwrite") -> None:
-        if key in self.rows:
-            if mode == "ignore":
-                return
-            if mode in ("error", "errorifexists"):
-                raise ValueError(f"key already exists: {key}")
-        collected = df.collect()
-        if mode == "append" and key in self.rows:
-            self.rows[key].extend(collected)
-        else:
-            self.rows[key] = list(collected)
-            self.schemas[key] = df.schema
-
-    def read(self, spark: SparkSession, key: str) -> DataFrame:
-        if key not in self.rows:
-            raise KeyError(f"no such key in MemoryStore: {key}")
-        return spark.createDataFrame(self.rows[key], self.schemas[key])
-
-    def keys(self) -> list[str]:
-        return sorted(self.rows)
-
-    def clear(self) -> None:
-        self.rows.clear()
-        self.schemas.clear()
 
 
 def read_json_with_quarantine(

@@ -203,8 +203,10 @@ def append_to_ivfpq_index(
     batch — streaming ``foreachBatch`` is at-least-once — appends nothing
     twice; same re-probe-the-store discipline as
     ``incremental_dedup_stream``. Dynamic partition append: only the
-    cells the batch lands in gain new files; compaction of small appended
-    files is the same ``VersionedTable.compact`` story as any other table.
+    cells the batch lands in gain new files. ``codes/`` is a plain
+    cell-partitioned parquet directory, not a ``VersionedTable``: nothing
+    compacts its small appended files short of a full
+    ``build_ivfpq_index`` rebuild.
     """
     meta = _load_model(index_dir)
     codes_dir = str(Path(index_dir) / "codes")

@@ -87,17 +87,6 @@ def _pieces_from_words(words: DataFrame, max_piece_len: int) -> DataFrame:
     )
 
 
-def piece_table(
-    df: DataFrame, max_piece_len: int = 4, text_col: str = "text"
-) -> DataFrame:
-    """Seed candidate table: every substring of length ≤ ``max_piece_len``
-    of every distinct corpus chunk, weighted by chunk frequency —
-    ``(piece, freq)``. One corpus pass (via ``word_table``), then a
-    substring explode on the DISTINCT-chunk table only."""
-    words = word_table(df, text_col).select("word", "freq")
-    return _pieces_from_words(words, max_piece_len)
-
-
 def _segment_word(
     word: str, freq_of: dict[str, int], max_piece_len: int
 ) -> list[str]:

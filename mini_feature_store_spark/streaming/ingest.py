@@ -13,13 +13,19 @@ Scale notes:
   path for batch and streaming sync (no logic fork to keep consistent).
 - File-source streams checkpoint offsets; ``availableNow`` triggers give
   exactly-once batch-boundary semantics for backfill-style catch-up runs.
+- The three admitted-store ingest streams (exact, URL and near-dup dedup)
+  share one store protocol, ``_admitted_store_stream``: construction-time
+  swap recovery, the per-batch store probe and read, and the append. Each
+  stream supplies only its admission rule. ``compact_admitted_store``
+  rewrites such a store through ``io.sinks.write_parquet_clustered``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import AbstractContextManager, contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -114,13 +120,14 @@ def _store_exists(spark: SparkSession, path: str) -> bool:
     the Hadoop FileSystem API — a driver-local ``os.path.isdir`` silently
     returns False forever for s3://...hdfs:// stores, which would skip
     the against-corpus dedup probe (and its replay idempotency) on every
-    batch. Swap recovery runs at stream construction (the ingest
-    builders) AND — conditionally — here: when the store looks MISSING
-    (heals the between-renames crash), and ONCE per path when the store
-    is present but a ``__old`` sibling survives — a writer restarted via
-    ``.start()`` (no builder re-run) after a non-atomic-rename (s3a)
-    compaction crash would otherwise silently resume against a
-    possibly-split store instead of hitting the recovery RuntimeError.
+    batch. Swap recovery runs at stream construction
+    (``_admitted_store_stream``) AND — conditionally — here: when the
+    store looks MISSING (heals the between-renames crash), and ONCE per
+    path when the store is present but a ``__old`` sibling survives — a
+    writer restarted via ``.start()`` (no builder re-run) after a
+    non-atomic-rename (s3a) compaction crash would otherwise silently
+    resume against a possibly-split store instead of hitting the
+    recovery RuntimeError.
     Steady state pays one extra ``exists()`` on the first batch only."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
@@ -139,11 +146,17 @@ def _store_exists(spark: SparkSession, path: str) -> bool:
             # (cleaned) or the ambiguous s3a 3-way state (raises) —
             # recover_admitted_store's decision table adjudicates
             recover_admitted_store(spark, path)
+    return next(_parquet_files(fs, hpath), None) is not None
+
+
+def _parquet_files(fs, hpath) -> Iterator:
+    """The parquet data files under ``hpath``, listed recursively through
+    the Hadoop FileSystem API."""
     it = fs.listFiles(hpath, True)
     while it.hasNext():
-        if it.next().getPath().getName().endswith(".parquet"):
-            return True
-    return False
+        status = it.next()
+        if status.getPath().getName().endswith(".parquet"):
+            yield status
 
 
 def read_event_stream(
@@ -444,6 +457,78 @@ def dsir_gated_stream(
     )
 
 
+def _admitted_store_stream(
+    stream: DataFrame,
+    admitted_path: str,
+    checkpoint_dir: str,
+    admit: Callable[[DataFrame, DataFrame | None], AbstractContextManager],
+):
+    """The admitted-store protocol of the ingest streams below; each
+    supplies only its admission rule. ``admit(batch, store)`` is a context
+    manager that yields the batch rows to append (``store`` is the
+    admitted rows, None before the first append) and releases whatever it
+    cached once the append is done or has raised.
+
+    ``foreachBatch`` is at-least-once: a batch whose checkpoint commit
+    never landed runs again on restart. Exactly-once therefore rests on
+    this one step being idempotent: a replayed batch re-probes the store,
+    finds its own rows there, and the rule admits none of them twice.
+
+    Swap recovery runs once, at stream construction (NOT per batch — that
+    would add FileSystem round-trips to every micro-batch), so the first
+    probe cannot mistake a mid-swap store for an empty one and re-admit
+    everything.
+
+    Returns the ``DataStreamWriter`` (caller starts/stops it)."""
+    recover_admitted_store(stream.sparkSession, admitted_path)
+
+    def append_admitted(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        store = None
+        if _store_exists(spark, admitted_path):
+            store = spark.read.parquet(admitted_path)
+        with admit(batch_df, store) as novel:
+            novel.write.mode("append").parquet(admitted_path)
+
+    return (
+        stream.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(append_admitted)
+    )
+
+
+def _first_new_key(key_col: str, key: Column, id_col: str):
+    """Admission rule of the exact and URL streams: add ``key`` as
+    ``key_col``, keep the smallest ``id_col`` per key within the batch
+    (deterministic), and drop keys the store already holds."""
+
+    @contextmanager
+    def admit(batch_df: DataFrame, store: DataFrame | None):
+        from pyspark.sql import Window
+
+        first = Window.partitionBy(key_col).orderBy(F.col(id_col).asc())
+        novel = (
+            batch_df.withColumn(key_col, key)
+            .withColumn("_rn", F.row_number().over(first))
+            .where(F.col("_rn") == 1)
+            .drop("_rn")
+        )
+        if store is not None:
+            # Planner-chosen join: the admitted set grows without bound, so
+            # never force a broadcast — small stores hash-join under AQE,
+            # large ones SMJ on the key. Each batch appends its own file;
+            # compact_admitted_store rewrites them as a few files clustered
+            # by the key, so the probe reads few footers at scale. The
+            # join puts the key first; the select keeps every file of the
+            # store in the first batch's column order.
+            novel = novel.join(
+                store.select(key_col), key_col, "left_anti"
+            ).select(novel.columns)
+        yield novel
+
+    return admit
+
+
 def incremental_dedup_stream(
     stream: DataFrame,
     admitted_path: str,
@@ -468,45 +553,8 @@ def incremental_dedup_stream(
     """
     from mini_feature_store_spark.operators.text import fingerprint
 
-    # once, at stream construction (NOT per batch — that would add
-    # FileSystem round-trips to every micro-batch): heal a compaction
-    # swap that died mid-rename, so the first probe can't mistake a
-    # mid-swap store for an empty one and re-admit everything
-    recover_admitted_store(stream.sparkSession, admitted_path)
-
-    def admit(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        spark = batch_df.sparkSession
-        with_fp = batch_df.withColumn("fingerprint", fingerprint(F.col(text_col)))
-        # within-batch winner per fingerprint: smallest id (deterministic)
-        batch_novel = (
-            with_fp.withColumn(
-                "_rn",
-                F.row_number().over(
-                    Window.partitionBy("fingerprint").orderBy(
-                        F.col(id_col).asc()
-                    )
-                ),
-            )
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        if _store_exists(spark, admitted_path):
-            # Planner-chosen join: the admitted set grows without bound, so
-            # never force a broadcast — small stores hash-join under AQE,
-            # large ones SMJ on the 128-bit fingerprint. Writing the store
-            # with write_parquet_clustered(cluster_by=["fingerprint"]) lets
-            # the probe prune files by fingerprint range at scale.
-            seen = spark.read.parquet(admitted_path).select("fingerprint")
-            batch_novel = batch_novel.join(seen, "fingerprint", "left_anti")
-        batch_novel.write.mode("append").parquet(admitted_path)
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(admit)
-    )
+    rule = _first_new_key("fingerprint", fingerprint(F.col(text_col)), id_col)
+    return _admitted_store_stream(stream, admitted_path, checkpoint_dir, rule)
 
 
 def incremental_neardedup_stream(
@@ -544,11 +592,8 @@ def incremental_neardedup_stream(
         ngram_jaccard_pairs,
     )
 
-    # construction-time swap recovery — see incremental_dedup_stream
-    recover_admitted_store(stream.sparkSession, admitted_path)
-
-    def admit(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    @contextmanager
+    def admit(batch_df: DataFrame, store: DataFrame | None):
         batch_df = batch_df.persist()
         try:
             intra = ngram_jaccard_pairs(
@@ -563,11 +608,10 @@ def incremental_neardedup_stream(
                 id_col,
                 "left_anti",
             )
-            if _store_exists(spark, admitted_path):
-                corpus = spark.read.parquet(admitted_path)
+            if store is not None:
                 cross = ngram_jaccard_against(
                     novel,
-                    corpus,
+                    store,
                     threshold=threshold,
                     text_col=text_col,
                     id_col=id_col,
@@ -578,18 +622,14 @@ def incremental_neardedup_stream(
                     id_col,
                     "left_anti",
                 )
-            novel.write.mode("append").parquet(admitted_path)
+            yield novel
         finally:
             # the batch and both operators' posting lists (track_cache)
             # are read only by this batch's write
             batch_df.unpersist()
             release_operator_caches()
 
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(admit)
-    )
+    return _admitted_store_stream(stream, admitted_path, checkpoint_dir, admit)
 
 
 def ann_index_ingest_stream(
@@ -657,41 +697,10 @@ def incremental_urldedup_stream(
     """
     from mini_feature_store_spark.operators.urls import canonicalize_url
 
-    # construction-time swap recovery — see incremental_dedup_stream
-    recover_admitted_store(stream.sparkSession, admitted_path)
-
-    def admit(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        spark = batch_df.sparkSession
-        with_canon = batch_df.withColumn(
-            "canonical_url", canonicalize_url(F.col(url_col))
-        )
-        batch_novel = (
-            with_canon.withColumn(
-                "_rn",
-                F.row_number().over(
-                    Window.partitionBy("canonical_url").orderBy(
-                        F.col(id_col).asc()
-                    )
-                ),
-            )
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        if _store_exists(spark, admitted_path):
-            # Planner-chosen join (store grows without bound — never force
-            # broadcast); clustering the store by canonical_url enables
-            # file pruning on the probe at scale.
-            seen = spark.read.parquet(admitted_path).select("canonical_url")
-            batch_novel = batch_novel.join(seen, "canonical_url", "left_anti")
-        batch_novel.write.mode("append").parquet(admitted_path)
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(admit)
+    rule = _first_new_key(
+        "canonical_url", canonicalize_url(F.col(url_col)), id_col
     )
+    return _admitted_store_stream(stream, admitted_path, checkpoint_dir, rule)
 
 
 def compact_admitted_store(
@@ -734,33 +743,21 @@ def compact_admitted_store(
 
     Returns ``{"rows": n, "files_before": b, "files_after": a}``.
     """
+    from mini_feature_store_spark.io.sinks import write_parquet_clustered
+
     recover_admitted_store(spark, admitted_path)
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(admitted_path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(hpath):
         raise ValueError(f"admitted store does not exist: {admitted_path}")
-
-    def _count_parquet(p) -> int:
-        n, it = 0, fs.listFiles(p, True)
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                n += 1
-        return n
-
-    files_before = _count_parquet(hpath)
+    files_before = sum(1 for _ in _parquet_files(fs, hpath))
     df = spark.read.parquet(admitted_path)
     rows = df.count()
+    # recovery has just dropped any earlier __compacting rewrite
     tmp = admitted_path.rstrip("/") + "__compacting"
+    write_parquet_clustered(df, tmp, [cluster_col], target_files=target_files)
     tpath = jvm.org.apache.hadoop.fs.Path(tmp)
-    if fs.exists(tpath):
-        fs.delete(tpath, True)
-    (
-        df.repartitionByRange(target_files, F.col(cluster_col))
-        .sortWithinPartitions(cluster_col)
-        .write.mode("overwrite")
-        .parquet(tmp)
-    )
     # swap: stage aside, rename into place (recover_admitted_store covers
     # a death between the two renames; readers started before the swap
     # keep their snapshot of the old file listing)
@@ -776,5 +773,5 @@ def compact_admitted_store(
     return {
         "rows": rows,
         "files_before": files_before,
-        "files_after": _count_parquet(hpath),
+        "files_after": sum(1 for _ in _parquet_files(fs, hpath)),
     }

@@ -4,8 +4,10 @@ online-sync path. All runs use availableNow triggers so they terminate."""
 
 from __future__ import annotations
 
+import ast
 import datetime as dt
 import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -576,6 +578,26 @@ def test_compact_admitted_store(spark, tmp_path):
     after = {tuple(r) for r in spark.read.parquet(admitted).collect()}
     assert after == before
 
+    # range-clustered: the files' canonical_url ranges, read from the
+    # parquet footers, are disjoint
+    import glob
+
+    import pyarrow.parquet as pq
+
+    ranges = []
+    for f in sorted(glob.glob(f"{admitted}/*.parquet")):
+        md = pq.read_metadata(f)
+        col = md.schema.names.index("canonical_url")
+        stats = [
+            md.row_group(i).column(col).statistics
+            for i in range(md.num_row_groups)
+        ]
+        ranges.append((min(s.min for s in stats), max(s.max for s in stats)))
+    assert len(ranges) == report["files_after"] == 2
+    ranges.sort()
+    for (_, hi_prev), (lo_next, _) in zip(ranges, ranges[1:]):
+        assert hi_prev < lo_next, ranges
+
     # stream continues correctly against the compacted store: one
     # respelling (rejected) + one novel URL (admitted)
     spark.createDataFrame(
@@ -588,6 +610,97 @@ def test_compact_admitted_store(spark, tmp_path):
     q.awaitTermination(120)
     ids = {r.doc_id for r in spark.read.parquet(admitted).collect()}
     assert 101 in ids and 100 not in ids
+
+
+#: (builder, key source column, micro-batches, admitted ids) for each
+#: admitted-store stream; each batch holds a within-batch duplicate or a
+#: duplicate of an earlier batch, so the replayed batch has rows to reject.
+_REPLAY_CASES = {
+    "exact": (
+        "incremental_dedup_stream",
+        "text",
+        [
+            [(1, "first document"), (2, "second document"), (3, "first document")],
+            [(10, "first document"), (11, "brand new content")],
+        ],
+        {1, 2, 11},
+    ),
+    "url": (
+        "incremental_urldedup_stream",
+        "url",
+        [
+            [(1, "https://example.com/a"), (2, "HTTPS://WWW.EXAMPLE.COM/a")],
+            [(10, "https://example.com/a?utm_source=feed"),
+             (11, "https://example.com/c")],
+        ],
+        {1, 11},
+    ),
+    "near": (
+        "incremental_neardedup_stream",
+        "text",
+        [
+            [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+             (2, "alpha beta gamma delta epsilon zeta eta theta iota KAPPA")],
+            [(10, "alpha beta gamma delta epsilon zeta eta theta iota lambda"),
+             (11, "one two three four five six seven eight nine ten")],
+        ],
+        {1, 11},
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_REPLAY_CASES))
+def test_admitted_store_stream_replay_admits_nothing_twice(
+    spark, tmp_path, kind
+):
+    """Exactly-once under replay: losing the last batch's checkpoint
+    commit makes the restarted stream run that batch again, against a
+    store that already holds its admitted rows; the store must not
+    change."""
+    from mini_feature_store_spark.streaming import ingest
+
+    builder, col, batches, admitted_ids = _REPLAY_CASES[kind]
+    schema = f"doc_id long, {col} string"
+    src_dir = tmp_path / "incoming"
+    for rows in batches:
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).json(str(src_dir))
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .json(str(src_dir))
+    )
+    admitted, ckpt = str(tmp_path / "admitted"), tmp_path / "ckpt"
+
+    def run():
+        writer = getattr(ingest, builder)(stream, admitted, str(ckpt))
+        q = writer.trigger(availableNow=True).start()
+        try:
+            q.awaitTermination(120)
+        finally:
+            q.stop()
+        return q
+
+    run()
+    before = sorted(tuple(r) for r in spark.read.parquet(admitted).collect())
+    assert {r[0] for r in before} == admitted_ids
+
+    last = max(int(p.name) for p in (ckpt / "commits").iterdir()
+               if p.name.isdigit())
+    assert last == len(batches) - 1
+    (ckpt / "commits" / str(last)).unlink()
+    crc = ckpt / "commits" / f".{last}.crc"
+    if crc.exists():
+        crc.unlink()
+
+    q = run()
+    # the lost batch really ran again, on its original input
+    assert [(p.batchId, p.numInputRows) for p in q.recentProgress] == [
+        (last, len(batches[-1]))
+    ]
+    after = sorted(tuple(r) for r in spark.read.parquet(admitted).collect())
+    assert after == before
 
 
 def test_compact_swap_crash_recovery(spark, tmp_path):
@@ -919,3 +1032,86 @@ def test_dsir_gated_stream(spark, tmp_path):
         dsir_gated_stream(
             stream.withColumn("dsir_log_weight", F.lit(0.0)), model_dir
         )
+
+
+_PACKAGE = Path(__file__).resolve().parent.parent / "mini_feature_store_spark"
+
+
+def _store_protocol_steps(source: str) -> dict[str, set[str]]:
+    """For each step of the admitted-store protocol, the top-level
+    functions that take it: a call to ``recover_admitted_store`` or
+    ``_store_exists``, an append write (``.mode("append")`` or a
+    ``mode="append"`` keyword), and a ``repartitionByRange`` call."""
+    steps: dict[str, set[str]] = {}
+    for top in ast.parse(source).body:
+        for node in ast.walk(top):
+            if not isinstance(node, ast.Call):
+                continue
+            func = node.func
+            name = getattr(func, "attr", getattr(func, "id", None))
+            appends = (
+                name == "mode"
+                and node.args
+                and isinstance(node.args[0], ast.Constant)
+                and node.args[0].value == "append"
+            ) or any(
+                kw.arg == "mode"
+                and isinstance(kw.value, ast.Constant)
+                and kw.value.value == "append"
+                for kw in node.keywords
+            )
+            if appends:
+                step = "append"
+            elif name in (
+                "recover_admitted_store", "_store_exists", "repartitionByRange"
+            ):
+                step = name
+            else:
+                continue
+            steps.setdefault(step, set()).add(getattr(top, "name", "<module>"))
+    return steps
+
+
+def test_store_protocol_lint_sees_each_step():
+    src = (
+        "def a(spark, df, p):\n"
+        "    recover_admitted_store(spark, p)\n"
+        "    if ingest._store_exists(spark, p):\n"
+        "        df.write.mode('append').parquet(p)\n"
+        "def b(df, p):\n"
+        "    w = df.write.mode('overwrite')\n"
+        "    w.parquet(p)\n"
+        "    write_parquet(df, p, mode='append')\n"
+        "    df.writeStream.outputMode('append')\n"
+        "    df.repartitionByRange(2, 'k')\n"
+    )
+    assert _store_protocol_steps(src) == {
+        "recover_admitted_store": {"a"},
+        "_store_exists": {"a"},
+        "append": {"a", "b"},
+        "repartitionByRange": {"b"},
+    }
+
+
+def test_admitted_store_protocol_lives_in_one_helper():
+    """Store recovery and the store probe are called only by the shared
+    stream helper, by recovery itself and by compaction, anywhere in the
+    package; under ``streaming/`` only that helper appends, and nothing
+    range-partitions (compaction clusters through ``io.sinks``)."""
+    found: dict[str, set[str]] = {}
+    for path in sorted(_PACKAGE.rglob("*.py")):
+        streaming = path.parent.name == "streaming"
+        for step, owners in _store_protocol_steps(path.read_text()).items():
+            if streaming or step in ("recover_admitted_store", "_store_exists"):
+                found.setdefault(step, set()).update(
+                    f"{path.name}:{owner}" for owner in owners
+                )
+    assert found == {
+        "recover_admitted_store": {
+            "ingest.py:_admitted_store_stream",
+            "ingest.py:_store_exists",
+            "ingest.py:compact_admitted_store",
+        },
+        "_store_exists": {"ingest.py:_admitted_store_stream"},
+        "append": {"ingest.py:_admitted_store_stream"},
+    }
