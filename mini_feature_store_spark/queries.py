@@ -5427,6 +5427,7 @@ WITH ev AS (
   SELECT user_id,
          CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS DATE) AS wk
   FROM events
+  WHERE user_id IS NOT NULL AND ts IS NOT NULL
 ),
 cohorts AS (SELECT user_id, MIN(wk) AS cohort_week FROM ev GROUP BY 1),
 active AS (SELECT DISTINCT user_id, wk FROM ev),

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from mini_feature_store_spark.operators.funnel import (
@@ -134,6 +135,138 @@ def test_cohort_retention_offsets(spark):
     w2 = out[("2024-01-08", 0)]
     assert w2.n_active == 1 and w2.cohort_size == 1
     assert len(out) == 3
+
+
+def test_cohort_retention_excludes_null_users(spark):
+    # A NULL-user event has no user to cohort: it counts in neither
+    # n_active nor cohort_size, so offset 0 keeps n_active = cohort_size.
+    df = _ev(spark, [("u1", "e", 0), ("u2", "e", 3600), (None, "e", 7200)])
+    [row] = cohort_retention(df, period="week").collect()
+    assert row.cohort_week == dt.date(2024, 1, 1) and row.week_offset == 0
+    assert row.n_active == 2 and row.cohort_size == 2
+    assert row.retention_rate == 1.0
+
+
+#: (user_id, seconds after Monday 2024-01-01 or None) edge events: ``gap``
+#: is active in weeks 0 and 3 only, ``nots`` has no timestamp at all,
+#: ``part`` has one timestamp and one NULL, and one event has no user.
+_EDGE_RETENTION = [
+    (900, 0), (900, 22 * 86400),
+    (901, None), (901, None),
+    (902, 3 * 86400), (902, None),
+    (None, 86400),
+]
+
+
+def _retention_events(tmp_path):
+    """Writes ``events.parquet`` (the testdata schema) with 40 users over
+    five weeks plus the edge events; returns its (user_id, ts) pairs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = dt.datetime(2024, 1, 1)
+    pairs = [
+        (u, base + dt.timedelta(seconds=(u * 7919 + k * 86400 * (1 + u % 9)) % (35 * 86400)))
+        for u in range(40)
+        for k in range(1 + u % 5)
+    ] + [
+        (u, None if s is None else base + dt.timedelta(seconds=s))
+        for u, s in _EDGE_RETENTION
+    ]
+    n = len(pairs)
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(n), pa.int64()),
+                "ts": pa.array([t for _, t in pairs], pa.timestamp("us")),
+                "user_id": pa.array([u for u, _ in pairs], pa.int64()),
+                "event_type": pa.array(["view"] * n),
+                "value": pa.array([1.0] * n),
+                "props": pa.array(["{}"] * n),
+            }
+        ),
+        tmp_path / "events.parquet",
+    )
+    return pairs
+
+
+def _retention_reference(pairs, period):
+    """Python twin of ``cohort_retention``: {(cohort, offset): (n_active,
+    cohort_size, retention_rate)}."""
+    from collections import Counter
+
+    from mini_feature_store_spark.functions import round_half_up_py
+
+    step = {"day": 1, "week": 7}[period]
+    active: dict = {}
+    for u, t in pairs:
+        if u is None or t is None:
+            continue
+        d = t.date()
+        active.setdefault(u, set()).add(
+            d - dt.timedelta(days=d.weekday()) if period == "week" else d
+        )
+    cells, sizes = Counter(), Counter()
+    for ps in active.values():
+        c = min(ps)
+        sizes[c] += 1
+        cells.update((c, (p - c).days // step) for p in ps)
+    return {
+        (c, o): (n, sizes[c], round_half_up_py(n / sizes[c]))
+        for (c, o), n in cells.items()
+    }
+
+
+@pytest.mark.parametrize(
+    "partitions, aqe, period",
+    [("1", "true", "week"), ("7", "true", "week"), ("4", "false", "week"),
+     ("4", "true", "day")],
+)
+def test_cohort_retention_invariant_to_layout_and_config(
+    spark, tmp_path, partitions, aqe, period
+):
+    """Events split into 7 partitions give the Python reference's matrix
+    whatever the shuffle width, with AQE on or off, by week or by day;
+    the weekly matrix also equals the DuckDB oracle's."""
+    import duckdb
+
+    from mini_feature_store_spark.io import load_testdata
+    from mini_feature_store_spark.queries import ORACLE
+
+    pairs = _retention_events(tmp_path)
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    prev = [spark.conf.get(k) for k in keys]
+    try:
+        for k, v in zip(keys, (partitions, aqe)):
+            spark.conf.set(k, v)
+        events = load_testdata(spark, str(tmp_path), "events")["events"]
+        rows = cohort_retention(events.repartition(7), period=period).collect()
+    finally:
+        for k, v in zip(keys, prev):
+            spark.conf.set(k, v)
+    got = {
+        (r[0], r[1]): (r.n_active, r.cohort_size, r.retention_rate) for r in rows
+    }
+    assert len(got) == len(rows)
+    want = _retention_reference(pairs, period)
+    assert got == want
+    # the gap user adds offset 3 to its cohort; the timestamp-less user
+    # adds no row, and no row has a NULL offset
+    assert all(o is not None for _, o in got)
+    if period == "week":
+        assert (dt.date(2024, 1, 1), 3) in got
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW events AS SELECT * FROM "
+            f"read_parquet('{tmp_path}/events.parquet')"
+        )
+        oracle = {
+            (c, o): (n, s, r)
+            for c, o, n, s, r in con.execute(
+                ORACLE["cohort_retention_weekly"]
+            ).fetchall()
+        }
+        assert oracle == want
 
 
 # ── blocked fuzzy matching ──────────────────────────────────────────────────

@@ -236,11 +236,6 @@ _ALLOWLIST: dict[str, list[tuple[str, str]]] = {
     "doc_multi_benchmark_contamination": [
         ("Deduplicate [_bench#", "eval-suite (benchmark, shingle) set"),
     ],
-    # operators/retention.py — cohort sizes are keyed by calendar week:
-    # O(weeks elapsed), bounded by time, not by data volume.
-    "cohort_retention_weekly": [
-        ("AS cohort_size#", "calendar-week-keyed cohort sizes"),
-    ],
     # operators/dsir.py — the hinted side is the DENSE bucket-weight
     # table: Range(0, 8192) LEFT-joined 1:1 onto a bucket-keyed
     # aggregate (bucket = md5 % 8192, unique per group), so the build

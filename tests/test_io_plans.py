@@ -487,6 +487,32 @@ def test_funnel_plan_shapes_stay_tagged(spark):
         assert exchanges <= max_exchanges, (name, exchanges)
 
 
+def _jobs_scans_exchanges(spark, sf_dir, name):
+    """Spark jobs of one call of a registered query (plan build plus
+    execution, counted by job group), and the parquet scans and exchanges
+    of its plan."""
+    import re
+    import uuid
+
+    from mini_feature_store_spark.queries import QUERIES
+
+    # a fresh group per call: the tracker keeps every earlier call's jobs
+    group = f"{name}-{uuid.uuid4().hex}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, name)
+    try:
+        df = QUERIES[name](spark, sf_dir)
+        plan = plan_text(df)
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return (
+        len(sc.statusTracker().getJobIdsForGroup(group)),
+        len(set(re.findall(r"\((\d+)\) Scan parquet", plan))),
+        len(set(re.findall(r"\((\d+)\) Exchange", plan))),
+    )
+
+
 #: query -> (Spark jobs, parquet scans, exchanges) ceilings of the queries
 #: that reach the rolling feature views' shared densify, at sf0.001
 FEATURE_VIEW_CEILINGS = {
@@ -500,27 +526,54 @@ FEATURE_VIEW_CEILINGS = {
 
 @pytest.mark.parametrize("name", list(FEATURE_VIEW_CEILINGS))
 def test_feature_view_query_job_ceilings(spark, sf_dir, name):
-    """Spark jobs (plan build + execution, counted by job group), parquet
-    scans and exchanges of the queries that reach the rolling feature
-    views' shared densify: the events are scanned once, and the loads
-    read their schemas from the file footer."""
-    import re
-
-    from mini_feature_store_spark.queries import QUERIES
-
+    """Spark jobs, parquet scans and exchanges of the queries that reach
+    the rolling feature views' shared densify: the events are scanned
+    once, and the loads read their schemas from the file footer."""
+    jobs, scans, exchanges = _jobs_scans_exchanges(spark, sf_dir, name)
     max_jobs, max_scans, max_exchanges = FEATURE_VIEW_CEILINGS[name]
+    assert jobs <= max_jobs
+    assert scans <= max_scans
+    assert exchanges <= max_exchanges
 
-    sc = spark.sparkContext
-    sc.setJobGroup(name, name)
-    try:
-        df = QUERIES[name](spark, sf_dir)
-        plan = plan_text(df)
-        df.collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(name)) <= max_jobs
-    assert len(set(re.findall(r"\((\d+)\) Scan parquet", plan))) <= max_scans
-    assert len(set(re.findall(r"\((\d+)\) Exchange", plan))) <= max_exchanges
+
+#: query -> (Spark jobs, parquet scans, exchanges) ceilings of the
+#: perfbench query_mix queries on a cold call, at sf0.001. The n-gram
+#: Jaccard kernel's 9 jobs: the spread round-robin, the shingle
+#: exchange, one TableCacheQueryStage per scan of the persisted postings
+#: (3), the pair exchange, the hot count twice, and the result.
+QUERY_MIX_CEILINGS = {
+    "embedding_kmeans": (3, 1, 0),
+    "dedup_ngram_jaccard": (9, 1, 5),
+    "pricing_summary": (2, 1, 1),
+    "latest_event_per_user": (2, 1, 1),
+    "cohort_retention_weekly": (4, 1, 3),
+}
+
+
+@pytest.mark.parametrize("name", list(QUERY_MIX_CEILINGS))
+def test_query_mix_job_ceilings(spark, sf_dir, name):
+    """Spark jobs, parquet scans and exchanges of each query_mix query
+    run cold: after ``clearCache()`` and ``release_operator_caches()``."""
+    from mini_feature_store_spark.functions import release_operator_caches
+
+    spark.catalog.clearCache()
+    release_operator_caches()
+    jobs, scans, exchanges = _jobs_scans_exchanges(spark, sf_dir, name)
+    max_jobs, max_scans, max_exchanges = QUERY_MIX_CEILINGS[name]
+    assert jobs <= max_jobs
+    assert scans <= max_scans
+    assert exchanges <= max_exchanges
+
+
+def test_cohort_retention_same_jobs_every_call(spark, sf_dir):
+    """The user-keyed cohort pass runs exactly 4 jobs on consecutive
+    calls (one per exchange plus the result) over one events scan: no
+    exchange that AQE may or may not reuse, so the count cannot wobble."""
+    calls = [
+        _jobs_scans_exchanges(spark, sf_dir, "cohort_retention_weekly")
+        for _ in range(2)
+    ]
+    assert calls == [(4, 1, 3)] * 2
 
 
 def test_backfill_executed_plan_one_scan_no_exchange_above_generate(spark, sf_dir):

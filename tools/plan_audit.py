@@ -1078,6 +1078,19 @@ AUDITED: dict[str, str] = {
         "zero exchanges, zero Python. Check: returned plan is "
         "scan+project only."
     ),
+    "cohort_retention_weekly": (
+        "One user-keyed pass: ONE events scan, one groupBy(user_id) "
+        "collecting each user's set of active weeks (partial collect_set "
+        "map-side, so the user_id exchange carries one row per "
+        "(user, week) per partition), the cohort as the set's minimum, "
+        "then one Generate (explode) and ONE (cohort, offset) count whose "
+        "partial aggregate sits under its exchange — each (user, week) "
+        "appears once, so count(*) is the distinct-user count. The "
+        "cohort size is max(n_active) over a window partitioned by "
+        "cohort (every user is active at offset 0); that exchange moves "
+        "the O(weeks^2) count rows only. 3 exchanges, no join, no "
+        "broadcast."
+    ),
 }
 
 
