@@ -11,21 +11,27 @@ but deterministic, Arrow-vectorized, and on plain ``array<float>`` columns
 - **centroids live on the driver** (k·dim doubles — bounded and tiny next
   to the data) and are shipped to executors as a closure capture of each
   iteration's ``mapInPandas``;
-- **assignment is one numpy GEMM per Arrow batch** (argmax of the
-  centroid-dot for unit-normalized spherical k-means);
+- **assignment is one vectorized numpy pass per Arrow batch** (argmax
+  of the centroid-dot for unit-normalized spherical k-means);
 - **the update is a map-side combiner**: every input partition emits at
-  most k partial rows ``(cluster, flat_sum, n)``, so the per-iteration
-  shuffle is O(partitions · k · dim) regardless of corpus size — the
-  exact shape of MLlib's ``treeAggregate`` step;
+  most k partial rows ``(cluster, fixed-point sum, n)``, so the
+  per-iteration shuffle is O(partitions · k · dim) regardless of corpus
+  size — the exact shape of MLlib's ``treeAggregate`` step;
 - iterations are plain Python ``for`` on the driver with one Spark job
   each; no RDD lineage growth (each iteration re-reads the cached input).
+  Under ``LOCAL_MAX_VECTORS`` the whole fit and assignment run on the
+  driver after one bounded collect.
 
 Determinism: init is a hash-ordered sample (xxhash64 of the id — stable
-across runs and partitionings); ties in assignment break toward the lower
-cluster id. The one float caveat is summation order in the combiner
-(partition order is stable on static data, but not guaranteed by contract);
-tests therefore pin structural invariants (blob recovery, monotone inertia,
-centroid=mean) rather than bitwise centroid equality.
+across runs and partitionings; ids are keys, so the order has no ties
+short of a 64-bit hash collision); ties in assignment break toward the
+lower cluster id. Every row's centroid dots are summed over the
+dimensions in one fixed order, whatever batch the row arrives in, and
+the update sums each unit-normalized row rounded to fixed point
+(``_FIXED_SCALE``) in ``int64`` — integer addition is exact and
+associative, so no float summation order remains. Any grouping of the
+rows into partitions or Arrow batches, on either path, gives
+bit-identical centroids (pinned in ``tests/test_clustering.py``).
 """
 
 from __future__ import annotations
@@ -34,6 +40,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -52,59 +59,79 @@ def _unit(mat: np.ndarray) -> np.ndarray:
 
 
 #: driver-local fast-path bound on the VECTOR COUNT (the ``bpe_train``
-#: ``LOCAL_MAX_WORDS`` / ``graph.py LOCAL_MAX_EDGES`` dispatch pattern,
-#: r16 verdict "Next round" #7): every Lloyd iteration costs one Spark
-#: job over the cached input — a fixed driver toll regardless of data
-#: size — and bench/test-scale embedding tables are a few thousand rows.
-#: Under the bound the ``(pid, hash, v, nrm)`` rows are collected once
-#: by ``collect_if_bounded`` (~10 MB at dim 16; wide embeddings fall
-#: through on its byte budget long before this row cap) and every
-#: iteration replays IN PROCESS the exact distributed arithmetic: the same
-#: per-partition batch splits (``spark.sql.execution.arrow.
-#: maxRecordsPerBatch``), the same per-batch GEMM/bincount partials
-#: (``_batch_partials`` — one shared function, so the two paths cannot
-#: drift), and the same sorted-(cluster, pid) fold (``_fold_partials``).
-#: Bit-equal centroid trajectories are pinned by
-#: ``test_kmeans_local_equals_distributed``. Above the bound the
-#: distributed combiner path runs unchanged.
+#: ``LOCAL_MAX_WORDS`` / ``graph.py LOCAL_MAX_EDGES`` dispatch pattern):
+#: each distributed Lloyd iteration is one Spark job, a fixed driver toll,
+#: and bench/test-scale embedding tables are a few thousand rows. Under
+#: the bound ``collect_if_bounded`` brings the ``(id, _h, v, nrm)`` rows
+#: to the driver in one job (~10 MB at dim 16; wide embeddings fall
+#: through on its byte budget first); the fit runs there on the
+#: combiner's own partial and fold math, and ``kmeans`` assigns from the
+#: same rows.
 LOCAL_MAX_VECTORS = 65_536
 
+#: fixed-point scale of the Lloyd partial sums: a unit-normalized
+#: component rounds to an integer of at most 2^32 in magnitude, so an
+#: ``int64`` partition sum stays exact below 2^31 rows per partition,
+#: and the driver folds partitions as Python ints (no bound). The
+#: rounding moves a centroid component by at most 2^-33.
+_FIXED_SCALE = 2.0**32
 
-def _batch_partials(vs, nrms, cent_t, k: int, dim: int):
-    """ONE copy of the per-batch Lloyd partial math, used verbatim by
-    the distributed combiner and the driver-local replay: normalize,
-    GEMM-assign (argmax — ties break toward the lower cluster id,
-    deterministically), per-dim bincount partial sums."""
+#: default size of the hash-ordered sample the farthest-point init sweeps
+_INIT_SAMPLE = 2048
+
+
+def _unit_rows(vs, nrms) -> np.ndarray:
+    """``(n, dim)`` float64 matrix of the rows ``vs`` divided by their
+    norms ``nrms`` (zero vectors stay zero)."""
     mat = np.array(vs, dtype=np.float64)
     mat /= np.maximum(nrms, 1e-30)[:, None]
-    assign = np.argmax(mat @ cent_t, axis=1)
-    # per-dim bincount: k·dim partial sums without the unbuffered
-    # np.add.at slow path
-    sums = np.stack(
-        [
-            np.bincount(assign, weights=mat[:, d], minlength=k)
-            for d in range(dim)
-        ],
-        axis=1,
-    )
-    counts = np.bincount(assign, minlength=k)
-    return sums, counts
+    return mat
 
 
-def _fold_partials(cent: np.ndarray, parts, k: int, dim: int) -> np.ndarray:
-    """Fold ``(pid, cluster, s, n)`` partials in SORTED (cluster, pid)
-    order — the one deterministic cross-partition reduction both paths
-    share (r17: the old ``collect_list`` + ``zip_with`` fold summed in
-    shuffle-arrival order, which is not guaranteed stable run to run).
-    Empty clusters keep their previous centroid."""
-    sums = np.zeros((k, dim))
-    counts = np.zeros(k, dtype=np.int64)
-    for pid, cl, s, n in sorted(parts, key=lambda t: (t[1], t[0])):
-        sums[cl] += np.asarray(s, dtype=np.float64)
-        counts[cl] += n
+def _dots(mat: np.ndarray, cent_t: np.ndarray) -> np.ndarray:
+    """``mat @ cent_t``, each dot summed over the dimensions in index
+    order. A BLAS GEMM picks its kernel, and with it the rounding, by
+    matrix shape, so the same row can score differently in a batch of 1
+    and a batch of 10,000; this form computes every row the same way."""
+    sims = mat[:, :1] * cent_t[0]
+    for d in range(1, mat.shape[1]):
+        sims += mat[:, d : d + 1] * cent_t[d]
+    return sims
+
+
+def _batch_partials(mat: np.ndarray, cent_t: np.ndarray, k: int):
+    """ONE copy of the per-batch Lloyd partial math, used by the
+    distributed combiner and the driver-local fit: assign each unit row
+    to its nearest centroid (ties break toward the lower cluster id) and
+    sum the rows per cluster in fixed point. Returns ``(sums, counts)``
+    over ``k + 1`` bins; bin ``k`` counts the rows with a non-finite
+    component, which ``_fold_partials`` rejects."""
+    bad = ~np.isfinite(mat).all(axis=1)
+    mat = np.where(bad[:, None], 0.0, mat)
+    assign = np.where(bad, k, np.argmax(_dots(mat, cent_t), axis=1))
+    sums = np.zeros((k + 1, mat.shape[1]), dtype=np.int64)
+    np.add.at(sums, assign, np.rint(mat * _FIXED_SCALE).astype(np.int64))
+    return sums, np.bincount(assign, minlength=k + 1)
+
+
+def _fold_partials(cent: np.ndarray, parts, k: int) -> np.ndarray:
+    """Fold ``(cluster, s, n)`` partials (``cluster`` ≤ k, see
+    ``_batch_partials``) into the next centroids. The fixed-point sums
+    add as Python ints, which are exact, so the fold needs no order;
+    each mean is one correctly rounded int division. Empty clusters keep
+    their previous centroid."""
+    sums = [[0] * cent.shape[1] for _ in range(k + 1)]
+    counts = [0] * (k + 1)
+    for cl, s, n in parts:
+        sums[cl] = [a + int(b) for a, b in zip(sums[cl], s)]
+        counts[cl] += int(n)
+    if counts[k]:
+        raise ValueError("kmeans_fit: input vectors must be finite")
     new = cent.copy()
-    for cl in np.flatnonzero(counts):
-        new[cl] = sums[cl] / counts[cl]
+    for cl in range(k):
+        if counts[cl]:
+            scale = counts[cl] * int(_FIXED_SCALE)
+            new[cl] = [s / scale for s in sums[cl]]
     return _unit(new)
 
 
@@ -125,7 +152,7 @@ def kmeans_fit(
     k: int = 16,
     iters: int = 10,
     seed: int = 42,
-    sample_size: int = 2048,
+    sample_size: int = _INIT_SAMPLE,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> np.ndarray:
@@ -136,47 +163,45 @@ def kmeans_fit(
     greedy k-center sweep that spreads seeds across all modes (a plain
     k-row hash sample regularly drops two seeds into one blob and Lloyd's
     cannot recover; the k-means++ D² goal, derandomized). Lloyd's
-    iterations then run over the full corpus; the per-iteration shuffle is
-    the combiner output only (≤ partitions·k rows of ``dim`` doubles).
-    Empty clusters keep their previous centroid. The input is cached for
-    the duration of the fit and unpersisted before returning.
+    iterations then run over the full corpus. Empty clusters keep their
+    previous centroid. A vector with a NaN or infinite component raises
+    ``ValueError``.
 
-    r17 (guide §1.2, the ``LOCAL_MAX_VECTORS`` dispatch — see the
-    constant's docstring): under the bound the fit runs entirely on the
-    driver, replaying the distributed path's arithmetic bit-for-bit
-    (same partition/batch structure, same shared per-batch kernel, same
-    sorted fold), so the 1 + ``iters`` Spark jobs collapse to one
-    bounded collect.
-    The cross-partition reduction itself was ALSO made deterministic
-    this round on both paths: partials carry their partition id and the
-    driver folds them in sorted (cluster, pid) order, where the old
-    ``collect_list``+``zip_with`` fold summed in shuffle-arrival order
-    (stable in practice on static local data, but not a contract).
+    Under ``LOCAL_MAX_VECTORS`` (and the driver byte budget) the rows are
+    collected once and every iteration runs on the driver: one Spark job
+    per fit. Above it the input is cached for the fit and each iteration
+    is one ``mapInPandas`` combiner job whose output is at most
+    partitions·k exact partial rows. Both paths share the partial and
+    fold math, and the partials are exact integers, so the centroids do
+    not depend on the path or on how the input is partitioned.
     """
-    # spread(…, 8), not full defaultParallelism: this only fires on narrow
-    # (single-split → small) inputs, where 32 Python workers per Lloyd
-    # iteration cost more in task overhead than they parallelize; wide
-    # production inputs skip the exchange entirely.
-    base = with_vec_norm(spread(df, 8), vec_col, id_col)
+    return _fit(df, k, iters, seed, sample_size, vec_col, id_col)[0]
+
+
+def _fit(
+    df: DataFrame, k: int, iters: int, seed: int, sample_size: int,
+    vec_col: str, id_col: str,
+) -> tuple[np.ndarray, tuple[pd.Series, np.ndarray] | None]:
+    """``kmeans_fit`` → ``(centroids, local)``. ``local`` is the driver-
+    local fit's ``(ids, unit rows)`` for ``kmeans`` to assign from, or
+    ``None`` when the fit ran distributed."""
     hash_col = F.xxhash64(F.col("id").cast("string"), F.lit(seed))
     head = collect_if_bounded(
-        base.select(
-            F.spark_partition_id().alias("_pid"),
-            hash_col.alias("_h"),
-            "v",
-            "nrm",
+        with_vec_norm(df, vec_col, id_col).select(
+            "id", hash_col.alias("_h"), "v", "nrm"
         ),
         LOCAL_MAX_VECTORS,
     )
     if head is not None:
-        arrow_max = int(
-            df.sparkSession.conf.get(
-                "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"
-            )
-        )
-        return _kmeans_fit_local(head, k, iters, sample_size, arrow_max)
+        cent, mat = _kmeans_fit_local(head, k, iters, sample_size)
+        return cent, (head.column("id").to_pandas(), mat)
 
-    c = base.persist()
+    # spread(…, 8), not full defaultParallelism: a narrow (single-split)
+    # input above the local bound still gains 8 Python workers per Lloyd
+    # iteration without 32 tasks' overhead; wide production inputs skip
+    # the exchange entirely. The partials are exact, so the partitioning
+    # changes only the speed.
+    c = with_vec_norm(spread(df, 8), vec_col, id_col).persist()
     try:
         init_rows = (
             c.orderBy(hash_col).limit(max(sample_size, k)).select("v").collect()
@@ -195,18 +220,16 @@ def kmeans_fit(
             def partials(
                 batches: Iterator[pd.DataFrame],
             ) -> Iterator[pd.DataFrame]:
-                from pyspark import TaskContext
-
-                pid = TaskContext.get().partitionId()
-                sums = np.zeros((k, dim))
-                counts = np.zeros(k, dtype=np.int64)
+                sums = np.zeros((k + 1, dim), dtype=np.int64)
+                counts = np.zeros(k + 1, dtype=np.int64)
                 for pdf in batches:
                     s, n = _batch_partials(
-                        pdf["v"].tolist(),
-                        pdf["nrm"].to_numpy(dtype=np.float64),
+                        _unit_rows(
+                            pdf["v"].tolist(),
+                            pdf["nrm"].to_numpy(dtype=np.float64),
+                        ),
                         cent_t,
                         k,
-                        dim,
                     )
                     sums += s
                     counts += n
@@ -215,7 +238,6 @@ def kmeans_fit(
                     # out float64-typed and Arrow refuses float64→list
                     yield pd.DataFrame(
                         {
-                            "pid": np.full(len(nz), pid, dtype=np.int32),
                             "cluster": nz.astype(np.int32),
                             "s": list(sums[nz]),
                             "n": counts[nz],
@@ -223,77 +245,54 @@ def kmeans_fit(
                     )
 
             # the combiner output is ≤ partitions·k rows — a bounded
-            # driver collect (the sanctioned iterative-trainer class);
-            # folding it HERE in sorted (cluster, pid) order replaces
-            # the old groupBy+zip_with reduce stage (one exchange fewer
-            # per iteration) and pins the summation order.
+            # driver collect (the sanctioned iterative-trainer class),
+            # folded here in place of a groupBy reduce stage
             rows = (
                 c.select("v", "nrm")
-                .mapInPandas(
-                    partials, "pid int, cluster int, s array<double>, n long"
-                )
+                .mapInPandas(partials, "cluster int, s array<long>, n long")
                 .collect()
             )
             cent = _fold_partials(
-                cent,
-                [(r["pid"], r["cluster"], r["s"], r["n"]) for r in rows],
-                k,
-                dim,
+                cent, [(r["cluster"], r["s"], r["n"]) for r in rows], k
             )
-        return cent
+        return cent, None
     finally:
         c.unpersist()
 
 
-def _kmeans_fit_local(
-    tbl, k: int, iters: int, sample_size: int, arrow_max: int
-) -> np.ndarray:
-    """Driver-local Lloyd replay over a collected ``(_pid, _h, v, nrm)``
-    Arrow table — the distributed path's arithmetic reproduced exactly:
-    hash-ordered init sample, per-partition accumulation over
-    ``arrow_max``-row batch splits via the shared ``_batch_partials``,
-    sorted-(cluster, pid) fold via the shared ``_fold_partials``."""
+def _kmeans_fit_local(tbl, k: int, iters: int, sample_size: int):
+    """Driver-local Lloyd over a collected ``(id, _h, v, nrm)`` Arrow
+    table → ``(centroids, unit rows)``: the distributed path's
+    hash-ordered init sample, then each iteration's partials over all
+    rows at once (``_batch_partials``) folded by ``_fold_partials`` —
+    exact sums, so one batch gives the distributed path's centroids."""
     if tbl.num_rows < k:
         raise ValueError(f"corpus has fewer than k={k} rows")
-    pids = tbl.column("_pid").to_pylist()
-    hashes = tbl.column("_h").to_pylist()
-    vs = tbl.column("v").to_pylist()
-    nrms = tbl.column("nrm").to_pylist()
-    init = sorted(range(len(vs)), key=hashes.__getitem__)
-    init = init[: max(sample_size, k)]
-    sample = _unit(np.array([vs[i] for i in init], dtype=np.float64))
-    cent = _maxmin_init(sample, k)
-    dim = cent.shape[1]
-
-    # group row indices by partition id, preserving within-partition
-    # row order (collect_if_bounded keeps each partition's rows in order)
-    parts: dict[int, list[int]] = {}
-    for i, pid in enumerate(pids):
-        parts.setdefault(pid, []).append(i)
-    step = arrow_max if arrow_max > 0 else None
-
+    raw = np.stack(tbl.column("v").to_numpy())  # one float64 row per vector
+    mat = _unit_rows(raw, tbl.column("nrm").to_numpy())
+    init = np.argsort(tbl.column("_h").to_numpy(), kind="stable")
+    cent = _maxmin_init(_unit(raw[init[: max(sample_size, k)]]), k)
     for _ in range(iters):
-        cent_t = cent.T.copy()
-        partials = []
-        for pid, prows in parts.items():
-            sums = np.zeros((k, dim))
-            counts = np.zeros(k, dtype=np.int64)
-            chunk = step or len(prows)
-            for i in range(0, len(prows), chunk):
-                batch = prows[i : i + chunk]
-                s, n = _batch_partials(
-                    [vs[j] for j in batch],
-                    np.array([nrms[j] for j in batch], dtype=np.float64),
-                    cent_t,
-                    k,
-                    dim,
-                )
-                sums += s
-                counts += n
-            for cl in np.flatnonzero(counts):
-                partials.append((pid, int(cl), sums[cl], int(counts[cl])))
-        cent = _fold_partials(cent, partials, k, dim)
-    return cent
+        sums, counts = _batch_partials(mat, cent.T.copy(), k)
+        cent = _fold_partials(cent, zip(range(k + 1), sums, counts), k)
+    return cent, mat
+
+
+def _assign_frame(ids: pd.Series, mat: np.ndarray, cent_t: np.ndarray):
+    """``(vec_id, cluster, cos_to_centroid)`` rows of unit rows ``mat``
+    against unit centroids ``cent_t`` — the one per-row assignment math
+    of ``kmeans_assign`` and ``kmeans``'s driver-local assignment."""
+    sims = _dots(mat, cent_t)
+    best = np.argmax(sims, axis=1)
+    return pd.DataFrame(
+        {
+            "vec_id": ids.astype("int64"),
+            "cluster": best.astype(np.int32),
+            "cos_to_centroid": _np_round_half_up(
+                sims[np.arange(len(best)), best], 6
+            ),
+        }
+    )
 
 
 def kmeans_assign(
@@ -304,28 +303,17 @@ def kmeans_assign(
 ) -> DataFrame:
     """Nearest-centroid assignment: ``(vec_id, cluster, cos_to_centroid)``.
 
-    One Arrow GEMM per batch against the broadcast-by-closure centroid
-    matrix — embarrassingly parallel, zero shuffles.
+    One vectorized pass per Arrow batch against the broadcast-by-closure
+    centroid matrix — embarrassingly parallel, zero shuffles.
     """
     cent_t = _unit(np.asarray(centroids, dtype=np.float64)).T.copy()
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            mat = np.array(pdf["v"].tolist(), dtype=np.float64)
-            mat /= np.maximum(pdf["nrm"].to_numpy(dtype=np.float64), 1e-30)[
-                :, None
-            ]
-            sims = mat @ cent_t
-            best = np.argmax(sims, axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["id"].astype("int64"),
-                    "cluster": best.astype(np.int32),
-                    "cos_to_centroid": _np_round_half_up(
-                        sims[np.arange(len(best)), best], 6
-                    ),
-                }
+            mat = _unit_rows(
+                pdf["v"].tolist(), pdf["nrm"].to_numpy(dtype=np.float64)
             )
+            yield _assign_frame(pdf["id"], mat, cent_t)
 
     return with_vec_norm(df, vec_col, id_col).mapInPandas(
         assign, "vec_id long, cluster int, cos_to_centroid double"
@@ -340,9 +328,20 @@ def kmeans(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> tuple[np.ndarray, DataFrame]:
-    """Fit + assign. Returns ``(centroids, assignments DataFrame)``."""
-    cent = kmeans_fit(df, k, iters, seed, vec_col=vec_col, id_col=id_col)
-    return cent, kmeans_assign(df, cent, vec_col, id_col)
+    """Fit + assign. Returns ``(centroids, assignments DataFrame)``.
+
+    When the fit ran on the driver, the rows ``kmeans_assign`` would
+    compute are computed there from the already collected vectors and
+    returned as a local relation, which runs no Spark job to read; above
+    the bound ``kmeans_assign`` runs distributed."""
+    cent, local = _fit(df, k, iters, seed, _INIT_SAMPLE, vec_col, id_col)
+    if local is None:
+        return cent, kmeans_assign(df, cent, vec_col, id_col)
+    ids, mat = local
+    rows = _assign_frame(ids, mat, _unit(cent).T.copy())
+    return cent, df.sparkSession.createDataFrame(
+        pa.Table.from_pandas(rows, preserve_index=False)
+    )
 
 
 def cluster_cosine_pairs(
@@ -402,7 +401,7 @@ def semantic_dedup(
     from mini_feature_store_spark.operators.graph import connected_components
 
     # assignment is recomputed by the two consumers below (pairs + final
-    # join) — one GEMM scan each, cheap next to caching the whole corpus
+    # join) — one map-only scan each, cheap next to caching the whole corpus
     assigns = kmeans_assign(
         df,
         kmeans_fit(df, k, iters, seed, vec_col=vec_col, id_col=id_col),

@@ -121,9 +121,14 @@ def _hashed_shingles(
 def _doc_shingles(df: DataFrame, n: int, text_col: str, id_col: str) -> DataFrame:
     """(shingle, doc) rows of the Jaccard index: ``doc`` is
     ``struct(id, psize)``, so every posting carries the doc's
-    pre-cap set size."""
+    pre-cap set size. Docs with a NULL id are left out: the pair
+    aggregate groups by id, so they would pool into one doc whose
+    common-shingle count exceeds its size (Jaccard > 1)."""
     return _hashed_shingles(
-        spread(df), text_col, n, F.col(id_col).alias("id")
+        spread(df.where(F.col(id_col).isNotNull())),
+        text_col,
+        n,
+        F.col(id_col).alias("id"),
     ).select("shingle", F.struct("id", "psize").alias("doc"))
 
 

@@ -4,7 +4,9 @@ Lloyd's is iterative and seed-dependent, so these tests pin properties
 rather than golden outputs: planted-blob recovery, convergence (an extra
 manual Lloyd step no longer moves the centroids), exact agreement of the
 within-cluster pair generator with a numpy reference, planted-duplicate
-recovery with the min-id survivor policy, and an MLlib cost cross-check.
+recovery with the min-id survivor policy, an MLlib cost cross-check, and
+bit-identical results whatever the input partitioning, Arrow batch size
+or fit path.
 """
 
 from __future__ import annotations
@@ -185,13 +187,12 @@ def test_semantic_dedup_threshold_excludes_non_dups(spark):
 
 
 def test_kmeans_local_equals_distributed(spark, blobs, monkeypatch):
-    """r17 §1.2 driver-local fast path: under LOCAL_MAX_VECTORS the fit
-    replays the distributed arithmetic exactly — same hash-ordered init
-    sample, same per-partition/per-batch partial kernel
-    (_batch_partials, one shared function), same sorted-(cluster, pid)
-    fold (_fold_partials). The centroid TRAJECTORY must be bit-equal,
-    not approximately equal (LOCAL_MAX_VECTORS=0 forces the distributed
-    path on the same data)."""
+    """Under LOCAL_MAX_VECTORS the fit runs on the driver over one
+    collected batch; LOCAL_MAX_VECTORS=0 forces the distributed combiner
+    over the same data. Both share _batch_partials and _fold_partials,
+    and the fixed-point partials are exact, so the centroids must be
+    bit-equal, not approximately equal — also when a tiny Arrow batch
+    size splits every partition into many batches."""
     from mini_feature_store_spark.operators import clustering
 
     df, _ = blobs
@@ -206,9 +207,8 @@ def test_kmeans_local_equals_distributed(spark, blobs, monkeypatch):
     assert local.shape == dist.shape == (4, len(df.first()["embedding"]))
     assert np.array_equal(local, dist)
 
-    # and the tiny-batch regime: force multi-batch partition replay by
-    # shrinking the Arrow batch size so batch-split accumulation order
-    # is exercised on both paths
+    # and the tiny-batch regime: the distributed path sums many batches
+    # per partition, the local path still one
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
@@ -223,7 +223,8 @@ def test_kmeans_byte_budget_takes_distributed_path(spark, blobs, monkeypatch):
     """The driver-local fast path is bounded by BYTES as well as rows: a
     corpus far under LOCAL_MAX_VECTORS whose collected vectors exceed
     DRIVER_LOCAL_MAX_BYTES (wide embeddings) must take the distributed
-    combiner path — and give the same centroids."""
+    combiner path. Its exact partials give the local path's centroids
+    bit for bit."""
     from mini_feature_store_spark import functions
     from mini_feature_store_spark.operators import clustering
 
@@ -245,3 +246,101 @@ def test_kmeans_byte_budget_takes_distributed_path(spark, blobs, monkeypatch):
     dist = kmeans_fit(df, k=4, iters=4, seed=5)
     assert calls == [1]  # over the byte budget: distributed path
     assert np.array_equal(dist, local)
+
+
+def _fit_and_assign(df, dist, monkeypatch):
+    from mini_feature_store_spark.operators import clustering
+
+    with monkeypatch.context() as m:
+        if dist:
+            m.setattr(clustering, "LOCAL_MAX_VECTORS", 0)
+        cent, assigns = kmeans(df, k=4, iters=4, seed=2)
+        return cent, sorted(map(tuple, assigns.collect()))
+
+
+@pytest.mark.parametrize("dist", [False, True], ids=["local", "distributed"])
+def test_kmeans_invariant_to_layout_and_batch_size(
+    spark, blobs, monkeypatch, dist
+):
+    """Exact fixed-point partials: the same vectors as 1, 3 or 8 input
+    partitions, in a shuffled row order, and with Arrow batches of 1, 7
+    or the default rows give bit-identical centroids and identical
+    assignment rows, on the driver-local and the distributed path alike
+    (compared against the local fit of the cached fixture)."""
+    df, rows = blobs
+    schema = "vec_id long, embedding array<float>, label int"
+    ref_cent, ref_rows = _fit_and_assign(df, False, monkeypatch)
+    shuffled = list(rows)
+    np.random.default_rng(7).shuffle(shuffled)
+    layouts = {
+        "1 partition": df.coalesce(1),
+        "3 partitions": df.repartition(3),
+        "8 partitions": df.repartition(8),
+        "shuffled rows": spark.createDataFrame(shuffled, schema),
+    }
+    for name, layout in layouts.items():
+        cent, got = _fit_and_assign(layout, dist, monkeypatch)
+        assert np.array_equal(cent, ref_cent), name
+        assert got == ref_rows, name
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    try:
+        for batch in ("1", "7"):
+            spark.conf.set(conf, batch)
+            cent, got = _fit_and_assign(df.repartition(3), dist, monkeypatch)
+            assert np.array_equal(cent, ref_cent), batch
+            assert got == ref_rows, batch
+    finally:
+        spark.conf.set(conf, old)
+
+
+def test_kmeans_local_assignment_equals_kmeans_assign(spark, blobs):
+    """kmeans() under the local bound assigns on the driver from the
+    vectors the fit collected, as a local relation that runs no Spark
+    job to read; its rows equal kmeans_assign's over the same
+    centroids."""
+    df, _ = blobs
+    cent, assigns = kmeans(df, k=4, iters=3, seed=1)
+    plan = assigns._jdf.queryExecution().analyzed().toString()
+    assert plan.startswith("LocalRelation")
+    assert sorted(map(tuple, assigns.collect())) == sorted(
+        map(tuple, kmeans_assign(df, cent).collect())
+    )
+
+
+@pytest.mark.parametrize("dist", [False, True], ids=["local", "distributed"])
+@pytest.mark.parametrize("bad", [float("nan"), float("inf")])
+def test_kmeans_fit_rejects_non_finite_vectors(spark, monkeypatch, dist, bad):
+    """A NaN or infinite component fails the fit loudly on both paths,
+    instead of yielding NaN centroids (or, cast to fixed point,
+    INT64_MIN sums)."""
+    from mini_feature_store_spark.operators import clustering
+
+    rows = _blob_rows(per=10)
+    rows[5] = (rows[5][0], [bad] + rows[5][1][1:], rows[5][2])
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    )
+    if dist:
+        monkeypatch.setattr(clustering, "LOCAL_MAX_VECTORS", 0)
+    with pytest.raises(ValueError, match="kmeans_fit"):
+        kmeans_fit(df, k=4, iters=2, seed=1)
+
+
+def test_kmeans_row_dots_do_not_depend_on_batch_shape():
+    """A row's centroid dots come out the same in any batch. A BLAS GEMM
+    picks its kernel by matrix shape: on 2,000 × 64 rows, batches of 7
+    changed the last bit of about 1 dot in 10 against one 2,000-row
+    GEMM, which can flip a near-tie assignment between layouts."""
+    from mini_feature_store_spark.operators.clustering import _dots
+
+    rng = np.random.default_rng(0)
+    mat = rng.normal(size=(2000, 64))
+    cent_t = rng.normal(size=(64, 16))
+    whole = _dots(mat, cent_t)
+    for rows in (1, 7, 333):
+        parts = np.vstack(
+            [_dots(mat[i : i + rows], cent_t) for i in range(0, len(mat), rows)]
+        )
+        assert np.array_equal(parts, whole), rows

@@ -148,7 +148,7 @@ JOB_CEILINGS = {
     "coverage_drop": 34,
     "ensemble": 61,
     "classifier+best_quality": 34,
-    "semantic": 45,
+    "semantic": 44,
     "every_stage": 67,
 }
 

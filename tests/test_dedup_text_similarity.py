@@ -53,6 +53,31 @@ def test_ngram_jaccard_finds_planted_near_dups(docs):
     assert all(r.id_a < r.id_b for r in pairs)
 
 
+def test_ngram_jaccard_skips_null_doc_ids(spark):
+    """Docs with a NULL id pair with nothing, in both Jaccard operators:
+    the pair aggregate groups by id, so NULL-id docs once pooled into one
+    doc and scored Jaccard 5.0 and 2.5 against real ones."""
+    from mini_feature_store_spark.operators.dedup import ngram_jaccard_against
+
+    schema = "doc_id long, text string"
+    texts = [
+        (None, "a b c d e"),
+        (1, "a b c d e"),
+        (2, "a b c d e f"),
+        (None, "a b c d x"),
+    ]
+    pairs = ngram_jaccard_pairs(spark.createDataFrame(texts, schema))
+    assert [tuple(r) for r in pairs.collect()] == [(1, 2, 0.75)]
+    new = spark.createDataFrame([texts[0], texts[3], (3, "a b c d e")], schema)
+    against = ngram_jaccard_against(
+        new, spark.createDataFrame(texts[1:], schema)
+    )
+    assert sorted(tuple(r) for r in against.collect()) == [
+        (3, 1, 1.0),
+        (3, 2, 0.75),
+    ]
+
+
 def test_minhash_lsh_recall_vs_exact(docs):
     """Banded MinHash must recover ≥90% of true Jaccard≥0.6 pairs and
     estimate Jaccard within 0.25 of exact on recovered pairs."""

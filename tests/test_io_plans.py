@@ -540,9 +540,11 @@ def test_feature_view_query_job_ceilings(spark, sf_dir, name):
 #: perfbench query_mix queries on a cold call, at sf0.001. The n-gram
 #: Jaccard kernel's 9 jobs: the spread round-robin, the shingle
 #: exchange, one TableCacheQueryStage per scan of the persisted postings
-#: (3), the pair exchange, the hot count twice, and the result.
+#: (3), the pair exchange, the hot count twice, and the result. k-means
+#: runs its one bounded collect at plan build and returns a local
+#: relation.
 QUERY_MIX_CEILINGS = {
-    "embedding_kmeans": (3, 1, 0),
+    "embedding_kmeans": (1, 1, 0),
     "dedup_ngram_jaccard": (9, 1, 5),
     "pricing_summary": (2, 1, 1),
     "latest_event_per_user": (2, 1, 1),
@@ -574,6 +576,17 @@ def test_cohort_retention_same_jobs_every_call(spark, sf_dir):
         for _ in range(2)
     ]
     assert calls == [(4, 1, 3)] * 2
+
+
+def test_embedding_kmeans_one_job_every_call(spark, sf_dir):
+    """Under the local bound k-means collects the vectors once, fits and
+    assigns on the driver, and returns a local relation: exactly 1 job on
+    consecutive calls, with nothing left to scan or shuffle."""
+    calls = [
+        _jobs_scans_exchanges(spark, sf_dir, "embedding_kmeans")
+        for _ in range(2)
+    ]
+    assert calls == [(1, 0, 0)] * 2
 
 
 def test_backfill_executed_plan_one_scan_no_exchange_above_generate(spark, sf_dir):

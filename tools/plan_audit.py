@@ -162,17 +162,21 @@ AUDITED: dict[str, str] = {
         "per query touch full vectors."
     ),
     "embedding_kmeans": (
-        "Assignment-only plan (fit already ran at plan build, centroids "
-        "are a closure constant): ONE Arrow mapInPandas GEMM pass over "
-        "the corpus — zero exchanges. The fit's per-iteration job "
-        "shuffles only the map-side combiner rows (≤ partitions·k), "
-        "never vectors."
+        "Under the local bound (LOCAL_MAX_VECTORS rows and the driver "
+        "byte budget) the fit AND the assignment run at plan build after "
+        "ONE bounded collect, so the returned plan is a LocalRelation of "
+        "(vec_id, cluster, cos_to_centroid): zero scans, zero exchanges, "
+        "no job to read it; 1 Spark job per call. Above the bound the "
+        "plan is ONE Arrow mapInPandas assignment pass over the corpus "
+        "(zero exchanges), and each fit iteration's job shuffles only "
+        "the map-side combiner rows (≤ partitions·k exact fixed-point "
+        "sums), never vectors."
     ),
     "embedding_semantic_dedup": (
         "SemDeDup: within-cluster GEMM blocks keyed on (cluster, "
         "sub_block) — the block join's equi-key includes the cluster, so "
         "cross-cluster pairs never materialize; CC star rounds on the "
-        "sparse ≥-threshold pairs; assignment recomputed (one GEMM scan) "
+        "sparse ≥-threshold pairs; assignment recomputed (one map-only scan) "
         "rather than caching the corpus."
     ),
     "doc_training_shuffle": (
